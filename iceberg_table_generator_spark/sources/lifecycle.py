@@ -35,8 +35,12 @@ Semantics mapping (reference → here):
 
 Scale posture: data/delete files are plain columnar Parquet readable by any
 executor count; the metadata log is O(snapshots) JSON (driver-side, tiny);
-reads are `spark.read.parquet(*files)` + one broadcast-able anti-join on
-row ids (delete files are small relative to data, as in Iceberg MoR).
+reads are `spark.read.parquet(*files)` + one broadcast anti-join per delete
+kind (positional, and each equality-column set); delete files are small
+relative to data, as in Iceberg MoR.  Per-file sequence numbers come from
+the snapshot log as literal map lookups and delete files are read with
+declared schemas, so applying deletes launches no side job: no driver-built
+relation to broadcast, no aggregate, no footer inference.
 """
 
 from __future__ import annotations
@@ -54,6 +58,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 ROW_ID = "__row_id"
+# MERGE's match marker on the target side of `source LEFT JOIN target`
+_MATCHED = "__matched"
 
 # The positional-delete key, exactly Iceberg's delete-file tuple
 # (file_path, pos) — `IcebergTableGenerator.java:237-245`.  Synthesized at
@@ -117,14 +123,24 @@ class ConcurrentCommitError(RuntimeError):
     """Another writer committed between read and commit (optimistic CAS)."""
 
 
-def _file_path_norm() -> Column:
-    """`_metadata.file_path` with the URI scheme stripped — exactly the
-    absolute path string the metadata log records, so per-file attributes
-    (the data sequence number) attach with ONE constant-size broadcast
-    equi-join instead of one plan node per file (which made `read()`
-    analysis cost O(snapshots); the reference's flagship scenario is a
-    100-delete-commit table, `Main.java:311-326`)."""
-    return F.regexp_replace(F.col("_metadata.file_path"), r"^file:/+", "/")
+def _local_path(file_path: Column) -> Column:
+    """The absolute path the metadata log records, from a scan's file path.
+    The reader reports a URI (`file:/...`) quoted the way java.net.URI
+    quotes a path: a space or `%` is percent-encoded, a `+` is not.  So
+    strip the scheme, protect `+` from URL decoding, and decode."""
+    uri_path = F.regexp_replace(file_path, r"^file:/+", "/")
+    return F.url_decode(F.replace(uri_path, F.lit("+"), F.lit("%2B")))
+
+
+def _file_lookup(values: dict[str, int], file_path: Column) -> Column:
+    """Per-file attribute (a sequence number) for a scan's file path: one
+    `element_at` over a literal path → value map built from the snapshot
+    log, keyed by absolute path.  Constant plan size and no extra
+    relation, so no join and no broadcast job; the map holds one entry
+    per file, Iceberg-manifest-sized state."""
+    by_path = {os.path.abspath(k): v for k, v in values.items()}
+    lookup = F.create_map(*[F.lit(x) for kv in sorted(by_path.items()) for x in kv])
+    return F.element_at(lookup, _local_path(file_path))
 
 
 def _schema_sig(schema) -> str:
@@ -750,58 +766,77 @@ class ParquetSnapshotTable:
           rows satisfying it, as in SQL clause order DELETE-first).
         - `when_not_matched_insert`: WHEN NOT MATCHED THEN INSERT *.
 
+        A matched row whose DELETE condition is NULL is not deleted: as in
+        SQL, it falls through to the UPDATE clause.
+
         Mechanics: one equality-delete file on the key columns removes the
         old version of every matched-and-affected row (sequence rule: only
         EARLIER data sequences); updated survivors and inserts land as new
         data files with this snapshot's sequence, so they stay visible.
-        Data files are never rewritten.  Duplicate keys in `source` are
-        the caller's responsibility (real MERGE raises on multiple
-        matches; here each source row contributes a row version)."""
+        Data files are never rewritten, and the target is scanned once:
+        with an UPDATE clause every matched row is affected, so the delete
+        file holds the distinct SOURCE keys (deleting a key no visible row
+        has is a no-op under the sequence rule), and the new row versions
+        come from one `source LEFT JOIN target` with a match marker.
+        Duplicate keys in `source` are the caller's responsibility (real
+        MERGE raises on multiple matches; here each source row contributes
+        a row version, and k matched target rows give k versions)."""
         cur, sid = self._head()
-        t = self.read(with_row_id=False).alias("t")
+        target = self.read(with_row_id=False)
         s = source.drop(ROW_ID).alias("s")
+        t = target.withColumn(_MATCHED, F.lit(True)).alias("t")
         on = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
-        matched = t.join(s, on, "inner")
-        del_cond = (
-            F.expr(when_matched_delete) if when_matched_delete else F.lit(False)
+        joined = s.join(t, on, "left" if when_not_matched_insert else "inner")
+        matched = F.col(f"t.{_MATCHED}").isNotNull()
+        # a NULL condition is not satisfied (SQL clause semantics)
+        deleted = (
+            F.coalesce(F.expr(when_matched_delete), F.lit(False))
+            if when_matched_delete
+            else F.lit(False)
         )
-        # old versions to remove: updated rows and deleted rows
-        if when_matched_update is not None:
-            affected = matched
+        # key columns carry the common type of target and source keys, so
+        # the delete file reads back as the type the commit records
+        key_cols = {k: F.coalesce(F.col(f"t.{k}"), F.col(f"s.{k}")) for k in keys}
+        key_types = {
+            f.name: f.dataType.simpleString()
+            for f in joined.select(*[v.alias(k) for k, v in key_cols.items()]).schema
+        }
+        if when_matched_update is None:
+            victims = joined.filter(matched & deleted).select(
+                *[v.alias(k) for k, v in key_cols.items()]
+            )
         else:
-            affected = matched.filter(del_cond)
-        victims = affected.select(
-            *[F.col(f"s.{k}").alias(k) for k in keys]
-        ).distinct()
+            victims = s.select(
+                *[F.col(f"s.{k}").cast(key_types[k]).alias(k) for k in keys]
+            )
         # new row versions: updated survivors + inserts
-        new_rows: DataFrame | None = None
         if when_matched_update == "*":
-            new_rows = matched.filter(~del_cond).select(
-                *[F.col(f"s.{c}").alias(c) for c in s.columns]
-            )
-        elif isinstance(when_matched_update, dict):
-            new_rows = matched.filter(~del_cond).select(
-                *[
-                    F.expr(when_matched_update[c]).alias(c)
-                    if c in when_matched_update
-                    else F.col(f"t.{c}").alias(c)
-                    for c in t.columns
-                ]
-            )
-        if when_not_matched_insert:
-            inserts = source.drop(ROW_ID).join(
-                self.read(with_row_id=False).select(*keys), keys, "left_anti"
-            )
-            new_rows = (
-                inserts
-                if new_rows is None
-                else new_rows.unionByName(inserts, allowMissingColumns=True)
-            )
+            out_cols = [key_cols.get(c, F.col(f"s.{c}")).alias(c) for c in s.columns]
+        else:
+            updates = when_matched_update or {}
+
+            def matched_value(c: str) -> Column:
+                if c in updates:
+                    return F.expr(updates[c])
+                return key_cols.get(c, F.col(f"t.{c}"))
+
+            out_cols = [
+                F.when(matched, matched_value(c))
+                .otherwise(F.col(f"s.{c}") if c in s.columns else F.lit(None))
+                .alias(c)
+                for c in target.columns
+            ] + [F.col(f"s.{c}").alias(c) for c in s.columns if c not in target.columns]
+        keep = F.when(
+            matched, ~deleted if when_matched_update is not None else F.lit(False)
+        ).otherwise(F.lit(when_not_matched_insert))
+        new_rows: DataFrame | None = None
+        if when_matched_update is not None or when_not_matched_insert:
+            new_rows = joined.filter(keep).select(*out_cols)
         # write both files BEFORE the single metadata commit
         del_dir = os.path.join(
             self.path, "deletes", f"snap-{sid}-{uuid.uuid4().hex[:8]}"
         )
-        victims.write.mode("overwrite").parquet(del_dir)
+        victims.distinct().write.mode("overwrite").parquet(del_dir)
         data_entries: list[list] = []
         new_cols, new_types = list(cur.columns), dict(cur.column_types)
         if new_rows is not None:
@@ -809,6 +844,7 @@ class ParquetSnapshotTable:
             sig = _schema_sig(new_rows.schema)
             data_entries = [[f, sid, sig] for f in files]
             new_cols, new_types = self._evolved_schema(cur, new_rows)
+        new_types.update(key_types)
         return self._commit(
             "merge",
             expected_parent=cur.snapshot_id,
@@ -889,16 +925,10 @@ class ParquetSnapshotTable:
             sel_files = {f for e in selected for f in _entry_files(e[0])}
             rest = [e for e in cur.data_files if e[0] not in {s[0] for s in selected}]
             # visible rows OF THE SELECTED FILES ONLY (deletes applied);
-            # the row-id's file field is exactly the scan's file path
-            # row-id file field carries the reader's URI form
-            # (file:/...); normalize like the seq-map join does
+            # the row id's file field is the scan's file path
             current = (
                 self.read()
-                .filter(
-                    F.regexp_replace(
-                        F.col(f"{ROW_ID}.file"), r"^file:/+", "/"
-                    ).isin(*sorted(sel_files))
-                )
+                .filter(_local_path(F.col(f"{ROW_ID}.file")).isin(*sorted(sel_files)))
                 .drop(ROW_ID)
             )
             files = self._write_data_files(
@@ -1382,7 +1412,7 @@ class ParquetSnapshotTable:
         # after spec evolution) and scan each group as ONE parquet read
         # with `basePath` partition discovery — partition-column filters
         # prune directories exactly as on a static partitioned table.
-        # mergeSchema reconciles column evolution across snapshots.
+        # unionByName reconciles column evolution across schema groups.
         data_dir = os.path.join(os.path.abspath(self.path), "data")
         file_groups: dict[tuple, list[str]] = {}
         ext_dirs: list[str] = []
@@ -1422,64 +1452,57 @@ class ParquetSnapshotTable:
         eq_entries = [e for e in snap.delete_files if e[2] == "equality"]
         if eq_entries:
             # Data sequence numbers (what equality deletes compare against)
-            # attach via ONE broadcast equi-join on the exact file path —
-            # constant plan size, no per-file literals.  The map is
-            # O(files) rows of (path, seq): Iceberg-manifest-sized state.
-            seq_map = self.spark.createDataFrame(
-                [
-                    (os.path.abspath(f), int(e[1]))
-                    for e in snap.data_files
-                    for f in _entry_files(e[0])
-                ],
-                f"__file string, {seq_col} bigint",
-            )
-            # derive the join key from the row id (a plain column that
-            # survives unions — `_metadata` itself resolves only directly
-            # on a scan relation, so a multi-group schema union would
-            # otherwise break here)
-            df = (
-                df.withColumn(
-                    "__file",
-                    F.regexp_replace(F.col(f"{ROW_ID}.file"), r"^file:/+", "/"),
-                )
-                .join(F.broadcast(seq_map), "__file")
-                .drop("__file")
+            # attach as one map lookup on the row id's file — the row id
+            # is a plain column that survives unions, where `_metadata`
+            # itself resolves only directly on a scan relation.
+            df = df.withColumn(
+                seq_col,
+                _file_lookup(
+                    {
+                        f: int(e[1])
+                        for e in scan_entries
+                        for f in _entry_files(e[0])
+                    },
+                    F.col(f"{ROW_ID}.file"),
+                ),
             )
         # Positional deletes: one union of (file, pos) tuples, one broadcast
         # anti-join — ids are globally unique, no sequence check needed.
         # Delete files are small relative to data (MoR invariant) —
-        # broadcast so the data side never shuffles.
+        # broadcast so the data side never shuffles.  Every delete file is
+        # read with a declared schema: no footer-inference job.
         pos_files = [e[0] for e in snap.delete_files if e[2] == "positional"]
         if pos_files:
-            deletes = self.spark.read.parquet(*pos_files)
+            deletes = self.spark.read.schema(f"`{ROW_ID}` {ROW_ID_TYPE}").parquet(
+                *pos_files
+            )
             df = df.join(F.broadcast(deletes), ROW_ID, "left_anti")
         # Equality deletes: a row is deleted iff SOME delete file over the
         # same column set contains its value tuple with a delete sequence
         # GREATER than the row's data sequence (Iceberg's sequence-number
-        # rule — later re-inserts of the same values stay visible).  That
-        # is equivalent to comparing against max(delete seq) per value
-        # tuple, so all delete files sharing a column set coalesce into
-        # ONE broadcast anti-join regardless of how many delete commits
-        # produced them.
+        # rule — later re-inserts of the same values stay visible).  The
+        # anti-join condition states exactly that, so all delete files
+        # sharing a column set coalesce into ONE broadcast anti-join
+        # regardless of how many delete commits produced them; the key
+        # columns take the snapshot's recorded types, so files written
+        # before a type widening (int → bigint) read as the widened type.
         by_cols: dict[tuple, list] = {}
         for path, del_seq, _mode, eq_cols in eq_entries:
             by_cols.setdefault(tuple(eq_cols), []).append((path, del_seq))
         for eq_cols, entries in by_cols.items():
-            del_map = self.spark.createDataFrame(
-                [
-                    (os.path.abspath(f), int(s))
-                    for p, s in entries
-                    for f in _entry_files(p)
-                ],
-                "__file string, __del_seq bigint",
+            schema = ", ".join(
+                f"`{c}` {snap.column_types.get(c, 'string')}" for c in eq_cols
             )
             vals = (
-                self.spark.read.option("mergeSchema", "true")
+                self.spark.read.schema(schema)
                 .parquet(*[p for p, _ in entries])
-                .withColumn("__file", _file_path_norm())
-                .join(F.broadcast(del_map), "__file")
-                .groupBy(*eq_cols)
-                .agg(F.max("__del_seq").alias("__del_seq"))
+                .withColumn(
+                    "__del_seq",
+                    _file_lookup(
+                        {f: int(s) for p, s in entries for f in _entry_files(p)},
+                        F.col("_metadata.file_path"),
+                    ),
+                )
             )
             cond = [df[c].eqNullSafe(vals[c]) for c in eq_cols]
             cond.append(df[seq_col] < vals["__del_seq"])

@@ -51,7 +51,7 @@ ID_RANGE = re.compile(
 SCAN = re.compile(r"FileScan parquet \[[^\]]*\].*?\[file:([^\],]+)")
 BUCKET_AGG = re.compile(r"Aggregate\(keys=\[_bkt#\d+")
 LIT_BKT = re.compile(r"\b0 AS _bkt#\d+")  # degenerate single-bucket plan
-MANIFEST = re.compile(r"Scan ExistingRDD\[__file#\d+")
+DELETE_FILE = re.compile(r"/deletes/snap-\d+-")  # MoR delete-file reads
 CLUSTER_PAIRS = re.compile(r"Scan ExistingRDD\[ca#\d+, ?cb#\d+\]")
 CENTROID_ATTACH = re.compile(r"Scan ExistingRDD\[cid#\d+, ?cent#\d+\]")
 TAU_GRID = re.compile(r"Scan ExistingRDD\[tau_micro#\d+L?\]")
@@ -87,16 +87,14 @@ def classify(sub: str) -> list[str]:
     # (same rule as tests/test_broadcast_invariant.py).
     if BUCKET_AGG.search(sub) and ("CASE WHEN" in sub or LIT_BKT.search(sub)):
         cats.append("partition-offsets")
-    tables = [
-        m.group(1).rsplit("/", 1)[-1].removesuffix(".parquet")
-        for m in SCAN.finditer(sub)
-    ]
+    paths = [m.group(1) for m in SCAN.finditer(sub)]
+    tables = [p.rsplit("/", 1)[-1].removesuffix(".parquet") for p in paths]
     if tables and all(t in FIXED_DIMS for t in tables):
         cats.append("fixed-dim")
     elif tables and all(t in FIXED_DIMS | SCALING_DIMS for t in tables):
         cats.append("scaling-dim")
-    if MANIFEST.search(sub):
-        cats.append("manifest-map")
+    if paths and all(DELETE_FILE.search(p) for p in paths):
+        cats.append("delete-files")
     if CLUSTER_PAIRS.search(sub):
         cats.append("cluster-pairs")
     if CENTROID_ATTACH.search(sub):

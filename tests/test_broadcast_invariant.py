@@ -50,12 +50,19 @@ Bounded categories (a subtree passes if it matches ANY):
 Driver-built relations that surface as ``Scan ExistingRDD`` are NOT
 granted a blanket pass — a corpus-sized ``localCheckpoint`` prints
 exactly the same node — so each known-bounded one is acknowledged by a
-column-signature pattern instead:
+column-signature pattern instead, e.g.:
 
-- ``__file`` maps  — one row per data/delete file (manifest-derived,
-                     built on the driver from the snapshot ledger).
 - ``(ca, cb)``     — the embedding-dedup cluster-pair admissibility
                      relation: at most k² rows for k k-means clusters.
+
+One file-backed relation is acknowledged the same way:
+
+- delete files     — every FileScan in the subtree reads a versioned
+                     table's ``deletes/`` directory (the merge-on-read
+                     delete application in ``sources/lifecycle.py``).
+                     Its bound is the MoR invariant: delete files are
+                     small relative to the data they apply to, and
+                     compaction resets them to none.
 """
 
 from __future__ import annotations
@@ -85,31 +92,40 @@ SCAN = re.compile(r"FileScan parquet \[[^\]]*\].*?\[file:([^\],]+)")
 FIXED_DIMS = {"region", "nation"}
 SCALING_DIMS = {"part", "supplier", "customer", "partsupp"}
 
-# Driver-built ExistingRDD relations, acknowledged by column signature.
+DELETE_FILE = re.compile(r"/deletes/snap-\d+-")
+
+
+def _reads_only_delete_files(subtree: str) -> bool:
+    paths = [m.group(1) for m in SCAN.finditer(subtree)]
+    return bool(paths) and all(DELETE_FILE.search(p) for p in paths)
+
+
+# Known-bounded relations: the delete-file reads of merge-on-read, and
+# driver-built ExistingRDD relations acknowledged by column signature.
 ACKNOWLEDGED = [
-    (re.compile(r"Scan ExistingRDD\[__file#\d+"),
-     "per-file manifest map: one row per data/delete file"),
-    (re.compile(r"Scan ExistingRDD\[ca#\d+, ?cb#\d+\]"),
+    (_reads_only_delete_files,
+     "merge-on-read delete files: small relative to data (MoR invariant)"),
+    (re.compile(r"Scan ExistingRDD\[ca#\d+, ?cb#\d+\]").search,
      "cluster-pair admissibility: ≤ k² rows for k k-means clusters"),
-    (re.compile(r"Scan ExistingRDD\[cid#\d+, ?cent#\d+\]"),
+    (re.compile(r"Scan ExistingRDD\[cid#\d+, ?cent#\d+\]").search,
      "k-means centroid attach: exactly k rows of model state "
      "(the SemDeDup ccos join, wave11._semdedup_relation)"),
-    (re.compile(r"Scan ExistingRDD\[tau_micro#\d+L?\]"),
+    (re.compile(r"Scan ExistingRDD\[tau_micro#\d+L?\]").search,
      "threshold grid: |SEMDEDUP_TAU_GRID| driver-literal rows "
      "(wave11.dedup_semdedup_tau_sweep, wave18 per-language sweep)"),
-    (re.compile(r"Scan ExistingRDD\[ctx_len#\d+\]"),
+    (re.compile(r"Scan ExistingRDD\[ctx_len#\d+\]").search,
      "context-length grid: |TRUNC_GRID| driver-literal rows "
      "(wave12.pipeline_truncation_loss)"),
-    (re.compile(r"Scan ExistingRDD\[dim#\d+\]"),
+    (re.compile(r"Scan ExistingRDD\[dim#\d+\]").search,
      "truncation-dimension grid: |MRL_DIMS| driver-literal rows "
      "(wave14.similarity_matryoshka_recall)"),
-    (re.compile(r"Scan ExistingRDD\[n_bands#\d+, ?rows_per_band#\d+, ?thresh_micro#\d+"),
+    (re.compile(r"Scan ExistingRDD\[n_bands#\d+, ?rows_per_band#\d+, ?thresh_micro#\d+").search,
      "banding-plan grid: |BAND_SWEEP| driver-literal rows "
      "(wave14.dedup_minhash_band_sweep)"),
-    (re.compile(r"Scan ExistingRDD\[method#\d+, ?bytes_per_vec#\d+"),
+    (re.compile(r"Scan ExistingRDD\[method#\d+, ?bytes_per_vec#\d+").search,
      "method-bytes grid: |_METHOD_BYTES| driver-literal rows "
      "(wave17.similarity_compression_frontier)"),
-    (re.compile(r"Scan ExistingRDD\[min_rules#\d+\]"),
+    (re.compile(r"Scan ExistingRDD\[min_rules#\d+\]").search,
      "strictness grid: 5 driver-literal rows "
      "(wave18.pipeline_quality_ablation_curve)"),
 ]
@@ -153,8 +169,8 @@ def _bounded_reasons(subtree: str) -> list[str]:
         reasons.append("fixed_dim")
     elif tables and all(t in FIXED_DIMS | SCALING_DIMS for t in tables):
         reasons.append("scaling_dim")
-    for pat, why in ACKNOWLEDGED:
-        if pat.search(subtree):
+    for matches, why in ACKNOWLEDGED:
+        if matches(subtree):
             reasons.append(f"acknowledged: {why}")
     return reasons
 

@@ -468,12 +468,105 @@ def test_read_plan_broadcast_deletes_and_partition_pruning(spark, tmp_path):
     df = t.read()
     kinds = explain.join_kinds(df)
     assert kinds["SortMergeJoin"] == 0 and kinds["ShuffledHashJoin"] == 0, kinds
-    # seq attach + positional anti + equality anti, all broadcast
+    # positional anti + equality anti, both broadcast (sequence numbers
+    # attach as a map lookup, not a join)
     assert kinds["BroadcastHashJoin"] >= 2, kinds
     pruned = df.filter("order_year = 2020")
     txt = explain.plan_text(pruned)
     pf = [ln for ln in txt.splitlines() if "PartitionFilters" in ln]
     assert pf and "order_year" in "".join(pf), txt[:1500]
+
+
+def test_read_plan_mor_has_no_side_relations(spark, tmp_path):
+    """Delete application builds no driver-side relation and no shuffle:
+    sequence numbers are map lookups from the snapshot log (no
+    `Scan ExistingRDD`), and each equality-column set is one broadcast
+    anti-join with no aggregate over the delete files (no `Exchange`)."""
+    from iceberg_table_generator_spark.plans import explain
+
+    t = ParquetSnapshotTable(spark, str(tmp_path / "sides")).create(["k", "g", "v"])
+    t.append(
+        spark.range(40).select(
+            F.col("id").alias("k"), (F.col("id") % 4).alias("g"), F.lit("x").alias("v")
+        ),
+        num_files=2,
+    )
+    t.delete_where("k % 10 = 0", mode="positional")
+    t.delete_where("k = 3", mode="equality", equality_columns=["k"])
+    t.delete_where("k = 5", mode="equality", equality_columns=["k"])
+    t.delete_where("g = 1", mode="equality", equality_columns=["g"])
+    df = t.read()
+    txt = explain.plan_text(df, mode="simple")
+    assert "Scan ExistingRDD" not in txt, txt
+    assert explain.exchange_count(df) == 0, txt
+    assert explain.join_kinds(df)["BroadcastHashJoin"] == 3, txt
+    # 40 rows - {0,10,20,30} - {3,5} - g=1 {1,5,9,...,37} (5 already gone)
+    assert sorted(r.k for r in df.collect()) == [
+        k for k in range(40) if k % 10 and k not in (3, 5) and k % 4 != 1
+    ]
+
+
+def test_deletes_apply_under_a_table_path_that_needs_uri_quoting(spark, tmp_path):
+    """The reader reports file paths URI-quoted (a space as %20, `%` as
+    %25, `+` kept): per-file sequence numbers and partial compaction must
+    still find the files the metadata log records by plain path."""
+    t = ParquetSnapshotTable(spark, str(tmp_path / "a b%41+c")).create(
+        ["k", "g"], partition_by=["g"]
+    )
+    t.append(spark.range(8).select(F.col("id").alias("k"), (F.col("id") % 2).alias("g")))
+    t.delete_where("k = 2", mode="equality", equality_columns=["k"])
+    t.delete_where("k = 4", mode="positional")
+    want = [0, 1, 3, 5, 6, 7]
+    assert sorted(r.k for r in t.read().collect()) == want
+    t.compact(target_files=1, where="g = 0")
+    assert len({e[1] for e in t.snapshots()[-1].data_files}) == 2  # partial
+    assert sorted(r.k for r in t.read().collect()) == want
+
+
+def test_merge_null_delete_condition_falls_through_to_update(spark, tmp_path):
+    """WHEN MATCHED AND cond THEN DELETE with cond NULL is not satisfied:
+    the row falls through to WHEN MATCHED THEN UPDATE (SQL semantics),
+    rather than being deleted and never re-added."""
+    t = ParquetSnapshotTable(spark, str(tmp_path / "nullcond")).create(["k", "v"])
+    t.append(spark.range(4).select(F.col("id").alias("k"), F.lit("x").alias("v")))
+    src = spark.createDataFrame([(1, "kill"), (2, None)], "k bigint, v string")
+    t.merge(src, keys=["k"], when_matched_update="*", when_matched_delete="s.v = 'kill'")
+    rows = sorted((r.k, r.v) for r in t.read(with_row_id=False).collect())
+    assert rows == [(0, "x"), (2, None), (3, "x")]
+
+
+def test_read_after_key_type_widening_and_merge(spark, tmp_path):
+    """Equality-delete files written before and after a key's type widened
+    (int → bigint) read together: delete files take the key types the
+    snapshot records instead of merging their footer schemas."""
+    t = ParquetSnapshotTable(spark, str(tmp_path / "widen")).create(["k", "v"])
+    t.append(spark.createDataFrame([(i, "a") for i in range(4)], "k int, v string"))
+    t.delete_where("k = 1", mode="equality", equality_columns=["k"])
+    t.append(spark.createDataFrame([(10, "b"), (11, "b")], "k bigint, v string"))
+    t.merge(
+        spark.createDataFrame([(2, "m"), (11, "m"), (20, "m")], "k bigint, v string"),
+        keys=["k"],
+    )
+    df = t.read(with_row_id=False)
+    assert df.schema["k"].dataType.simpleString() == "bigint"
+    rows = sorted((r.k, r.v) for r in df.collect())
+    assert rows == [(0, "a"), (2, "m"), (3, "a"), (10, "b"), (11, "m"), (20, "m")]
+    t.compact(target_files=1)
+    assert sorted((r.k, r.v) for r in t.read(with_row_id=False).collect()) == rows
+    # a wider source key than the target's, with new versions built from
+    # the target row: the commit records the type its delete file holds
+    t2 = ParquetSnapshotTable(spark, str(tmp_path / "widen2")).create(["k", "v"])
+    t2.append(spark.createDataFrame([(1, "a"), (2, "a")], "k int, v string"))
+    t2.merge(
+        spark.createDataFrame([(2, "m"), (1 << 40, "m")], "k bigint, v string"),
+        keys=["k"],
+        when_matched_update={"v": "s.v"},
+        when_not_matched_insert=False,
+    )
+    assert sorted((r.k, r.v) for r in t2.read(with_row_id=False).collect()) == [
+        (1, "a"),
+        (2, "m"),
+    ]
 
 
 def test_conditional_merge_update_delete_insert(spark, tmp_path):

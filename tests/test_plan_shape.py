@@ -30,32 +30,13 @@ SNAPSHOT = Path(__file__).parent.parent / "PLAN_SNAPSHOT.json"
 #: Intentional plan-shape changes since the committed snapshot:
 #: name → one-line rationale.  Entries here are skipped by the diff and
 #: must be dropped when the snapshot is next regenerated.
-#: Emptied 2026-08-18 with the r14 round-end snapshot regeneration
-#: (scripts/scaling_report.py): every r14 reshape is now the recorded
-#: baseline shape in PLAN_SNAPSHOT.json.
-#: (the r14 matryoshka entry was dropped 2026-08-18: the committed
-#: snapshot was regenerated in the SAME commit as the spread() fix, so it
-#: already records the post-fix shape — ADVICE r14 #5, verified live.)
-EXPLAINED: dict[str, str] = {
-    "multimodal_fingerprint_dedup": (
-        "r15 mapInArrow fingerprint fold (guide §4.2): the doc→fp chain "
-        "(chunk, md5-60, bit vote) runs in one Arrow pass, dropping the "
-        "simhash() explode + 60-agg groupBy exchange (4 → 3 exchanges); "
-        "pinned 2.26 → 1.42 s at sf0.1, oracle-green 3 SFs"
-    ),
-    "dedup_one_pass_verdict": (
-        "r15 §2.4: the bucket-owner min rides a window over the same "
-        "(band_id, band_hash) key instead of groupBy + join-back — one "
-        "join dropped; wall-flat locally (owner was broadcast at sf0.1: "
-        "2.67 vs 2.72 A/B) but the dropped join is data-sized at scale"
-    ),
-    "multimodal_feature_simhash_dedup": (
-        "r15 mapInArrow fingerprint fold (guide §4.2): frame decode, "
-        "token quantization and the bit vote run in one Arrow pass, "
-        "dropping the collect_list + simhash() exchanges (4 → 3); pinned "
-        "2.35 → 1.29 s at sf0.1, oracle-green 3 SFs"
-    ),
-}
+#: Emptied 2026-10-18 with a snapshot regeneration
+#: (scripts/scaling_report.py): the three r15 reshapes
+#: (multimodal_fingerprint_dedup, dedup_one_pass_verdict,
+#: multimodal_feature_simhash_dedup), the text_source_vocab_overlap fold
+#: and the merge-on-read reads without side relations are now the
+#: recorded baseline shapes in PLAN_SNAPSHOT.json.
+EXPLAINED: dict[str, str] = {}
 
 
 def _shape(df) -> dict:

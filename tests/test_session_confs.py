@@ -1,0 +1,50 @@
+"""The session-wide `InferFiltersFromGenerate` exclusion (session.py).
+
+The rule synthesizes `size(e) > 0 AND isnotnull(e)` under every
+`explode(e)` and, for the engine's computed-array explodes, duplicates the
+whole array construction (tokenize → shingle) into a filter below the
+generator.  Results are the same either way, so only these tests notice
+if the exclusion is dropped: the conf on `get_spark()` sessions, and the
+absence of the inferred filter under a shingle explode.
+"""
+
+from __future__ import annotations
+
+import re
+
+import pyspark.sql.functions as F
+
+from iceberg_table_generator_spark.operators.dedup import shingles, tokenize
+from iceberg_table_generator_spark.plans import explain
+from iceberg_table_generator_spark.session import RUNTIME_SQL_CONFS
+from iceberg_table_generator_spark.sources.tables import load_table
+
+EXCLUDED = "spark.sql.optimizer.excludedRules"
+RULE = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+INFERRED_SIZE_FILTER = re.compile(r"\bFilter .*\bsize\(.*\) > 0\)")
+
+
+def _shingle_explode_plan(docs) -> str:
+    df = shingles(tokenize(docs)).select("doc_id", F.explode("shingles").alias("sh"))
+    return explain.plan_text(df, mode="simple")
+
+
+def test_get_spark_excludes_infer_filters_from_generate(spark):
+    # set when get_spark() builds the session, and in the confs that
+    # ensure_session_confs applies to a session built elsewhere
+    assert RULE in spark.sparkContext.getConf().get(EXCLUDED).split(",")
+    assert RULE in RUNTIME_SQL_CONFS[EXCLUDED].split(",")
+    assert RULE in spark.conf.get(EXCLUDED).split(",")
+
+
+def test_no_inferred_size_filter_under_shingle_explode(spark, sf_small):
+    docs = load_table(spark, sf_small, "documents")
+    plan = _shingle_explode_plan(docs)
+    assert not INFERRED_SIZE_FILTER.search(plan), plan
+    # The check sees the filter whenever the rule runs.  `docs` is built
+    # first: load_table re-applies the session confs.
+    spark.conf.unset(EXCLUDED)
+    try:
+        assert INFERRED_SIZE_FILTER.search(_shingle_explode_plan(docs))
+    finally:
+        spark.conf.set(EXCLUDED, RULE)
