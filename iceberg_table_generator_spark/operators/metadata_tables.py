@@ -33,7 +33,7 @@ from iceberg_table_generator_spark.sources.tables import load_table
 # cannot vary with sf_dir.  Bump the version suffix if the fixture recipe
 # or the metadata layout changes (stale cache would desynchronize the two
 # engines' views).
-FIXTURE_PATH = "/tmp/itg_meta_fixture_v1"
+FIXTURE_PATH = "/tmp/itg_meta_fixture_v2"
 _META_JSON = f"{FIXTURE_PATH}/metadata.json"
 
 # Marker written AFTER the last fixture commit.  Readers gate on this, not
@@ -237,7 +237,7 @@ def meta_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-file stats sidecar (partitions metadata) and refs.json (branches &
 # tags).  Kept separate from the v1 fixture so its recipe can evolve
 # without invalidating the three queries above.
-PARTS_FIXTURE_PATH = "/tmp/itg_meta_parts_fixture_v1"
+PARTS_FIXTURE_PATH = "/tmp/itg_meta_parts_fixture_v2"
 _PARTS_META_JSON = f"{PARTS_FIXTURE_PATH}/metadata.json"
 _PARTS_STATS_JSON = f"{PARTS_FIXTURE_PATH}/file_stats.json"
 _PARTS_REFS_JSON = f"{PARTS_FIXTURE_PATH}/refs.json"

@@ -34,7 +34,7 @@ from iceberg_table_generator_spark.operators.metadata_tables import _build_once
 from iceberg_table_generator_spark.registry import query
 
 # Bump the version suffix if the fixture recipe changes.
-WIDE_FIXTURE_PATH = "/tmp/itg_wide_metrics_fixture_v1"
+WIDE_FIXTURE_PATH = "/tmp/itg_wide_metrics_fixture_v2"
 _DATA_DIR = f"{WIDE_FIXTURE_PATH}/data"
 N_WIDE_ROWS = 30
 

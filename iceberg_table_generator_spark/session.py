@@ -40,9 +40,16 @@ def iceberg_runtime_available() -> bool:
 # they can be applied to an externally created SparkSession (the driver
 # passes its own) as well as set at build time in get_spark().
 RUNTIME_SQL_CONFS: dict[str, str] = {
+    # Deterministic timestamp semantics vs the DuckDB oracle.
     "spark.sql.session.timeZone": "UTC",
+    # Naive parquet timestamps -> TIMESTAMP_NTZ (matches DuckDB TIMESTAMP).
     "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+    # Parquet TIMESTAMP(NANOS) (events.ts) is unreadable by Spark's
+    # vectorized reader; surface it as epoch-nanos BIGINT and convert in
+    # sources/tables.py.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # AQE: runtime partition coalescing, skew-join splitting, dynamic
+    # broadcast conversion — the first line of defense at 100 TB.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -68,10 +75,7 @@ RUNTIME_SQL_CONFS: dict[str, str] = {
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Apply the engine's required SQL confs to an existing session."""
     for k, v in RUNTIME_SQL_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - conf removed/static in future Spark
-            pass
+        spark.conf.set(k, v)
     return spark
 
 
@@ -122,25 +126,7 @@ def get_spark(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
-        # AQE: runtime partition coalescing, skew-join splitting, dynamic
-        # broadcast conversion — the first line of defense at 100 TB.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # See RUNTIME_SQL_CONFS: the generate-filter inference rule
-        # duplicates heavy array-construction expressions below exchanges.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        # Deterministic timestamp semantics vs the DuckDB oracle.
-        .config("spark.sql.session.timeZone", "UTC")
-        # Naive parquet timestamps -> TIMESTAMP_NTZ (matches DuckDB TIMESTAMP).
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-        # Parquet TIMESTAMP(NANOS) (events.ts) is unreadable by Spark's
-        # vectorized reader; surface it as epoch-nanos BIGINT and convert in
-        # sources/tables.py.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(map=RUNTIME_SQL_CONFS)
         # Arrow for every pandas_udf / mapInPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

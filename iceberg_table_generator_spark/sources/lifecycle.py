@@ -38,9 +38,10 @@ executor count; the metadata log is O(snapshots) JSON (driver-side, tiny);
 reads are `spark.read.parquet(*files)` + one broadcast anti-join per delete
 kind (positional, and each equality-column set); delete files are small
 relative to data, as in Iceberg MoR.  Per-file sequence numbers come from
-the snapshot log as literal map lookups and delete files are read with
-declared schemas, so applying deletes launches no side job: no driver-built
-relation to broadcast, no aggregate, no footer inference.
+the snapshot log as literal map lookups, and every file is read with a
+declared schema (each data-file entry records its write schema as DDL), so
+building a read launches no Spark job: no driver-built relation to
+broadcast, no aggregate, no footer inference.
 """
 
 from __future__ import annotations
@@ -56,6 +57,7 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 ROW_ID = "__row_id"
 # MERGE's match marker on the target side of `source LEFT JOIN target`
@@ -75,18 +77,19 @@ ROW_ID_TYPE = "struct<file:string,pos:bigint>"
 class Snapshot:
     snapshot_id: int
     operation: str
-    # data file entries: [path, sequence_number, schema_sig] — `path` is an
+    # data file entries: [path, sequence_number, schema DDL] — `path` is an
     # individual parquet FILE (Iceberg manifests track files, not
     # directories; files from every snapshot share one `data/<partition>/`
     # tree so the scan is a single leaf-file read).  An externally
     # registered PARTITIONED root (add_files) stays a directory entry —
     # its partition values need per-root inference.  The sequence is the
     # committing snapshot id, which is what equality deletes compare
-    # against (Iceberg's data-sequence-number rule).  `schema_sig`
-    # fingerprints the file's write schema (Iceberg's schema-id): the scan
-    # groups files by it so same-schema files share one multi-path read
-    # and cross-schema type coercion (int→bigint etc.) happens through
-    # unionByName across O(distinct schemas) groups, never per file.
+    # against (Iceberg's data-sequence-number rule).  The schema DDL is
+    # the file's write schema (`_schema_ddl`): the scan declares it, so no
+    # footer-inference job runs and hive partition columns read back as
+    # written, and groups files by it so same-schema files share one
+    # multi-path read; cross-schema type coercion (int→bigint etc.)
+    # happens through unionByName across O(distinct schemas) groups.
     data_files: list = field(default_factory=list)
     # delete file entries: [path, sequence_number, mode, equality_columns]
     # mode 'positional' → file holds __row_id (file, pos) tuples, applied
@@ -143,19 +146,16 @@ def _file_lookup(values: dict[str, int], file_path: Column) -> Column:
     return F.element_at(lookup, _local_path(file_path))
 
 
-def _schema_sig(schema) -> str:
-    """Order-insensitive fingerprint of a write schema (name:type pairs,
-    ROW_ID excluded) — the grouping key that lets the scan batch
+def _schema_ddl(schema: StructType) -> str:
+    """A write schema as DDL, ROW_ID excluded and fields ordered by name:
+    what the scan declares for a file, and the key that batches
     same-schema files into one read (parquet resolves columns by name, so
     column order inside a group is irrelevant)."""
-    import hashlib
-
-    items = sorted(
-        f"{f.name}:{f.dataType.simpleString()}"
-        for f in schema.fields
+    return ", ".join(
+        f"`{f.name.replace('`', '``')}` {f.dataType.simpleString()}"
+        for f in sorted(schema.fields, key=lambda f: f.name)
         if f.name != ROW_ID
     )
-    return hashlib.md5("|".join(items).encode()).hexdigest()[:12]
 
 
 def _entry_files(path: str) -> list[str]:
@@ -426,22 +426,57 @@ class ParquetSnapshotTable:
             kept.append(e)
         return kept
 
+    def _refs(self, snaps: list[Snapshot] | None = None) -> dict:
+        """Named refs; before the first branch or tag, `main` alone, at the
+        log tail."""
+        refs = self._load_refs()
+        if refs is None:
+            tail = (snaps or self._load())[-1].snapshot_id
+            refs = {"main": {"snapshot_id": tail, "type": "branch"}}
+        return refs
+
+    def snapshot(
+        self,
+        version: int | None = None,
+        ref: str | None = None,
+        as_of_timestamp_ms: int | None = None,
+    ) -> Snapshot:
+        """The snapshot VERSION AS OF `version`, the head of branch or tag
+        `ref` (Iceberg's VERSION AS OF 'name'), or the last one committed at
+        or before `as_of_timestamp_ms` (FOR TIMESTAMP AS OF).  Default: the
+        main branch head (the log tail until refs exist)."""
+        if sum(x is not None for x in (version, ref, as_of_timestamp_ms)) > 1:
+            raise ValueError("pass at most one of version / as_of_timestamp_ms / ref")
+        snaps = self._load()
+        if as_of_timestamp_ms is not None:
+            eligible = [s for s in snaps if s.timestamp_ms <= as_of_timestamp_ms]
+            if not eligible:
+                raise ValueError(
+                    f"no snapshot at or before {as_of_timestamp_ms} "
+                    f"(oldest is {snaps[0].timestamp_ms})"
+                )
+            return eligible[-1]
+        if version is None:
+            named = self._refs(snaps).get(ref or "main")
+            if named is None:
+                raise ValueError(f"unknown ref {ref!r}")
+            version = named["snapshot_id"]
+        for s in snaps:
+            if s.snapshot_id == version:
+                return s
+        raise ValueError(
+            f"no snapshot {version}; table has versions 0..{snaps[-1].snapshot_id}"
+        )
+
     def _head(self, branch: str = "main") -> tuple[Snapshot, int]:
         """(head snapshot of `branch`, next global snapshot id).  Snapshot
         ids stay globally monotonic across branches (Iceberg allocates
         snapshot ids table-wide; refs just point into the log)."""
         snaps = self._load()
-        refs = self._load_refs()
-        if refs is None:
-            if branch != "main":
-                raise ValueError(f"unknown branch {branch!r}; create_branch() first")
-            head = snaps[-1]
-        else:
-            ref = refs.get(branch)
-            if ref is None or ref["type"] != "branch":
-                raise ValueError(f"{branch!r} is not a branch")
-            head = next(s for s in snaps if s.snapshot_id == ref["snapshot_id"])
-        return head, snaps[-1].snapshot_id + 1
+        ref = self._refs(snaps).get(branch)
+        if ref is None or ref["type"] != "branch":
+            raise ValueError(f"{branch!r} is not a branch")
+        return self.snapshot(version=ref["snapshot_id"]), snaps[-1].snapshot_id + 1
 
     def _commit(
         self,
@@ -486,21 +521,17 @@ class ParquetSnapshotTable:
     def create_branch(self, name: str, version: int | None = None) -> None:
         """Iceberg `CREATE BRANCH`: a named, writable head.  Materializes
         refs.json on first use with `main` pinned to the current tail."""
-        refs = self._load_refs() or {
-            "main": {"snapshot_id": self._load()[-1].snapshot_id, "type": "branch"}
-        }
-        at = refs["main"]["snapshot_id"] if version is None else version
-        refs[name] = {"snapshot_id": at, "type": "branch"}
-        self._save_refs(refs)
+        self._create_ref(name, version, "branch")
 
     def create_tag(self, name: str, version: int | None = None) -> None:
         """Iceberg `CREATE TAG`: an immutable named snapshot pointer
         (commits to a tag are refused)."""
-        refs = self._load_refs() or {
-            "main": {"snapshot_id": self._load()[-1].snapshot_id, "type": "branch"}
-        }
+        self._create_ref(name, version, "tag")
+
+    def _create_ref(self, name: str, version: int | None, kind: str) -> None:
+        refs = self._refs()
         at = refs["main"]["snapshot_id"] if version is None else version
-        refs[name] = {"snapshot_id": at, "type": "tag"}
+        refs[name] = {"snapshot_id": at, "type": kind}
         self._save_refs(refs)
 
     def fast_forward(self, branch: str, to: str) -> None:
@@ -571,11 +602,10 @@ class ParquetSnapshotTable:
         between a point-lookup touching one row group and touching all of
         them."""
         cur, sid = self._head(branch)
-        files = self._write_data_files(df, cur, sid, num_files=num_files, sort_by=sort_by)
-        new_cols, new_types = self._evolved_schema(cur, df)
-        sig = _schema_sig(df.schema)
+        entries = self._write_data_files(df, cur, sid, num_files=num_files, sort_by=sort_by)
+        new_cols, new_types = self._evolved_schema(cur, df.schema)
         changes: dict = dict(
-            data_files=cur.data_files + [[f, sid, sig] for f in files],
+            data_files=cur.data_files + entries,
             columns=new_cols,
             column_types=new_types,
         )
@@ -599,15 +629,15 @@ class ParquetSnapshotTable:
         num_files: int | None = None,
         sort_by: list[str] | None = None,
         name_prefix: str = "snap",
-    ) -> list[str]:
+    ) -> list[list]:
         """Write a batch as data files and publish them into the shared
         `data/<partition>/` tree (Iceberg's write-then-commit: files land
         uncommitted in a staging dir, then move — same-filesystem rename —
         into the table layout; only the subsequent metadata commit makes
         them visible).  All snapshots share one partition-dir tree, so the
         whole table scans as a single leaf-file parquet read with
-        `basePath` partition discovery.  Returns the published file
-        paths."""
+        `basePath` partition discovery.  Returns the published files' log
+        entries, [path, sid, schema DDL]."""
         out = df.drop(ROW_ID)  # ids are positional; rewritten rows get new ones
         if sort_by:
             out = out.repartitionByRange(num_files or 4, *sort_by).sortWithinPartitions(
@@ -634,26 +664,39 @@ class ParquetSnapshotTable:
             writer = writer.partitionBy(*cur.partition_by)
         writer.parquet(stage)
         data_dir = os.path.join(self.path, "data")
-        published: list[str] = []
+        ddl = _schema_ddl(out.schema)
+        published: list[list] = []
         for f in sorted(glob.glob(os.path.join(stage, "**", "*.parquet"), recursive=True)):
             rel = os.path.relpath(os.path.dirname(f), stage)
             dest_dir = data_dir if rel == "." else os.path.join(data_dir, rel)
             os.makedirs(dest_dir, exist_ok=True)
             dest = os.path.join(dest_dir, f"{name_prefix}-{sid}-{os.path.basename(f)}")
             os.rename(f, dest)
-            published.append(dest)
+            published.append([dest, sid, ddl])
         shutil.rmtree(stage, ignore_errors=True)
         return published
 
+    def _write_delete_file(
+        self, df: DataFrame, sid: int, mode: str, cols: list[str] = ()
+    ) -> list:
+        """Write `df` as one delete file (a directory of parquet parts)
+        and return its log entry, [path, sid, mode, equality columns]."""
+        path = os.path.join(self.path, "deletes", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
+        df.write.mode("overwrite").parquet(path)
+        return [path, sid, mode, list(cols)]
+
     @staticmethod
-    def _evolved_schema(cur: Snapshot, df: DataFrame) -> tuple[list[str], dict[str, str]]:
-        new_cols = cur.columns + [
-            c for c in df.columns if c not in cur.columns and c != ROW_ID
-        ]
-        new_types = dict(cur.column_types)
-        for f_ in df.schema.fields:
-            if f_.name != ROW_ID:
-                new_types[f_.name] = f_.dataType.simpleString()
+    def _evolved_schema(
+        cur: Snapshot, schema: StructType
+    ) -> tuple[list[str], dict[str, str]]:
+        """Table columns and types after committing files of `schema`: new
+        columns append, every written column takes its written type."""
+        fields = [f for f in schema.fields if f.name != ROW_ID]
+        new_cols = cur.columns + [f.name for f in fields if f.name not in cur.columns]
+        new_types = {
+            **cur.column_types,
+            **{f.name: f.dataType.simpleString() for f in fields},
+        }
         return new_cols, new_types
 
     def add_files(self, file_dirs: list[str]) -> Snapshot:
@@ -666,23 +709,17 @@ class ParquetSnapshotTable:
         the reference scenario is a survey-declared non-goal."""
         cur, sid = self._head()
         schema = self.spark.read.parquet(*file_dirs).schema
-        new_cols = cur.columns + [
-            f.name for f in schema.fields if f.name not in cur.columns and f.name != ROW_ID
-        ]
-        new_types = dict(cur.column_types)
-        for f_ in schema.fields:
-            if f_.name != ROW_ID:
-                new_types[f_.name] = f_.dataType.simpleString()
+        new_cols, new_types = self._evolved_schema(cur, schema)
         # Unpartitioned externals register per-FILE (uniform with native
         # entries); a hive-partitioned external root stays one directory
-        # entry so its partition values get per-root inference at read.
-        sig = _schema_sig(schema)
+        # entry so its partition values get per-root discovery at read.
+        ddl = _schema_ddl(schema)
         entries: list[list] = []
         for d in file_dirs:
             if os.path.isdir(d) and _partition_cols_of(d):
-                entries.append([os.path.abspath(d), sid, sig])
+                entries.append([os.path.abspath(d), sid, ddl])
             else:
-                entries.extend([os.path.abspath(f), sid, sig] for f in _entry_files(d))
+                entries.extend([os.path.abspath(f), sid, ddl] for f in _entry_files(d))
         return self._commit(
             "add-files",
             expected_parent=cur.snapshot_id,
@@ -715,29 +752,18 @@ class ParquetSnapshotTable:
         mode='equality' without `equality_columns` degrades to the
         row-visibility-equivalent positional file (the r1 behavior)."""
         cur, sid = self._head(branch)
-        del_dir = os.path.join(self.path, "deletes", f"snap-{sid}-{uuid.uuid4().hex[:8]}")
+        matching = self.read(ref=branch).filter(condition)
         if mode == "equality" and equality_columns:
-            values = (
-                self.read(ref=branch).filter(condition).select(*equality_columns).distinct()
-            )
-            values.write.mode("overwrite").parquet(del_dir)
-            entry = [del_dir, sid, "equality", list(equality_columns)]
+            values = matching.select(*equality_columns).distinct()
+            entry = self._write_delete_file(values, sid, "equality", equality_columns)
         else:
-            matching = self.read(ref=branch).filter(condition).select(ROW_ID)
-            matching.write.mode("overwrite").parquet(del_dir)
-            entry = [del_dir, sid, "positional", []]
+            entry = self._write_delete_file(matching.select(ROW_ID), sid, "positional")
         return self._commit(
             f"delete-{mode}",
             expected_parent=cur.snapshot_id,
             branch=branch,
             delete_files=cur.delete_files + [entry],
         )
-
-    def merge_upsert(self, df: DataFrame, keys: list[str]) -> Snapshot:
-        """MERGE INTO (upsert-by-key): rows in `df` replace current rows
-        with the same key values; new keys append.  One atomic snapshot —
-        see `merge`."""
-        return self.merge(df, keys)
 
     def merge(
         self,
@@ -833,23 +859,18 @@ class ParquetSnapshotTable:
         if when_matched_update is not None or when_not_matched_insert:
             new_rows = joined.filter(keep).select(*out_cols)
         # write both files BEFORE the single metadata commit
-        del_dir = os.path.join(
-            self.path, "deletes", f"snap-{sid}-{uuid.uuid4().hex[:8]}"
-        )
-        victims.distinct().write.mode("overwrite").parquet(del_dir)
+        delete = self._write_delete_file(victims.distinct(), sid, "equality", keys)
         data_entries: list[list] = []
         new_cols, new_types = list(cur.columns), dict(cur.column_types)
         if new_rows is not None:
-            files = self._write_data_files(new_rows, cur, sid)
-            sig = _schema_sig(new_rows.schema)
-            data_entries = [[f, sid, sig] for f in files]
-            new_cols, new_types = self._evolved_schema(cur, new_rows)
+            data_entries = self._write_data_files(new_rows, cur, sid)
+            new_cols, new_types = self._evolved_schema(cur, new_rows.schema)
         new_types.update(key_types)
         return self._commit(
             "merge",
             expected_parent=cur.snapshot_id,
             data_files=cur.data_files + data_entries,
-            delete_files=cur.delete_files + [[del_dir, sid, "equality", list(keys)]],
+            delete_files=cur.delete_files + [delete],
             columns=new_cols,
             column_types=new_types,
         )
@@ -865,25 +886,19 @@ class ParquetSnapshotTable:
         (e.g. ``{"qty": "qty + 1"}``)."""
         cur, sid = self._head(branch)
         matched = self.read(ref=branch).filter(condition)
-        victims = matched.select(ROW_ID)
         updated = matched.select(
             *[
                 F.expr(set_exprs[c]).alias(c) if c in set_exprs else F.col(c)
                 for c in cur.columns
             ]
         )
-        del_dir = os.path.join(
-            self.path, "deletes", f"snap-{sid}-{uuid.uuid4().hex[:8]}"
-        )
-        victims.write.mode("overwrite").parquet(del_dir)
-        files = self._write_data_files(updated, cur, sid)
-        sig = _schema_sig(updated.schema)
+        delete = self._write_delete_file(matched.select(ROW_ID), sid, "positional")
         return self._commit(
             "update",
             expected_parent=cur.snapshot_id,
             branch=branch,
-            data_files=cur.data_files + [[f, sid, sig] for f in files],
-            delete_files=cur.delete_files + [[del_dir, sid, "positional", []]],
+            data_files=cur.data_files + self._write_data_files(updated, cur, sid),
+            delete_files=cur.delete_files + [delete],
         )
 
     def add_column(self, name: str) -> Snapshot:
@@ -921,38 +936,72 @@ class ParquetSnapshotTable:
         small files, never a table-wide rewrite."""
         cur, sid = self._head()
         selected = self._prune_entries(cur.data_files, where)
-        if where is not None and len(selected) < len(cur.data_files):
-            sel_files = {f for e in selected for f in _entry_files(e[0])}
-            rest = [e for e in cur.data_files if e[0] not in {s[0] for s in selected}]
-            # visible rows OF THE SELECTED FILES ONLY (deletes applied);
-            # the row id's file field is the scan's file path
-            current = (
-                self.read()
-                .filter(_local_path(F.col(f"{ROW_ID}.file")).isin(*sorted(sel_files)))
-                .drop(ROW_ID)
-            )
-            files = self._write_data_files(
-                current, cur, sid, num_files=target_files, name_prefix="compact"
-            )
-            sig = _schema_sig(current.schema)
-            return self._commit(
-                "compact",
-                expected_parent=cur.snapshot_id,
-                data_files=rest + [[f, sid, sig] for f in files],
-                delete_files=list(cur.delete_files),
-            )
-        # visible rows, deletes applied; positional ids are NOT carried over
-        # (rewritten rows get fresh (file, pos) keys, as in Iceberg rewrites)
-        current = self.read(with_row_id=False)
-        files = self._write_data_files(
-            current, cur, sid, num_files=target_files, name_prefix="compact"
+        if len(selected) == len(cur.data_files):
+            # visible rows, deletes applied; positional ids are NOT carried
+            # over (rewritten rows get fresh (file, pos) keys, as in
+            # Iceberg rewrites)
+            rows = self.read(with_row_id=False)
+            return self._replace("compact", rows, cur, sid, num_files=target_files)
+        sel_paths = {e[0] for e in selected}
+        sel_files = {f for p in sel_paths for f in _entry_files(p)}
+        # visible rows OF THE SELECTED FILES ONLY (deletes applied); the row
+        # id's file field is the scan's file path
+        rows = (
+            self.read()
+            .filter(_local_path(F.col(f"{ROW_ID}.file")).isin(*sorted(sel_files)))
+            .drop(ROW_ID)
         )
-        sig = _schema_sig(current.schema)
-        return self._commit(
+        return self._replace(
             "compact",
+            rows,
+            cur,
+            sid,
+            num_files=target_files,
+            kept=[e for e in cur.data_files if e[0] not in sel_paths],
+            delete_files=cur.delete_files,
+        )
+
+    def overwrite(
+        self,
+        df: DataFrame,
+        num_files: int | None = None,
+        properties: dict[str, str] | None = None,
+    ) -> Snapshot:
+        """INSERT OVERWRITE: `df`'s rows replace every row of the table in
+        one snapshot, which keeps no earlier data or delete file.
+        `properties` commit with it, as in `append`."""
+        cur, sid = self._head()
+        return self._replace(
+            "overwrite", df, cur, sid, num_files=num_files, properties=properties
+        )
+
+    def _replace(
+        self,
+        op: str,
+        rows: DataFrame,
+        cur: Snapshot,
+        sid: int,
+        num_files: int | None = None,
+        kept: list = (),
+        delete_files: list = (),
+        properties: dict[str, str] | None = None,
+    ) -> Snapshot:
+        """The commit of every rewrite (compact, rewrite_zorder,
+        overwrite): `rows` become data files named `{op}-{sid}-…` beside
+        the `kept` entries, and `delete_files` are the only delete files
+        left."""
+        entries = self._write_data_files(
+            rows, cur, sid, num_files=num_files, name_prefix=op
+        )
+        new_cols, new_types = self._evolved_schema(cur, rows.schema)
+        return self._commit(
+            op,
             expected_parent=cur.snapshot_id,
-            data_files=[[f, sid, sig] for f in files],
-            delete_files=[],
+            data_files=list(kept) + entries,
+            delete_files=list(delete_files),
+            columns=new_cols,
+            column_types=new_types,
+            properties={**cur.properties, **(properties or {})},
         )
 
     def remove_orphan_files(self) -> list[str]:
@@ -998,27 +1047,14 @@ class ParquetSnapshotTable:
             .sortWithinPartitions(Z_COL)
             .drop(Z_COL)
         )
-        files = self._write_data_files(arranged, cur, sid, name_prefix="zorder")
-        sig = _schema_sig(arranged.schema)
-        return self._commit(
-            "zorder",
-            expected_parent=cur.snapshot_id,
-            data_files=[[f, sid, sig] for f in files],
-            delete_files=[],
-        )
+        return self._replace("zorder", arranged, cur, sid)
 
     def rollback_to(self, version: int) -> Snapshot:
         """Iceberg `rollback_to_snapshot`: a NEW snapshot that points back
         at an older snapshot's file lists — history is append-only, the
         rollback itself is recorded, and the rolled-past snapshots stay
         time-travelable."""
-        snaps = self._load()
-        try:
-            target = next(s for s in snaps if s.snapshot_id == version)
-        except StopIteration:
-            raise ValueError(
-                f"no snapshot {version}; table has versions 0..{snaps[-1].snapshot_id}"
-            ) from None
+        target = self.snapshot(version=version)
         return self._commit(
             "rollback",
             data_files=list(target.data_files),
@@ -1039,8 +1075,7 @@ class ParquetSnapshotTable:
             raise ValueError("keep_last must be >= 1")
         # snapshots pinned by a branch or tag never expire (Iceberg refuses
         # to expire ref-reachable snapshots)
-        refs = self._load_refs() or {}
-        pinned = {r["snapshot_id"] for r in refs.values()}
+        pinned = {r["snapshot_id"] for r in self._refs(snaps).values()}
         keep = [
             s
             for i, s in enumerate(snaps)
@@ -1228,12 +1263,7 @@ class ParquetSnapshotTable:
         `tbl.files` + `tbl.delete_files` in one relation.  `content` is
         'data' or the delete mode; `sequence_number` is what equality
         deletes compare against."""
-        snaps = self._load()
-        snap = (
-            snaps[-1]
-            if version is None
-            else next(s for s in snaps if s.snapshot_id == version)
-        )
+        snap = self.snapshot(version=version)
         rows = [("data", e[0], int(e[1])) for e in snap.data_files] + [
             (e[2], e[0], int(e[1])) for e in snap.delete_files
         ]
@@ -1267,17 +1297,7 @@ class ParquetSnapshotTable:
         tuple — the reference collects exactly these metrics at write time
         (`IcebergTableGenerator.java:420`) and Iceberg answers `tbl.files`
         from manifests the same way: no data rows are touched."""
-        if ref is not None:
-            refs = self._load_refs() or {}
-            if ref not in refs:
-                raise ValueError(f"unknown ref {ref!r}")
-            version = refs[ref]["snapshot_id"]
-        snaps = self._load()
-        snap = (
-            snaps[-1]
-            if version is None
-            else next(s for s in snaps if s.snapshot_id == version)
-        )
+        snap = self.snapshot(version=version, ref=ref)
         stats = self._load_stats()
         rows = []
         for e in snap.data_files:
@@ -1298,11 +1318,9 @@ class ParquetSnapshotTable:
         snapshot each points at).  Before any branch/tag exists, `main` is
         reported implicitly at the log tail, mirroring what `read()`
         resolves."""
-        refs = self._load_refs() or {
-            "main": {"snapshot_id": self._load()[-1].snapshot_id, "type": "branch"}
-        }
         rows = [
-            (name, v["type"], v["snapshot_id"]) for name, v in sorted(refs.items())
+            (name, v["type"], v["snapshot_id"])
+            for name, v in sorted(self._refs().items())
         ]
         return self.spark.createDataFrame(
             rows, "name string, type string, snapshot_id int"
@@ -1316,13 +1334,8 @@ class ParquetSnapshotTable:
         "which partitions are skewed / fragmented" without touching a
         single data row.  Dir-registered external roots (partitioned
         add_files) carry no per-file stats and are excluded; their
-        partition values are inferred at scan time instead."""
-        snaps = self._load()
-        snap = (
-            snaps[-1]
-            if version is None
-            else next(s for s in snaps if s.snapshot_id == version)
-        )
+        partition values are discovered at scan time instead."""
+        snap = self.snapshot(version=version)
         stats = self._load_stats()
         agg: dict[str, list[int]] = {}
         for e in snap.data_files:
@@ -1363,36 +1376,9 @@ class ParquetSnapshotTable:
         always applied too, so unparseable/partial predicates only lose
         pruning, never correctness; partition-column conjuncts additionally
         prune hive directories through the pushed-down scan filter."""
-        snaps = self._load()
-        if sum(x is not None for x in (version, as_of_timestamp_ms, ref)) > 1:
-            raise ValueError("pass at most one of version / as_of_timestamp_ms / ref")
-        if ref is not None:
-            refs = self._load_refs() or {}
-            if ref not in refs and ref != "main":
-                raise ValueError(f"unknown ref {ref!r}")
-            if ref in refs:
-                version = refs[ref]["snapshot_id"]
-        elif version is None and as_of_timestamp_ms is None:
-            refs = self._load_refs()
-            if refs is not None:
-                version = refs["main"]["snapshot_id"]
-        if as_of_timestamp_ms is not None:
-            eligible = [s for s in snaps if s.timestamp_ms <= as_of_timestamp_ms]
-            if not eligible:
-                raise ValueError(
-                    f"no snapshot at or before {as_of_timestamp_ms} "
-                    f"(oldest is {snaps[0].timestamp_ms})"
-                )
-            snap = eligible[-1]
-        elif version is None:
-            snap = snaps[-1]
-        else:
-            try:
-                snap = next(s for s in snaps if s.snapshot_id == version)
-            except StopIteration:
-                raise ValueError(
-                    f"no snapshot {version}; table has versions 0..{snaps[-1].snapshot_id}"
-                ) from None
+        snap = self.snapshot(
+            version=version, ref=ref, as_of_timestamp_ms=as_of_timestamp_ms
+        )
         scan_entries = self._prune_entries(snap.data_files, where)
         if not scan_entries:
             # Empty table (or every file pruned by the predicate): honor the
@@ -1409,43 +1395,35 @@ class ParquetSnapshotTable:
         # reference's flagship scenario is a 100-delete-commit table).
         # Native files all live in one shared `data/<partition>/` tree:
         # group leaf files by partition spec (distinct specs only exist
-        # after spec evolution) and scan each group as ONE parquet read
-        # with `basePath` partition discovery — partition-column filters
-        # prune directories exactly as on a static partitioned table.
-        # unionByName reconciles column evolution across schema groups.
+        # after spec evolution) and write schema, and scan each group as
+        # ONE parquet read with `basePath` partition discovery —
+        # partition-column filters prune directories exactly as on a
+        # static partitioned table.  Each group declares its recorded
+        # schema, so no footer is read to infer one and partition columns
+        # take their written types, not types guessed from directory names
+        # ("grp=0" is a string if it was written as one).  An external
+        # partitioned root (add_files) scans alone.  unionByName reconciles
+        # column evolution across schema groups.
         data_dir = os.path.join(os.path.abspath(self.path), "data")
         file_groups: dict[tuple, list[str]] = {}
-        ext_dirs: list[str] = []
-        for entry in scan_entries:
-            path = entry[0]
-            sig = entry[2] if len(entry) > 2 else None
+        for path, _seq, ddl in scan_entries:
             if os.path.isdir(path):
-                ext_dirs.append(path)  # external partitioned root (add_files)
+                file_groups[(None, path, ddl)] = [path]
                 continue
             comps = os.path.relpath(os.path.abspath(path), data_dir).split(os.sep)[:-1]
             cols = tuple(c.split("=", 1)[0] for c in comps if "=" in c)
-            file_groups.setdefault((cols, sig), []).append(path)
+            key = (data_dir if cols else None, cols, ddl)
+            file_groups.setdefault(key, []).append(path)
         row_id = F.struct(
             F.col("_metadata.file_path").alias("file"),
             F.col("_metadata.row_index").alias("pos"),
         )
         parts = []
-        for (cols, _sig), paths in file_groups.items():
-            rd = self.spark.read
-            if cols:
-                rd = rd.option("basePath", data_dir)
-            p = rd.parquet(*paths).withColumn(ROW_ID, row_id)
-            # Hive partition discovery TYPE-INFERS partition values from the
-            # dir names (a string column written as "grp=0" comes back int),
-            # which would silently retype columns across rewrites; restore
-            # the append-time types recorded in the snapshot.
-            for c in cols:
-                want = snap.column_types.get(c)
-                if want and c in p.columns and p.schema[c].dataType.simpleString() != want:
-                    p = p.withColumn(c, F.col(c).cast(want))
-            parts.append(p)
-        for d in ext_dirs:
-            parts.append(self.spark.read.parquet(d).withColumn(ROW_ID, row_id))
+        for (base, _layout, ddl), paths in file_groups.items():
+            rd = self.spark.read.schema(ddl)
+            if base:
+                rd = rd.option("basePath", base)
+            parts.append(rd.parquet(*paths).withColumn(ROW_ID, row_id))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p, allowMissingColumns=True)

@@ -36,8 +36,7 @@ def snapshot_epoch_sink(table: ParquetSnapshotTable, num_files: int | None = Non
     batch_id: the second call must be a no-op)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        head = table._head()[0]
-        last = int(head.properties.get(EPOCH_PROP, -1))
+        last = int(table.snapshot().properties.get(EPOCH_PROP, -1))
         if batch_id <= last:
             return  # replayed epoch: already committed atomically with its data
         table.append(
@@ -92,14 +91,11 @@ def snapshot_epoch_sink_with_agg(
         # source rescans nondeterministically
         batch_df = batch_df.localCheckpoint(eager=True)
         marker = {EPOCH_PROP: str(batch_id)}
-        if int(table._head()[0].properties.get(EPOCH_PROP, -1)) < batch_id:
+        if int(table.snapshot().properties.get(EPOCH_PROP, -1)) < batch_id:
             table.append(batch_df, properties=marker)
-        if int(agg_table._head()[0].properties.get(EPOCH_PROP, -1)) < batch_id:
-            head = agg_table._head()[0]
-            if head.data_files:
-                base = agg_table.read(with_row_id=False)
-            else:
-                base = None
+        head = agg_table.snapshot()
+        if int(head.properties.get(EPOCH_PROP, -1)) < batch_id:
+            base = agg_table.read(with_row_id=False) if head.data_files else None
             delta = batch_df.withColumn("_change_type", F.lit("insert"))
             if base is None:
                 new_state = (
@@ -116,22 +112,7 @@ def snapshot_epoch_sink_with_agg(
                 new_state = apply_agg_delta(base, delta, keys, sum_cols, count_col)
             # full-state rewrite per epoch: state is O(groups), tiny next
             # to the batch; at scale this becomes a MERGE on the group key
-            cur, sid = agg_table._head()
-            files = agg_table._write_data_files(
-                new_state, cur, sid, num_files=1, name_prefix="aggstate"
-            )
-            from iceberg_table_generator_spark.sources.lifecycle import _schema_sig
-
-            agg_table._commit(
-                "overwrite",
-                expected_parent=cur.snapshot_id,
-                data_files=[[f, sid, _schema_sig(new_state.schema)] for f in files],
-                columns=list(new_state.columns),
-                column_types={
-                    f.name: f.dataType.simpleString() for f in new_state.schema.fields
-                },
-                properties={**cur.properties, EPOCH_PROP: str(batch_id)},
-            )
+            agg_table.overwrite(new_state, num_files=1, properties=marker)
 
     return process
 

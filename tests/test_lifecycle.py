@@ -6,6 +6,7 @@ The central assertion reproduces the hand-verified row-count ledger of
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from iceberg_table_generator_spark.sources import scenarios
 from iceberg_table_generator_spark.sources.lifecycle import ParquetSnapshotTable
@@ -249,7 +250,7 @@ def test_merge_upsert_by_key(spark, tmp_path):
     upd = spark.createDataFrame(
         [(5, "new"), (7, "new"), (100, "new")], "k bigint, v string"
     )
-    t.merge_upsert(upd, keys=["k"])
+    t.merge(upd, keys=["k"])
     rows = {r.k: r.v for r in t.read(with_row_id=False).collect()}
     assert len(rows) == 11
     assert rows[5] == "new" and rows[7] == "new" and rows[100] == "new"
@@ -261,7 +262,7 @@ def test_merge_upsert_by_key(spark, tmp_path):
     last = t.snapshots()[-1]
     assert last.delete_files and last.data_files
     # a second merge on the same key wins again (sequence rule end to end)
-    t.merge_upsert(
+    t.merge(
         spark.createDataFrame([(5, "newest")], "k bigint, v string"), keys=["k"]
     )
     rows = {r.k: r.v for r in t.read(with_row_id=False).collect()}
@@ -347,8 +348,6 @@ def test_rollback_and_expire(spark, tmp_path):
 def test_concurrent_commit_detection(spark, tmp_path):
     """Optimistic concurrency: a writer whose parent snapshot moved under
     it must fail with ConcurrentCommitError, not clobber history."""
-    import pytest
-
     from iceberg_table_generator_spark.sources.lifecycle import ConcurrentCommitError
 
     path = str(tmp_path / "cc")
@@ -370,8 +369,6 @@ def test_timestamp_as_of_read(spark, tmp_path):
     """FOR TIMESTAMP AS OF: reads resolve to the last snapshot committed
     at or before the wall-clock."""
     import time as _time
-
-    import pytest
 
     t = ParquetSnapshotTable(spark, str(tmp_path / "ts_travel")).create(["k"])
     t.append(spark.range(10).select(F.col("id").alias("k")))
@@ -699,8 +696,6 @@ def test_branches_tags_write_audit_publish(spark, tmp_path):
     assert t.read().count() == 15
     # tag still pins the old version; tags are immutable
     assert t.read(ref="v1").count() == 10
-    import pytest
-
     with pytest.raises(ValueError):
         t.append(spark.range(5).select(F.col("id").alias("k")), branch="v1")
     # expire keeps ref-pinned snapshots alive
@@ -949,3 +944,100 @@ def test_zorder_expr_edge_cases(spark):
     dfc = spark.createDataFrame([(1, 7), (2, 7), (3, 7)], "x int, y int")
     zc = [r[Z_COL] for r in with_zorder(dfc, ["x", "y"], bits=4).orderBy("x").collect()]
     assert zc == sorted(zc)
+
+
+def test_every_snapshot_lookup_resolves_like_read(spark, tmp_path):
+    """The metadata tables and `rollback_to` resolve versions and refs the
+    way `read` does: an unknown version is a ValueError naming it, and
+    `main` exists before any branch or tag does."""
+    t = ParquetSnapshotTable(spark, str(tmp_path / "resolve")).create(["k"])
+    t.append(spark.range(3).select(F.col("id").alias("k")))
+    for lookup in (t.read, t.files_table, t.files_stats_table, t.partitions_table,
+                   t.rollback_to):
+        with pytest.raises(ValueError, match="no snapshot 99"):
+            lookup(version=99)
+    assert not (tmp_path / "resolve" / "refs.json").exists()
+    assert t.files_stats_table(ref="main").collect() == t.files_stats_table().collect()
+    with pytest.raises(ValueError, match="unknown ref"):
+        t.files_stats_table(ref="audit")
+
+
+def _in_job_group(spark, group: str, build):
+    """`build()`, with every Spark job it launches in job group `group`."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_read_builds_without_spark_jobs(spark, tmp_path):
+    """Every file group of a read is scanned with the schema its log
+    entries record, so building the DataFrame launches no job — across a
+    partition-spec change, an int→bigint widening, and positional plus
+    equality deletes."""
+    import time
+    import uuid
+
+    t = ParquetSnapshotTable(spark, str(tmp_path / "nojobs")).create(
+        ["k", "grp", "v"], partition_by=["grp"]
+    )
+    t.append(
+        spark.range(6).select(
+            F.col("id").cast("int").alias("k"),
+            (F.col("id") % 2).cast("string").alias("grp"),
+            F.lit("a").alias("v"),
+        ),
+        num_files=1,
+    )
+    t.set_partition_fields(["v"])
+    t.append(
+        spark.range(6, 10).select(
+            F.col("id").alias("k"), F.lit("1").alias("grp"), F.lit("b").alias("v")
+        ),
+        num_files=1,
+    )
+    t.delete_where("k = 1", mode="positional")
+    t.delete_where("k = 8", mode="equality", equality_columns=["k"])
+    tag = uuid.uuid4().hex[:8]
+    df = _in_job_group(spark, f"read-{tag}", t.read)
+    # control: inferring the same files' schema is a job the tracker sees;
+    # listener events arrive in order, so once it shows, so would the read's
+    files = [e[0] for e in t.snapshots()[-1].data_files]
+    _in_job_group(spark, f"infer-{tag}", lambda: spark.read.parquet(*files).schema)
+    tracker = spark.sparkContext.statusTracker()
+    for _ in range(50):
+        if tracker.getJobIdsForGroup(f"infer-{tag}"):
+            break
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup(f"infer-{tag}")
+    assert list(tracker.getJobIdsForGroup(f"read-{tag}")) == []
+    assert dict(df.dtypes)["k"] == "bigint" and dict(df.dtypes)["grp"] == "string"
+    assert sorted(r.k for r in df.collect()) == [0, 2, 3, 4, 5, 6, 7, 9]
+
+
+def test_digit_string_partition_column_stays_string(spark, tmp_path):
+    """A string partition column holding digits ("0"/"1") reads back as a
+    string, not as the int that directory-name inference would guess,
+    before and after compaction; a predicate on it prunes to its files."""
+    t = ParquetSnapshotTable(spark, str(tmp_path / "digits")).create(
+        ["k", "grp"], partition_by=["grp"]
+    )
+    t.append(
+        spark.range(10).select(
+            F.col("id").alias("k"), (F.col("id") % 2).cast("string").alias("grp")
+        )
+    )
+
+    def check(step: str) -> None:
+        assert dict(t.read().dtypes)["grp"] == "string", step
+        pruned = t.read(with_row_id=False, where="grp = '0'")
+        assert pruned.inputFiles(), step
+        assert all("/grp=0/" in f for f in pruned.inputFiles()), step
+        assert sorted(r.k for r in pruned.collect()) == [0, 2, 4, 6, 8], step
+
+    check("appended")
+    t.compact(target_files=1)
+    check("compacted")

@@ -1,4 +1,5 @@
-"""The session-wide `InferFiltersFromGenerate` exclusion (session.py).
+"""The engine's session confs (session.py), and among them the
+session-wide `InferFiltersFromGenerate` exclusion.
 
 The rule synthesizes `size(e) > 0 AND isnotnull(e)` under every
 `explode(e)` and, for the engine's computed-array explodes, duplicates the
@@ -16,7 +17,7 @@ import pyspark.sql.functions as F
 
 from iceberg_table_generator_spark.operators.dedup import shingles, tokenize
 from iceberg_table_generator_spark.plans import explain
-from iceberg_table_generator_spark.session import RUNTIME_SQL_CONFS
+from iceberg_table_generator_spark.session import RUNTIME_SQL_CONFS, ensure_session_confs
 from iceberg_table_generator_spark.sources.tables import load_table
 
 EXCLUDED = "spark.sql.optimizer.excludedRules"
@@ -35,6 +36,16 @@ def test_get_spark_excludes_infer_filters_from_generate(spark):
     assert RULE in spark.sparkContext.getConf().get(EXCLUDED).split(",")
     assert RULE in RUNTIME_SQL_CONFS[EXCLUDED].split(",")
     assert RULE in spark.conf.get(EXCLUDED).split(",")
+
+
+def test_get_spark_sets_every_runtime_conf(spark):
+    # get_spark() builds the session from RUNTIME_SQL_CONFS, and
+    # ensure_session_confs applies every entry to a live session
+    built = spark.sparkContext.getConf()
+    ensure_session_confs(spark)
+    for key, value in RUNTIME_SQL_CONFS.items():
+        assert built.get(key) == value, key
+        assert spark.conf.get(key) == value, key
 
 
 def test_no_inferred_size_filter_under_shingle_explode(spark, sf_small):
