@@ -1,9 +1,12 @@
 """Record generators R1-R6: the reference's table builders, Spark-native.
 
 Reference surface: `Main.java:475-603` — row-at-a-time `GenericRecord`
-constructors fed to the Iceberg writer.  Here each is ONE declarative
-`select` over `spark.range`: Catalyst codegens the expressions and the
-build parallelizes over the cluster (10^12-row tables are just more range
+constructors fed to the Iceberg writer.  Here each is ONE `spark.sql`
+projection over `range(start, end, 1, partitions)`, its columns spliced
+from the SQL expression text of datagen/values.py: the JVM parses the
+batch once, and building it costs a handful of py4j round trips however
+many columns it has.  Catalyst codegens the expressions and the build
+parallelizes over the cluster (10^12-row tables are just more range
 partitions; nothing is driver-side).
 
 Determinism: fixed (seed, n, partitions) ⇒ bit-identical output (see
@@ -31,6 +34,36 @@ NAME_TEMPLATES = [  # shape of Main.java:62-66 (format with capitalized category
 ]
 NAME_SUFFIXES = ["", " Pro", " Max"]  # shape of Main.java:68-69
 
+_INT_ID = "CAST(`id` AS INT)"
+
+
+def _select(columns: dict[str, str], source: str) -> str:
+    """`SELECT <text> AS <name>, ... FROM <source>` over an ordered
+    name → SQL-text mapping."""
+    items = ", ".join(f"{text} AS {V.quote_identifier(name)}" for name, text in columns.items())
+    return f"SELECT {items} FROM {source}"
+
+
+def _range(n: int, num_partitions: int, start: int = 0) -> str:
+    """The `spark.range(start, start + n, 1, num_partitions)` relation."""
+    return f"range({start}, {start + n}, 1, {num_partitions})"
+
+
+def _orders_columns(seed: int, year_range: tuple[int, int] = (2019, 2022)) -> dict[str, str]:
+    year = V.uniform_int(*year_range, seed=seed, salt=1)
+    product_name = (
+        f"concat_ws(' ', {V.pick(PRODUCT_NAMES, seed=seed, salt=3)}, "
+        f"CAST({V.uniform_int(0, 100, seed=seed, salt=4)} AS STRING))"
+    )
+    return {
+        "order_id": _INT_ID,
+        "order_year": year,
+        "order_date": V.timestamp_in_year(year, seed=seed, salt=20),
+        "source_id": V.uniform_int(0, 5, seed=seed, salt=2),
+        "product_name": product_name,
+        "amount": V.uniform_double(0.0, 100.0, seed=seed, salt=5),
+    }
+
 
 def orders(
     spark: SparkSession,
@@ -42,20 +75,7 @@ def orders(
     """R1/R3 `generateOrdersRecord` (`Main.java:475-509`): order_id=id,
     order_year uniform, order_date within year, source_id∈[0,5),
     product_name=pick+' '+int, amount∈[0,100)."""
-    base = V.ids(spark, n, num_partitions)
-    year = V.uniform_int(*year_range, seed=seed, salt=1)
-    return base.select(
-        F.col("id").cast("int").alias("order_id"),
-        year.alias("order_year"),
-        V.timestamp_in_year(year, seed=seed, salt=20).alias("order_date"),
-        V.uniform_int(0, 5, seed=seed, salt=2).alias("source_id"),
-        F.concat_ws(
-            " ",
-            V.pick(PRODUCT_NAMES, seed=seed, salt=3),
-            V.uniform_int(0, 100, seed=seed, salt=4).cast("string"),
-        ).alias("product_name"),
-        V.uniform_double(0.0, 100.0, seed=seed, salt=5).alias("amount"),
-    )
+    return spark.sql(_select(_orders_columns(seed, year_range), _range(n, num_partitions)))
 
 
 def orders_partitioned(
@@ -67,18 +87,19 @@ def orders_partitioned(
 ) -> DataFrame:
     """R1/R2 partitioned variants (`Main.java:475-497`): the partition column
     is fixed per slice (identity-partition semantics); other columns follow
-    the same generators.  Mirrors S3's per-partition append loop as a union
-    of pure plans — still fully distributed."""
-    out: DataFrame | None = None
+    the same generators.  Mirrors S3's per-partition append loop as a
+    UNION ALL of pure projections — still fully distributed, and still one
+    statement."""
+    slices = []
     for pv in partition_values:
-        df = orders(spark, rows_per_partition, seed=seed + pv)
-        df = df.withColumn(partition_col, F.lit(pv).cast("int"))
+        inner = _orders_columns(seed + pv)
+        cols = {name: V.quote_identifier(name) for name in inner}
+        cols[partition_col] = f"CAST({V.sql_literal(pv)} AS INT)"
         if partition_col != "order_year":
-            df = df.withColumn(
-                "order_year", V.uniform_int(2019, 2022, seed=seed + pv, salt=9, id_col="order_id")
-            )
-        out = df if out is None else out.unionByName(df)
-    return out
+            cols["order_year"] = V.uniform_int(2019, 2022, seed=seed + pv, salt=9, id_col="order_id")
+        # each slice is an orders() batch at its default 32 partitions
+        slices.append(_select(cols, f"({_select(inner, _range(rows_per_partition, 32))})"))
+    return spark.sql(" UNION ALL ".join(slices))
 
 
 def products(
@@ -98,36 +119,33 @@ def products(
     `columns` narrows the projection — the schema-adaptive behavior of
     `createProductsRecordGenerator` (`Main.java:543-588`), which survives
     add/drop column by generating only the live schema's fields."""
-    base = V.ids(spark, n, num_partitions, start=id_start)
-    pid = F.col("id").cast("int")
-    cat = F.lit(category) if category else V.pick(CATEGORIES, seed=seed, salt=1)
+    pid = _INT_ID
+    cat = V.sql_literal(category) if category else V.pick(CATEGORIES, seed=seed, salt=1)
+    # name: a template formatted with the capitalized category + an optional
+    # suffix (Main.java:525-531).
+    capitalized = f"concat(upper(substring({cat}, 1, 1)), lower(substring({cat}, 2, 100)))"
+    name = (
+        f"concat(regexp_replace({V.pick(NAME_TEMPLATES, seed=seed, salt=4)}, '%s', ''), "
+        f"{capitalized}, {V.pick(NAME_SUFFIXES, seed=seed, salt=5)})"
+    )
     all_cols = {
         "product_id": pid,
+        "name": name,
         "category": cat,
-        "color": F.element_at(
-            F.array(*[F.lit(c) for c in COLORS]), (F.pmod(pid, F.lit(10)) + 1).cast("int")
+        "color": (
+            f"element_at(array({', '.join(V.sql_literal(c) for c in COLORS)}), "
+            f"CAST((pmod({pid}, 10) + 1) AS INT))"
         ),
-        "created_date": F.make_date(
-            F.lit(2022) - F.floor(pid / 12).cast("int"),
-            F.lit(12) - F.pmod(pid, F.lit(12)).cast("int"),
-            F.lit(1),
+        "created_date": (
+            f"make_date((2022 - CAST(FLOOR(({pid} / 12)) AS INT)), "
+            f"(12 - CAST(pmod({pid}, 12) AS INT)), 1)"
         ),
         "weight": V.uniform_double(0.1, 50.0, seed=seed, salt=2),
         "quantity": V.uniform_int(0, 10000, seed=seed, salt=3),
     }
-    wanted = columns or ["product_id", "name", "category", "color", "created_date", "weight", "quantity"]
-    select_cols = [all_cols[c].alias(c) for c in wanted if c in all_cols]
-    if "name" in wanted:
-        # template formatted with the capitalized category + optional suffix
-        # (Main.java:525-531); expressed inline against the `cat` expression.
-        capitalized = F.concat(F.upper(F.substring(cat, 1, 1)), F.lower(F.substring(cat, 2, 100)))
-        name = F.concat(
-            F.regexp_replace(V.pick(NAME_TEMPLATES, seed=seed, salt=4), "%s", ""),
-            capitalized,
-            V.pick(NAME_SUFFIXES, seed=seed, salt=5),
-        ).alias("name")
-        select_cols = [name if c == "name" else all_cols[c].alias(c) for c in wanted]
-    return base.select(*select_cols)
+    wanted = columns or list(all_cols)
+    cols = {c: all_cols[c] for c in wanted if c in all_cols}
+    return spark.sql(_select(cols, _range(n, num_partitions, start=id_start)))
 
 
 def wide_metrics(
@@ -139,13 +157,11 @@ def wide_metrics(
 ) -> DataFrame:
     """R6 `generateWideMetricsRecord` (`Main.java:596-603`, schema :76-82):
     id + `n_metrics` uniform doubles — the 1000-column stress table.  One
-    select of 999 codegen'd rand() expressions; no Python per-row work."""
-    base = V.ids(spark, n, num_partitions)
-    cols = [F.col("id").cast("int").alias("id")] + [
-        V.uniform_double(0.0, 100.0, seed=seed, salt=100 + i).alias(f"metric_{i}")
-        for i in range(n_metrics)
-    ]
-    return base.select(*cols)
+    projection of 999 codegen'd hash expressions; no Python per-row work."""
+    cols = {"id": _INT_ID}
+    for i in range(n_metrics):
+        cols[f"metric_{i}"] = V.uniform_double(0.0, 100.0, seed=seed, salt=100 + i)
+    return spark.sql(_select(cols, _range(n, num_partitions)))
 
 
 # --------------------------------------------------------------------------

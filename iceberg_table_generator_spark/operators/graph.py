@@ -75,11 +75,13 @@ def collect_transition_model(
     ran a SECOND corpus pass (scan + distinct) just for the node set —
     measured 0.57 s of each fold query's ~1.4 s at sf0.1.
 
-    |V| is loud-guarded immediately after materialization, before any
-    fold work.  The collected relation itself is ≤ |V|² + |V| rows by the
-    aggregation, so the guard bound also caps what the collect can pull;
-    a pre-collect node-count job would reintroduce the second corpus pass
-    this helper exists to remove."""
+    The collected relation is ≤ |V|² + |V| rows by the aggregation, so the
+    collect goes through a limit one row above that bound at
+    |V| = GRAPH_FOLD_MAX_NODES: reaching the limit proves the node bound
+    is violated, and the driver never pulls more than the limit.  |V|
+    itself is then guarded before any fold work.  A pre-collect
+    node-count job would reintroduce the second corpus pass this helper
+    exists to remove."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "ts",
@@ -88,9 +90,17 @@ def collect_transition_model(
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(F.col("k").alias("src"), F.lead("k").over(w).alias("dst"))
+    cap = GRAPH_FOLD_MAX_NODES**2 + GRAPH_FOLD_MAX_NODES + 1
     rows = (
-        seq.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("cnt")).collect()
+        seq.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("cnt")).limit(cap).collect()
     )
+    if len(rows) >= cap:
+        raise ValueError(
+            f"{query}: the transition relation reached {cap} rows, so |V| "
+            f"exceeds GRAPH_FOLD_MAX_NODES={GRAPH_FOLD_MAX_NODES} — the "
+            "model-sized driver-fold premise is violated; restore the "
+            "distributed iteration for this operator instead of raising the bound."
+        )
     node_set = {r.src for r in rows}
     guard_model_nodes(len(node_set), query)
     trans = [(r.src, r.dst, r.cnt) for r in rows if r.dst is not None]

@@ -44,9 +44,10 @@ RUNTIME_SQL_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     # Naive parquet timestamps -> TIMESTAMP_NTZ (matches DuckDB TIMESTAMP).
     "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
-    # Parquet TIMESTAMP(NANOS) (events.ts) is unreadable by Spark's
-    # vectorized reader; surface it as epoch-nanos BIGINT and convert in
-    # sources/tables.py.
+    # Parquet TIMESTAMP(NANOS) is unreadable by Spark's vectorized reader;
+    # surface any such column as epoch-nanos BIGINT instead of failing the
+    # scan.  The testdata stores every timestamp as micros
+    # (sources/tables.py::TABLE_SCHEMAS), so no engine query meets one.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # AQE: runtime partition coalescing, skew-join splitting, dynamic
     # broadcast conversion — the first line of defense at 100 TB.
@@ -70,6 +71,9 @@ RUNTIME_SQL_CONFS: dict[str, str] = {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     ),
 }
+
+
+WINDOW_EXEC_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
 
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
@@ -147,4 +151,12 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Every global window (no PARTITION BY) logs "No Partition Defined for
+    # Window operation!" when planned, which floods the log tail.  Their
+    # inputs are bounded (tests/test_window_invariant.py), so that one
+    # logger is raised to ERROR; the root level stays WARN.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        WINDOW_EXEC_LOGGER, jvm.org.apache.logging.log4j.Level.ERROR
+    )
     return spark

@@ -12,18 +12,41 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# The testdata's parquet schemas, declared: `spark.read.schema(ddl)` builds
+# a scan without opening a footer, where inference runs one Spark job per
+# call (`load_table` of documents/lineitem/events at sf0.1 on 4 cores,
+# median of 15: 0.11-0.15 s inferred, 0.025-0.037 s declared).  Timestamps are
+# naive parquet timestamp[us], so TIMESTAMP_NTZ matches DuckDB's TIMESTAMP.
+# tests/test_table_schemas.py checks these against the footers at every SF.
+TABLE_SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, "
+        "p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, "
+        "o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+        "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
+        "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
+        "value DOUBLE, props STRING"
+    ),
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+TABLE_NAMES = tuple(TABLE_SCHEMAS)
 
 # Dimension tables small enough to broadcast at ANY scale factor: region is
 # always 5 rows, nation 25.  customer/supplier/part grow with SF and must not
@@ -37,27 +60,14 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLE_NAMES:
+    if name not in TABLE_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     # The driver may pass its own SparkSession: make sure the SQL confs the
-    # engine depends on (UTC, NTZ inference, nanos-as-long, AQE) are applied.
+    # engine depends on (UTC, AQE, excluded optimizer rules) are applied.
     from iceberg_table_generator_spark.session import ensure_session_confs
 
     ensure_session_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
-    # events.ts is parquet TIMESTAMP(NANOS): Spark reads it as epoch-nanos
-    # BIGINT (spark.sql.legacy.parquet.nanosAsLong).  Truncate to micros —
-    # the same truncation DuckDB applies — and restore a naive timestamp.
-    for f in df.schema.fields:
-        if name == "events" and f.name == "ts" and f.dataType.simpleString() == "bigint":
-            import pyspark.sql.functions as F
-
-            # Integer division: epoch-nanos (~1.7e18) exceeds double's 53-bit
-            # mantissa, so `/ 1000` via double would round the microsecond.
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
-            )
-    return df
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(table_path(sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -24,18 +24,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_table_generator_spark.functions.sessions import SESSION_GAP_INTERVAL
 from iceberg_table_generator_spark.session import ensure_session_confs
-from iceberg_table_generator_spark.sources.tables import table_path
+from iceberg_table_generator_spark.sources.tables import TABLE_SCHEMAS, table_path
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet with the same ns→µs
-    timestamp normalization as the batch loader (sources/tables.py).
+    """File-source stream over the events parquet, read with the batch
+    loader's declared schema (sources/tables.py).
 
     Watermark-bearing column: `ts` (event time).  maxFilesPerTrigger keeps
     micro-batches bounded when replaying a directory."""
     ensure_session_confs(spark)
     path = table_path(sf_dir, "events")
-    batch_schema = spark.read.parquet(path).schema
     # The file stream source only accepts directories (new files arrive as
     # directory entries).  The testdata table is a single parquet file, so
     # stage a directory containing a symlink to it — a real deployment
@@ -50,22 +49,14 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.symlink(path, link)
         path = stage
     stream = (
-        spark.readStream.schema(batch_schema)
+        spark.readStream.schema(TABLE_SCHEMAS["events"])
         .option("maxFilesPerTrigger", 4)
         .parquet(path)
     )
-    ts_dtype = dict(stream.dtypes)["ts"]
     # Watermarks require TIMESTAMP (with-local-tz): NTZ raises
     # EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE.  With the session pinned to UTC
     # the wall-clock values are identical to the batch loader's NTZ column.
-    if ts_dtype == "bigint":
-        # Legacy testdata: TIMESTAMP(NANOS) surfaced as epoch-nanos BIGINT
-        # under spark.sql.legacy.parquet.nanosAsLong.
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_dtype == "timestamp_ntz":
-        # Current testdata: parquet timestamp[us] reads as TIMESTAMP_NTZ.
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def hourly_window_stream(spark: SparkSession, sf_dir: str, late_threshold: str = "2 hours") -> DataFrame:

@@ -50,7 +50,7 @@ def test_orders_domains(spark):
 def test_timestamp_quirks_preserved(spark):
     """The reference's G5 quirks: hour ∈ [0,22], February capped at 28."""
     df = V.ids(spark, 20000).select(
-        V.timestamp_in_year(F.lit(2020), seed=9).alias("ts")
+        F.expr(V.timestamp_in_year(2020, seed=9)).alias("ts")
     )
     row = df.agg(
         F.max(F.hour("ts")).alias("max_hour"),
@@ -100,7 +100,7 @@ def test_wide_metrics_shape(spark):
 
 
 def test_string_range(spark):
-    df = V.ids(spark, 1000).select(V.string_range("aa", "dd", 4, seed=5).alias("s"))
+    df = V.ids(spark, 1000).select(F.expr(V.string_range("aa", "dd", 4, seed=5)).alias("s"))
     rows = [r.s for r in df.collect()]
     assert all(len(s) == 4 for s in rows)
     assert all("a" <= s[0] < "d" for s in rows)  # position bounded by [lo, hi)

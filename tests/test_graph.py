@@ -56,3 +56,26 @@ def test_transition_model_guard_fires_inside_collect(spark, sf_small, monkeypatc
     monkeypatch.setattr(graph, "GRAPH_FOLD_MAX_NODES", 3)
     with pytest.raises(ValueError, match="events_pagerank"):
         graph.collect_transition_model(spark, sf_small, "events_pagerank")
+
+
+def test_transition_model_collect_stops_at_the_cap(spark, sf_small, monkeypatch):
+    """The guard runs before the driver holds the relation: the collect
+    goes through a limit of |V|² + |V| + 1 rows and raises on reaching it,
+    so an oversized domain never pulls more than that."""
+    from iceberg_table_generator_spark.operators import graph
+
+    monkeypatch.setattr(graph, "GRAPH_FOLD_MAX_NODES", 3)
+    cap = 3**2 + 3 + 1
+    frame_cls = type(spark.range(1))
+    pulled = []
+    collect = frame_cls.collect
+
+    def counted_collect(self):
+        rows = collect(self)
+        pulled.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(frame_cls, "collect", counted_collect)
+    with pytest.raises(ValueError, match=f"events_pagerank: the transition relation reached {cap} rows"):
+        graph.collect_transition_model(spark, sf_small, "events_pagerank")
+    assert pulled == [cap]

@@ -17,7 +17,11 @@ import pyspark.sql.functions as F
 
 from iceberg_table_generator_spark.operators.dedup import shingles, tokenize
 from iceberg_table_generator_spark.plans import explain
-from iceberg_table_generator_spark.session import RUNTIME_SQL_CONFS, ensure_session_confs
+from iceberg_table_generator_spark.session import (
+    RUNTIME_SQL_CONFS,
+    WINDOW_EXEC_LOGGER,
+    ensure_session_confs,
+)
 from iceberg_table_generator_spark.sources.tables import load_table
 
 EXCLUDED = "spark.sql.optimizer.excludedRules"
@@ -59,3 +63,11 @@ def test_no_inferred_size_filter_under_shingle_explode(spark, sf_small):
         assert INFERRED_SIZE_FILTER.search(_shingle_explode_plan(docs))
     finally:
         spark.conf.set(EXCLUDED, RULE)
+
+
+def test_get_spark_quiets_only_the_window_exec_logger(spark):
+    log_manager = spark.sparkContext._jvm.org.apache.logging.log4j.LogManager
+    assert str(log_manager.getLogger(WINDOW_EXEC_LOGGER).getLevel()) == "ERROR"
+    # a per-logger level: its siblings still follow the root logger
+    sibling = log_manager.getLogger("org.apache.spark.sql.execution.window.WindowEvaluatorFactory")
+    assert str(sibling.getLevel()) == str(log_manager.getRootLogger().getLevel())
