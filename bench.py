@@ -25,7 +25,7 @@ an index once and serves many queries:
 
   * ``similarity._IVF_INDEX_CACHE`` — integer k-means centroids;
   * ``similarity._PQ_CACHE``        — integer PQ codebooks;
-  * ``wave20._BPE_CACHE``           — the learned BPE merge list.
+  * ``text._BPE_CACHE``             — the learned BPE merge list.
 
 The fits (which include a corpus-sized scan) run once in the COLD run
 and are skipped in steady runs; ``cold_value`` is published and prices

@@ -1,10 +1,12 @@
 """Operator modules — importing this package registers every query.
 
 Module map (r13 verdict #8).  Thematic modules are named by subject;
-`wave8`–`wave20` are named by the ROUND that added them, so a FAMILY can
+`wave8`–`wave19` are named by the ROUND that added them, so a FAMILY can
 span several wave modules — the per-family trails are listed after the
-map.  The generated REGISTRY.md maps every query → module:line; this is
-the inverse: what a module is FOR.
+map.  Wave modules are regrouped by domain one slice at a time; the text
+slice is done (every `text_*` query outside `corpus` is in `text`).  The
+generated REGISTRY.md maps every query → module:line; this is the
+inverse: what a module is FOR.
 
 Thematic modules:
   relational / relational_ext / scalar_ext — TPC-H core shapes, windows,
@@ -12,7 +14,10 @@ Thematic modules:
   tpch_ext    — the remaining TPC-H queries (full 22/22 with tpch core)
   dedup       — exact + near-dup (MinHash-LSH, SimHash, n-gram) batch dedup
   similarity  — exact cosine gold, LSH/IVF/PQ ladder, k-means fits, MMR
-  text        — language-ID, quality, TF-IDF/BM25, token accounting
+  text        — the text domain: language-ID, quality, TF-IDF/BM25 and its
+    nDCG/MRR cascade, token accounting, lexical diversity, vocabulary
+    overlap/drift matrices, unigram/bigram-LM logloss, CCNet buckets,
+    subword fertility, engine-exact BPE merges
   corpus / mining / sequences / graph — corpus stats, frequent patterns,
     event sequences, graph centralities/structure
   pipeline    — curation: chunking, sampling, packing, cascades, audits
@@ -24,29 +29,27 @@ Thematic modules:
 Wave modules (by round):
   wave8   ABC/skyline/link-prediction, global exact quantiles
   wave9   span dedup, Lorenz/Gini, rank statistics
-  wave10  span islands, frame SimHash/motion, drift/signature audits
+  wave10  span islands, frame SimHash/motion, drift audits
   wave11  SemDeDup core, span decontamination, IVF nprobe, mixing weights
-  wave12  DSIR, LM logloss, SQ8 recall, incremental SemDeDup, Markov
-          attribution
-  wave13  per-language SemDeDup, nDCG/MRR evaluator (`_ranking_quality`)
-  wave14  Gopher rules, UniMax, BQ + Matryoshka recall, MATTR, band sweep
+  wave12  DSIR, SQ8 recall, incremental SemDeDup, Markov attribution
+  wave13  per-language SemDeDup, nDCG/MRR evaluator (`ranking_quality`)
+  wave14  Gopher rules, UniMax, BQ + Matryoshka recall, band sweep
   wave15  RRF fusion, ExpireSnapshots plan + retention sweep
   wave16  IVF+PQ recall, dedup tier-overlap Venn, text↔embedding alignment
   wave17  compression frontier, source-ablation matrix
   wave18  quality ablation curve, (lang, τ) SemDeDup sweep, BQ+rerank
-  wave19  subword fertility + vocab sweeps, CCNet buckets, cross-source
-          contamination, MinHash growth probe
-  wave20  engine-exact BPE merge fit + merge-table + BPE fertility +
-          merge-utilization ROI audit
+  wave19  Gopher × CCNet filter agreement, cross-source contamination,
+          MinHash growth probe
 
 Family trails across waves:
   SemDeDup:       wave11 (core) → wave12 (incremental) → wave13
                   (per-language) → wave18 ((lang, τ) sweep)
   ANN evaluation: similarity (gold, recall) → wave13 (nDCG/MRR) →
                   wave14/16/18 (BQ/MRL, IVF+PQ, rerank arms) → wave15
-                  (RRF) → wave17 (frontier summary)
-  Tokenizer fit:  text (whitespace fertility) → wave19 (coverage proxy)
-                  → wave20 (learned BPE merges)
+                  (RRF) → wave17 (frontier summary); text reuses the
+                  wave13 evaluator for the BM25 cascade
+  Quality filters: wave14 (Gopher rules) + text (CCNet buckets) → wave19
+                  (agreement matrix)
   Snapshot expiry: metadata_tables (relations) → wave15 (plan + sweep)
 """
 
@@ -80,7 +83,6 @@ from iceberg_table_generator_spark.operators import (  # noqa: F401
     wave17,
     wave18,
     wave19,
-    wave20,
     wide,
     zorder,
 )

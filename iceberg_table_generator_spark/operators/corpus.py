@@ -11,7 +11,7 @@ training-data-pipeline mandates at corpus granularity.
 Engine-exactness per repo policy: every count is an integer, every ratio
 is integer micro-units via one `div`, cross-row double accumulation goes
 through the DECIMAL helpers, and content keys use the 60-bit md5 prefix
-(`dedup._md5_60` / `_sql_md5_60`, verified bit-identical across engines).
+(`md5_60` / `md5_60_sql`, verified bit-identical across engines).
 
 Scale posture: shingle/vocab relations shuffle on content keys (uniform
 by construction — hashed text), rollups land on bounded domains (top-50,
@@ -31,7 +31,7 @@ from pyspark.sql.window import Window
 
 from iceberg_table_generator_spark.functions.order import with_global_order
 from iceberg_table_generator_spark.functions.cache import persist_tracked
-from iceberg_table_generator_spark.operators.dedup import _md5_60, _sql_md5_60
+from iceberg_table_generator_spark.functions.text import md5_60, md5_60_sql
 from iceberg_table_generator_spark.operators.relational import davg, sql_davg
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table
@@ -106,10 +106,10 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _CASCADE_ORACLE = f"""
 WITH k AS (
-  SELECT {_sql_md5_60('text')} AS exact_key,
-         {_sql_md5_60("array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')")}
+  SELECT {md5_60_sql('text')} AS exact_key,
+         {md5_60_sql("array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')")}
            AS bow_key,
-         {_sql_md5_60("array_to_string(string_split(text, ' ')[1:8], ' ')")}
+         {md5_60_sql("array_to_string(string_split(text, ' ')[1:8], ' ')")}
            AS prefix_key
   FROM documents),
 c AS (
@@ -133,7 +133,7 @@ def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     bag-of-words (word order ignored), and first-8-token prefix.  One
     row of counts plus keep-rates in integer micro-units.
 
-    Each tier is a 60-bit content digest (`dedup._md5_60`), so the
+    Each tier is a 60-bit content digest (`md5_60`), so the
     count-distincts shuffle 8-byte keys, never text — the same posture
     as `dedup_exact`.  All three digests are computed in the same scan
     pass; a single aggregate with partial count-distinct sets.  At 100 TB
@@ -143,11 +143,11 @@ def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     t = F.split("text", " ")
     k = docs.select(
-        _md5_60(F.col("text")).alias("exact_key"),
-        _md5_60(
+        md5_60(F.col("text")).alias("exact_key"),
+        md5_60(
             F.array_join(F.array_sort(F.array_distinct(t)), " ")
         ).alias("bow_key"),
-        _md5_60(F.array_join(F.slice(t, 1, 8), " ")).alias("prefix_key"),
+        md5_60(F.array_join(F.slice(t, 1, 8), " ")).alias("prefix_key"),
     )
     c = k.agg(
         F.count(F.lit(1)).alias("n_raw"),
@@ -355,7 +355,7 @@ _EPOCH_ORACLE = f"""
 WITH k AS (
   SELECT doc_id,
          CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
-         {_sql_md5_60(f"(CAST(doc_id AS VARCHAR) || ':{EPOCH_SEED}')")} AS key
+         {md5_60_sql(f"(CAST(doc_id AS VARCHAR) || ':{EPOCH_SEED}')")} AS key
   FROM documents)
 SELECT CAST(key % {N_SHARDS} AS BIGINT) AS shard,
        CAST(count(*) AS BIGINT) AS n_docs,
@@ -384,7 +384,7 @@ def pipeline_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = docs.select(
         "doc_id",
         F.size(F.split("text", " ")).cast("long").alias("ws_tokens"),
-        _md5_60(
+        md5_60(
             F.concat(F.col("doc_id").cast("string"), F.lit(f":{EPOCH_SEED}"))
         ).alias("key"),
     )

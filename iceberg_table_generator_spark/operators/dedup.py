@@ -27,31 +27,17 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
 from iceberg_table_generator_spark.functions.cache import persist_tracked
+from iceberg_table_generator_spark.functions.text import (
+    md5_60,
+    md5_60_sql,
+    shingles,
+    shingles_sql,
+    tokens,
+    tokens_sql,
+)
 from iceberg_table_generator_spark.operators.relational import davg, sql_davg
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table, spread
-
-
-def tokenize(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Lowercase whitespace tokenization as an array column."""
-    return df.withColumn("tokens", F.split(F.lower(F.col(text_col)), " "))
-
-
-def shingles(df: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct n-word shingles per document (array column `shingles`).
-
-    Built with sequence+transform over the token array — pure JVM
-    expressions, no explode until the consumer needs one.  Documents with
-    fewer than n tokens get an empty shingle set (the CASE guard is load-
-    bearing: sequence(0, -1) would descend to [0, -1] and slice(·, 0, n)
-    throws INVALID_PARAMETER_VALUE.START)."""
-    expr = f"""
-      CASE WHEN size(tokens) < {n} THEN array()
-           ELSE array_distinct(transform(sequence(0, size(tokens) - {n}),
-                               i -> concat_ws(' ', slice(tokens, i + 1, {n}))))
-      END
-    """
-    return df.withColumn("shingles", F.expr(expr))
 
 
 # --------------------------------------------------------------------------
@@ -84,9 +70,9 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Near-dup: n-gram Jaccard via inverted-index join (exact, oracle-checked)
 # --------------------------------------------------------------------------
-_JACCARD_ORACLE = """
+_JACCARD_ORACLE = f"""
 WITH w AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
+  SELECT doc_id, {tokens_sql()} AS ws FROM documents),
 sh AS (
   SELECT doc_id,
          unnest(list_distinct(list_transform(
@@ -136,7 +122,8 @@ def dedup_ngram_jaccard(
     That is the standard contract of stop-shingle filtering.  The default
     cap sits far above any df at oracle scale, so nothing is capped there
     and the driver check stays exact."""
-    d = shingles(tokenize(spread(load_table(spark, sf_dir, "documents"))))
+    d = spread(load_table(spark, sf_dir, "documents")).withColumn("tokens", tokens())
+    d = d.withColumn("shingles", shingles("tokens", 3))
     # Set size rides along from the array (F.size) — no count aggregation,
     # no post-join back to a counts table.  The index key is the xxhash64
     # of the shingle: an 8-byte shuffle key instead of a ~20-byte string; a
@@ -199,9 +186,9 @@ def dedup_ngram_jaccard(
 # --------------------------------------------------------------------------
 # Asymmetric containment near-dup (superset/boilerplate-expansion detector)
 # --------------------------------------------------------------------------
-_CONTAIN_ORACLE = """
+_CONTAIN_ORACLE = f"""
 WITH w AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
+  SELECT doc_id, {tokens_sql()} AS ws FROM documents),
 sh AS (
   SELECT doc_id,
          unnest(list_distinct(list_transform(
@@ -247,7 +234,8 @@ def dedup_ngram_containment(
     pair is enumerated only under shingles both docs share, and the
     df-cap bounds every posting list, so candidates ≤ Σ df² over retained
     shingles, never all-pairs."""
-    d = shingles(tokenize(spread(load_table(spark, sf_dir, "documents"))))
+    d = spread(load_table(spark, sf_dir, "documents")).withColumn("tokens", tokens())
+    d = d.withColumn("shingles", shingles("tokens", 3))
     sh = d.select(
         "doc_id",
         F.size("shingles").alias("n"),
@@ -294,11 +282,11 @@ def dedup_ngram_containment(
 # Shared recursive-CTE prefix: near-dup pairs → undirected edges →
 # transitive closure → per-member min-label cluster id.  Reused by the
 # cluster query and the keep-canonical corpus filter below.
-_CC_MEMBERS_CTE = """
+_CC_MEMBERS_CTE = f"""
 WITH RECURSIVE pairs AS (
   -- the exact 3-gram near-dup pairs (same logic as dedup_ngram_jaccard)
   SELECT doc_a, doc_b FROM (
-    WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
+    WITH w AS (SELECT doc_id, {tokens_sql()} AS ws FROM documents),
     sh AS (SELECT doc_id,
                   unnest(list_distinct(list_transform(generate_series(1, len(ws) - 2),
                       i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))) AS s
@@ -641,16 +629,6 @@ MH_A = [(2654435761 * (i + 1)) % MH_P for i in range(N_PERM)]
 MH_B = [(1779033703 * (i + 1) + 104729) % MH_P for i in range(N_PERM)]
 
 
-def _md5_60(col: Column) -> Column:
-    """Engine-independent 60-bit hash: the first 15 hex chars of md5."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def _sql_md5_60(expr: str) -> str:
-    """DuckDB twin of `_md5_60` (verified bit-identical)."""
-    return f"CAST(('0x' || substring(md5({expr}), 1, 15)) AS BIGINT)"
-
-
 def minhash_signatures(sh: DataFrame) -> DataFrame:
     """64 minhash values per doc from one explode pass.
 
@@ -680,10 +658,13 @@ def minhash_band_keys(docs: DataFrame, pre_shingled: bool = False) -> DataFrame:
     longs — exploding the raw ~30-byte shingle strings costs ~3× the
     whole signature stage (measured r5; the explode dominates, not the
     hash)."""
-    d = docs if pre_shingled else shingles(tokenize(docs))
+    d = docs
+    if not pre_shingled:
+        d = d.withColumn("tokens", tokens())
+        d = d.withColumn("shingles", shingles("tokens", 3))
     sh = d.select(
         "doc_id",
-        F.explode(F.transform("shingles", lambda s: _md5_60(s) % MH_P)).alias("h"),
+        F.explode(F.transform("shingles", lambda s: md5_60(s) % MH_P)).alias("h"),
     )
     sig = minhash_signatures(sh)
     band_cols = [
@@ -721,18 +702,13 @@ def _band_fold(cols: list[Column]) -> Column:
     )
 
 
-_SQL_SHINGLES = """
-    CASE WHEN len(ws) < 3 THEN []
-         ELSE list_distinct(list_transform(generate_series(1, len(ws) - 2),
-                  i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))
-    END"""
-
 # Shared CTE chain: documents -> (doc_id, band_id, bk) — the SQL twin of
 # `minhash_band_keys`, reused by the pair query and the one-pass verdict.
 _SQL_BANDS_CTE = f"""
-WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
-sh AS (SELECT doc_id, unnest({_SQL_SHINGLES}) AS s FROM tok),
-hs AS (SELECT doc_id, {_sql_md5_60('s')} % {MH_P} AS h FROM sh),
+WITH tok AS (SELECT doc_id, {tokens_sql()} AS ws FROM documents),
+sh AS (SELECT doc_id, unnest(
+    {shingles_sql("ws", 3)}) AS s FROM tok),
+hs AS (SELECT doc_id, {md5_60_sql('s')} % {MH_P} AS h FROM sh),
 perms AS (SELECT * FROM (VALUES {", ".join(f"({i}, {MH_A[i]}, {MH_B[i]})" for i in range(N_PERM))}) t(i, a, b)),
 mh AS (
   SELECT doc_id, p.i, min((p.a * h + p.b) % {MH_P}) AS m
@@ -776,7 +752,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     output.  At 100 TB: signatures are constant-size per doc; band buckets
     bound candidates; a hot bucket (boilerplate shingles) is handled by
     salting the band key or capping bucket size."""
-    d = shingles(tokenize(spread(load_table(spark, sf_dir, "documents"))))
+    d = spread(load_table(spark, sf_dir, "documents")).withColumn("tokens", tokens())
+    d = d.withColumn("shingles", shingles("tokens", 3))
     bands = minhash_band_keys(d, pre_shingled=True)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -889,12 +866,12 @@ SIMHASH_CHUNK_MASK = (1 << SIMHASH_CHUNK_BITS) - 1
 def simhash(df: DataFrame) -> DataFrame:
     """60-bit SimHash per doc: per-bit majority vote over token hashes.
 
-    Token hashes are the engine-independent 60-bit md5 prefix (`_md5_60`),
+    Token hashes are the engine-independent 60-bit md5 prefix (`md5_60`),
     so the fingerprint is identical on Spark and DuckDB.  Expressed as 60
     conditional sums over the exploded tokens — one shuffle on doc_id."""
     # Hash in-row, explode longs (same explode-width economics as minhash).
     hashed = df.select(
-        "doc_id", F.explode(F.transform("tokens", _md5_60)).alias("h")
+        "doc_id", F.explode(F.transform("tokens", md5_60)).alias("h")
     )
     bit = lambda i: F.shiftleft(F.lit(1).cast("long"), i)  # noqa: E731
     bit_sums = [
@@ -913,8 +890,8 @@ def simhash(df: DataFrame) -> DataFrame:
 
 _SIMHASH_ORACLE = f"""
 WITH tok AS (
-  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t FROM documents),
-hh AS (SELECT doc_id, {_sql_md5_60('t')} AS h FROM tok),
+  SELECT doc_id, unnest({tokens_sql()}) AS t FROM documents),
+hh AS (SELECT doc_id, {md5_60_sql('t')} AS h FROM tok),
 bits AS (
   SELECT doc_id, i.i AS i, sum(((h >> i.i) & 1) * 2 - 1) AS s
   FROM hh CROSS JOIN (SELECT unnest(generate_series(0, {SIMHASH_BITS - 1})) AS i) i
@@ -947,7 +924,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-independent (md5-prefix token hashes), so the full pipeline is
     DuckDB-oracle-paired since r5.  At 100 TB the fingerprint is 8
     bytes/doc and candidates are bounded by chunk-bucket sizes."""
-    d = tokenize(spread(load_table(spark, sf_dir, "documents")))
+    d = spread(load_table(spark, sf_dir, "documents")).withColumn("tokens", tokens())
     # persist(DISK_ONLY): the self-join's differing aliases defeat
     # ReuseExchange, so without this the tokenize->md5->bit-vote pipeline
     # runs once per join side (8 bytes per doc; the minhash_band_keys
@@ -1116,10 +1093,11 @@ def dedup_minhash_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     query; per-pair work is a constant 64-slot comparison plus the
     shingle-set intersection already paid by exact verification, and the
     output is ≤32 buckets."""
-    d = shingles(tokenize(spread(load_table(spark, sf_dir, "documents"))))
+    d = spread(load_table(spark, sf_dir, "documents")).withColumn("tokens", tokens())
+    d = d.withColumn("shingles", shingles("tokens", 3))
     sh = d.select(
         "doc_id",
-        F.explode(F.transform("shingles", lambda s: _md5_60(s) % MH_P)).alias("h"),
+        F.explode(F.transform("shingles", lambda s: md5_60(s) % MH_P)).alias("h"),
     )
     sig = minhash_signatures(sh).transform(persist_tracked)
     band_cols = [
@@ -1212,7 +1190,7 @@ PF_TAU_DEN = 20  # cross-multiplication only — no float compare anywhere
 
 _PREFIX_FILTER_ORACLE = f"""
 WITH w AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
+  SELECT doc_id, {tokens_sql()} AS ws FROM documents),
 sh AS (
   SELECT doc_id,
          unnest(list_distinct(list_transform(
@@ -1269,7 +1247,8 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the candidate join condition.  Everything is 64-bit integer;
     the basis-point ratio uses one truncating div (both engines floor on
     non-negatives)."""
-    d = shingles(tokenize(spread(load_table(spark, sf_dir, "documents"))), n=PF_N)
+    d = spread(load_table(spark, sf_dir, "documents")).withColumn("tokens", tokens())
+    d = d.withColumn("shingles", shingles("tokens", PF_N))
     # Postings carry the xxhash64 of the shingle, not the string: an
     # 8-byte shuffle key instead of a ~25-byte phrase (the
     # `dedup_ngram_jaccard` convention — a collision needs ~2^32 distinct

@@ -24,6 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
 from iceberg_table_generator_spark.functions.cache import persist_tracked
+from iceberg_table_generator_spark.functions.collect import collect_bounded
 from iceberg_table_generator_spark.functions.json import props_k
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table
@@ -90,17 +91,12 @@ def collect_transition_model(
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(F.col("k").alias("src"), F.lead("k").over(w).alias("dst"))
-    cap = GRAPH_FOLD_MAX_NODES**2 + GRAPH_FOLD_MAX_NODES + 1
-    rows = (
-        seq.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("cnt")).limit(cap).collect()
+    rows = collect_bounded(
+        seq.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("cnt")),
+        GRAPH_FOLD_MAX_NODES**2 + GRAPH_FOLD_MAX_NODES,
+        query,
+        "transition relation",
     )
-    if len(rows) >= cap:
-        raise ValueError(
-            f"{query}: the transition relation reached {cap} rows, so |V| "
-            f"exceeds GRAPH_FOLD_MAX_NODES={GRAPH_FOLD_MAX_NODES} — the "
-            "model-sized driver-fold premise is violated; restore the "
-            "distributed iteration for this operator instead of raising the bound."
-        )
     node_set = {r.src for r in rows}
     guard_model_nodes(len(node_set), query)
     trans = [(r.src, r.dst, r.cnt) for r in rows if r.dst is not None]

@@ -41,6 +41,12 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from iceberg_table_generator_spark.functions.cache import persist_tracked
 from iceberg_table_generator_spark.functions.json import props_k
+from iceberg_table_generator_spark.functions.text import (
+    md5_60,
+    md5_60_sql,
+    tokens,
+    tokens_sql,
+)
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table
 from iceberg_table_generator_spark.streaming.heavyhitters import (
@@ -151,11 +157,10 @@ CMS_TOP_K = 20  # audit the K most frequent tokens against the sketch
 
 
 def _cms_oracle() -> str:
-    from iceberg_table_generator_spark.operators.dedup import _sql_md5_60
 
     hashes = ", ".join(
         "{h} % {w} AS b{j}".format(
-            h=_sql_md5_60("token || '#%d'" % j), w=CMS_W, j=j
+            h=md5_60_sql("token || '#%d'" % j), w=CMS_W, j=j
         )
         for j in range(CMS_D)
     )
@@ -170,7 +175,7 @@ def _cms_oracle() -> str:
     )
     return f"""
 WITH tok AS (
-  SELECT unnest(string_split(lower(text), ' ')) AS token FROM documents),
+  SELECT unnest({tokens_sql()}) AS token FROM documents),
 vocab AS (
   SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY token),
 n AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_total FROM vocab),
@@ -205,11 +210,10 @@ def heavyhitters_cms_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the {d}×{w}-row sketch relation.  On a true stream the same fold
     runs as a map-side partial aggregate into {d}·{w} integers per
     partition — mergeable by addition."""
-    from iceberg_table_generator_spark.operators.dedup import _md5_60
 
     d = load_table(spark, sf_dir, "documents")
     vocab = (
-        d.select(F.explode(F.split(F.lower("text"), " ")).alias("token"))
+        d.select(F.explode(tokens()).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .transform(persist_tracked)
@@ -220,7 +224,7 @@ def heavyhitters_cms_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cnt",
         *[
             F.pmod(
-                _md5_60(F.concat(F.col("token"), F.lit(f"#{j}"))), F.lit(CMS_W)
+                md5_60(F.concat(F.col("token"), F.lit(f"#{j}"))), F.lit(CMS_W)
             ).alias(f"b{j}")
             for j in range(CMS_D)
         ],

@@ -21,7 +21,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     IntegerType,
     LongType,
@@ -31,17 +30,9 @@ from pyspark.sql.types import (
 )
 
 from iceberg_table_generator_spark.functions.cache import persist_tracked
+from iceberg_table_generator_spark.functions.text import md5_60_sql
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), nullable=False),
-        StructField("payload", BinaryType(), nullable=False),
-        StructField("mime", StringType(), nullable=False),
-        StructField("byte_len", LongType(), nullable=False),
-    ]
-)
 
 FEATURE_SCHEMA = StructType(
     [
@@ -513,7 +504,7 @@ ck AS (
            AS c
   FROM p),
 hh AS (SELECT doc_id,
-              CAST(('0x' || substring(md5(c), 1, 15)) AS BIGINT) AS h
+              {md5_60_sql('c')} AS h
        FROM ck),
 bits AS (
   SELECT doc_id, i.i AS i, sum(((h >> i.i) & 1) * 2 - 1) AS s

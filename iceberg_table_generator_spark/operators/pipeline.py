@@ -20,6 +20,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+from iceberg_table_generator_spark.functions.text import (
+    md5_60,
+    md5_60_sql,
+    ngrams,
+    shingles,
+    tokens,
+    tokens_sql,
+)
 from iceberg_table_generator_spark.operators.text import STOPWORDS, _sql_list
 from iceberg_table_generator_spark.functions.order import with_global_order
 from iceberg_table_generator_spark.functions.cache import persist_tracked
@@ -93,7 +101,7 @@ CONTAMINATION_DF_CAP = 50  # shingles in more docs than this are boilerplate
 
 _CONTAMINATION_ORACLE = f"""
 WITH w AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
+  SELECT doc_id, {tokens_sql()} AS ws FROM documents),
 sh AS (
   SELECT doc_id,
          len(list_distinct(list_transform(generate_series(1, len(ws) - 2),
@@ -133,9 +141,9 @@ def pipeline_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed index is persisted (DISK_ONLY) once: the hot-set pass, the
     corpus side, and the bench side all reuse it instead of
     re-tokenizing."""
-    from iceberg_table_generator_spark.operators.dedup import shingles, tokenize
 
-    d = shingles(tokenize(spread(load_table(spark, sf_dir, "documents"))))
+    d = spread(load_table(spark, sf_dir, "documents")).withColumn("tokens", tokens())
+    d = d.withColumn("shingles", shingles("tokens", 3))
     # persist(DISK_ONLY), not localCheckpoint: corpus-sized relation — see
     # the identical fault-tolerance rationale on dedup_ngram_jaccard's
     # posting stream (truncated-lineage localCheckpoint blocks are not
@@ -181,7 +189,7 @@ WITH feat AS (
          len(string_split(text, ' ')) AS n_words,
          (length(text) - length(regexp_replace(text, '[^a-z0-9 ]', '', 'g')))
            * 1.0 / length(text) AS punct_ratio,
-         len(list_filter(string_split(lower(text), ' '),
+         len(list_filter({tokens_sql()},
                          w -> w IN ({_sql_list(STOPWORDS)})))
            * 1.0 / len(string_split(text, ' ')) AS stopword_ratio
   FROM documents)
@@ -213,7 +221,7 @@ def pipeline_quality_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
         (text_len - F.length(F.regexp_replace("text", "[^a-z0-9 ]", ""))) * 1.0 / text_len
     )
     stopword_ratio = (
-        F.size(F.filter(F.split(F.lower("text"), " "), lambda w: w.isin(STOPWORDS)))
+        F.size(F.filter(tokens(), lambda w: w.isin(STOPWORDS)))
         * 1.0
         / n_words
     )
@@ -246,9 +254,9 @@ def pipeline_quality_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Repetition statistics (Gopher-style repetition quality signal)
 # --------------------------------------------------------------------------
-_REPETITION_ORACLE = """
+_REPETITION_ORACLE = f"""
 WITH tok AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
+  SELECT doc_id, {tokens_sql()} AS ws FROM documents),
 bi AS (
   SELECT doc_id,
          list_transform(generate_series(1, len(ws) - 1),
@@ -290,7 +298,7 @@ def pipeline_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-bench; the statistic is per-document, so nothing needs to leave
     the row."""
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.split(F.lower("text"), " ").alias("ws"))
+    tok = d.select("doc_id", tokens().alias("ws"))
     # Guard: for <2 tokens, sequence(1, size-1) would DESCEND ([1,0]) and
     # fabricate bogus bigrams (or throw under ANSI).  Emit array() instead;
     # 0-bigram docs are then dropped by the filter below — matching the
@@ -396,9 +404,9 @@ def pipeline_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Token-rarity scoring (perplexity-proxy quality signal)
 # --------------------------------------------------------------------------
-_RARITY_ORACLE = """
+_RARITY_ORACLE = f"""
 WITH tok AS (
-  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents),
+  SELECT doc_id, unnest({tokens_sql()}) AS w FROM documents),
 freq AS (SELECT w, count(*) AS c FROM tok GROUP BY w),
 tot AS (SELECT count(*) AS n FROM tok),
 per_doc AS (
@@ -454,7 +462,7 @@ def pipeline_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_tok feeds both branches through one reused exchange
     (ReuseExchange dedupes the identical shuffle subtree)."""
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("w"))
     doc_tok = tok.groupBy("doc_id", "w").agg(F.count("*").alias("k"))
     freq = doc_tok.groupBy("w").agg(F.sum("k").alias("c"))
     tot = freq.agg(F.sum("c").alias("n"))
@@ -493,7 +501,7 @@ DUP_NGRAM = 8  # word n-gram length (the RefinedWeb "duplicated 8-gram" rule)
 
 _DUP_NGRAM_ORACLE = f"""
 WITH tok AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
+  SELECT doc_id, {tokens_sql()} AS ws FROM documents),
 grams AS (
   SELECT doc_id,
          unnest(list_transform(generate_series(1, len(ws) - {DUP_NGRAM} + 1),
@@ -541,16 +549,10 @@ def pipeline_dup_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (Spark guarded by CASE; DuckDB's generate_series is empty for
     start > stop).  Integer counts; one final double division."""
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.split(F.lower("text"), " ").alias("ws"))
+    tok = d.select("doc_id", tokens().alias("ws"))
     grams = tok.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"CASE WHEN size(ws) < {DUP_NGRAM} THEN array() "
-                f"ELSE transform(sequence(0, size(ws) - {DUP_NGRAM}), "
-                f"i -> concat_ws(' ', slice(ws, i + 1, {DUP_NGRAM}))) END"
-            )
-        ).alias("g"),
+        F.explode(ngrams("ws", DUP_NGRAM)).alias("g"),
     )
     doc_gram = grams.groupBy("doc_id", "g").agg(F.count("*").alias("k"))
     freq = doc_gram.groupBy("g").agg(F.sum("k").alias("corpus_n"))
@@ -707,8 +709,7 @@ _PACKING_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id,
          len(string_split(text, ' ')) AS tokens,
-         CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-              AS BIGINT) % {N_PACK_SHARDS} AS shard_id
+         {md5_60_sql("CAST(doc_id AS VARCHAR)")} % {N_PACK_SHARDS} AS shard_id
   FROM documents),
 cum AS (
   SELECT shard_id, doc_id, tokens,
@@ -750,11 +751,10 @@ def pipeline_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer task, thousands), so the only window runs PARTITION BY shard_id
     and every shard packs in parallel.  The shard hash is the
     engine-independent 60-bit md5 prefix (same construction as the dedup
-    family, `_md5_60`).  Token offsets are integer (`div`), never double —
+    family, `md5_60`).  Token offsets are integer (`div`), never double —
     a 100 TB corpus overflows double's 2^53 exact-integer range.  The
     boundary-span explode emits (last_seq - first_seq + 1) rows per doc,
     i.e. ~tokens/SEQ_LEN — output-proportional, not quadratic."""
-    from iceberg_table_generator_spark.operators.dedup import _md5_60
     from pyspark.sql.window import Window
 
     tok = (
@@ -762,7 +762,7 @@ def pipeline_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.size(F.split("text", " ")).cast("long").alias("tokens"),
-            (_md5_60(F.col("doc_id").cast("string")) % N_PACK_SHARDS).alias(
+            (md5_60(F.col("doc_id").cast("string")) % N_PACK_SHARDS).alias(
                 "shard_id"
             ),
         )
@@ -813,9 +813,9 @@ CLF_KEEP_NUM = 25_000  # keep iff mean weight > CLF_KEEP_NUM (scaled by P)
 _CLASSIFIER_ORACLE = f"""
 WITH scored AS (
   SELECT doc_id, lang,
-         len(string_split(lower(text), ' ')) AS n_tokens,
-         CAST(list_sum(list_transform(string_split(lower(text), ' '),
-                t -> CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT)
+         len({tokens_sql()}) AS n_tokens,
+         CAST(list_sum(list_transform({tokens_sql()},
+                t -> {md5_60_sql('t')}
                      % {CLF_P} - {CLF_P // 2})) AS BIGINT) AS score_num
   FROM documents)
 SELECT doc_id, lang, CAST(n_tokens AS INT) AS n_tokens, score_num,
@@ -844,12 +844,11 @@ def pipeline_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the arithmetic — the shape (narrow map over docs) is unchanged, which
     is exactly why fastText classifiers are the web-scale default
     (GPT-3/LLaMA data papers).  Hashing reuses the engine-independent
-    60-bit md5 prefix (`_md5_60`)."""
-    from iceberg_table_generator_spark.operators.dedup import _md5_60
+    60-bit md5 prefix (`md5_60`)."""
 
-    toks = F.split(F.lower("text"), " ")
+    toks = tokens()
     weight_sum = F.aggregate(
-        F.transform(toks, lambda t: _md5_60(t) % CLF_P - CLF_P // 2),
+        F.transform(toks, lambda t: md5_60(t) % CLF_P - CLF_P // 2),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
@@ -875,11 +874,11 @@ def pipeline_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Per-source score calibration (quantile normalization)
 # --------------------------------------------------------------------------
-_CALIBRATION_ORACLE = """
+_CALIBRATION_ORACLE = f"""
 WITH feat AS (
   SELECT doc_id, source,
          len(string_split(text, ' ')) AS n_words,
-         CAST(len(list_filter(string_split(lower(text), ' '),
+         CAST(len(list_filter({tokens_sql()},
                               w -> w IN ('the','a','an','and','or','of',
                                          'to','in','is','it'))) AS DOUBLE)
            / len(string_split(text, ' ')) AS stop_ratio
@@ -914,7 +913,7 @@ def pipeline_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact; the raw score itself is rounded once before ranking so
     both engines rank identical values."""
     toks = F.split("text", " ")
-    low = F.split(F.lower("text"), " ")
+    low = tokens()
     stop_arr = F.array(*[F.lit(w) for w in
                          ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")])
     feat = (
@@ -1160,7 +1159,6 @@ SPLIT_TRAIN_BP, SPLIT_VAL_BP = 80, 90  # hash %100 < 80 train, < 90 val, else te
 
 
 def _split_oracle() -> str:
-    from iceberg_table_generator_spark.operators.dedup import _sql_md5_60
 
     return f"""
 WITH s AS (
@@ -1169,7 +1167,7 @@ WITH s AS (
               WHEN h < {SPLIT_VAL_BP} THEN 'val'
               ELSE 'test' END AS split
   FROM (SELECT lang,
-               {_sql_md5_60("CAST(doc_id AS VARCHAR)")} % 100 AS h
+               {md5_60_sql("CAST(doc_id AS VARCHAR)")} % 100 AS h
         FROM documents)),
 g AS (
   SELECT lang, split, CAST(count(*) AS BIGINT) AS n_docs
@@ -1186,7 +1184,7 @@ def pipeline_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/val/test assignment with the
     per-language quota audit a corpus build signs off on.  Membership is
     a pure function of doc_id through the engine-exact 60-bit md5 prefix
-    (`dedup._md5_60`): stable under repartitioning, cluster size, rerun,
+    (`md5_60`): stable under repartitioning, cluster size, rerun,
     and ENGINE — the property that makes the split leakage-free (a doc
     can never migrate between train and test across pipeline runs, the
     failure mode of rand()-based splits).  Unlike
@@ -1199,10 +1197,9 @@ def pipeline_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle beyond the aggregation's."""
     from pyspark.sql.window import Window
 
-    from iceberg_table_generator_spark.operators.dedup import _md5_60
 
     d = load_table(spark, sf_dir, "documents")
-    h = F.pmod(_md5_60(F.col("doc_id").cast("string")), 100)
+    h = F.pmod(md5_60(F.col("doc_id").cast("string")), 100)
     split = (
         F.when(h < SPLIT_TRAIN_BP, "train")
         .when(h < SPLIT_VAL_BP, "val")
@@ -1226,16 +1223,15 @@ def pipeline_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # End-to-end corpus manifest (dedup ∘ split ∘ token budget, composed)
 # --------------------------------------------------------------------------
 def _manifest_oracle() -> str:
-    from iceberg_table_generator_spark.operators.dedup import _sql_md5_60
 
     return f"""
 WITH d AS (
   SELECT doc_id, lang,
          md5(lower(text)) AS ck,
-         len(string_split(lower(text), ' ')) AS n_tokens,
-         CASE WHEN {_sql_md5_60("CAST(doc_id AS VARCHAR)")} % 100
+         len({tokens_sql()}) AS n_tokens,
+         CASE WHEN {md5_60_sql("CAST(doc_id AS VARCHAR)")} % 100
                    < {SPLIT_TRAIN_BP} THEN 'train'
-              WHEN {_sql_md5_60("CAST(doc_id AS VARCHAR)")} % 100
+              WHEN {md5_60_sql("CAST(doc_id AS VARCHAR)")} % 100
                    < {SPLIT_VAL_BP} THEN 'val'
               ELSE 'test' END AS split
   FROM documents),
@@ -1272,14 +1268,13 @@ def pipeline_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     text."""
     from pyspark.sql.window import Window
 
-    from iceberg_table_generator_spark.operators.dedup import _md5_60
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
         F.md5(F.lower("text")).alias("ck"),
-        F.size(F.split(F.lower("text"), " ")).alias("n_tokens"),
-        F.pmod(_md5_60(F.col("doc_id").cast("string")), 100).alias("h"),
+        F.size(tokens()).alias("n_tokens"),
+        F.pmod(md5_60(F.col("doc_id").cast("string")), 100).alias("h"),
     )
     split = (
         F.when(F.col("h") < SPLIT_TRAIN_BP, "train")

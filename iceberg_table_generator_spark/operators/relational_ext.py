@@ -17,6 +17,7 @@ from iceberg_table_generator_spark.functions.sessions import (
     SESSION_GAP_INTERVAL,
     SESSION_GAP_US,
 )
+from iceberg_table_generator_spark.functions.text import md5_60, md5_60_sql
 from iceberg_table_generator_spark.operators.relational import DEC, davg, dsum, sql_davg, sql_dsum
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table
@@ -1252,10 +1253,9 @@ BLOOM_M, BLOOM_K, BLOOM_ACCTBAL = 8192, 3, 9000
 
 
 def _bloom_oracle() -> str:
-    from iceberg_table_generator_spark.operators.dedup import _sql_md5_60
 
     def pos(expr: str) -> str:
-        return f"{_sql_md5_60(expr)} % {BLOOM_M}"
+        return f"{md5_60_sql(expr)} % {BLOOM_M}"
 
     return f"""
 WITH k AS (
@@ -1313,13 +1313,12 @@ def join_bloom_filter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     work (false positives) the downstream exact join still pays.  The
     truth-side comparison joins the real key set without a hint (data-
     dependent size — AQE decides)."""
-    from iceberg_table_generator_spark.operators.dedup import _md5_60
 
     def positions(key: F.Column) -> F.Column:
         return F.array(
             *[
                 F.pmod(
-                    _md5_60(F.concat(F.lit(f"{j}:"), key.cast("string"))),
+                    md5_60(F.concat(F.lit(f"{j}:"), key.cast("string"))),
                     F.lit(BLOOM_M),
                 )
                 for j in range(BLOOM_K)

@@ -38,6 +38,7 @@ from iceberg_table_generator_spark.functions.cache import (
     memo_relation,
     persist_tracked,
 )
+from iceberg_table_generator_spark.functions.text import md5_60, md5_60_sql
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table, spread
 
@@ -134,7 +135,7 @@ def cosine_topk_gold_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same memoized gold, persisted+pinned on FIRST hit.
 
     For consumers whose own plan fans the gold into multiple branches of
-    one job (`_ranking_quality` reads it for both the gain join and the
+    one job (`ranking_quality` reads it for both the gain join and the
     iDCG denominator): an unpersisted shared subtree would be computed
     once per concurrent branch (the wave14 band-sweep lesson), so these
     callers pay the eager pin that plain `similarity_cosine_topk` now
@@ -500,11 +501,10 @@ def _km_train_rows(emb: DataFrame, cap: int = IVF_TRAIN_CAP) -> list[list[int]]:
     ONE Spark job (TakeOrderedAndProject — parallel local top-k then a
     bounded merge, a few MB regardless of corpus size).  Hash order makes
     the sample uniform; vec_id breaks hash collisions."""
-    from iceberg_table_generator_spark.operators.dedup import _md5_60
 
     rows = (
         emb.select(
-            _md5_60(F.col("vec_id").cast("string")).alias("h"),
+            md5_60(F.col("vec_id").cast("string")).alias("h"),
             "vec_id",
             _qint("vec").alias("qv"),
         )
@@ -610,7 +610,6 @@ def _sql_d2_int(a: str, b: str, dim: int) -> str:
 def _sql_km_setup() -> str:
     """Shared oracle preamble: corpus as doubles + scale-6 ints + md5-60
     hash, and the deterministic training set (mirrors `_km_train_rows`)."""
-    from iceberg_table_generator_spark.operators.dedup import _sql_md5_60
 
     return f"""
 WITH v AS (
@@ -619,7 +618,7 @@ q0 AS (
   SELECT vec_id, vec,
          list_transform(vec, x ->
              CAST(CAST(x AS DECIMAL(12,6)) * {KM_SCALE} AS BIGINT)) AS qv,
-         {_sql_md5_60('CAST(vec_id AS VARCHAR)')} AS h
+         {md5_60_sql('CAST(vec_id AS VARCHAR)')} AS h
   FROM v),
 train AS (SELECT vec_id, qv, h FROM q0 ORDER BY h, vec_id LIMIT {IVF_TRAIN_CAP})"""
 

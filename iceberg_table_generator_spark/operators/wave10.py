@@ -12,7 +12,7 @@ these operators extend SURVEY.md §2.8's dedup mandate.
 Exactness policy (the repo convention): every cross-row accumulation is
 integer (positions, counts, bit votes); doubles appear only in a final
 fixed-order chain per row, rounded once.  Span identity is the
-engine-independent 60-bit md5 prefix (`dedup._md5_60`) on BOTH engines.
+engine-independent 60-bit md5 prefix (`md5_60`) on BOTH engines.
 """
 
 from __future__ import annotations
@@ -22,12 +22,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from iceberg_table_generator_spark.functions.cache import persist_tracked
 from iceberg_table_generator_spark.functions.order import with_global_order
+from iceberg_table_generator_spark.functions.text import md5_60_sql
 from iceberg_table_generator_spark.operators.dedup import (
     SIMHASH_BITS,
     SIMHASH_CHUNK_BITS,
     SIMHASH_CHUNK_MASK,
     SIMHASH_CHUNKS,
-    _sql_md5_60,
 )
 from iceberg_table_generator_spark.operators.multimodal import (
     FP_TOP_K,
@@ -268,11 +268,6 @@ def dedup_span_island_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pipeline runs after decode).
 # --------------------------------------------------------------------------
 
-#: Feature quantization: the fake decoder emits 8 floats in [0,1] derived
-#: from byte values (b/255); round(f*255) recovers the exact byte, so the
-#: frame token is engine-exact despite the float32 round trip.
-_FEATURE_DIMS = 8
-
 #: Shared oracle CTE chain: documents -> (doc_id, t) — one row per SAMPLED
 #: FRAME (non-distinct), where `t` is the quantized feature token the fake
 #: decoder produces for that frame.  SQL twin of `_frame_tokens`.
@@ -327,7 +322,7 @@ def _frame_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _FEATURE_SIMHASH_ORACLE = f"""{_SQL_FRAME_TOKENS},
 tokd AS (SELECT DISTINCT doc_id, t FROM ftok),
-hh AS (SELECT doc_id, {_sql_md5_60('t')} AS h FROM tokd),
+hh AS (SELECT doc_id, {md5_60_sql('t')} AS h FROM tokd),
 bits AS (
   SELECT doc_id, i.i AS i, sum(((h >> i.i) & 1) * 2 - 1) AS s
   FROM hh CROSS JOIN (SELECT unnest(generate_series(0, {SIMHASH_BITS - 1})) AS i) i
@@ -1375,68 +1370,6 @@ def stats_siegel_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Duplication rate by document length bucket
-# --------------------------------------------------------------------------
-DUP_LEN_BUCKET = 500  # n_chars per bucket
-
-_DUP_BY_LENGTH_ORACLE = f"""
-WITH d AS (
-  SELECT doc_id, n_chars // {DUP_LEN_BUCKET} AS len_bucket,
-         md5(array_to_string(
-             list_slice(string_split(text, ' '), 1, {ROI_HEAD_K}), ' '))
-           AS dig
-  FROM documents),
-cnt AS (SELECT dig, count(*) AS c FROM d GROUP BY dig),
-m AS (
-  SELECT d.len_bucket, CASE WHEN cnt.c >= 2 THEN 1 ELSE 0 END AS is_dup
-  FROM d JOIN cnt USING (dig))
-SELECT CAST(len_bucket AS BIGINT) AS len_bucket,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(is_dup) AS BIGINT) AS n_dup_docs,
-       round(CAST(sum(is_dup) AS DOUBLE) / count(*), 6) AS dup_share
-FROM m GROUP BY len_bucket ORDER BY len_bucket
-"""
-
-
-@query("text_duplication_vs_length", oracle=_DUP_BY_LENGTH_ORACLE)
-def text_duplication_vs_length(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplication rate as a function of document length ({DUP_LEN_BUCKET}-
-    char buckets, head-fingerprint granularity): short documents duplicate
-    far more often (templates, boilerplate snippets), and this curve is
-    what justifies length-conditioned dedup thresholds — a flat curve
-    means one global threshold is fine, a steep one means short docs need
-    their own pass.
-
-    Scale: one digest groupBy + the digest-keyed bounded-multiplicity
-    join back (`pipeline_quality_dedup_matrix`'s shape), folded onto the
-    bounded length-bucket domain."""
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.expr(f"n_chars div {DUP_LEN_BUCKET}").alias("len_bucket"),
-        F.md5(
-            F.concat_ws(" ", F.slice(F.split("text", " "), 1, ROI_HEAD_K))
-        ).alias("dig"),
-    )
-    d = persist_tracked(d)
-    cnt = d.groupBy("dig").agg(F.count(F.lit(1)).alias("c"))
-    m = d.join(cnt, "dig").select(
-        "len_bucket",
-        F.when(F.col("c") >= 2, 1).otherwise(0).alias("is_dup"),
-    )
-    return (
-        m.groupBy("len_bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("is_dup").alias("n_dup_docs"),
-            F.round(
-                F.sum("is_dup").cast("double") / F.count(F.lit(1)), 6
-            ).alias("dup_share"),
-        )
-        .orderBy("len_bucket")
-    )
-
-
-# --------------------------------------------------------------------------
 # Harmonic centrality (truncated, exact via lcm fraction clearing)
 # --------------------------------------------------------------------------
 HC_MAX_HOPS = 8
@@ -1653,93 +1586,6 @@ def orders_priority_mix_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tv_drift"),
         )
         .orderBy("mo")
-    )
-
-
-# --------------------------------------------------------------------------
-# Language signature overlap: top-K char-trigram Jaccard between languages
-# --------------------------------------------------------------------------
-LANG_SIG_K = 50
-
-_LANG_SIG_ORACLE = f"""
-WITH tri AS (
-  SELECT lang, substring(lower(text), i.i, 3) AS g
-  FROM documents, unnest(generate_series(1, length(text) - 2)) AS i(i)
-  WHERE length(text) >= 3),
-cnt AS (SELECT lang, g, CAST(count(*) AS BIGINT) AS c FROM tri GROUP BY 1, 2),
-rk AS (
-  SELECT lang, g,
-         row_number() OVER (PARTITION BY lang ORDER BY c DESC, g) AS r
-  FROM cnt),
-sig AS (
-  SELECT lang, list(g) AS gs FROM rk WHERE r <= {LANG_SIG_K} GROUP BY lang)
-SELECT a.lang AS lang_a, b.lang AS lang_b,
-       CAST(len(list_intersect(a.gs, b.gs)) AS BIGINT) AS shared,
-       round(CAST(len(list_intersect(a.gs, b.gs)) AS DOUBLE)
-             / (len(a.gs) + len(b.gs) - len(list_intersect(a.gs, b.gs))),
-             6) AS jaccard
-FROM sig a JOIN sig b ON a.lang < b.lang
-ORDER BY lang_a, lang_b
-"""
-
-
-@query("text_lang_signature_jaccard", oracle=_LANG_SIG_ORACLE)
-def text_lang_signature_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-signature confusability: each language's top-{LANG_SIG_K}
-    character trigrams (the classic language-ID feature set) compared
-    pairwise by Jaccard — high overlap between two languages means the
-    n-gram language-ID (`text_language_id`) will confuse them, and this
-    matrix says WHERE to spend discriminating features.
-
-    Scale: the only corpus-sized operation is one (lang, trigram) groupBy
-    (map-side combine; in-row trigram explode).  The ranking window is
-    lang-PARTITIONED over a BOUNDED relation (distinct char trigrams ≤
-    charset³, a fixed-alphabet domain, not corpus-sized); signatures are
-    {LANG_SIG_K}-element arrays over the 5-language grid — everything
-    after the groupBy is driver-trivial."""
-    # `lower(text)` is hoisted OUT of the position lambda (r14): inside
-    # `transform` it re-lowercased the whole document once per position —
-    # O(len²) characters per doc (higher-order lambdas evaluate their
-    # non-lambda subtrees per element; Catalyst does no loop-invariant
-    # hoisting).  Materializing it once as a column makes the trigram
-    # pass O(len), identical output.
-    d = load_table(spark, sf_dir, "documents").filter(
-        F.length("text") >= 3
-    ).select(
-        "lang", F.lower("text").alias("lt")
-    ).select(
-        "lang",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, length(lt) - 2),"
-                " i -> substring(lt, i, 3))"
-            )
-        ).alias("g"),
-    )
-    cnt = d.groupBy("lang", "g").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy("lang").orderBy(F.desc("c"), "g")
-    sig = (
-        cnt.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= LANG_SIG_K)
-        .groupBy("lang")
-        .agg(F.collect_set("g").alias("gs"))
-    )
-    a = sig.select(F.col("lang").alias("lang_a"), F.col("gs").alias("ga"))
-    b = sig.select(F.col("lang").alias("lang_b"), F.col("gs").alias("gb"))
-    inter = F.size(F.array_intersect("ga", "gb"))
-    return (
-        a.join(b, F.col("lang_a") < F.col("lang_b"))
-        .select(
-            "lang_a",
-            "lang_b",
-            inter.cast("long").alias("shared"),
-            F.round(
-                inter.cast("double")
-                / (F.size("ga") + F.size("gb") - inter),
-                6,
-            ).alias("jaccard"),
-        )
-        .orderBy("lang_a", "lang_b")
     )
 
 
@@ -2042,75 +1888,6 @@ def similarity_label_centroid_matrix(
             6,
         ).alias("centroid_cos"),
     ).orderBy("label_a", "label_b")
-
-
-# --------------------------------------------------------------------------
-# Per-source corpus quality profile (integer count shares)
-# --------------------------------------------------------------------------
-def _source_quality_oracle() -> str:
-    from iceberg_table_generator_spark.operators.text import (
-        STOPWORDS,
-        _sql_list,
-    )
-
-    return f"""
-WITH d AS (
-  SELECT source,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         CAST(len(list_filter(string_split(lower(text), ' '),
-                              w -> w IN ({_sql_list(STOPWORDS)})))
-              AS BIGINT) AS n_stop,
-         CAST(n_chars AS BIGINT) AS n_chars
-  FROM documents)
-SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_tok) AS BIGINT) AS total_tokens,
-       round(CAST(sum(n_stop) AS DOUBLE) / sum(n_tok), 6) AS stopword_share,
-       round(CAST(sum(n_chars) AS DOUBLE) / sum(n_tok), 6) AS chars_per_token
-FROM d GROUP BY source ORDER BY source
-"""
-
-
-@query("text_source_quality_profile", oracle=_source_quality_oracle())
-def text_source_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source corpus quality profile: token mass, stopword share, and
-    chars-per-token — the source-level roll-up of `text_quality_score`'s
-    per-doc features, read the way a mixture designer reads it (a source
-    whose stopword share collapses is code/tables, one whose
-    chars-per-token spikes is non-natural text; both get different
-    filters, and the DENOMINATORS here size each source's token budget).
-
-    Exactness + scale: all three ratios are exact integer-count sums
-    (in-row token/stopword folds, metadata chars) divided once per
-    source; one source-keyed map-combinable aggregate, no joins, no
-    windows."""
-    from iceberg_table_generator_spark.operators.text import STOPWORDS
-
-    d = load_table(spark, sf_dir, "documents").select(
-        "source",
-        F.size(F.split("text", " ")).cast("long").alias("n_tok"),
-        F.size(
-            F.filter(
-                F.split(F.lower("text"), " "), lambda w: w.isin(STOPWORDS)
-            )
-        )
-        .cast("long")
-        .alias("n_stop"),
-        F.col("n_chars").cast("long").alias("n_chars"),
-    )
-    return (
-        d.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tok").alias("total_tokens"),
-            F.round(
-                F.sum("n_stop").cast("double") / F.sum("n_tok"), 6
-            ).alias("stopword_share"),
-            F.round(
-                F.sum("n_chars").cast("double") / F.sum("n_tok"), 6
-            ).alias("chars_per_token"),
-        )
-        .orderBy("source")
-    )
 
 
 # --------------------------------------------------------------------------

@@ -2,8 +2,7 @@
 LLM-curation surface still lacked — DSIR-style importance weights (Xie
 et al. 2023, "Data Selection for Language Models via Importance
 Resampling": hashed n-gram bucket log-likelihood ratios against a target
-domain), a unigram-LM cross-entropy quality proxy (the CCNet-tier
-perplexity filter, expressible without a neural LM), the context-window
+domain), the context-window
 truncation-loss curve (how many training tokens each packing length
 throws away), graph eccentricity/diameter/radius (completing the
 all-pairs-BFS family next to harmonic centrality), and a k-means
@@ -27,7 +26,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from iceberg_table_generator_spark.functions.cache import persist_tracked
-from iceberg_table_generator_spark.operators.dedup import _md5_60, _sql_md5_60
+from iceberg_table_generator_spark.functions.text import (
+    md5_60,
+    md5_60_sql,
+    tokens,
+    tokens_sql,
+)
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table, spread
 
@@ -48,10 +52,10 @@ DSIR_TARGET_LANG = "en"
 
 _DSIR_ORACLE = f"""
 WITH tok AS (
-  SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS w
+  SELECT doc_id, lang, unnest({tokens_sql()}) AS w
   FROM documents),
 tb AS (
-  SELECT doc_id, lang, {_sql_md5_60('w')} % {DSIR_BUCKETS} AS b FROM tok),
+  SELECT doc_id, lang, {md5_60_sql('w')} % {DSIR_BUCKETS} AS b FROM tok),
 bs AS (
   SELECT b, CAST(count(*) AS BIGINT) AS raw_c,
          CAST(sum(CASE WHEN lang = '{DSIR_TARGET_LANG}' THEN 1 ELSE 0 END)
@@ -96,8 +100,8 @@ def dsir_bucket_lambdas(
     tb = d.select(
         "doc_id",
         "lang",
-        F.explode(F.split(F.lower("text"), " ")).alias("w"),
-    ).select("doc_id", "lang", (_md5_60(F.col("w")) % DSIR_BUCKETS).alias("b"))
+        F.explode(tokens()).alias("w"),
+    ).select("doc_id", "lang", (md5_60(F.col("w")) % DSIR_BUCKETS).alias("b"))
     tb = persist_tracked(tb)
     bs = tb.groupBy("b").agg(
         F.count(F.lit(1)).cast("long").alias("raw_c"),
@@ -161,118 +165,6 @@ def pipeline_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy(F.desc("llr_micro"), F.asc("doc_id"))
     return top.withColumn("rank", F.row_number().over(w)).select(
         "doc_id", "source", "lang", "n_tokens", "llr_micro", "rank"
-    )
-
-
-# --------------------------------------------------------------------------
-# Unigram-LM cross-entropy quality proxy (CCNet-tier perplexity filter)
-# --------------------------------------------------------------------------
-_LOGLOSS_ORACLE = """
-WITH tok AS (
-  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents),
-vocab AS (SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY w),
-tot AS (
-  SELECT CAST(sum(cnt) AS BIGINT) AS n_tok,
-         CAST(count(*) AS BIGINT) AS v FROM vocab),
-lnp AS (
-  SELECT w,
-         CAST(round((ln(cnt + 1.0) - ln(CAST(n_tok + v AS DOUBLE)))
-                    * 1000000.0, 0) AS BIGINT) AS lnp_micro
-  FROM vocab CROSS JOIN tot),
-dc AS (
-  SELECT doc_id, w, CAST(count(*) AS BIGINT) AS c FROM tok
-  GROUP BY doc_id, w),
-pd AS (
-  SELECT doc_id,
-         CAST((0 - sum(c * lnp_micro)) // sum(c) AS BIGINT) AS ll_pt_micro,
-         CAST(sum(c) AS BIGINT) AS n_tokens
-  FROM dc JOIN lnp USING (w) GROUP BY doc_id)
-SELECT d.source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(p.n_tokens) AS BIGINT) AS n_tokens,
-       CAST(sum(p.ll_pt_micro) // count(*) AS BIGINT) AS avg_logloss_micro,
-       CAST(min(p.ll_pt_micro) AS BIGINT) AS min_logloss_micro,
-       CAST(max(p.ll_pt_micro) AS BIGINT) AS max_logloss_micro
-FROM pd p JOIN documents d USING (doc_id)
-GROUP BY d.source
-"""
-
-
-def unigram_lnp_terms(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """((w, raw_lnp, lnp_micro), (doc_id, w, c)): the smoothed unigram
-    log-probabilities (raw and micro-rounded) plus the persisted per-doc
-    term counts — shared by `text_unigram_logloss` and the
-    rounding-margin guard test."""
-    d = load_table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w")
-    )
-    dc = tok.groupBy("doc_id", "w").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    dc = persist_tracked(dc)
-    vocab = dc.groupBy("w").agg(F.sum("c").cast("long").alias("cnt"))
-    tot = vocab.agg(
-        F.sum("cnt").cast("long").alias("n_tok"),
-        F.count(F.lit(1)).cast("long").alias("v"),
-    )
-    raw_lnp = F.log(F.col("cnt") + 1.0) - F.log(
-        (F.col("n_tok") + F.col("v")).cast("double")
-    )
-    lnp = vocab.crossJoin(F.broadcast(tot)).select(
-        "w",
-        raw_lnp.alias("raw_lnp"),
-        F.round(raw_lnp * 1000000.0, 0).cast("long").alias("lnp_micro"),
-    )
-    return lnp, dc
-
-
-@query("text_unigram_logloss", oracle=_LOGLOSS_ORACLE)
-def text_unigram_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source unigram-LM cross-entropy profile — the CCNet-style
-    perplexity quality filter, expressed without a neural LM: fit an
-    add-one-smoothed unigram model on the corpus itself, score every
-    document by its per-token negative log-likelihood, and report each
-    source feed's mean/min/max.  High-logloss feeds are the gibberish /
-    OOV-heavy candidates a perplexity gate would trim first.
-
-    Engine determinism: ln p(w) is rounded to 6 decimals and micro-scaled
-    per VOCABULARY WORD before accumulation (BM25 pattern), so per-doc
-    sums are exact integers; per-doc and per-source means use integer
-    division (all-positive operands, truncation ≡ floor).
-
-    Scale: vocabulary fit is one word-keyed partial agg; the score join
-    attaches the per-word λ to (doc_id, word) COUNTS — 1:1 multiplicity,
-    the tf·idf join shape, AQE-skew-splittable — never to raw token
-    instances; everything after is doc- then source-keyed."""
-    d = load_table(spark, sf_dir, "documents")
-    lnp, dc = unigram_lnp_terms(spark, sf_dir)
-    pd = (
-        dc.join(lnp.drop("raw_lnp"), "w")
-        .groupBy("doc_id")
-        .agg(
-            F.expr(
-                "CAST((0 - sum(c * lnp_micro)) div sum(c) AS BIGINT)"
-            ).alias("ll_pt_micro"),
-            F.sum("c").cast("long").alias("n_tokens"),
-        )
-    )
-    return (
-        pd.join(d.select("doc_id", "source"), "doc_id")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.expr(
-                "CAST(sum(CAST(ll_pt_micro AS DECIMAL(38,0))) div count(1) "
-                "AS BIGINT)"
-            ).alias("avg_logloss_micro"),
-            F.min("ll_pt_micro").cast("long").alias("min_logloss_micro"),
-            F.max("ll_pt_micro").cast("long").alias("max_logloss_micro"),
-        )
-        .orderBy("source")
     )
 
 
@@ -525,101 +417,8 @@ def similarity_cluster_outlier_audit(
 
 
 # --------------------------------------------------------------------------
-# Readability profile (Flesch reading-ease, integer micro arithmetic)
-# --------------------------------------------------------------------------
-_READABILITY_ORACLE = """
-WITH f AS (
-  SELECT source,
-         greatest(len(string_split(text, ' ')), 1) AS w,
-         greatest(len(regexp_extract_all(text, '[.!?]')), 1) AS s,
-         greatest(len(regexp_extract_all(lower(text), '[aeiouy]+')), 1) AS y
-  FROM documents),
-pd AS (
-  SELECT source, w, s, y,
-         206835000 - (1015000 * w) // s - (84600000 * y) // w AS fm
-  FROM f)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(fm) // count(*) AS BIGINT) AS avg_flesch_micro,
-       CAST(min(fm) AS BIGINT) AS min_flesch_micro,
-       CAST(max(fm) AS BIGINT) AS max_flesch_micro,
-       CAST((1000 * sum(w)) // sum(s) AS BIGINT) AS words_per_sentence_milli,
-       CAST((1000 * sum(y)) // sum(w) AS BIGINT) AS syllables_per_word_milli
-FROM pd GROUP BY source
-"""
-
-
-@query("text_readability_profile", oracle=_READABILITY_ORACLE)
-def text_readability_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source Flesch reading-ease profile: score = 206.835 −
-    1.015·(words/sentences) − 84.6·(syllables/word), with syllables
-    approximated as vowel groups (`[aeiouy]+`) and every component
-    floored into exact micro-integers — readability is the classic
-    cheap quality signal next to stopword/punctuation ratios, and a
-    feed whose average score collapses is machine-generated or OCR
-    garbage.  All counters are per-row regexp counts (zero-shuffle
-    narrow pass); the single shuffle is the 20-row source rollup.
-
-    Engine determinism: the score is a pure integer formula
-    (206835000 − 1015000·w div s − 84600000·y div w); Spark `div` and
-    DuckDB `//` both truncate toward zero (probed), so no floats exist
-    anywhere."""
-    d = load_table(spark, sf_dir, "documents")
-    f = d.select(
-        "source",
-        F.greatest(F.size(F.split("text", " ")), F.lit(1))
-        .cast("long")
-        .alias("w"),
-        F.greatest(
-            F.size(F.regexp_extract_all("text", F.lit("[.!?]"), 0)), F.lit(1)
-        )
-        .cast("long")
-        .alias("s"),
-        F.greatest(
-            F.size(
-                F.regexp_extract_all(F.lower("text"), F.lit("[aeiouy]+"), 0)
-            ),
-            F.lit(1),
-        )
-        .cast("long")
-        .alias("y"),
-    )
-    pd = f.withColumn(
-        "fm",
-        F.expr("206835000 - (1015000 * w) div s - (84600000 * y) div w"),
-    )
-    return (
-        pd.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            # per-source sums accumulate in DECIMAL(38,0) for 100 TB
-            # headroom (matches DuckDB's HUGEINT sum); div truncates
-            # identically on both engines.
-            F.expr(
-                "CAST(sum(CAST(fm AS DECIMAL(38,0))) div count(1) "
-                "AS BIGINT)"
-            ).alias("avg_flesch_micro"),
-            F.min("fm").cast("long").alias("min_flesch_micro"),
-            F.max("fm").cast("long").alias("max_flesch_micro"),
-            F.expr(
-                "CAST((1000 * sum(CAST(w AS DECIMAL(38,0)))) div sum(s) "
-                "AS BIGINT)"
-            ).alias("words_per_sentence_milli"),
-            F.expr(
-                "CAST((1000 * sum(CAST(y AS DECIMAL(38,0)))) div sum(w) "
-                "AS BIGINT)"
-            ).alias("syllables_per_word_milli"),
-        )
-        .orderBy("source")
-    )
-
-
-# --------------------------------------------------------------------------
 # PII incidence matrix (per source x PII type)
 # --------------------------------------------------------------------------
-_PII_INCIDENCE_ORACLE = None  # assembled below from pipeline's patterns
-
-
 def _pii_incidence_oracle() -> str:
     from iceberg_table_generator_spark.operators.pipeline import (
         _PII_EMAIL,
@@ -765,252 +564,6 @@ def pipeline_pii_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Pairwise source Hellinger distance (content-drift matrix, sqrt-exact)
-# --------------------------------------------------------------------------
-_HELLINGER_ORACLE = """
-WITH cells AS (
-  SELECT source, w.w AS word, CAST(count(*) AS BIGINT) AS c
-  FROM documents, unnest(string_split(lower(text), ' ')) AS w(w)
-  GROUP BY 1, 2),
-per AS (
-  SELECT source, CAST(sum(c) AS BIGINT) AS n FROM cells GROUP BY source),
-words AS (SELECT DISTINCT word FROM cells),
-grid AS (
-  SELECT pa.source AS src_a, pa.n AS n_a, pb.source AS src_b, pb.n AS n_b
-  FROM per pa JOIN per pb ON pa.source < pb.source),
-terms AS (
-  SELECT g.src_a, g.src_b, g.n_a, g.n_b,
-         CAST(round(sqrt((CAST(COALESCE(ca.c, 0) AS DOUBLE)
-                          * COALESCE(cb.c, 0))
-                         / (CAST(g.n_a AS DOUBLE) * g.n_b))
-                    * 1000000000.0, 0) AS BIGINT) AS bc_term
-  FROM grid g CROSS JOIN words w
-  LEFT JOIN cells ca ON ca.source = g.src_a AND ca.word = w.word
-  LEFT JOIN cells cb ON cb.source = g.src_b AND cb.word = w.word)
-SELECT src_a, src_b, n_a AS tokens_a, n_b AS tokens_b,
-       CAST(sum(bc_term) AS BIGINT) AS bc_nano,
-       round(sqrt(greatest(1.0 - CAST(sum(bc_term) AS DOUBLE) / 1000000000.0,
-                           0.0)), 6) AS hellinger
-FROM terms GROUP BY src_a, src_b, n_a, n_b
-"""
-
-
-@query("text_source_hellinger", oracle=_HELLINGER_ORACLE)
-def text_source_hellinger(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Hellinger distance between source unigram distributions —
-    the geometric companion to `text_source_unigram_tv`: TV weights every
-    frequency gap linearly (dominated by head words), Hellinger's
-    √(p·q) Bhattacharyya kernel is sensitive to SUPPORT disagreement
-    (tail words one source lacks), so the two matrices disagree exactly
-    when sources share head vocabulary but diverge in the tail — the
-    signature of same-template-different-content scrapes.
-
-    Engine determinism: unlike ln(), IEEE sqrt and division are
-    correctly-rounded on both engines, so each per-word √(c_a·c_b /
-    (n_a·n_b)) term is bit-identical; terms are NANO-rounded to BIGINT
-    and summed exactly (order-free), and the final 1−BC√ is one shared
-    double chain rounded once.  Nano (1e9), not micro, units: each
-    rounded term carries ≤ 0.5 units of signed error, so the
-    accumulated bound is |vocab|/2 units — at a production vocabulary
-    of 10^7 words that is ≤ 5e6 nano = 0.005 of the BC mass (vs 5.0 —
-    the whole scale — in micro units; r11 ADVICE).  Headroom is safe:
-    BC ≤ 1 ⟹ the sum is ≤ 1e9 + |vocab|/2 ≪ 2^63.
-
-    Scale: identical posture to the TV matrix — word cells aggregate
-    map-side, the per-word count MAP meets the 190-row source-pair grid
-    in one vocabulary×pairs pass, and the only join key is the bounded
-    source domain."""
-    d = load_table(spark, sf_dir, "documents")
-    cells = (
-        d.select(
-            "source",
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("word"),
-        )
-        .groupBy("source", "word")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    cells = persist_tracked(cells)
-    per = cells.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
-    wmap = cells.groupBy("word").agg(
-        F.map_from_entries(F.collect_list(F.struct("source", "c"))).alias("m")
-    )
-    pa = per.select(F.col("source").alias("src_a"), F.col("n").alias("n_a"))
-    pb = per.select(F.col("source").alias("src_b"), F.col("n").alias("n_b"))
-    grid = pa.join(pb, pa.src_a < pb.src_b)
-    ca = F.coalesce(F.element_at("m", F.col("src_a")), F.lit(0))
-    cb = F.coalesce(F.element_at("m", F.col("src_b")), F.lit(0))
-    terms = wmap.crossJoin(grid).select(
-        "src_a",
-        "src_b",
-        "n_a",
-        "n_b",
-        F.round(
-            F.sqrt(
-                (ca.cast("double") * cb)
-                / (F.col("n_a").cast("double") * F.col("n_b"))
-            )
-            * 1000000000.0,
-            0,
-        )
-        .cast("long")
-        .alias("bc_term"),
-    )
-    return (
-        terms.groupBy("src_a", "src_b", "n_a", "n_b")
-        .agg(F.sum("bc_term").cast("long").alias("bc_nano"))
-        .select(
-            "src_a",
-            "src_b",
-            F.col("n_a").alias("tokens_a"),
-            F.col("n_b").alias("tokens_b"),
-            "bc_nano",
-            F.round(
-                F.sqrt(
-                    F.greatest(
-                        F.lit(1.0)
-                        - F.col("bc_nano").cast("double") / 1000000000.0,
-                        F.lit(0.0),
-                    )
-                ),
-                6,
-            ).alias("hellinger"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Distinctive terms per source (Dunning log-likelihood keyness)
-# --------------------------------------------------------------------------
-KEYNESS_TOP_K = 5
-
-_KEYNESS_G2 = """2.0 * (
-    CAST(a AS DOUBLE)
-      * ln(CAST(a AS DOUBLE) / (CAST(g AS DOUBLE) * ts / t))
-    + CASE WHEN g - a > 0
-           THEN CAST(g - a AS DOUBLE)
-                * ln(CAST(g - a AS DOUBLE)
-                     / (CAST(g AS DOUBLE) * (t - ts) / t))
-           ELSE 0.0 END
-    + CASE WHEN ts - a > 0
-           THEN CAST(ts - a AS DOUBLE)
-                * ln(CAST(ts - a AS DOUBLE)
-                     / (CAST(t - g AS DOUBLE) * ts / t))
-           ELSE 0.0 END
-    + CASE WHEN t - ts - (g - a) > 0
-           THEN CAST(t - ts - (g - a) AS DOUBLE)
-                * ln(CAST(t - ts - (g - a) AS DOUBLE)
-                     / (CAST(t - g AS DOUBLE) * (t - ts) / t))
-           ELSE 0.0 END)"""
-
-_KEYNESS_ORACLE = f"""
-WITH cells AS (
-  SELECT source, w.w AS word, CAST(count(*) AS BIGINT) AS a
-  FROM documents, unnest(string_split(lower(text), ' ')) AS w(w)
-  GROUP BY 1, 2),
-per AS (SELECT source, CAST(sum(a) AS BIGINT) AS ts FROM cells GROUP BY source),
-ws AS (SELECT word, CAST(sum(a) AS BIGINT) AS g FROM cells GROUP BY word),
-tot AS (SELECT CAST(sum(a) AS BIGINT) AS t FROM cells),
-base AS (
-  SELECT c.source AS source, c.word AS word, c.a AS a, w.g AS g,
-         p.ts AS ts, tt.t AS t
-  FROM cells c
-  JOIN ws w USING (word)
-  JOIN per p ON p.source = c.source
-  CROSS JOIN tot tt
-  WHERE CAST(c.a AS DECIMAL(38,0)) * tt.t
-        > CAST(w.g AS DECIMAL(38,0)) * p.ts),
-sc AS (
-  SELECT source, word, a, g,
-         CAST(round(({_KEYNESS_G2}) * 1000000.0, 0) AS BIGINT) AS g2_micro
-  FROM base),
-rk AS (
-  SELECT source, word, a, g, g2_micro,
-         CAST(row_number() OVER (PARTITION BY source
-                                 ORDER BY g2_micro DESC, word) AS INT) AS rank
-  FROM sc)
-SELECT source, word, CAST(a AS BIGINT) AS src_count,
-       CAST(g AS BIGINT) AS corpus_count, g2_micro, rank
-FROM rk WHERE rank <= {KEYNESS_TOP_K}
-"""
-
-
-def keyness_scored_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(source, word, a, g, raw_g2, g2_micro) for every over-represented
-    (source, word) cell — shared by `text_distinctive_terms` and the
-    rounding-margin guard test."""
-    d = load_table(spark, sf_dir, "documents")
-    cells = (
-        d.select(
-            "source",
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("word"),
-        )
-        .groupBy("source", "word")
-        .agg(F.count(F.lit(1)).cast("long").alias("a"))
-    )
-    cells = persist_tracked(cells)
-    per = cells.groupBy("source").agg(F.sum("a").cast("long").alias("ts"))
-    ws = cells.groupBy("word").agg(F.sum("a").cast("long").alias("g"))
-    tot = cells.agg(F.sum("a").cast("long").alias("t"))
-    joined = (
-        cells.join(ws, "word")
-        # NOTE: no broadcast hint on `per` — its boundedness (one row per
-        # source feed) is a model fact, not a plan-structural one, so the
-        # broadcast-invariant suite would flag it; the source-keyed
-        # shuffle join of a |sources|-row relation is free at any scale.
-        .join(per, "source")
-        .crossJoin(F.broadcast(tot))
-        .filter(
-            F.col("a").cast("decimal(38,0)") * F.col("t")
-            > F.col("g").cast("decimal(38,0)") * F.col("ts")
-        )
-    )
-    raw_g2 = F.expr(_KEYNESS_G2)
-    return joined.select(
-        "source",
-        "word",
-        "a",
-        "g",
-        raw_g2.alias("raw_g2"),
-        F.round(raw_g2 * 1000000.0, 0).cast("long").alias("g2_micro"),
-    )
-
-
-@query("text_distinctive_terms", oracle=_KEYNESS_ORACLE)
-def text_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{KEYNESS_TOP_K} DISTINCTIVE terms per source by Dunning (1993)
-    log-likelihood keyness: G² of the 2×2 (term, source) contingency
-    table, restricted to over-represented terms (a/ts > g/t by exact
-    integer cross-multiplication) — the corpus-linguistics "what makes
-    this feed different" extractor, sharper than raw tf-idf because it
-    accounts for both corpus sides of the contrast.
-
-    Engine determinism: the G² double chain is shared verbatim between
-    engines (the SQL text IS the Spark expression via `F.expr`) and
-    micro-rounded per (source, word) cell before ranking, so ranks
-    compare identically-rounded integers (ln-ulp absorbed; margin pinned
-    by the guard test).
-
-    Scale: word cells aggregate map-side; g attaches by a word-keyed 1:1
-    join (the tf·idf shape); ts and t attach as broadcasts of the
-    20-row / 1-row relations; the rank window partitions by source over
-    the vocabulary-bounded over-represented subset."""
-    scored = keyness_scored_terms(spark, sf_dir).drop("raw_g2")
-    w = Window.partitionBy("source").orderBy(F.desc("g2_micro"), F.asc("word"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KEYNESS_TOP_K)
-        .select(
-            "source",
-            "word",
-            F.col("a").alias("src_count"),
-            F.col("g").alias("corpus_count"),
-            "g2_micro",
-            "rank",
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # Revenue max drawdown (time-domain risk curve)
 # --------------------------------------------------------------------------
 _DRAWDOWN_ORACLE = """
@@ -1085,224 +638,6 @@ def orders_revenue_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .cast("int")
         .alias("is_max_drawdown"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Character-entropy profile (encoding-garbage detector)
-# --------------------------------------------------------------------------
-_CHAR_ENTROPY_ORACLE = """
-WITH cells AS (
-  SELECT source, c.c AS ch, CAST(count(*) AS BIGINT) AS c
-  FROM documents, unnest(string_split(text, '')) AS c(c)
-  GROUP BY 1, 2),
-per AS (SELECT source, CAST(sum(c) AS BIGINT) AS n FROM cells GROUP BY source),
-terms AS (
-  SELECT cells.source, cells.c,
-         CAST(round((ln(CAST(cells.c AS DOUBLE)) - ln(CAST(per.n AS DOUBLE)))
-                    * 1000000.0, 0) AS BIGINT) AS lnp_micro
-  FROM cells JOIN per USING (source))
-SELECT t.source, p.n AS n_chars,
-       CAST(count(*) AS BIGINT) AS n_distinct_chars,
-       CAST((0 - sum(CAST(t.c AS HUGEINT) * t.lnp_micro)) // p.n
-            AS BIGINT) AS entropy_micro
-FROM terms t JOIN per p ON p.source = t.source
-GROUP BY t.source, p.n
-"""
-
-
-def char_lnp_terms(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """((source, ch, c, raw_lnp, lnp_micro), per-source totals): the
-    character-distribution log-probabilities — shared by
-    `text_char_entropy_profile` and the rounding-margin guard test."""
-    d = load_table(spark, sf_dir, "documents")
-    cells = (
-        d.select("source", F.explode(F.split("text", "")).alias("ch"))
-        .groupBy("source", "ch")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    cells = persist_tracked(cells)
-    per = cells.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
-    raw_lnp = F.log(F.col("c").cast("double")) - F.log(
-        F.col("n").cast("double")
-    )
-    terms = cells.join(per, "source").select(
-        "source",
-        "ch",
-        "c",
-        raw_lnp.alias("raw_lnp"),
-        F.round(raw_lnp * 1000000.0, 0).cast("long").alias("lnp_micro"),
-    )
-    return terms, per
-
-
-@query("text_char_entropy_profile", oracle=_CHAR_ENTROPY_ORACLE)
-def text_char_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source character-distribution Shannon entropy (nats, micro):
-    the Gopher/C4-family encoding-garbage detector — mojibake, base64
-    blobs, and binary-in-text all push character entropy far from a
-    natural language's band, and a per-feed profile catches a bad
-    scraper in one glance.  Also reports the distinct-character count
-    (alphabet width, the cheap script/charset-mix signal).
-
-    Engine determinism: ln p(ch) is micro-rounded per (source, char)
-    CELL (bounded domain: |sources| × alphabet), then H =
-    −Σ c·lnp_micro / n is exact integer arithmetic.
-
-    Scale: the char explode is the `text_fingerprint` pass (narrow,
-    map-side combinable into |alphabet|-bounded cells per source);
-    everything downstream lives on the bounded cell domain."""
-    terms, per = char_lnp_terms(spark, sf_dir)
-    # c·lnp accumulates in DECIMAL(38,0): at 100 TB a source's count of a
-    # common character (~1e15) times a micro log-prob (~1e7) exceeds int64.
-    agg = terms.groupBy("source").agg(
-        F.sum(F.col("c").cast("decimal(38,0)") * F.col("lnp_micro"))
-        .cast("decimal(38,0)")
-        .alias("c_lnp"),
-        F.count(F.lit(1)).cast("long").alias("n_distinct_chars"),
-    )
-    return (
-        agg.join(per, "source")
-        .select(
-            "source",
-            F.col("n").alias("n_chars"),
-            "n_distinct_chars",
-            F.expr("CAST((0 - c_lnp) div n AS BIGINT)").alias(
-                "entropy_micro"
-            ),
-        )
-        .orderBy("source")
-    )
-
-
-# --------------------------------------------------------------------------
-# Bigram-LM cross-entropy (sequence-level quality proxy)
-# --------------------------------------------------------------------------
-_BIGRAM_LOGLOSS_ORACLE = """
-WITH tok AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
-bi AS (
-  SELECT doc_id,
-         unnest(list_transform(generate_series(1, len(ws) - 1),
-                               i -> ws[i] || ' ' || ws[i+1])) AS bg
-  FROM tok WHERE len(ws) >= 2),
-dc AS (
-  SELECT doc_id, bg, CAST(count(*) AS BIGINT) AS c FROM bi
-  GROUP BY doc_id, bg),
-bgc AS (
-  SELECT bg, string_split(bg, ' ')[1] AS w1,
-         CAST(sum(c) AS BIGINT) AS c12
-  FROM dc GROUP BY bg),
-hist AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS h FROM bgc GROUP BY w1),
-tot AS (SELECT CAST(count(*) AS BIGINT) AS v
-        FROM (SELECT DISTINCT string_split(bg, ' ')[2] FROM bgc)),
-lnp AS (
-  SELECT b.bg,
-         CAST(round((ln(b.c12 + 1.0) - ln(CAST(hi.h + t.v AS DOUBLE)))
-                    * 1000000.0, 0) AS BIGINT) AS lnp_micro
-  FROM bgc b JOIN hist hi USING (w1) CROSS JOIN tot t),
-pd AS (
-  SELECT doc_id,
-         CAST((0 - sum(c * lnp_micro)) // sum(c) AS BIGINT) AS ll_pt_micro,
-         CAST(sum(c) AS BIGINT) AS n_bigrams
-  FROM dc JOIN lnp USING (bg) GROUP BY doc_id)
-SELECT d.source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(p.n_bigrams) AS BIGINT) AS n_bigrams,
-       CAST(sum(p.ll_pt_micro) // count(*) AS BIGINT) AS avg_logloss_micro,
-       CAST(min(p.ll_pt_micro) AS BIGINT) AS min_logloss_micro,
-       CAST(max(p.ll_pt_micro) AS BIGINT) AS max_logloss_micro
-FROM pd p JOIN documents d USING (doc_id)
-GROUP BY d.source
-"""
-
-
-@query("text_bigram_logloss", oracle=_BIGRAM_LOGLOSS_ORACLE)
-def text_bigram_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source bigram-LM cross-entropy — the SEQUENCE-level quality
-    proxy next to `text_unigram_logloss`'s bag-of-words one (the KenLM
-    filtering tier): p(w₂|w₁) = (c(w₁w₂)+1)/(h(w₁)+V) with add-one
-    smoothing over the second-word vocabulary, scored per document and
-    profiled per source.  A feed whose bigram logloss exceeds its
-    unigram logloss by an unusual margin is shuffled/templated text —
-    plausible words in implausible orders.
-
-    Engine determinism: per-BIGRAM micro-rounded ln p (BM25 pattern),
-    exact integer accumulation; truncating integer division on
-    all-positive operands.
-
-    Scale: bigrams build IN-ROW (the `pipeline_repetition_stats`
-    transform — no self-join); bigram counts and histories are
-    map-combinable aggregates; the score join attaches per-bigram λ to
-    (doc, bigram) COUNTS, 1:1 multiplicity, AQE-skew-splittable."""
-    d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.split(F.lower("text"), " ").alias("ws"))
-    bi = tok.filter(F.size("ws") >= 2).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(ws) - 1), "
-                "i -> concat_ws(' ', ws[i-1], ws[i]))"
-            )
-        ).alias("bg"),
-    )
-    dc = bi.groupBy("doc_id", "bg").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    dc = persist_tracked(dc)
-    bgc = dc.groupBy("bg").agg(F.sum("c").cast("long").alias("c12")).select(
-        "bg", F.split("bg", " ").getItem(0).alias("w1"), "c12"
-    )
-    bgc = persist_tracked(bgc)
-    hist = bgc.groupBy("w1").agg(F.sum("c12").cast("long").alias("h"))
-    tot = (
-        bgc.select(F.split("bg", " ").getItem(1).alias("w2"))
-        .distinct()
-        .agg(F.count(F.lit(1)).cast("long").alias("v"))
-    )
-    lnp = (
-        bgc.join(hist, "w1")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "bg",
-            F.round(
-                (
-                    F.log(F.col("c12") + 1.0)
-                    - F.log((F.col("h") + F.col("v")).cast("double"))
-                )
-                * 1000000.0,
-                0,
-            )
-            .cast("long")
-            .alias("lnp_micro"),
-        )
-    )
-    pd = (
-        dc.join(lnp, "bg")
-        .groupBy("doc_id")
-        .agg(
-            F.expr(
-                "CAST((0 - sum(c * lnp_micro)) div sum(c) AS BIGINT)"
-            ).alias("ll_pt_micro"),
-            F.sum("c").cast("long").alias("n_bigrams"),
-        )
-    )
-    return (
-        pd.join(d.select("doc_id", "source"), "doc_id")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_bigrams").cast("long").alias("n_bigrams"),
-            F.expr(
-                "CAST(sum(CAST(ll_pt_micro AS DECIMAL(38,0))) div count(1) "
-                "AS BIGINT)"
-            ).alias("avg_logloss_micro"),
-            F.min("ll_pt_micro").cast("long").alias("min_logloss_micro"),
-            F.max("ll_pt_micro").cast("long").alias("max_logloss_micro"),
-        )
-        .orderBy("source")
     )
 
 

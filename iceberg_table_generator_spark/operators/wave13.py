@@ -20,8 +20,8 @@ Two families:
   says WHETHER the true neighbors were found, nDCG/MRR say whether they
   were found IN THE RIGHT ORDER — the number a retrieval cascade is
   actually tuned on.  Ground truth and evaluated rankings are the
-  registered queries themselves (exact cosine vs LSH/IVF; exact BM25 vs
-  the tf-only first-pass prefilter every lexical cascade runs), and the
+  registered queries themselves (exact cosine vs LSH/IVF; the BM25
+  cascade's twin, `text_bm25_ndcg_eval`, is in `operators/text.py`), and the
   oracles compose the registered ORACLE TEXTS as CTEs, so the eval can
   never drift from the operators it evaluates.
 
@@ -43,7 +43,7 @@ LLM-pipeline mandate.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table
@@ -367,7 +367,7 @@ _SQL_DCG_TERM = (
 )
 
 
-def _ranking_quality(
+def ranking_quality(
     ann: DataFrame, exact: DataFrame, k: int, keys: list[str]
 ) -> DataFrame:
     """Shared nDCG@k / MRR evaluator: `ann` carries (keys…, query_id,
@@ -408,7 +408,7 @@ def _ranking_quality(
     )
 
 
-_SQL_RANKING_QUALITY = f"""
+SQL_RANKING_QUALITY = f"""
 j AS (
   SELECT a.method, a.query_id, a.s,
          coalesce({{k}} - g.r + 1, 0) AS gain
@@ -451,7 +451,7 @@ ann AS (
   SELECT 'lsh' AS method, query_id, neighbor_id AS item, rank AS s FROM lsh_q
   UNION ALL
   SELECT 'ivf' AS method, query_id, neighbor_id AS item, rank AS s FROM ivf_q),
-{_SQL_RANKING_QUALITY.format(k=TOP_K)}
+{SQL_RANKING_QUALITY.format(k=TOP_K)}
 """
 
 
@@ -477,7 +477,7 @@ def similarity_ann_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity_ivf_topk,
     )
 
-    # Pinned accessor: _ranking_quality reads the gold in TWO branches
+    # Pinned accessor: ranking_quality reads the gold in TWO branches
     # (gain join + iDCG denominator) — see cosine_topk_gold_pinned.
     exact = cosine_topk_gold_pinned(spark, sf_dir).select(
         "query_id", F.col("neighbor_id").alias("item"), F.col("rank").alias("r")
@@ -494,104 +494,6 @@ def similarity_ann_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("neighbor_id").alias("item"),
         F.col("rank").alias("s"),
     )
-    return _ranking_quality(
+    return ranking_quality(
         lsh.unionByName(ivf), exact, TOP_K, keys=["method"]
     )
-
-
-# --------------------------------------------------------------------------
-# nDCG@k / MRR: the tf-only lexical prefilter vs the exact BM25 ranking
-# --------------------------------------------------------------------------
-
-
-def _bm25_ndcg_oracle() -> str:
-    from iceberg_table_generator_spark.operators.text import (
-        _BM25_ORACLE,
-        _BM25_Q_VALUES,
-        _BM25_TERM_LIST,
-        BM25_TOP_K,
-    )
-
-    return f"""
-WITH bm25_q AS ({_BM25_ORACLE}),
-gold AS (SELECT query_id, doc_id AS item, rank AS r FROM bm25_q),
-q(query_id, w) AS (VALUES {_BM25_Q_VALUES}),
-tok AS (
-  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents),
-tf AS (
-  SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf FROM tok
-  WHERE w IN ({_BM25_TERM_LIST}) GROUP BY doc_id, w),
-cagg AS (
-  SELECT q.query_id, tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS tfsum
-  FROM q JOIN tf USING (w) GROUP BY q.query_id, tf.doc_id),
-cr AS (
-  SELECT query_id, doc_id, tfsum,
-         CAST(row_number() OVER (PARTITION BY query_id
-                                 ORDER BY tfsum DESC, doc_id) AS INT) AS s
-  FROM cagg),
-ann AS (
-  SELECT 'tf' AS method, CAST(query_id AS INT) AS query_id, doc_id AS item, s
-  FROM cr WHERE s <= {BM25_TOP_K}),
-{_SQL_RANKING_QUALITY.format(k=BM25_TOP_K)}
-"""
-
-
-@query("text_bm25_ndcg_eval", oracle=_bm25_ndcg_oracle())
-def text_bm25_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking quality of the TF-ONLY lexical prefilter against the exact
-    BM25 ranking, per query: nDCG@k with graded gain from the BM25 rank
-    plus MRR — the cascade diagnostic behind every two-stage lexical
-    retrieval (a cheap Σtf coordination score fans out candidates at
-    scale; BM25 reranks; this query measures what the cheap stage loses
-    BEFORE anyone deploys the cascade).
-
-    The gold side is the registered `text_bm25_topk` run unchanged (and
-    its oracle text composed verbatim); the candidate side is the tf
-    ranking over the SAME query terms — one token pass with the filter
-    BEFORE the groupBy (the BM25 plan's own tf stage shape: the term
-    shuffle carries matched rows, not the corpus vocabulary), then a
-    (queries × matched docs)-bounded window.  Integer-exact end-to-end:
-    the tf ranking is pure integer ordering, and the DCG chain is the
-    module's micro-rounded device."""
-    from iceberg_table_generator_spark.operators.text import (
-        _BM25_TERMS,
-        BM25_QUERIES,
-        BM25_TOP_K,
-        text_bm25_topk,
-    )
-
-    gold = text_bm25_topk(spark, sf_dir).select(
-        "query_id", F.col("doc_id").alias("item"), F.col("rank").alias("r")
-    )
-    d = load_table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w")
-    )
-    tf = (
-        tok.filter(F.col("w").isin(_BM25_TERMS))
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    qdf = spark.createDataFrame(
-        [(qid, w) for qid, ws in BM25_QUERIES for w in ws],
-        "query_id int, w string",
-    )
-    cagg = (
-        qdf.join(tf, "w")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("tf").cast("long").alias("tfsum"))
-    )
-    win = Window.partitionBy("query_id").orderBy(
-        F.desc("tfsum"), F.asc("doc_id")
-    )
-    cand = (
-        cagg.withColumn("s", F.row_number().over(win))
-        .filter(F.col("s") <= BM25_TOP_K)
-        .select(
-            F.lit("tf").alias("method"),
-            "query_id",
-            F.col("doc_id").alias("item"),
-            "s",
-        )
-    )
-    return _ranking_quality(cand, gold, BM25_TOP_K, keys=["method"])

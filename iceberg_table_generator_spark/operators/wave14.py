@@ -18,11 +18,6 @@ LLM-data playbooks that the surface still lacked.
   "Matryoshka Representation Learning") — how much top-k agreement
   survives scoring on the first d′ of d dimensions; the eval behind
   every "shorten the embedding to cut the index 8×" decision.
-* **MATTR lexical diversity** (Covington & McFall 2010) — the
-  windowed type-token ratio that, unlike raw TTR (`text_ttr_by_length`
-  hits its length confound directly), is length-invariant by
-  construction; computed via an exact per-occurrence closed form, no
-  per-window pass.
 * **MinHash LSH band-configuration sweep** — candidate volume,
   precision, and recall of 8×8 / 16×4 / 32×2 band plans side by side;
   the planning query a 100 TB dedup run executes on a sample BEFORE
@@ -45,7 +40,16 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from iceberg_table_generator_spark.functions import collect
 from iceberg_table_generator_spark.functions.cache import persist_tracked
+from iceberg_table_generator_spark.functions.text import (
+    md5_60,
+    md5_60_sql,
+    shingles,
+    shingles_sql,
+    tokens,
+    tokens_sql,
+)
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table, spread
 
@@ -81,7 +85,7 @@ def gopher_rule_flags(d: DataFrame, keep: list[str]) -> DataFrame:
     All four rules evaluate IN-ROW with higher-order array functions (one
     codegen'd projection; the repetition mode scan is O(wc²) per doc with
     wc bounded by the document, not the corpus)."""
-    ws = F.split(F.lower("text"), " ")
+    ws = tokens()
     base = d.select(*keep, ws.alias("ws"))
     wc = F.size("ws")
     chars = F.aggregate(
@@ -111,7 +115,7 @@ def _sql_rule_flags(keep: str) -> str:
     `gopher_rule_flags`, shared by the per-source matrix oracle and the
     ablation-curve oracle (wave18)."""
     return f"""d AS (
-  SELECT {keep}, string_split(lower(text), ' ') AS ws FROM documents),
+  SELECT {keep}, {tokens_sql()} AS ws FROM documents),
 m AS (
   SELECT {keep},
          len(ws) AS wc,
@@ -199,7 +203,7 @@ UNIMAX_EPOCH_CAP = 2
 
 _UNIMAX_ORACLE = f"""
 WITH RECURSIVE tok AS (
-  SELECT lang, unnest(string_split(lower(text), ' ')) AS w FROM documents),
+  SELECT lang, unnest({tokens_sql()}) AS w FROM documents),
 cnt AS (SELECT lang, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY lang),
 tot AS (SELECT CAST(sum(c) AS BIGINT) AS t, CAST(count(*) AS BIGINT) AS n
         FROM cnt),
@@ -247,10 +251,11 @@ def pipeline_unimax_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE.  All quantities are integers (budget = tokens·1/2,
     shares by integer division), so both engines agree exactly."""
     tok = load_table(spark, sf_dir, "documents").select(
-        "lang", F.explode(F.split(F.lower("text"), " ")).alias("w")
+        "lang", F.explode(tokens()).alias("w")
     )
     cnt = tok.groupBy("lang").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    rows = sorted((r.lang, r.c) for r in cnt.collect())
+    found = collect.collect_bounded(cnt, collect.MAX_LANGUAGES, "pipeline_unimax_mixing")
+    rows = sorted((r.lang, r.c) for r in found)
     rows.sort(key=lambda lc: (lc[1], lc[0]))
     total = sum(c for _, c in rows)
     budget = (total * UNIMAX_BUDGET_NUM) // UNIMAX_BUDGET_DEN
@@ -613,113 +618,6 @@ def similarity_matryoshka_recall(
 
 
 # --------------------------------------------------------------------------
-# MATTR lexical diversity (windowed type-token ratio, exact closed form)
-# --------------------------------------------------------------------------
-#: Window width.  Covington & McFall's canonical 50 exceeds many fixture
-#: documents (10-99 words); 25 keeps most in scope.  Documents shorter
-#: than the window are excluded (standard MATTR practice).
-MATTR_W = 25
-
-_MATTR_ORACLE = f"""
-WITH ws AS (
-  SELECT doc_id, source, string_split(lower(text), ' ') AS ws FROM documents),
-tok AS (
-  SELECT doc_id, source, ws[t.i] AS w, t.i - 1 AS pos, len(ws) AS L
-  FROM ws, unnest(generate_series(1, len(ws))) AS t(i)),
-g AS (
-  SELECT doc_id, source, pos, L,
-         coalesce(pos - lag(pos) OVER (PARTITION BY doc_id, w ORDER BY pos),
-                  pos + 1) AS gap
-  FROM tok),
-contrib AS (
-  SELECT doc_id, source, L,
-         greatest(0, least(pos, L - {MATTR_W})
-                     - greatest(pos - {MATTR_W} + 1, pos - gap + 1, 0) + 1)
-           AS c
-  FROM g WHERE L >= {MATTR_W}),
-per_doc AS (
-  SELECT doc_id, source,
-         CAST((sum(c) * {_MICRO}) // ((max(L) - {MATTR_W} + 1) * {MATTR_W})
-              AS BIGINT) AS mattr_micro
-  FROM contrib GROUP BY doc_id, source)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_docs_eval,
-       CAST(sum(mattr_micro) // count(*) AS BIGINT) AS avg_mattr_micro,
-       CAST(min(mattr_micro) AS BIGINT) AS min_mattr_micro,
-       CAST(max(mattr_micro) AS BIGINT) AS max_mattr_micro
-FROM per_doc GROUP BY source
-"""
-
-
-@query("text_mattr_diversity", oracle=_MATTR_ORACLE)
-def text_mattr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MATTR lexical diversity per source: the mean type-token ratio over
-    every complete {MATTR_W}-token sliding window of each document
-    (Covington & McFall 2010) — the length-INVARIANT diversity measure
-    (raw TTR falls with length by Heaps' law, the confound
-    `text_ttr_by_length` measures directly; MATTR is the fix, and the
-    repetitive-template detector template-aware dedup runs first).
-
-    Exact closed form, no per-window pass: a token occurrence at `pos`
-    with gap g to its previous same-word occurrence is the window-FIRST
-    occurrence for exactly the windows starting in (pos−min(g,W), pos]
-    clipped to the valid range, so Σ window-distinct-counts =
-    Σ_occurrences max(0, min(pos, L−W) − max(pos−W+1, pos−g+1, 0) + 1) —
-    ONE lag window partitioned by (doc, word) and integer arithmetic;
-    MATTR = that sum / ((L−W+1)·W), micro-scaled integer division on
-    both engines.
-
-    Scale: the only shuffle is the (doc_id, word)-keyed lag (doc-bounded
-    partitions — the substring-dedup skew rule) plus the doc- and
-    source-bounded aggregates."""
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.split(F.lower("text"), " ").alias("ws")
-    )
-    tok = d.select(
-        "doc_id",
-        "source",
-        F.size("ws").alias("L"),
-        F.posexplode("ws").alias("pos", "w"),
-    ).filter(F.col("L") >= MATTR_W)
-    wlag = Window.partitionBy("doc_id", "w").orderBy("pos")
-    g = tok.withColumn(
-        "gap",
-        F.coalesce(
-            F.col("pos") - F.lag("pos").over(wlag), F.col("pos") + 1
-        ),
-    )
-    contrib = g.select(
-        "doc_id",
-        "source",
-        "L",
-        F.greatest(
-            F.lit(0),
-            F.least(F.col("pos"), F.col("L") - MATTR_W)
-            - F.greatest(
-                F.col("pos") - MATTR_W + 1,
-                F.col("pos") - F.col("gap") + 1,
-                F.lit(0),
-            )
-            + 1,
-        ).alias("c"),
-    )
-    per_doc = contrib.groupBy("doc_id", "source").agg(
-        F.expr(
-            f"CAST((sum(c) * {_MICRO}) div "
-            f"((max(L) - {MATTR_W} + 1) * {MATTR_W}) AS BIGINT)"
-        ).alias("mattr_micro")
-    )
-    return per_doc.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs_eval"),
-        F.expr("CAST(sum(mattr_micro) div count(*) AS BIGINT)").alias(
-            "avg_mattr_micro"
-        ),
-        F.min("mattr_micro").cast("long").alias("min_mattr_micro"),
-        F.max("mattr_micro").cast("long").alias("max_mattr_micro"),
-    )
-
-
-# --------------------------------------------------------------------------
 # MinHash LSH band-configuration sweep
 # --------------------------------------------------------------------------
 #: Swept plans over the shared 64-slot signature: (bands, rows-per-band).
@@ -737,8 +635,6 @@ _SWEEP_THRESH_MICRO = {
 
 def _band_sweep_oracle() -> str:
     from iceberg_table_generator_spark.operators.dedup import (
-        _SQL_SHINGLES,
-        _sql_md5_60,
         MH_A,
         MH_B,
         MH_P,
@@ -772,11 +668,11 @@ def _band_sweep_oracle() -> str:
     jn, jd = SWEEP_JACCARD_NUM, SWEEP_JACCARD_DEN
     return f"""
 WITH tok AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
+  SELECT doc_id, {tokens_sql()} AS ws FROM documents),
 docs AS (
-  SELECT doc_id, {_SQL_SHINGLES} AS sset FROM tok WHERE len(ws) >= 3),
+  SELECT doc_id, {shingles_sql("ws", 3)} AS sset FROM tok WHERE len(ws) >= 3),
 sh AS (
-  SELECT doc_id, {_sql_md5_60("s.s")} % {MH_P} AS h
+  SELECT doc_id, {md5_60_sql("s.s")} % {MH_P} AS h
   FROM docs, unnest(sset) AS s(s)),
 perms AS (SELECT * FROM (VALUES {perms}) t(i, a, b)),
 mh AS (
@@ -849,13 +745,9 @@ def dedup_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     union candidate set."""
     from iceberg_table_generator_spark.operators.dedup import (
         _band_fold,
-        _md5_60,
         MH_P,
         minhash_signatures,
-        shingles,
-        tokenize,
     )
-    from iceberg_table_generator_spark.sources.tables import spread
 
     # NOT persisted: the shingle arrays are the corpus's full text re-cut —
     # a DISK_ONLY round-trip of them costs more than the in-row
@@ -863,11 +755,12 @@ def dedup_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the persist was 2.7 s of the 4.66 s pin; `dedup_minhash_lsh` made the
     # same call).  Only the compact relations (signatures, candidates) are
     # persisted.
-    d = shingles(tokenize(spread(load_table(spark, sf_dir, "documents"))))
+    d = spread(load_table(spark, sf_dir, "documents")).withColumn("tokens", tokens())
+    d = d.withColumn("shingles", shingles("tokens", 3))
     sset = d.select("doc_id", F.array_distinct("shingles").alias("sset"))
     sh = sset.select(
         "doc_id",
-        F.explode(F.transform("sset", lambda s: _md5_60(s) % MH_P)).alias("h"),
+        F.explode(F.transform("sset", lambda s: md5_60(s) % MH_P)).alias("h"),
     )
     sig = minhash_signatures(sh).transform(persist_tracked)
     # Eager materialization (r13): the final plan reads `sig` from several

@@ -45,7 +45,7 @@ def _rrf_fusion_oracle() -> str:
         TOP_K,
     )
     from iceberg_table_generator_spark.operators.wave13 import (
-        _SQL_RANKING_QUALITY,
+        SQL_RANKING_QUALITY,
     )
 
     return f"""
@@ -67,7 +67,7 @@ fused AS (
                                  ORDER BY rrf_micro DESC, item) AS INT) AS s
   FROM rrf),
 ann AS (SELECT * FROM fused WHERE s <= {TOP_K}),
-{_SQL_RANKING_QUALITY.format(k=TOP_K)}
+{SQL_RANKING_QUALITY.format(k=TOP_K)}
 """
 
 
@@ -96,10 +96,10 @@ def similarity_rrf_fusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity_ivf_topk,
     )
     from iceberg_table_generator_spark.operators.wave13 import (
-        _ranking_quality,
+        ranking_quality,
     )
 
-    # Pinned accessor: _ranking_quality fans the gold into two branches.
+    # Pinned accessor: ranking_quality fans the gold into two branches.
     exact = cosine_topk_gold_pinned(spark, sf_dir).select(
         "query_id", F.col("neighbor_id").alias("item"), F.col("rank").alias("r")
     )
@@ -125,7 +125,7 @@ def similarity_rrf_fusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s") <= TOP_K)
         .select(F.lit("rrf").alias("method"), "query_id", "item", "s")
     )
-    return _ranking_quality(fused, exact, TOP_K, keys=["method"])
+    return ranking_quality(fused, exact, TOP_K, keys=["method"])
 
 
 # --------------------------------------------------------------------------

@@ -29,6 +29,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from iceberg_table_generator_spark.functions.cache import persist_tracked
+from iceberg_table_generator_spark.functions.text import (
+    md5_60,
+    md5_60_sql,
+    tokens,
+    tokens_sql,
+)
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table, spread
 
@@ -432,18 +438,17 @@ ALIGN_KEEP_T = 0.0
 
 
 def _alignment_oracle() -> str:
-    from iceberg_table_generator_spark.operators.dedup import _sql_md5_60
     from iceberg_table_generator_spark.operators.similarity import _VEC_DIM
 
     dim = _VEC_DIM
     return f"""
 WITH tok AS (
-  SELECT doc_id, source, unnest(string_split(lower(text), ' ')) AS w
+  SELECT doc_id, source, unnest({tokens_sql()}) AS w
   FROM documents),
 hashed AS (
   SELECT doc_id, source,
-         CAST(1 + ({_sql_md5_60('w')} % {dim}) AS INT) AS i,
-         CAST((({_sql_md5_60('w')} >> 6) % 2) * 2 - 1 AS BIGINT) AS sgn
+         CAST(1 + ({md5_60_sql('w')} % {dim}) AS INT) AS i,
+         CAST((({md5_60_sql('w')} >> 6) % 2) * 2 - 1 AS BIGINT) AS sgn
   FROM tok),
 tv AS (
   SELECT doc_id, source, i, CAST(sum(sgn) AS BIGINT) AS x
@@ -505,15 +510,14 @@ def multimodal_text_embedding_alignment(
     Scale: one token pass → (doc, dim)-keyed integer aggregate (≤ dim
     rows per doc), one id-co-partitioned join against the embeddings
     scan, sources-bounded output."""
-    from iceberg_table_generator_spark.operators.dedup import _md5_60
     from iceberg_table_generator_spark.operators.similarity import _VEC_DIM
 
     dim = _VEC_DIM
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", "source", F.explode(F.split(F.lower("text"), " ")).alias("w")
+        "doc_id", "source", F.explode(tokens()).alias("w")
     )
-    h = _md5_60(F.col("w"))
+    h = md5_60(F.col("w"))
     hashed = tok.select(
         "doc_id",
         "source",

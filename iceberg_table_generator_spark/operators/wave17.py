@@ -26,6 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from iceberg_table_generator_spark.functions.text import ngrams, shingles, tokens, tokens_sql
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table
 
@@ -230,7 +231,7 @@ def similarity_compression_frontier(
 # --------------------------------------------------------------------------
 _ABLATION_ORACLE = f"""
 WITH w AS (
-  SELECT doc_id, source, string_split(lower(text), ' ') AS ws
+  SELECT doc_id, source, {tokens_sql()} AS ws
   FROM documents),
 docs AS (
   SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -272,7 +273,7 @@ def pipeline_source_ablation_matrix(
     quality-vs-coverage axis).
 
     The uniqueness unit is the 3-word SHINGLE (the dedup family's unit,
-    `dedup.shingles`): the fixture's unigram vocabulary is fully shared
+    `functions.text.shingles`): the fixture's unigram vocabulary is fully shared
     across sources (loss structurally zero), while shingle phrasing is
     genuinely source-specific — and at web scale shingle-attribution is
     the same screen (phrases, not words, are what a source uniquely
@@ -284,15 +285,11 @@ def pipeline_source_ablation_matrix(
     shape) feeds both the per-source mass aggregate and the
     shingle→source-count relation (map-side combinable, shingle-space
     bounded); output is sources-bounded."""
-    from iceberg_table_generator_spark.operators.dedup import (
-        shingles,
-        tokenize,
-    )
     from iceberg_table_generator_spark.sources.tables import spread
 
-    d = shingles(
-        tokenize(spread(load_table(spark, sf_dir, "documents")))
-    ).select("source", "tokens", "shingles")
+    d = spread(load_table(spark, sf_dir, "documents")).withColumn("tokens", tokens())
+    d = d.withColumn("shingles", shingles("tokens", 3))
+    d = d.select("source", "tokens", "shingles")
     docs = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.size("tokens")).cast("long").alias("n_tokens"),
@@ -302,13 +299,7 @@ def pipeline_source_ablation_matrix(
     # rebuild occurrences from tokens.
     tri = d.select(
         "source",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(tokens) < 3 THEN array() "
-                "ELSE transform(sequence(0, size(tokens) - 3), "
-                "i -> concat_ws(' ', slice(tokens, i + 1, 3))) END"
-            )
-        ).alias("s"),
+        F.explode(ngrams("tokens", 3)).alias("s"),
     )
     ssrc = tri.groupBy("s").agg(
         F.countDistinct("source").alias("n_sources"),

@@ -25,6 +25,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from iceberg_table_generator_spark.functions.text import tokens
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table, spread
 
@@ -88,7 +89,7 @@ def pipeline_quality_ablation_curve(
 
     d = load_table(spark, sf_dir, "documents")
     flags = gopher_rule_flags(d, keep=["doc_id"])
-    wc = d.select("doc_id", F.size(F.split(F.lower("text"), " ")).alias("wc"))
+    wc = d.select("doc_id", F.size(tokens()).alias("wc"))
     sc = flags.join(wc, "doc_id").select(
         "wc",
         (

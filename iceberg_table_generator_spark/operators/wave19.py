@@ -1,288 +1,21 @@
-"""Round-13 wave: subword tokenizer-fertility audit (r12 verdict #5).
+"""Round-13 wave: the quality-filter agreement matrix (Gopher rules ×
+CCNet perplexity terciles), the cross-source near-dup contamination
+matrix and the MinHash candidate-growth probe (r12 verdict #5).
 
-The existing `text_tokenizer_fertility` (operators/text.py) measures the
-WHITESPACE level only — chars per word.  What a multilingual pipeline
-actually decides on is the SUBWORD level: TOKENIZER CHOICE.  Multilingual pipelines read a fertility matrix — per-language
-tokens-per-word, bytes-per-token, and OOV rate under a candidate
-vocabulary — before fixing a tokenizer, because a vocabulary fit to the
-head language inflates token counts (and training cost, and effective
-context shrinkage) for the tail languages.
-
-Tokenizer proxy, chosen for engine-exactness (the repo's integer-exact
-closed-form idiom): a frequency-built whole-word vocabulary of the top-V
-corpus words (ties broken by word — deterministic on both engines), with
-a character-chunk fallback: an in-vocab word costs 1 token, an OOV word
-costs ceil(len/4) tokens (the BPE-ish "word decomposes into ~4-char
-subword pieces" shape).  This is the standard first-screen proxy — real
-BPE merges need the trained merge table, but vocabulary COVERAGE is what
-drives cross-language fertility differences, and coverage is exactly
-what this measures.  All ratios are micro-scaled integer divisions, so
-both engines agree bit-for-bit.
-
-Scale posture: ONE token pass over the corpus (the same exploded-token
-relation every text operator uses), a vocab-bounded (top-V ≤ 1024 rows,
-limit-k) broadcast join, and a languages-bounded output.  No UDFs, no
-driver loops.
+The subword-fertility family and the CCNet buckets this wave composes
+live in the text domain (`operators/text.py`).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
+from iceberg_table_generator_spark.operators.text import ccnet_doc_buckets, ccnet_doc_ctes
 from iceberg_table_generator_spark.registry import query
-from iceberg_table_generator_spark.sources.tables import load_table, spread
+from iceberg_table_generator_spark.sources.tables import load_table
 
 _MICRO = 1_000_000
-
-#: Vocabulary size of the headline fertility matrix.
-FERTILITY_V = 256
-#: OOV fallback: an out-of-vocabulary word costs ceil(len / SUBWORD_LEN)
-#: tokens — the "decomposes into ~4-char pieces" BPE proxy.
-SUBWORD_LEN = 4
-#: Vocabulary sizes swept by `text_tokenizer_vocab_sweep` (the curve a
-#: pipeline reads to pick V; must be ascending, max bounds the broadcast).
-VOCAB_SWEEP = (64, 256, 1024)
-
-
-def _tok_sql() -> str:
-    """Shared DuckDB CTE prefix: exploded lowercase tokens with byte and
-    char lengths (strlen = UTF-8 bytes in DuckDB; Spark's octet_length is
-    its twin), empty tokens dropped (double-space artifacts)."""
-    return """
-tok AS (
-  SELECT doc_id, lang, w, strlen(w) AS bytes, length(w) AS chars
-  FROM (SELECT doc_id, lang,
-               unnest(string_split(lower(text), ' ')) AS w
-        FROM documents)
-  WHERE w <> ''),
-cnt AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY w),
-rnk AS (
-  SELECT w, row_number() OVER (ORDER BY c DESC, w) AS r FROM cnt)"""
-
-
-_FERTILITY_ORACLE = f"""
-WITH {_tok_sql()},
-vocab AS (SELECT w FROM rnk WHERE r <= {FERTILITY_V}),
-scored AS (
-  SELECT t.lang, t.bytes, t.chars,
-         CASE WHEN v.w IS NOT NULL THEN 1
-              ELSE (t.chars + {SUBWORD_LEN - 1}) // {SUBWORD_LEN} END AS toks,
-         CASE WHEN v.w IS NULL THEN 1 ELSE 0 END AS oov
-  FROM tok t LEFT JOIN vocab v ON v.w = t.w),
-nd AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs
-       FROM documents GROUP BY lang)
-SELECT s.lang,
-       nd.n_docs,
-       CAST(count(*) AS BIGINT) AS n_words,
-       CAST(sum(s.toks) AS BIGINT) AS n_tokens,
-       CAST(sum(s.oov) AS BIGINT) AS n_oov_words,
-       CAST(sum(s.bytes) AS BIGINT) AS n_bytes,
-       CAST((sum(s.toks) * {_MICRO}) // count(*) AS BIGINT)
-         AS fertility_micro,
-       CAST((sum(s.bytes) * {_MICRO}) // sum(s.toks) AS BIGINT)
-         AS bytes_per_token_micro,
-       CAST((sum(s.chars) * {_MICRO}) // sum(s.toks) AS BIGINT)
-         AS chars_per_token_micro,
-       CAST((sum(s.oov) * {_MICRO}) // count(*) AS BIGINT) AS oov_ppm
-FROM scored s JOIN nd ON nd.lang = s.lang
-GROUP BY s.lang, nd.n_docs
-"""
-
-
-def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exploded lowercase tokens with byte/char lengths (Spark twin of
-    `_tok_sql`'s `tok` CTE)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return (
-        docs.select(
-            "doc_id",
-            "lang",
-            F.explode(F.split(F.lower("text"), " ")).alias("w"),
-        )
-        .filter(F.col("w") != "")
-        .select(
-            "doc_id",
-            "lang",
-            "w",
-            F.octet_length("w").cast("long").alias("bytes"),
-            F.length("w").cast("long").alias("chars"),
-        )
-    )
-
-
-def _vocab_ranks(tok: DataFrame, max_v: int) -> DataFrame:
-    """(w, r) for the top `max_v` corpus words by (count desc, word asc)
-    — the deterministic frequency-built vocabulary, engine-exact (the
-    oracle's row_number uses the identical total order).  limit-k bounded
-    ⇒ broadcastable at any corpus size."""
-    cnt = tok.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    w = Window.orderBy(F.desc("c"), F.asc("w"))
-    # row_number over an unpartitioned window would single-task the whole
-    # vocabulary; orderBy+limit keeps the top-k distributed (TakeOrdered).
-    return (
-        cnt.orderBy(F.desc("c"), F.asc("w"))
-        .limit(max_v)
-        .withColumn("r", F.row_number().over(w))
-        .select("w", "r")
-    )
-
-
-@query("text_subword_fertility", oracle=_FERTILITY_ORACLE)
-def text_subword_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language tokenizer-fertility matrix under the top-FERTILITY_V
-    (256) frequency vocabulary: tokens-per-word (fertility), bytes/chars per
-    token, and OOV rate — the table a multilingual pipeline reads before
-    fixing a tokenizer (a head-language vocabulary inflates tail-language
-    token counts; this quantifies by how much, per language).
-
-    Engine-exact: the vocabulary is a deterministic top-V (count desc,
-    word asc), the OOV fallback is integer ceil-division, and every ratio
-    is a micro-scaled integer division.  Scale: one token pass, one
-    limit-k-bounded broadcast (the vocabulary), languages-bounded output.
-    """
-    tok = _tokens(spark, sf_dir)
-    vocab = _vocab_ranks(tok, FERTILITY_V).select(
-        "w", F.lit(1).alias("in_vocab")
-    )
-    scored = tok.join(F.broadcast(vocab), "w", "left").select(
-        "lang",
-        "bytes",
-        "chars",
-        F.when(F.col("in_vocab").isNotNull(), F.lit(1))
-        .otherwise(
-            F.expr(f"(chars + {SUBWORD_LEN - 1}) div {SUBWORD_LEN}")
-        )
-        .cast("long")
-        .alias("toks"),
-        F.when(F.col("in_vocab").isNull(), 1).otherwise(0).alias("oov"),
-    )
-    nd = (
-        load_table(spark, sf_dir, "documents")
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    )
-    per = scored.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_words"),
-        F.sum("toks").cast("long").alias("n_tokens"),
-        F.sum("oov").cast("long").alias("n_oov_words"),
-        F.sum("bytes").cast("long").alias("n_bytes"),
-        F.sum("chars").cast("long").alias("_chars"),
-    )
-    # no broadcast hint: both sides are lang-keyed aggregates (a handful
-    # of rows post-shuffle); the invariant suite only certifies broadcasts
-    # it can prove bounded, and a tiny SMJ costs nothing here
-    return (
-        per.join(nd, "lang")
-        .select(
-            "lang",
-            "n_docs",
-            "n_words",
-            "n_tokens",
-            "n_oov_words",
-            "n_bytes",
-            F.expr(f"(n_tokens * {_MICRO}) div n_words")
-            .cast("long")
-            .alias("fertility_micro"),
-            F.expr(f"(n_bytes * {_MICRO}) div n_tokens")
-            .cast("long")
-            .alias("bytes_per_token_micro"),
-            F.expr(f"(_chars * {_MICRO}) div n_tokens")
-            .cast("long")
-            .alias("chars_per_token_micro"),
-            F.expr(f"(n_oov_words * {_MICRO}) div n_words")
-            .cast("long")
-            .alias("oov_ppm"),
-        )
-    )
-
-
-def _vocab_sweep_oracle() -> str:
-    grid = ", ".join(f"({v})" for v in VOCAB_SWEEP)
-    return f"""
-WITH {_tok_sql()},
-vs(vocab_size) AS (VALUES {grid}),
-scored AS (
-  SELECT vs.vocab_size, t.lang, t.bytes,
-         CASE WHEN r.r IS NOT NULL AND r.r <= vs.vocab_size THEN 1
-              ELSE (t.chars + {SUBWORD_LEN - 1}) // {SUBWORD_LEN} END AS toks,
-         CASE WHEN r.r IS NOT NULL AND r.r <= vs.vocab_size THEN 0
-              ELSE 1 END AS oov
-  FROM tok t
-  LEFT JOIN (SELECT * FROM rnk WHERE r <= {max(VOCAB_SWEEP)}) r
-    ON r.w = t.w
-  CROSS JOIN vs)
-SELECT vocab_size, lang,
-       CAST(count(*) AS BIGINT) AS n_words,
-       CAST(sum(toks) AS BIGINT) AS n_tokens,
-       CAST((sum(toks) * {_MICRO}) // count(*) AS BIGINT)
-         AS fertility_micro,
-       CAST((sum(bytes) * {_MICRO}) // sum(toks) AS BIGINT)
-         AS bytes_per_token_micro,
-       CAST((sum(oov) * {_MICRO}) // count(*) AS BIGINT) AS oov_ppm
-FROM scored GROUP BY vocab_size, lang
-"""
-
-
-@query("text_tokenizer_vocab_sweep", oracle=_vocab_sweep_oracle())
-def text_tokenizer_vocab_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fertility-vs-vocabulary-size curve, per language, over the swept
-    sizes VOCAB_SWEEP (64/256/1024): how much fertility (and OOV) improves as the
-    vocabulary grows — the trade-off curve read against memory/embedding
-    budget when choosing V.  The τ-sweep idiom applied to tokenizer
-    choice: rank the vocabulary ONCE (top max(V), engine-exact total
-    order), then every swept size is a rank cut, so the sweep costs one
-    token pass + a |grid|-bounded cross join — not |grid| passes.
-
-    Scale: the rank relation is limit-k bounded (≤ max(V) rows,
-    broadcast); output is |grid| × languages."""
-    tok = _tokens(spark, sf_dir)
-    ranks = _vocab_ranks(tok, max(VOCAB_SWEEP))
-    # range+explode literal (not createDataFrame): plans as Range → the
-    # broadcast invariant's driver-literal category (the
-    # lineitem_global_quantiles idiom)
-    vs = spark.range(1).select(
-        F.explode(F.array(*[F.lit(v) for v in VOCAB_SWEEP])).alias(
-            "vocab_size"
-        )
-    )
-    scored = (
-        tok.join(F.broadcast(ranks), "w", "left")
-        .crossJoin(F.broadcast(vs))
-        .select(
-            "vocab_size",
-            "lang",
-            "bytes",
-            F.when(
-                F.col("r").isNotNull() & (F.col("r") <= F.col("vocab_size")),
-                F.lit(1),
-            )
-            .otherwise(
-                F.expr(f"(chars + {SUBWORD_LEN - 1}) div {SUBWORD_LEN}")
-            )
-            .cast("long")
-            .alias("toks"),
-            F.when(
-                F.col("r").isNotNull() & (F.col("r") <= F.col("vocab_size")),
-                F.lit(0),
-            )
-            .otherwise(F.lit(1))
-            .alias("oov"),
-        )
-    )
-    return scored.groupBy("vocab_size", "lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_words"),
-        F.sum("toks").cast("long").alias("n_tokens"),
-        F.expr(f"(sum(toks) * {_MICRO}) div count(*)")
-        .cast("long")
-        .alias("fertility_micro"),
-        F.expr(f"(sum(bytes) * {_MICRO}) div sum(toks)")
-        .cast("long")
-        .alias("bytes_per_token_micro"),
-        F.expr(f"(sum(oov) * {_MICRO}) div count(*)")
-        .cast("long")
-        .alias("oov_ppm"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -352,158 +85,6 @@ def minhash_candidate_scaling_probe(
     )
     planted = n // _PROBE_PERIOD
     return planted, cand
-
-
-# --------------------------------------------------------------------------
-# CCNet-style perplexity buckets (head / middle / tail per language)
-# --------------------------------------------------------------------------
-_BUCKET_NAMES = ("head", "middle", "tail")
-
-
-def _ccnet_doc_ctes() -> str:
-    """CTE chain ending in `bkt` = (doc_id, lang, ll_pt_micro, n_tokens,
-    bucket) — the per-doc bucketed relation, shared by the registered
-    ccnet oracle and the filter-agreement oracle.  CTE names avoid the
-    gopher chain's d/m/r so the two compose in one WITH."""
-    from iceberg_table_generator_spark.operators.wave12 import (
-        _LOGLOSS_ORACLE,
-    )
-
-    # Reuse the registered per-doc scoring CTEs verbatim (everything in
-    # text_unigram_logloss's oracle up to the per-doc relation `pd`).
-    pd_ctes = _LOGLOSS_ORACLE.split("\nSELECT d.source")[0].strip()
-    assert pd_ctes.startswith("WITH "), "logloss oracle shape changed"
-    return f"""{pd_ctes.removeprefix("WITH ")},
-sd AS (
-  SELECT p.doc_id, p.ll_pt_micro, p.n_tokens, dd.lang
-  FROM pd p JOIN documents dd USING (doc_id)),
-rnkl AS (
-  SELECT *,
-         row_number() OVER (PARTITION BY lang
-                            ORDER BY ll_pt_micro, doc_id) AS rk,
-         count(*) OVER (PARTITION BY lang) AS nl
-  FROM sd),
-bkt AS (
-  SELECT doc_id, lang, ll_pt_micro, n_tokens,
-         CASE ((rk - 1) * 3) // nl
-           WHEN 0 THEN 'head' WHEN 1 THEN 'middle' ELSE 'tail' END AS bucket
-  FROM rnkl)"""
-
-
-def _ccnet_oracle() -> str:
-    return f"""
-WITH {_ccnet_doc_ctes()}
-SELECT lang, bucket,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-       CAST(min(ll_pt_micro) AS BIGINT) AS min_logloss_micro,
-       CAST(max(ll_pt_micro) AS BIGINT) AS max_logloss_micro,
-       CAST(sum(ll_pt_micro) // count(*) AS BIGINT) AS avg_logloss_micro
-FROM bkt GROUP BY lang, bucket
-"""
-
-
-def ccnet_doc_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, lang, ll_pt_micro, n_tokens, bucket): every document with
-    its per-language exact-tercile perplexity bucket — the per-doc
-    relation under `text_ccnet_perplexity_buckets`, exposed for
-    composition (`pipeline_quality_filter_agreement`)."""
-    from iceberg_table_generator_spark.functions.order import (
-        with_global_order,
-    )
-    from iceberg_table_generator_spark.operators.wave12 import (
-        unigram_lnp_terms,
-    )
-
-    lnp, dc = unigram_lnp_terms(spark, sf_dir)
-    pd_df = (
-        dc.join(lnp.drop("raw_lnp"), "w")
-        .groupBy("doc_id")
-        .agg(
-            F.expr(
-                "CAST((0 - sum(c * lnp_micro)) div sum(c) AS BIGINT)"
-            ).alias("ll_pt_micro"),
-            F.sum("c").cast("long").alias("n_tokens"),
-        )
-    )
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    scored = pd_df.join(d, "doc_id")
-    ordered = with_global_order(
-        scored,
-        [("lang", True), ("ll_pt_micro", True), ("doc_id", True)],
-        pos="pos",
-    )
-    # languages-bounded collect (|langs| rows — model-sized, the UniMax
-    # policy), folded into (lang, offset, n) literals
-    counts = sorted(
-        (r["lang"], r["n"])
-        for r in scored.groupBy("lang")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .collect()
-    )
-    offs, acc = [], 0
-    for lang, n in counts:
-        offs.append((lang, acc, n))
-        acc += n
-    off = spark.range(1).select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(lang).alias("lang"),
-                        F.lit(o).alias("off"),
-                        F.lit(n).alias("nl"),
-                    )
-                    for lang, o, n in offs
-                ]
-            )
-        ).alias("e")
-    ).select("e.lang", "e.off", "e.nl")
-    return ordered.join(F.broadcast(off), "lang").select(
-        "doc_id",
-        "lang",
-        "ll_pt_micro",
-        "n_tokens",
-        F.expr(f"""
-          CASE ((pos - off - 1) * 3) div nl
-            WHEN 0 THEN '{_BUCKET_NAMES[0]}'
-            WHEN 1 THEN '{_BUCKET_NAMES[1]}'
-            ELSE '{_BUCKET_NAMES[2]}' END
-        """).alias("bucket"),
-    )
-
-
-@query("text_ccnet_perplexity_buckets", oracle=_ccnet_oracle())
-def text_ccnet_perplexity_buckets(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """CCNet's head/middle/tail quality bucketing, per language: score
-    every document with the corpus-fit add-one unigram LM (the SAME
-    per-doc relation as `text_unigram_logloss` — composed, not re-
-    derived), rank within its language by per-token logloss, and cut
-    into exact terciles — head = lowest perplexity.  CCNet keeps head
-    (and usually middle) per language; this emits the doc and token mass
-    each retention choice keeps, per (language, bucket).
-
-    Exact terciles WITHOUT a per-language corpus window (the scale-killer
-    `test_window_invariant.py` guards against): the two-phase distributed
-    order assigns global positions over (lang, logloss, doc_id); per-
-    language ranks are global positions minus the preceding-language
-    offsets, which come from a languages-bounded collect (the UniMax
-    model-bounded-collect policy) re-emitted as a driver-literal
-    broadcast (the `lineitem_global_quantiles` idiom, classifiable by
-    the broadcast invariant).  Bucket = ((rank-1)·3) div n_lang — pure
-    integer arithmetic, identical in the oracle's row_number form."""
-    bucketed = ccnet_doc_buckets(spark, sf_dir)
-    return bucketed.groupBy("lang", "bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("n_tokens"),
-        F.min("ll_pt_micro").cast("long").alias("min_logloss_micro"),
-        F.max("ll_pt_micro").cast("long").alias("max_logloss_micro"),
-        F.expr("CAST(sum(ll_pt_micro) div count(1) AS BIGINT)").alias(
-            "avg_logloss_micro"
-        ),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -589,7 +170,7 @@ def _filter_agreement_oracle() -> str:
     )
 
     return f"""
-WITH {_ccnet_doc_ctes()},
+WITH {ccnet_doc_ctes()},
 {_sql_rule_flags("doc_id")},
 gk AS (
   SELECT doc_id, wc_ok * mwl_ok * stop_ok * rep_ok AS gopher_keep FROM r)
@@ -644,114 +225,4 @@ def pipeline_quality_filter_agreement(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_tokens").cast("long").alias("n_tokens"),
         )
-    )
-
-
-# --------------------------------------------------------------------------
-# Cross-lingual vocabulary-transfer matrix
-# --------------------------------------------------------------------------
-#: Per-language vocabulary size for the transfer matrix (each fit
-#: language contributes its own top-V word list).
-TRANSFER_V = 256
-
-
-def _vocab_transfer_oracle() -> str:
-    return f"""
-WITH tok AS (
-  SELECT lang, w, length(w) AS chars
-  FROM (SELECT lang, unnest(string_split(lower(text), ' ')) AS w
-        FROM documents)
-  WHERE w <> ''),
-cnt AS (
-  SELECT lang, w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY lang, w),
-rnk AS (
-  SELECT lang, w,
-         row_number() OVER (PARTITION BY lang ORDER BY c DESC, w) AS r
-  FROM cnt),
-vocab AS (SELECT lang AS fit_lang, w FROM rnk WHERE r <= {TRANSFER_V}),
-langs AS (SELECT DISTINCT lang AS fit_lang FROM documents),
-scored AS (
-  SELECT l.fit_lang, t.lang AS eval_lang,
-         CASE WHEN v.w IS NOT NULL THEN 1
-              ELSE (t.chars + {SUBWORD_LEN - 1}) // {SUBWORD_LEN} END AS toks,
-         CASE WHEN v.w IS NULL THEN 1 ELSE 0 END AS oov
-  FROM tok t
-  CROSS JOIN langs l
-  LEFT JOIN vocab v ON v.fit_lang = l.fit_lang AND v.w = t.w)
-SELECT fit_lang, eval_lang,
-       CAST(count(*) AS BIGINT) AS n_words,
-       CAST(sum(toks) AS BIGINT) AS n_tokens,
-       CAST((sum(toks) * {_MICRO}) // count(*) AS BIGINT)
-         AS fertility_micro,
-       CAST((sum(oov) * {_MICRO}) // count(*) AS BIGINT) AS oov_ppm
-FROM scored GROUP BY fit_lang, eval_lang
-"""
-
-
-@query("text_crosslingual_vocab_transfer", oracle=_vocab_transfer_oracle())
-def text_crosslingual_vocab_transfer(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Tokenizer-transfer matrix: for every (fit language, eval language)
-    pair, the fertility and OOV rate of eval-language text under a
-    top-TRANSFER_V (256) vocabulary fit ONLY on the fit language — the
-    |langs|² audit behind "can these languages share a tokenizer?"
-    (diagonal = each language under its own vocabulary; a row with flat
-    off-diagonal fertility shares surface vocabulary with everything, a
-    column that spikes under every foreign fit needs its own budget —
-    `text_subword_fertility`'s question, asked across language pairs).
-
-    Engine-exact: per-language vocabularies are deterministic top-V
-    (count desc, word asc, row_number PARTITIONED by language — a
-    vocabulary-sized window, never corpus-sized); OOV fallback and all
-    ratios are the fertility family's integer forms.  Scale: one token
-    pass, a |langs|-bounded grid explode (|langs|× the token stream),
-    one vocab-keyed join; no corpus window, no unbounded broadcast —
-    the vocab join is w-keyed (vocab-bounded shuffle, the text-family
-    posture)."""
-    tok = _tokens(spark, sf_dir).select("lang", "w", "chars")
-    cnt = tok.groupBy("lang", "w").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    w = Window.partitionBy("lang").orderBy(F.desc("c"), F.asc("w"))
-    vocab = (
-        cnt.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= TRANSFER_V)
-        .select(F.col("lang").alias("fit_lang"), "w", F.lit(1).alias("iv"))
-    )
-    # |langs|-bounded collect (model-sized, the UniMax policy) → literal grid
-    langs = sorted(
-        r["lang"]
-        for r in load_table(spark, sf_dir, "documents")
-        .select("lang")
-        .distinct()
-        .collect()
-    )
-    grid = spark.range(1).select(
-        F.explode(F.array(*[F.lit(x) for x in langs])).alias("fit_lang")
-    )
-    scored = (
-        tok.crossJoin(F.broadcast(grid))
-        .join(vocab, ["fit_lang", "w"], "left")
-        .select(
-            "fit_lang",
-            F.col("lang").alias("eval_lang"),
-            F.when(F.col("iv").isNotNull(), F.lit(1))
-            .otherwise(
-                F.expr(f"(chars + {SUBWORD_LEN - 1}) div {SUBWORD_LEN}")
-            )
-            .cast("long")
-            .alias("toks"),
-            F.when(F.col("iv").isNull(), 1).otherwise(0).alias("oov"),
-        )
-    )
-    return scored.groupBy("fit_lang", "eval_lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_words"),
-        F.sum("toks").cast("long").alias("n_tokens"),
-        F.expr(f"(sum(toks) * {_MICRO}) div count(*)")
-        .cast("long")
-        .alias("fertility_micro"),
-        F.expr(f"(sum(oov) * {_MICRO}) div count(*)")
-        .cast("long")
-        .alias("oov_ppm"),
     )

@@ -1,13 +1,12 @@
 """Round-8 operator wave: regression trends, skyline, link prediction,
-lexical profiling, shard balancing, ABC classes, and a recursive-CTE
-forecaster.
+shard balancing, ABC classes, and a recursive-CTE forecaster.
 
 The reference is a table generator with no analytics surface
 (`IcebergTableGenerator.java` writes rows; it never reads them back) —
 these operators extend SURVEY.md §2.7/§2.8 with the query shapes a
 training-data/BI consumer of those tables runs: per-group OLS trend
 fits, Pareto-optimal (skyline) selection, neighborhood-overlap link
-prediction, hapax/vocabulary profiling, deterministic shard-balance
+prediction, deterministic shard-balance
 audits for distributed training, and Holt's linear-trend smoothing
 executed as the SAME recursive SQL on Spark 4's recursive CTEs and
 DuckDB.
@@ -23,9 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
-from iceberg_table_generator_spark.functions.cache import persist_tracked
-from iceberg_table_generator_spark.operators.dedup import _md5_60, _sql_md5_60
 from iceberg_table_generator_spark.functions.json import props_k
+from iceberg_table_generator_spark.functions.text import md5_60, md5_60_sql
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table, spread
 
@@ -292,58 +290,13 @@ def events_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Hapax legomena profile per source (lexical richness)
-# --------------------------------------------------------------------------
-_HAPAX_ORACLE = """
-WITH tok AS (
-  SELECT source, unnest(string_split(lower(text), ' ')) AS w
-  FROM documents),
-wc AS (
-  SELECT source, w, CAST(count(*) AS BIGINT) AS c
-  FROM tok GROUP BY source, w)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_types,
-       CAST(sum(c) AS BIGINT) AS n_tokens,
-       CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
-       round(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) * 1.0 / count(*), 6)
-         AS hapax_ratio
-FROM wc GROUP BY source
-"""
-
-
-@query("text_hapax_ratio", oracle=_HAPAX_ORACLE)
-def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source hapax legomena profile: vocabulary size, token count,
-    and the share of types occurring exactly once — the lexical-richness
-    signal (a source whose hapax ratio collapses is template/boilerplate
-    text; one where it explodes is OCR noise or ID spam).  Complements
-    `text_vocab_growth` (Heaps curve over time) with the per-source
-    cross-section.
-
-    Scale: one (source, token)-keyed count — partial aggregation folds
-    Zipf-hot tokens map-side — then a source-keyed fold over the
-    vocabulary relation.  Pure integers, one final division."""
-    tok = load_table(spark, sf_dir, "documents").select(
-        "source", F.explode(F.split(F.lower("text"), " ")).alias("w")
-    )
-    wc = tok.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c"))
-    hapax = F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
-    return wc.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_types"),
-        F.sum("c").alias("n_tokens"),
-        hapax.alias("n_hapax"),
-        F.round(hapax * 1.0 / F.count(F.lit(1)), 6).alias("hapax_ratio"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Training-shard balance audit (deterministic hash sharding)
 # --------------------------------------------------------------------------
 N_SHARDS = 32
 
 _SHARD_ORACLE = f"""
 WITH d AS (
-  SELECT {_sql_md5_60("CAST(doc_id AS VARCHAR)")} % {N_SHARDS} AS shard,
+  SELECT {md5_60_sql("CAST(doc_id AS VARCHAR)")} % {N_SHARDS} AS shard,
          CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
   FROM documents),
 per AS (
@@ -373,7 +326,7 @@ def pipeline_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicts the REAL assignment.  Scale: one narrow projection, one
     {N_SHARDS}-key aggregate, one broadcast scalar total."""
     d = load_table(spark, sf_dir, "documents").select(
-        (_md5_60(F.col("doc_id").cast("string")) % N_SHARDS).alias("shard"),
+        (md5_60(F.col("doc_id").cast("string")) % N_SHARDS).alias("shard"),
         F.size(F.split("text", " ")).cast("long").alias("n_tok"),
     )
     per = d.groupBy("shard").agg(

@@ -14,7 +14,7 @@ whole-distribution inequality measures over the largest fact table.
 Exactness policy (the repo convention): every cross-row accumulation is
 integer or DECIMAL (order-free); doubles appear only in a final
 fixed-order chain per row, rounded once.  Span identity is the
-engine-independent 60-bit md5 prefix (`dedup._md5_60`) on BOTH engines,
+engine-independent 60-bit md5 prefix (`md5_60`) on BOTH engines,
 so even a hash collision produces identical output on both sides.
 """
 
@@ -28,7 +28,7 @@ from iceberg_table_generator_spark.functions.order import (
     ntile_expr,
     with_global_order,
 )
-from iceberg_table_generator_spark.operators.dedup import _md5_60, _sql_md5_60
+from iceberg_table_generator_spark.functions.text import md5_60, md5_60_sql
 from iceberg_table_generator_spark.operators.tpch_ext import SQL_REV_DEC, rev_dec
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table, spread
@@ -72,7 +72,7 @@ def _span_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id",
         (F.col("pos0") + 1).alias("pos"),
-        _md5_60(F.col("span")).alias("h"),
+        md5_60(F.col("span")).alias("h"),
     )
 
 
@@ -95,7 +95,7 @@ def _span_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_span_groups() -> str:
-    h = _sql_md5_60(
+    h = md5_60_sql(
         f"array_to_string(list_slice(tk, i.i, i.i + {SPAN_K} - 1), ' ')"
     )
     return f"""
@@ -549,7 +549,7 @@ def events_session_depth_funnel(
 # --------------------------------------------------------------------------
 _CLUSTER_SIZE_ORACLE = f"""
 WITH c AS (
-  SELECT {_sql_md5_60('text')} AS h, CAST(count(*) AS BIGINT) AS s
+  SELECT {md5_60_sql('text')} AS h, CAST(count(*) AS BIGINT) AS s
   FROM documents GROUP BY h),
 tot AS (SELECT CAST(count(*) AS BIGINT) AS t FROM documents)
 SELECT s AS cluster_size,
@@ -578,7 +578,7 @@ def pipeline_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast corpus total.  The shuffle carries digests, never text."""
     d = load_table(spark, sf_dir, "documents")
     tot = d.agg(F.count(F.lit(1)).alias("t"))
-    c = d.groupBy(_md5_60(F.col("text")).alias("h")).agg(
+    c = d.groupBy(md5_60(F.col("text")).alias("h")).agg(
         F.count(F.lit(1)).alias("s")
     )
     return (
@@ -791,127 +791,6 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Cross-source vocabulary overlap (pairwise Jaccard, join-free on shingles)
-# --------------------------------------------------------------------------
-_VOCAB_OVERLAP_ORACLE = """
-WITH ss AS (
-  SELECT DISTINCT source,
-         array_to_string(list_slice(string_split(lower(text), ' '),
-                                    i.i, i.i + 2), ' ') AS sh
-  FROM documents,
-       unnest(generate_series(1, len(string_split(text, ' ')) - 2)) AS i(i)),
-per AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n FROM ss GROUP BY source),
-sets AS (
-  SELECT sh, list_sort(list(source)) AS arr FROM ss GROUP BY sh),
-inter AS (
-  SELECT t1.a AS src_a, t2.b AS src_b, CAST(count(*) AS BIGINT) AS n_common
-  FROM sets, unnest(arr) AS t1(a), unnest(arr) AS t2(b)
-  WHERE t1.a < t2.b
-  GROUP BY 1, 2),
-grid AS (
-  SELECT pa.source AS src_a, pa.n AS n_a, pb.source AS src_b, pb.n AS n_b
-  FROM per pa JOIN per pb ON pa.source < pb.source)
-SELECT g.src_a, g.src_b, g.n_a, g.n_b,
-       COALESCE(i.n_common, 0) AS n_common,
-       round(COALESCE(i.n_common, 0) * 1.0
-             / (g.n_a + g.n_b - COALESCE(i.n_common, 0)), 6) AS jaccard
-FROM grid g LEFT JOIN inter i
-  ON g.src_a = i.src_a AND g.src_b = i.src_b
-"""
-
-
-@query("text_source_vocab_overlap", oracle=_VOCAB_OVERLAP_ORACLE)
-def text_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise 3-gram-vocabulary Jaccard between every pair of corpus
-    sources — the source-redundancy matrix a mixture designer reads
-    before weighting (two sources with ~1.0 overlap are the same scrape
-    twice; `pipeline_drift_monitor` compares metadata mixes, this
-    compares CONTENT).
-
-    Skew design: nothing ever joins on a shingle.  Per-shingle source
-    SETS are one groupBy (collect_set over the 20-source domain, so each
-    group's state is <= |sources|), pairs explode from each set in-row
-    (<= C(20,2) per shingle), and intersections aggregate onto the
-    190-row pair grid.  Unions come from per-source totals via
-    |A|+|B|-|A∩B| — no second pass.  The pair grid itself is built from
-    the 20-row per-source relation (AQE broadcasts it)."""
-    from iceberg_table_generator_spark.operators.dedup import shingles, tokenize
-    from iceberg_table_generator_spark.sources.tables import spread
-
-    # spread() (r14 §2.2 device, no-op once the scan has ≥ parallelism
-    # splits): the sf0.1 documents scan is ONE split, so without it the
-    # whole tokenize→shingle→explode pipeline — the dominant cost, ~3.5 s
-    # of the 5.5 s pin — runs on one core.
-    d = shingles(tokenize(spread(load_table(spark, sf_dir, "documents"))))
-    # r14: the r13 shape pre-distinct'd the exploded (source, shingle)
-    # stream (one corpus-wide shuffle), persisted it, then shuffled it
-    # AGAIN for the per-shingle groupBy — two shingle-keyed exchanges of
-    # the same corpus-sized relation.  collect_set is itself set-valued
-    # and partially aggregates map-side with ≤|sources| state per group,
-    # so the distinct pass bought nothing: one groupBy straight off the
-    # explode computes the identical source sets with ONE exchange, and
-    # the per-source distinct-shingle totals fall out of the persisted
-    # sets relation (explode + count ≡ the old distinct row count).
-    # r15 (§2.4, §5): the r14 shape persisted the corpus-sized per-shingle
-    # source-set relation and read it TWICE (once exploded per-source for
-    # the totals, once pair-exploded for the intersections).  Emitting the
-    # DIAGONAL struct (x, x) alongside the strict pairs folds both reads
-    # into ONE consumer: per-source totals are exactly the diagonal cells
-    # of the same ≤|sources|²-row aggregate (a shingle contains source x
-    # once, so count(x, x) ≡ the distinct-shingle total).  The corpus-sized
-    # persist disappears; only the tiny pair aggregate is persisted (read
-    # by the grid twice and the intersection attach once).
-    sets = (
-        d.select("source", F.explode("shingles").alias("sh"))
-        .groupBy("sh")
-        .agg(F.sort_array(F.collect_set("source")).alias("arr"))
-    )
-    pairs = sets.select(
-        F.explode(
-            F.expr(
-                """flatten(transform(arr, (x, i) ->
-                     transform(slice(arr, i + 1, size(arr)),
-                               y -> struct(x AS src_a, y AS src_b))))"""
-            )
-        ).alias("p")
-    ).select("p.src_a", "p.src_b")
-    agg = persist_tracked(
-        pairs.groupBy("src_a", "src_b").agg(
-            F.count(F.lit(1)).alias("n_common")
-        )
-    )
-    agg.count()  # eager-pin: read 3× (grid twice, intersections once)
-    per = agg.filter(F.col("src_a") == F.col("src_b")).select(
-        F.col("src_a").alias("source"), F.col("n_common").alias("n")
-    )
-    inter = agg.filter(F.col("src_a") < F.col("src_b"))
-    pa = per.select(F.col("source").alias("src_a"), F.col("n").alias("n_a"))
-    pb = per.select(F.col("source").alias("src_b"), F.col("n").alias("n_b"))
-    grid = pa.join(pb, pa.src_a < pb.src_b)
-    return (
-        grid.join(inter, ["src_a", "src_b"], "left")
-        .select(
-            "src_a",
-            "src_b",
-            "n_a",
-            "n_b",
-            F.coalesce("n_common", F.lit(0)).alias("n_common"),
-            F.round(
-                F.coalesce("n_common", F.lit(0))
-                * 1.0
-                / (
-                    F.col("n_a")
-                    + F.col("n_b")
-                    - F.coalesce("n_common", F.lit(0))
-                ),
-                6,
-            ).alias("jaccard"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # LSH bucket-balance profile (the ANN skew audit)
 # --------------------------------------------------------------------------
 def _lsh_bucket_oracle() -> str:
@@ -988,62 +867,6 @@ def similarity_lsh_bucket_profile(
             ).alias("collision_rate"),
         )
         .orderBy("tbl")
-    )
-
-
-# --------------------------------------------------------------------------
-# Type-token ratio by document-length bucket
-# --------------------------------------------------------------------------
-TTR_BUCKET_TOKENS = 10
-
-_TTR_ORACLE = f"""
-WITH d AS (
-  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-         CAST(len(list_distinct(string_split(lower(text), ' '))) AS BIGINT)
-           AS n_types
-  FROM documents)
-SELECT n_tokens // {TTR_BUCKET_TOKENS} AS length_bucket,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-       CAST(sum(n_types) AS BIGINT) AS total_types,
-       round(CAST(sum(n_types) AS DOUBLE) / CAST(sum(n_tokens) AS DOUBLE), 6)
-         AS ttr
-FROM d GROUP BY 1 ORDER BY length_bucket
-"""
-
-
-@query("text_ttr_by_length", oracle=_TTR_ORACLE)
-def text_ttr_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type-token ratio per document-length bucket — the lexical-diversity
-    curve controlled for length (raw TTR falls mechanically with doc
-    length, so comparing sources or filters on uncontrolled TTR is a
-    classic corpus-QA mistake; this is the length-stratified read that
-    makes `text_vocab_growth` actionable per document).
-
-    One narrow per-row pass (token and distinct-token counts are in-row
-    array ops, no explode), then a map-combinable aggregate onto the
-    ~10-bucket length domain; integer sums, one rounded division."""
-    d = load_table(spark, sf_dir, "documents").select(
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
-        F.size(F.array_distinct(F.split(F.lower(F.col("text")), " ")))
-        .cast("long")
-        .alias("n_types"),
-    )
-    return (
-        d.groupBy(
-            F.expr(f"n_tokens div {TTR_BUCKET_TOKENS}").alias("length_bucket")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.sum("n_types").alias("total_types"),
-            F.round(
-                F.sum("n_types").cast("double")
-                / F.sum("n_tokens").cast("double"),
-                6,
-            ).alias("ttr"),
-        )
-        .orderBy("length_bucket")
     )
 
 
@@ -1292,7 +1115,7 @@ def part_size_price_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _TOKEN_SAVINGS_ORACLE = f"""
 WITH cl AS (
-  SELECT {_sql_md5_60('text')} AS h,
+  SELECT {md5_60_sql('text')} AS h,
          CAST(count(*) AS BIGINT) AS s,
          CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS tok_sum,
          CAST(min(len(string_split(text, ' '))) AS BIGINT) AS tok_kept
@@ -1321,7 +1144,7 @@ def pipeline_dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     One digest-keyed map-combinable aggregate, then a one-row rollup;
     the shuffle carries digests + two integers, never text."""
     d = load_table(spark, sf_dir, "documents").select(
-        _md5_60(F.col("text")).alias("h"),
+        md5_60(F.col("text")).alias("h"),
         F.size(F.split("text", " ")).cast("long").alias("t"),
     )
     cl = d.groupBy("h").agg(
@@ -1448,98 +1271,6 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n AS n_pairs",
         "CAST(w2 AS BIGINT) AS w_plus_x2",
         f"{z_text} AS z",
-    )
-
-
-# --------------------------------------------------------------------------
-# Pairwise source unigram total-variation distance (content drift matrix)
-# --------------------------------------------------------------------------
-_UNIGRAM_TV_ORACLE = """
-WITH cells AS (
-  SELECT source, w.w AS word, CAST(count(*) AS BIGINT) AS c
-  FROM documents, unnest(string_split(lower(text), ' ')) AS w(w)
-  GROUP BY 1, 2),
-per AS (
-  SELECT source, CAST(sum(c) AS BIGINT) AS n FROM cells GROUP BY source),
-words AS (SELECT DISTINCT word FROM cells),
-grid AS (
-  SELECT pa.source AS src_a, pa.n AS n_a, pb.source AS src_b, pb.n AS n_b
-  FROM per pa JOIN per pb ON pa.source < pb.source),
-terms AS (
-  SELECT g.src_a, g.src_b, g.n_a, g.n_b,
-         abs(CAST(COALESCE(ca.c, 0) AS HUGEINT) * g.n_b
-             - CAST(COALESCE(cb.c, 0) AS HUGEINT) * g.n_a) AS term
-  FROM grid g CROSS JOIN words w
-  LEFT JOIN cells ca ON ca.source = g.src_a AND ca.word = w.word
-  LEFT JOIN cells cb ON cb.source = g.src_b AND cb.word = w.word)
-SELECT src_a, src_b, n_a AS tokens_a, n_b AS tokens_b,
-       round(CAST(sum(term) AS DOUBLE)
-             / (2.0 * CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)), 6)
-         AS tv_distance
-FROM terms GROUP BY src_a, src_b, n_a, n_b
-"""
-
-
-@query("text_source_unigram_tv", oracle=_UNIGRAM_TV_ORACLE)
-def text_source_unigram_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise total-variation distance between source unigram
-    distributions — the CONTENT-drift matrix (`pipeline_drift_monitor`
-    compares each source's metadata mix to the corpus;
-    `text_source_vocab_overlap` compares vocabularies as sets; this
-    compares the actual word-frequency distributions pair by pair, the
-    strongest same-scrape-twice signal).  TV chosen over KL/JS
-    deliberately: it is rational, so the matrix is exactly
-    cross-engine reproducible.
-
-    Exactness: |p−q| terms are cleared to integers by cross-multiplying
-    the token totals (|c_a·n_b − c_b·n_a|, 128-bit), summed exactly,
-    divided once.  Scale: word cells aggregate map-side; the per-word
-    count MAP (≤ |sources| entries) meets the 190-row source-pair grid
-    in one vocabulary×pairs pass — no per-pair corpus scan, and the
-    only join key is the bounded source domain."""
-    d = load_table(spark, sf_dir, "documents")
-    cells = (
-        d.select(
-            "source",
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("word"),
-        )
-        .groupBy("source", "word")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    cells = persist_tracked(cells)
-    per = cells.groupBy("source").agg(F.sum("c").alias("n"))
-    wmap = cells.groupBy("word").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("source", "c"))
-        ).alias("m")
-    )
-    pa = per.select(F.col("source").alias("src_a"), F.col("n").alias("n_a"))
-    pb = per.select(F.col("source").alias("src_b"), F.col("n").alias("n_b"))
-    grid = pa.join(pb, pa.src_a < pb.src_b)
-    terms = wmap.crossJoin(grid).select(
-        "src_a",
-        "src_b",
-        "n_a",
-        "n_b",
-        F.abs(
-            F.coalesce(F.element_at("m", F.col("src_a")), F.lit(0)).cast(D38)
-            * F.col("n_b")
-            - F.coalesce(F.element_at("m", F.col("src_b")), F.lit(0)).cast(D38)
-            * F.col("n_a")
-        ).alias("term"),
-    )
-    return terms.groupBy("src_a", "src_b", "n_a", "n_b").agg(
-        F.round(
-            F.sum("term").cast("double")
-            / (2.0 * F.col("n_a").cast("double") * F.col("n_b").cast("double")),
-            6,
-        ).alias("tv_distance")
-    ).select(
-        "src_a",
-        "src_b",
-        F.col("n_a").alias("tokens_a"),
-        F.col("n_b").alias("tokens_b"),
-        "tv_distance",
     )
 
 
@@ -2071,7 +1802,7 @@ def similarity_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _DUP_BY_SOURCE_ORACLE = f"""
 WITH d AS (
-  SELECT doc_id, source, {_sql_md5_60('text')} AS h FROM documents),
+  SELECT doc_id, source, {md5_60_sql('text')} AS h FROM documents),
 cl AS (SELECT h, CAST(count(*) AS BIGINT) AS s FROM d GROUP BY h)
 SELECT d.source,
        CAST(count(*) AS BIGINT) AS n_docs,
@@ -2099,7 +1830,7 @@ def pipeline_dup_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     `dedup_keep_canonical` design note), and the rollup is onto the
     bounded source domain.  Only 16-byte digests shuffle, never text."""
     d = load_table(spark, sf_dir, "documents").select(
-        "source", _md5_60(F.col("text")).alias("h")
+        "source", md5_60(F.col("text")).alias("h")
     )
     d = persist_tracked(d)
     cl = d.groupBy("h").agg(F.count(F.lit(1)).alias("s"))

@@ -48,13 +48,6 @@ TABLE_SCHEMAS: dict[str, str] = {
 }
 TABLE_NAMES = tuple(TABLE_SCHEMAS)
 
-# Dimension tables small enough to broadcast at ANY scale factor: region is
-# always 5 rows, nation 25.  customer/supplier/part grow with SF and must not
-# be hinted broadcast unconditionally — AQE converts joins to broadcast at
-# runtime when the built side is under the threshold.
-ALWAYS_BROADCAST = ("region", "nation")
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
@@ -68,16 +61,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ensure_session_confs(spark)
     return spark.read.schema(TABLE_SCHEMAS[name]).parquet(table_path(sf_dir, name))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every testdata table and register temp views (for spark.sql)."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLE_NAMES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 def spread(df: DataFrame) -> DataFrame:

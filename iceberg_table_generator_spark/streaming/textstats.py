@@ -37,13 +37,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from iceberg_table_generator_spark.functions.text import tokens
 from iceberg_table_generator_spark.streaming.store import BATCH_COL, write_batch
 
 
 def _batch_deltas(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(per-term df delta, 1-row corpus scalar delta) for a micro-batch."""
     tok = batch_df.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w")
+        "doc_id", F.explode(tokens()).alias("w")
     )
     df_delta = (
         tok.select("doc_id", "w")

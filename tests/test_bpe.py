@@ -1,4 +1,4 @@
-"""Engine-exact BPE merge fit (wave20, r13 verdict #3).
+"""Engine-exact BPE merge fit (operators/text.py, r13 verdict #3).
 
 The oracle pairing proves Spark-fit ≡ DuckDB-refit; these tests pin the
 Python fit primitives' semantics (the greedy-application contract the
@@ -8,8 +8,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from iceberg_table_generator_spark.operators import wave20
-from iceberg_table_generator_spark.operators.wave20 import (
+from iceberg_table_generator_spark.operators import text
+from iceberg_table_generator_spark.operators.text import (
     BPE_MERGES,
     _apply_merge,
     bpe_fit,
@@ -30,13 +30,13 @@ def test_apply_merge_greedy_left_to_right():
 
 
 def test_fit_is_deterministic_and_cached(spark, sf_small):
-    wave20._BPE_CACHE.clear()
+    text._BPE_CACHE.clear()
     first = bpe_fit(spark, sf_small)
     assert len(first) == BPE_MERGES
-    assert sf_small in wave20._BPE_CACHE
+    assert sf_small in text._BPE_CACHE
     again = bpe_fit(spark, sf_small)  # cache hit: same object
     assert again is first
-    wave20._BPE_CACHE.clear()
+    text._BPE_CACHE.clear()
     refit = bpe_fit(spark, sf_small)  # full refit: same values
     assert refit == first
     # weights are positive ints; pairs are non-empty symbol strings
@@ -54,7 +54,7 @@ def test_merge_utilization_consistent_with_fertility(spark, sf_small):
     symbols must equal the fertility matrix's corpus-wide bpe_tokens
     (both are the same final segmentation, counted two ways), and no
     merge can account for more symbols than the total."""
-    from iceberg_table_generator_spark.operators.wave20 import (
+    from iceberg_table_generator_spark.operators.text import (
         text_bpe_merge_utilization,
     )
 

@@ -91,7 +91,7 @@ def test_memo_second_hit_pins(spark, sf_small):
 
 def test_memo_eager_flag_pins_first_hit(spark, sf_small):
     """eager=True is the escape hatch for a caller that fans the frame
-    into multiple branches of its OWN first job (`_ranking_quality`'s
+    into multiple branches of its OWN first job (`ranking_quality`'s
     two gold reads)."""
     calls: list[int] = []
     key = (spark.sparkContext.applicationId, sf_small, "memo-eager-test")

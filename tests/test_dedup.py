@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from iceberg_table_generator_spark.functions.text import shingles, tokens
 from iceberg_table_generator_spark.operators import dedup
 from iceberg_table_generator_spark.sources.tables import load_table
 
@@ -33,7 +34,7 @@ def test_minhash_no_false_positives(spark, sf_medium):
 def test_simhash_identical_docs_distance_zero(spark, sf_small):
     d = load_table(spark, sf_small, "documents").limit(50)
     dup = d.withColumn("doc_id", F.col("doc_id") + 100000)
-    fp = dedup.simhash(dedup.tokenize(d.union(dup)))
+    fp = dedup.simhash(d.union(dup).withColumn("tokens", tokens()))
     joined = (
         fp.alias("a")
         .join(fp.alias("b"), F.col("a.doc_id") + 100000 == F.col("b.doc_id"))
@@ -64,7 +65,9 @@ def test_shingles_short_documents(spark):
     )
     got = {
         r.doc_id: r.shingles
-        for r in dedup.shingles(dedup.tokenize(df)).collect()
+        for r in df.withColumn("tokens", tokens())
+        .withColumn("shingles", shingles("tokens", 3))
+        .collect()
     }
     assert got[1] == []
     assert got[2] == []

@@ -19,7 +19,7 @@ import pytest
 import duckdb
 import pyspark.sql.functions as F
 
-from iceberg_table_generator_spark.operators.dedup import _md5_60
+from iceberg_table_generator_spark.functions.text import md5_60
 
 ADVERSARIAL = [
     "",
@@ -48,7 +48,7 @@ def test_md5_60_spark_duckdb_parity(spark):
     corpus = ADVERSARIAL + _random_corpus()
     sdf = spark.createDataFrame([(i, s) for i, s in enumerate(corpus)], "i int, s string")
     spark_vals = {
-        r["i"]: r["h"] for r in sdf.select("i", _md5_60(F.col("s")).alias("h")).collect()
+        r["i"]: r["h"] for r in sdf.select("i", md5_60(F.col("s")).alias("h")).collect()
     }
     con = duckdb.connect()
     con.execute("CREATE TABLE t(i INT, s VARCHAR)")

@@ -4,7 +4,7 @@ properties the docstrings claim)."""
 
 from __future__ import annotations
 
-from iceberg_table_generator_spark.operators import wave9
+from iceberg_table_generator_spark.operators import text, wave9
 from iceberg_table_generator_spark.plans import explain
 
 
@@ -89,7 +89,7 @@ def test_unigram_tv_never_sort_merges(spark, sf_small):
     """The TV matrix meets the pair grid through broadcast/nested-loop
     forms over the bounded source domain — a SortMergeJoin would mean a
     corpus-sized relation reached a join it shouldn't."""
-    df = wave9.text_source_unigram_tv(spark, sf_small)
+    df = text.text_source_unigram_tv(spark, sf_small)
     kinds = explain.join_kinds(df)
     assert kinds["SortMergeJoin"] == 0, kinds
 

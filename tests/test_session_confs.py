@@ -15,7 +15,7 @@ import re
 
 import pyspark.sql.functions as F
 
-from iceberg_table_generator_spark.operators.dedup import shingles, tokenize
+from iceberg_table_generator_spark.functions.text import shingles, tokens
 from iceberg_table_generator_spark.plans import explain
 from iceberg_table_generator_spark.session import (
     RUNTIME_SQL_CONFS,
@@ -30,7 +30,11 @@ INFERRED_SIZE_FILTER = re.compile(r"\bFilter .*\bsize\(.*\) > 0\)")
 
 
 def _shingle_explode_plan(docs) -> str:
-    df = shingles(tokenize(docs)).select("doc_id", F.explode("shingles").alias("sh"))
+    df = (
+        docs.withColumn("tokens", tokens())
+        .withColumn("shingles", shingles("tokens", 3))
+        .select("doc_id", F.explode("shingles").alias("sh"))
+    )
     return explain.plan_text(df, mode="simple")
 
 

@@ -1,10 +1,10 @@
-"""Property tests for the subword tokenizer-fertility family (wave19)."""
+"""Property tests for the subword tokenizer-fertility family (operators/text.py)."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from iceberg_table_generator_spark.operators.wave19 import (
+from iceberg_table_generator_spark.operators.text import (
     FERTILITY_V,
     VOCAB_SWEEP,
     text_subword_fertility,
@@ -67,7 +67,7 @@ def test_ccnet_buckets_are_exact_terciles(spark, sf_small):
     """Per language: bucket doc counts differ by ≤ 1 (exact terciles) and
     mean logloss is ordered head ≤ middle ≤ tail (the rank cut IS the
     quality order)."""
-    from iceberg_table_generator_spark.operators.wave19 import (
+    from iceberg_table_generator_spark.operators.text import (
         text_ccnet_perplexity_buckets,
     )
 
@@ -115,8 +115,8 @@ def test_filter_agreement_marginals(spark, sf_small):
     from iceberg_table_generator_spark.operators.wave14 import (
         gopher_rule_flags,
     )
+    from iceberg_table_generator_spark.operators.text import ccnet_doc_buckets
     from iceberg_table_generator_spark.operators.wave19 import (
-        ccnet_doc_buckets,
         pipeline_quality_filter_agreement,
     )
     from iceberg_table_generator_spark.sources.tables import load_table
@@ -146,7 +146,7 @@ def test_vocab_transfer_diagonal_dominates(spark, sf_small):
     """A language is never tokenized better by a FOREIGN vocabulary than
     by its own: for each eval language, the diagonal cell has the
     minimum OOV rate (ties allowed — shared surface vocabulary)."""
-    from iceberg_table_generator_spark.operators.wave19 import (
+    from iceberg_table_generator_spark.operators.text import (
         text_crosslingual_vocab_transfer,
     )
 

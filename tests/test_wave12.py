@@ -14,7 +14,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from iceberg_table_generator_spark.functions.cache import release_tracked
-from iceberg_table_generator_spark.operators import wave12
+from iceberg_table_generator_spark.operators import text, wave12
 
 
 @pytest.fixture(autouse=True)
@@ -46,7 +46,7 @@ def test_dsir_lambda_rounding_margin(spark, sf_fixture, request):
 @pytest.mark.parametrize("sf_fixture", ["sf_small", "sf_medium"])
 def test_unigram_lnp_rounding_margin(spark, sf_fixture, request):
     sf_dir = request.getfixturevalue(sf_fixture)
-    lnp, _ = wave12.unigram_lnp_terms(spark, sf_dir)
+    lnp, _ = text.unigram_lnp_terms(spark, sf_dir)
     scaled = F.col("raw_lnp") * 1e6
     min_dist = (
         lnp.select(F.abs(scaled - F.floor(scaled) - 0.5).alias("d"))
@@ -205,7 +205,7 @@ def test_keyness_rounding_margin(spark, sf_fixture, request):
     """G² keyness ranks identically-rounded micro integers; the ln-ulp
     absorption needs every raw G²·10⁶ clear of its rounding boundary."""
     sf_dir = request.getfixturevalue(sf_fixture)
-    scored = wave12.keyness_scored_terms(spark, sf_dir)
+    scored = text.keyness_scored_terms(spark, sf_dir)
     scaled = F.col("raw_g2") * 1e6
     min_dist = (
         scored.select(F.abs(scaled - F.floor(scaled) - 0.5).alias("d"))
@@ -216,7 +216,7 @@ def test_keyness_rounding_margin(spark, sf_fixture, request):
 
 
 def test_readability_bounds_and_consistency(spark, sf_small):
-    rows = wave12.text_readability_profile(spark, sf_small).collect()
+    rows = text.text_readability_profile(spark, sf_small).collect()
     assert rows
     for r in rows:
         assert r.min_flesch_micro <= r.avg_flesch_micro <= r.max_flesch_micro
@@ -250,7 +250,7 @@ def test_hellinger_properties(spark, sf_small):
     """Metric sanity: distances in [0,1]; identical-source distance isn't
     produced (grid is strict upper triangle); pairs across languages are
     farther apart on average than the matrix minimum."""
-    rows = wave12.text_source_hellinger(spark, sf_small).collect()
+    rows = text.text_source_hellinger(spark, sf_small).collect()
     n_sources = len({r.src_a for r in rows} | {r.src_b for r in rows})
     assert len(rows) == n_sources * (n_sources - 1) // 2
     for r in rows:
@@ -260,12 +260,12 @@ def test_hellinger_properties(spark, sf_small):
 
 
 def test_distinctive_terms_shape(spark, sf_small):
-    rows = wave12.text_distinctive_terms(spark, sf_small).collect()
+    rows = text.text_distinctive_terms(spark, sf_small).collect()
     by_src: dict[str, list] = {}
     for r in rows:
         by_src.setdefault(r.source, []).append(r)
     for src, rs in by_src.items():
-        assert len(rs) <= wave12.KEYNESS_TOP_K
+        assert len(rs) <= text.KEYNESS_TOP_K
         assert sorted(r.rank for r in rs) == list(range(1, len(rs) + 1))
         scores = [r.g2_micro for r in sorted(rs, key=lambda r: r.rank)]
         assert scores == sorted(scores, reverse=True)
@@ -301,7 +301,7 @@ def test_drawdown_invariants(spark, sf_small):
 def test_char_entropy_bounds(spark, sf_small):
     import math
 
-    rows = wave12.text_char_entropy_profile(spark, sf_small).collect()
+    rows = text.text_char_entropy_profile(spark, sf_small).collect()
     assert rows
     for r in rows:
         assert r.n_distinct_chars >= 2
@@ -318,12 +318,12 @@ def test_bigram_beats_unigram_on_structure(spark, sf_small):
     can't hurt add-one-smoothed fit here; both are micro-integers)."""
     uni = {
         r.source: r.avg_logloss_micro
-        for r in wave12.text_unigram_logloss(spark, sf_small).collect()
+        for r in text.text_unigram_logloss(spark, sf_small).collect()
     }
     release_tracked()
     bi = {
         r.source: r.avg_logloss_micro
-        for r in wave12.text_bigram_logloss(spark, sf_small).collect()
+        for r in text.text_bigram_logloss(spark, sf_small).collect()
     }
     assert set(uni) == set(bi)
     # corpus-level: mean over sources

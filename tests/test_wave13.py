@@ -8,7 +8,7 @@ import math
 import pyspark.sql.functions as F
 
 from iceberg_table_generator_spark.functions.cache import release_tracked
-from iceberg_table_generator_spark.operators import wave13
+from iceberg_table_generator_spark.operators import text, wave13
 from iceberg_table_generator_spark.operators.wave11 import (
     _semdedup_dropped,
     _semdedup_relation,
@@ -55,7 +55,7 @@ def test_ranking_quality_of_exact_vs_itself_is_perfect(spark, sf_small):
         "item",
         F.col("r").alias("s"),
     )
-    rows = wave13._ranking_quality(
+    rows = wave13.ranking_quality(
         self_ann, exact, TOP_K, keys=["method"]
     ).collect()
     assert rows
@@ -80,7 +80,7 @@ def test_ann_ndcg_eval_bounds_and_methods(spark, sf_small):
 
 
 def test_bm25_ndcg_eval_bounds(spark, sf_small):
-    rows = wave13.text_bm25_ndcg_eval(spark, sf_small).collect()
+    rows = text.text_bm25_ndcg_eval(spark, sf_small).collect()
     assert rows
     for r in rows:
         assert r.method == "tf"

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from iceberg_table_generator_spark.functions.cache import release_tracked
-from iceberg_table_generator_spark.operators import wave14
+from iceberg_table_generator_spark.operators import text, wave14
 from iceberg_table_generator_spark.sources.tables import load_table
 
 
@@ -102,7 +102,7 @@ def test_matryoshka_recall_monotone_in_dim(spark, sf_small):
 def test_mattr_bounds_and_window_exactness(spark, sf_small):
     """Cross-check the closed form against a brute-force per-window count
     on a handful of documents."""
-    rows = wave14.text_mattr_diversity(spark, sf_small).collect()
+    rows = text.text_mattr_diversity(spark, sf_small).collect()
     for r in rows:
         assert 0 < r.min_mattr_micro <= r.avg_mattr_micro <= r.max_mattr_micro
         assert r.max_mattr_micro <= 1_000_000
@@ -112,7 +112,7 @@ def test_mattr_bounds_and_window_exactness(spark, sf_small):
         .limit(40)
         .collect()
     )
-    W = wave14.MATTR_W
+    W = text.MATTR_W
     checked = 0
     for row in d:
         ws = row.ws
