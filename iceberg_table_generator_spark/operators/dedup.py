@@ -492,8 +492,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     from iceberg_table_generator_spark.operators.similarity import (
-        _d2_structs,
-        _dot,
+        d2_structs,
+        dot,
         centroids_to_float,
         ivf_index,
         with_norm,
@@ -515,7 +515,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = centroids_to_float(ivf_index(emb, cache_key=sf_dir, k=EMB_DEDUP_K))
     # Assignment + angular radius in one narrow pass: nearest centroid by
     # squared distance, then angle(vec, centroid) from the same struct.
-    best = F.array_min(_d2_structs("vec", cents))
+    best = F.array_min(d2_structs("vec", cents))
     assigned = with_norm(emb).select(
         "vec_id",
         "vec",
@@ -585,7 +585,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm").alias("nb"),
         F.col("cluster_id").alias("cb"),
     )
-    sim = _dot("va", "vb") / (F.col("na") * F.col("nb"))
+    sim = dot("va", "vb") / (F.col("na") * F.col("nb"))
     return (
         a.join(F.broadcast(adm), "ca")
         .join(b, "cb")

@@ -514,3 +514,207 @@ def meta_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_added", F.lit(0)).cast("long").alias("n_added"),
         )
     )
+
+
+# --------------------------------------------------------------------------
+# ExpireSnapshots dry-run plan over the metadata fixture
+# --------------------------------------------------------------------------
+# The table-maintenance counterpart of the reference's snapshot-per-commit
+# cadence (`IcebergTableGenerator.java:367-379` accumulates snapshots;
+# Iceberg's `ExpireSnapshots` is how they are ever reclaimed): which
+# snapshots a retain-last-N policy expires and which file entries become
+# removable because NO retained snapshot references them — the dry run a
+# steward reads before an irreversible expiry.  Pure set algebra over the
+# metadata log (both engines read the same JSON).
+#: Retain-last-N policy evaluated by the plan (Iceberg's
+#: `expire_snapshots(retain_last => N)`).
+EXPIRE_RETAIN_LAST = 2
+
+
+def _expire_plan_oracle() -> str:
+    return f"""
+WITH m AS (SELECT * FROM read_json('{_META_JSON}', format='array')),
+snaps AS (SELECT CAST(snapshot_id AS INT) AS snapshot_id FROM m),
+cut AS (
+  SELECT snapshot_id AS min_retained FROM snaps
+  ORDER BY snapshot_id DESC LIMIT 1 OFFSET {EXPIRE_RETAIN_LAST - 1}),
+entries AS (
+  SELECT CAST(snapshot_id AS INT) AS snapshot_id, 'data' AS content,
+         CAST(e[1]->>'$' AS VARCHAR) AS file_path
+  FROM (SELECT snapshot_id, unnest(data_files) AS e FROM m)
+  UNION ALL
+  SELECT CAST(snapshot_id AS INT) AS snapshot_id,
+         CAST(e[3]->>'$' AS VARCHAR) AS content,
+         CAST(e[1]->>'$' AS VARCHAR) AS file_path
+  FROM (SELECT snapshot_id, unnest(delete_files) AS e FROM m)),
+tagged AS (
+  SELECT e.*, CASE WHEN e.snapshot_id >= c.min_retained THEN 1 ELSE 0 END
+           AS retained
+  FROM entries e CROSS JOIN cut c)
+SELECT file_path, content,
+       CAST(sum(1 - retained) AS BIGINT) AS n_expired_refs,
+       CAST(sum(retained) AS BIGINT) AS n_retained_refs,
+       CAST(CASE WHEN sum(retained) = 0 THEN 1 ELSE 0 END AS INT)
+         AS removable
+FROM tagged GROUP BY file_path, content
+"""
+
+
+@query("meta_expire_snapshots_plan", oracle=_expire_plan_oracle())
+def meta_expire_snapshots_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ExpireSnapshots dry run (retain_last = {EXPIRE_RETAIN_LAST}): for
+    every file entry in the metadata fixture's snapshot log, how many
+    EXPIRED vs RETAINED snapshots reference it, and whether expiry may
+    physically remove it (removable ⟺ zero retained references) — the
+    plan Iceberg's `expire_snapshots` computes before deleting anything,
+    and the reason expiry is safe-by-construction: a file ever referenced
+    by a retained snapshot survives.  Completes the lifecycle surface
+    next to compaction/rollback/branching (the reference accumulates one
+    snapshot per commit, `IcebergTableGenerator.java:367-379`; expiry is
+    how a real table reclaims them).
+
+    Pure set algebra over the same deterministic metadata fixture the
+    other `meta_*` queries audit (both engines read the same JSON log);
+    output is file-set-bounded.  At scale this relation is manifest-
+    sized — metadata, never data."""
+
+    t = _fixture_table(spark, sf_dir)
+    files = t.all_files_table()
+    snaps = [
+        r.snapshot_id
+        for r in files.select("snapshot_id").distinct().collect()
+    ]
+    min_retained = sorted(snaps)[-EXPIRE_RETAIN_LAST]
+    tagged = files.select(
+        "file_path",
+        "content",
+        F.when(F.col("snapshot_id") >= min_retained, 1)
+        .otherwise(0)
+        .alias("retained"),
+    )
+    return tagged.groupBy("file_path", "content").agg(
+        F.sum(1 - F.col("retained")).cast("long").alias("n_expired_refs"),
+        F.sum("retained").cast("long").alias("n_retained_refs"),
+        F.when(F.sum("retained") == 0, 1).otherwise(0).cast("int").alias(
+            "removable"
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
+# Expire-snapshots retention sweep (retain_last grid)
+# --------------------------------------------------------------------------
+#: Retention policies swept (must each be ≤ the fixture's snapshot count).
+EXPIRE_SWEEP = (1, 2, 4)
+
+
+def _expire_sweep_oracle() -> str:
+    grid = ", ".join(f"({n})" for n in EXPIRE_SWEEP)
+    return f"""
+WITH m AS (SELECT * FROM read_json('{_META_JSON}', format='array')),
+g(retain_last) AS (VALUES {grid}),
+snaps AS (
+  SELECT CAST(snapshot_id AS INT) AS snapshot_id,
+         row_number() OVER (ORDER BY snapshot_id DESC) AS rdesc
+  FROM m),
+cut AS (
+  SELECT g.retain_last, s.snapshot_id AS min_retained
+  FROM g JOIN snaps s ON s.rdesc = g.retain_last),
+entries AS (
+  SELECT CAST(snapshot_id AS INT) AS snapshot_id, 'data' AS content,
+         CAST(e[1]->>'$' AS VARCHAR) AS file_path
+  FROM (SELECT snapshot_id, unnest(data_files) AS e FROM m)
+  UNION ALL
+  SELECT CAST(snapshot_id AS INT) AS snapshot_id,
+         CAST(e[3]->>'$' AS VARCHAR) AS content,
+         CAST(e[1]->>'$' AS VARCHAR) AS file_path
+  FROM (SELECT snapshot_id, unnest(delete_files) AS e FROM m)),
+per_file AS (
+  SELECT c.retain_last, e.file_path, e.content,
+         max(CASE WHEN e.snapshot_id >= c.min_retained THEN 1 ELSE 0 END)
+           AS retained
+  FROM entries e CROSS JOIN cut c
+  GROUP BY c.retain_last, e.file_path, e.content)
+SELECT CAST(retain_last AS INT) AS retain_last,
+       CAST(count(*) AS BIGINT) AS n_files,
+       CAST(sum(1 - retained) AS BIGINT) AS n_removable,
+       CAST(sum(CASE WHEN retained = 0 AND content = 'data'
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_removable_data,
+       CAST(sum(CASE WHEN retained = 0 AND content <> 'data'
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_removable_deletes
+FROM per_file GROUP BY retain_last
+"""
+
+
+@query("meta_expire_retention_sweep", oracle=_expire_sweep_oracle())
+def meta_expire_retention_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Retention-policy sweep over the ExpireSnapshots dry run: for each
+    retain_last ∈ EXPIRE_SWEEP (1/2/4), how many files (data vs delete) become
+    physically removable — the table-maintenance trade-off curve
+    (aggressive retention reclaims more files but shortens the
+    time-travel window) read before committing an expiry policy, the
+    lifecycle twin of the banding-plan / τ / vocabulary sweeps.
+
+    Grid-composes the registered `meta_expire_snapshots_plan` algebra:
+    the per-(policy, file) retained flag is the same set test, evaluated
+    once per grid cell on the metadata-sized entry relation (never
+    data).  The policy grid is a driver-literal; output is |grid| rows."""
+
+    t = _fixture_table(spark, sf_dir)
+    files = t.all_files_table()
+    # Rank over the SNAPSHOTS metadata relation — the same source as the
+    # oracle's `m` CTE (r13 advice): deriving the cut from distinct
+    # snapshot_ids in file entries would desynchronize the engines on a
+    # snapshot with zero file entries.  Snapshot-count-bounded collect
+    # (the expire plan's own idiom); the per-policy cut is a |grid|-row
+    # literal.
+    snaps = sorted(
+        r.snapshot_id
+        for r in t.snapshots_table().select("snapshot_id").collect()
+    )
+    if len(snaps) < max(EXPIRE_SWEEP):
+        raise ValueError(
+            f"retention sweep needs ≥{max(EXPIRE_SWEEP)} snapshots "
+            f"(retain_last grid {EXPIRE_SWEEP}); fixture has {len(snaps)}"
+        )
+    cuts = spark.range(1).select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(n).alias("retain_last"),
+                        F.lit(snaps[-n]).alias("min_retained"),
+                    )
+                    for n in EXPIRE_SWEEP
+                ]
+            )
+        ).alias("e")
+    ).select("e.retain_last", "e.min_retained")
+    per_file = (
+        files.crossJoin(F.broadcast(cuts))
+        .groupBy("retain_last", "file_path", "content")
+        .agg(
+            F.max(
+                F.when(F.col("snapshot_id") >= F.col("min_retained"), 1)
+                .otherwise(0)
+            ).alias("retained")
+        )
+    )
+    return per_file.groupBy("retain_last").agg(
+        F.count(F.lit(1)).cast("long").alias("n_files"),
+        F.sum(1 - F.col("retained")).cast("long").alias("n_removable"),
+        F.sum(
+            F.when(
+                (F.col("retained") == 0) & (F.col("content") == "data"), 1
+            ).otherwise(0)
+        )
+        .cast("long")
+        .alias("n_removable_data"),
+        F.sum(
+            F.when(
+                (F.col("retained") == 0) & (F.col("content") != "data"), 1
+            ).otherwise(0)
+        )
+        .cast("long")
+        .alias("n_removable_deletes"),
+    )

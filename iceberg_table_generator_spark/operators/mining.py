@@ -26,7 +26,7 @@ from iceberg_table_generator_spark.functions.order import (
     with_global_order,
 )
 from iceberg_table_generator_spark.functions.cache import persist_tracked
-from iceberg_table_generator_spark.operators.relational import davg, sql_davg
+from iceberg_table_generator_spark.operators.relational import D38, davg, sql_davg
 from iceberg_table_generator_spark.operators.tpch_ext import (
     DEC18,
     rev_dec,
@@ -2460,7 +2460,6 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     |distinct n_chars| relation — the corpus is touched once by the
     shared `_top2_lang_dist` groupBy."""
     dist = _top2_lang_dist(spark, sf_dir)
-    D38 = "decimal(38,0)"
     mom = dist.groupBy("lang_a", "lang_b").agg(
         F.sum("ca").cast("long").alias("n_a"),
         F.sum("cb").cast("long").alias("n_b"),
@@ -2792,7 +2791,6 @@ def supplier_herfindahl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s_nationkey", "l_suppkey")
         .agg((F.sum(rev_dec()) * 1000000).cast("long").alias("rev_micro"))
     )
-    D38 = "decimal(38,0)"
     nat = sup_rev.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n_suppliers"),
         F.sum("rev_micro").cast("long").alias("total_micro"),
@@ -3025,7 +3023,6 @@ def orders_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.crossJoin(F.broadcast(lags))
         .join(b, F.col("day_b") == F.col("day") + F.col("lag"))
     )
-    D38 = "decimal(38,0)"
     mom = pairs.groupBy("lag").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").cast("long").alias("sx"),
@@ -3106,7 +3103,6 @@ def lineitem_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_discount") * 100, 0).cast("long").alias("d"),
         F.col("l_quantity").cast("long").alias("q"),
     )
-    D38 = "decimal(38,0)"
     mom = pts.groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("d").cast("long").alias("sd"),
@@ -3212,7 +3208,6 @@ def stats_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rq2"),
         )
     )
-    D38 = "decimal(38,0)"
     mom = (
         joint.join(md, "d")
         .join(mq, "q")
@@ -3310,7 +3305,6 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     joint = pts.groupBy("d", "q").agg(F.count(F.lit(1)).alias("c")).transform(
         persist_tracked
     )
-    D38 = "decimal(38,0)"
     a = joint.select(
         F.col("d").alias("da"), F.col("q").alias("qa"), F.col("c").alias("ca")
     )
@@ -3646,7 +3640,6 @@ def part_dual_sourcing(spark: SparkSession, sf_dir: str) -> DataFrame:
     points.  Scale: two map-combinable groupBys, (part, supplier) then
     part — co-keyed shuffles, no joins, no windows."""
     li = load_table(spark, sf_dir, "lineitem")
-    D38 = "decimal(38,0)"
     unit = li.groupBy("l_partkey", "l_suppkey").agg(
         (
             (F.sum(F.col("l_extendedprice").cast("decimal(25,6)")) * 1000000)

@@ -39,6 +39,12 @@ from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table
 
 DEC = "decimal(25,6)"
+#: Integer-only DECIMAL for exact products and sums of scaled integers
+#: (squares, cross terms) that would overflow a BIGINT.
+D38 = "decimal(38,0)"
+#: Scaled-integer micro-fraction denominator: shares, ratios and recalls
+#: are reported as integer millionths (ppm) on both engines.
+MICRO = 1_000_000
 
 
 def dsum(col: Column | str, scale: int = 2) -> Column:

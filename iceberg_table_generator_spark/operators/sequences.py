@@ -31,7 +31,7 @@ from pyspark.sql.window import Window
 
 from iceberg_table_generator_spark.functions.cache import persist_tracked
 from iceberg_table_generator_spark.functions.sessions import SESSION_GAP_SECONDS
-from iceberg_table_generator_spark.operators.relational import davg, sql_davg
+from iceberg_table_generator_spark.operators.relational import D38, davg, sql_davg
 from iceberg_table_generator_spark.functions.json import props_k
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table
@@ -1715,7 +1715,6 @@ def events_nav_predictability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    D38 = "decimal(38,0)"
     per_src = t.groupBy("src").agg(
         F.sum("c").cast("long").alias("n_out"),
         F.count(F.lit(1)).alias("n_destinations"),

@@ -19,6 +19,15 @@ the raw parquet and replays the whole pipeline (see the engine-exact
 k-means block comment).  Recall is additionally asserted against the exact
 path in tests/test_similarity.py.
 
+Around the search paths sit the embedding-space audits (dimension
+variance, isotropy, pair-cosine histogram, norms, label centroids), the
+index audits (silhouette, purity, LSH bucket balance, PQ distortion,
+cluster outliers) and the ANN evaluation family: recall@k of every arm
+(IVF nprobe sweep, SQ8, BQ, BQ + rerank, IVF+PQ, Matryoshka) scored by
+one kernel (`recall_at_k`, DuckDB twin `RECALL_AT_K_SQL`), nDCG/MRR
+(`ranking_quality`, shared with the BM25 cascade in `text`), RRF fusion,
+and the compression frontier that summarizes the ladder.
+
 All vector math is JVM-side (`zip_with`/`aggregate` fold) — no Python in the
 hot path — with ONE deliberate exception: `similarity_cosine_topk_vectorized`
 demonstrates the Arrow-batched alternative (numpy int64 GEMM inside
@@ -30,6 +39,8 @@ the oracle compute on identical values in identical order.
 from __future__ import annotations
 
 import json
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
@@ -39,6 +50,7 @@ from iceberg_table_generator_spark.functions.cache import (
     persist_tracked,
 )
 from iceberg_table_generator_spark.functions.text import md5_60, md5_60_sql
+from iceberg_table_generator_spark.operators.relational import D38, MICRO
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table, spread
 
@@ -46,7 +58,7 @@ N_QUERIES = 20  # vec_id < 20 form the query set
 TOP_K = 5
 
 
-def _dot(a: str | Column, b: str | Column) -> Column:
+def dot(a: str | Column, b: str | Column) -> Column:
     """Sequential-fold dot product — same op order as the SQL oracle."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
@@ -70,7 +82,7 @@ def packed_model_col(data, schema: str) -> Column:
 
 def with_norm(df: DataFrame, vec_col: str = "vec") -> DataFrame:
     """Precompute the L2 norm once per vector (linear pass, no shuffle)."""
-    return df.withColumn("norm", F.sqrt(_dot(vec_col, vec_col)))
+    return df.withColumn("norm", F.sqrt(dot(vec_col, vec_col)))
 
 
 _COSINE_ORACLE = f"""
@@ -163,7 +175,7 @@ def _cosine_topk_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            (_dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim"),
+            (dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
@@ -221,7 +233,7 @@ def _bucket_array(vec_col: str | Column, dim: int) -> Column:
             F.zip_with(
                 tw,
                 bits,
-                lambda plane, bit: F.when(_dot(vec_col, plane) >= 0, bit).otherwise(
+                lambda plane, bit: F.when(dot(vec_col, plane) >= 0, bit).otherwise(
                     F.lit(0)
                 ),
             ),
@@ -235,7 +247,7 @@ def _bucket_array(vec_col: str | Column, dim: int) -> Column:
 # The hyperplanes are deterministic ±1 literals (splitmix mix of
 # (table, plane, dim)), so the oracle can inline the full plane matrix and
 # recompute the identical bucket signatures — DuckDB's list_sum folds dot
-# products in the same order as `_dot` (proven by the exact-cosine oracle),
+# products in the same order as `dot` (proven by the exact-cosine oracle),
 # so even the >=0 sign tests agree bit for bit and the ENTIRE approximate
 # pipeline (signatures → bucket join → exact rerank) is oracle-paired.
 #
@@ -323,7 +335,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            (_dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim"),
+            (dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim"),
         )
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("sim").alias("sim"))  # dedupe multi-table hits
@@ -382,7 +394,7 @@ def _centroid_structs(cents: Centroids) -> Column:
     return packed_model_col(data, "array<struct<cluster_id:int,centroid:array<double>>>")
 
 
-def _d2_structs(vec_col: str | Column, cents: Centroids) -> Column:
+def d2_structs(vec_col: str | Column, cents: Centroids) -> Column:
     """Per-row array<struct<d2, cluster_id>> — squared distance to every
     centroid, computed inside one expression (no join, no shuffle).  The
     field order (d2 first) is load-bearing: array_min/array_sort compare
@@ -437,7 +449,7 @@ KM_SCALE = 1_000_000  # DECIMAL(12,6) coordinates as scale-6 integers
 IntCentroids = list[tuple[int, list[int]]]  # [(cluster_id, scale-6 coords)]
 
 
-def _qint(vec_col: str | Column) -> Column:
+def qint(vec_col: str | Column) -> Column:
     """array<double> → array<bigint>: scale-6 integer coordinates via the
     cross-engine-exact DECIMAL(12,6) cast (DuckDB twin:
     ``CAST(CAST(x AS DECIMAL(12,6)) * 1000000 AS BIGINT)``)."""
@@ -465,11 +477,11 @@ def _centroid_structs_int(cents: IntCentroids) -> Column:
     )
 
 
-def _d2_structs_int(vec_col: str | Column, cents: IntCentroids) -> Column:
+def d2_structs_int(vec_col: str | Column, cents: IntCentroids) -> Column:
     """Per-row array<struct<d2:bigint, cluster_id:int>> against integer
-    centroids — same lexicographic argmin/sort contract as `_d2_structs`,
+    centroids — same lexicographic argmin/sort contract as `d2_structs`,
     but every comparison is exact integer math shared with the oracle.
-    The (typically `_qint`-derived) vector is let-bound so its 64
+    The (typically `qint`-derived) vector is let-bound so its 64
     DECIMAL(12,6) casts run once per row, not once per centroid
     (see `_let`)."""
     vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
@@ -506,7 +518,7 @@ def _km_train_rows(emb: DataFrame, cap: int = IVF_TRAIN_CAP) -> list[list[int]]:
         emb.select(
             md5_60(F.col("vec_id").cast("string")).alias("h"),
             "vec_id",
-            _qint("vec").alias("qv"),
+            qint("vec").alias("qv"),
         )
         .orderBy("h", "vec_id")
         .limit(cap)
@@ -592,14 +604,14 @@ def _assign(emb: DataFrame, cents: Centroids) -> DataFrame:
     sorted corpus×k rows per call — a full-corpus shuffle on a unique key,
     once per k-means iteration.  array_min over the per-centroid distance
     structs computes the same argmin inside whole-stage codegen.)"""
-    best = F.array_min(_d2_structs("vec", cents))
+    best = F.array_min(d2_structs("vec", cents))
     return emb.select("vec_id", "vec", best["cluster_id"].alias("cluster_id"))
 
 
-_VEC_DIM = 64  # embeddings table vector width (TESTDATA.md)
+VEC_DIM = 64  # embeddings table vector width (TESTDATA.md)
 
 
-def _sql_d2_int(a: str, b: str, dim: int) -> str:
+def sql_d2_int(a: str, b: str, dim: int) -> str:
     """DuckDB twin of `_sq_dist_int`: exact integer squared distance."""
     return (
         f"list_sum(list_transform(generate_series(1, {dim}), "
@@ -607,7 +619,7 @@ def _sql_d2_int(a: str, b: str, dim: int) -> str:
     )
 
 
-def _sql_km_setup() -> str:
+def sql_km_setup() -> str:
     """Shared oracle preamble: corpus as doubles + scale-6 ints + md5-60
     hash, and the deterministic training set (mirrors `_km_train_rows`)."""
 
@@ -631,7 +643,7 @@ _SQL_MEAN = (
 )
 
 
-def _sql_ivf_fit_ctes(k: int, iters: int, dim: int) -> str:
+def sql_ivf_fit_ctes(k: int, iters: int, dim: int) -> str:
     """Unrolled Lloyd's iterations as CTE blocks — DuckDB replays the
     integer fit exactly (see the engine-exact k-means block comment):
     a{n} = assignment (argmin by exact int d2, ties → smaller cid),
@@ -649,7 +661,7 @@ c0 AS (
 a{n} AS (
   SELECT t.vec_id, t.qv, c.cid,
          row_number() OVER (PARTITION BY t.vec_id
-             ORDER BY {_sql_d2_int('t.qv', 'c.cv', dim)}, c.cid) AS rn
+             ORDER BY {sql_d2_int('t.qv', 'c.cv', dim)}, c.cid) AS rn
   FROM train t CROSS JOIN c{p} c),
 u{n} AS (
   SELECT cid, g.i, qv[g.i] AS x
@@ -662,17 +674,17 @@ c{n} AS (
 
 
 def _ivf_oracle() -> str:
-    k, iters, dim = IVF_CLUSTERS, IVF_ITERS, _VEC_DIM
+    k, iters, dim = IVF_CLUSTERS, IVF_ITERS, VEC_DIM
     cf = f"c{iters}"
     dot = (
         f"list_sum(list_transform(generate_series(1, {dim}), "
         "i -> p.qvec[i]*cand.vec[i]))"
     )
-    return f"""{_sql_km_setup()}{_sql_ivf_fit_ctes(k, iters, dim)},
+    return f"""{sql_km_setup()}{sql_ivf_fit_ctes(k, iters, dim)},
 assignq AS (
   SELECT q0.vec_id, q0.vec, q0.qv, c.cid,
          row_number() OVER (PARTITION BY q0.vec_id
-             ORDER BY {_sql_d2_int('q0.qv', 'c.cv', dim)}, c.cid) AS rn
+             ORDER BY {sql_d2_int('q0.qv', 'c.cv', dim)}, c.cid) AS rn
   FROM q0 CROSS JOIN {cf} c),
 lists AS (
   SELECT vec_id, vec, qv, cid,
@@ -683,7 +695,7 @@ probes AS (
   SELECT query_id, qvec, qnorm, cid FROM (
     SELECT q.vec_id AS query_id, q.vec AS qvec, q.norm AS qnorm, c.cid,
            row_number() OVER (PARTITION BY q.vec_id
-               ORDER BY {_sql_d2_int('q.qv', 'c.cv', dim)}, c.cid) AS rn
+               ORDER BY {sql_d2_int('q.qv', 'c.cv', dim)}, c.cid) AS rn
     FROM (SELECT * FROM lists WHERE vec_id < {N_QUERIES}) q
     CROSS JOIN {cf} c) WHERE rn <= {IVF_NPROBE}),
 pairs AS (
@@ -722,8 +734,8 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
     centroids = ivf_index(emb, cache_key=sf_dir)
-    qemb = emb.withColumn("qv", _qint("vec"))
-    best = F.array_min(_d2_structs_int("qv", centroids))
+    qemb = emb.withColumn("qv", qint("vec"))
+    best = F.array_min(d2_structs_int("qv", centroids))
     lists = qemb.select("vec_id", "vec", "qv", best["cluster_id"].alias("cluster_id"))
     cand = with_norm(lists)
     qry = cand.filter(F.col("vec_id") < N_QUERIES)
@@ -733,7 +745,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         qry.withColumn(
             "probe",
             F.explode(
-                F.slice(F.array_sort(_d2_structs_int("qv", centroids)), 1, IVF_NPROBE)
+                F.slice(F.array_sort(d2_structs_int("qv", centroids)), 1, IVF_NPROBE)
             ),
         )
         .select(
@@ -749,7 +761,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            (_dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim"),
+            (dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
@@ -863,7 +875,7 @@ def pq_fit(emb: DataFrame, m: int = PQ_M, k: int = PQ_K,
     never shift; the oracle mirrors this with a COALESCE left join per
     iteration."""
     train = _km_train_rows(emb)
-    dim = len(train[0]) if train else _VEC_DIM
+    dim = len(train[0]) if train else VEC_DIM
     assert dim % m == 0, f"dim {dim} not divisible by {m} subspaces"
     d = dim // m
     books: IntCodebooks = []
@@ -906,7 +918,7 @@ def _pq_codes(vec_col: str | Column, books: IntCodebooks) -> Column:
         lambda j: F.slice(qv, j * sub_dim + 1, sub_dim),
     )
     return _let(
-        _let(_qint(vec_col), subs_of),
+        _let(qint(vec_col), subs_of),
         lambda subs: F.transform(
             cb,
             lambda mcb, mi: F.array_min(
@@ -947,7 +959,7 @@ def _sql_pq_fit_ctes(m: int, k: int, iters: int, sd: int, prefix: str = "") -> s
     renames every CTE (ts → {prefix}ts, c{n} → {prefix}c{n}, …) so the
     chain can coexist with the IVF fit chain (which owns the unprefixed
     a{n}/u{n}/c{n} names) in one composed oracle
-    (wave16.similarity_ivfpq_recall)."""
+    (`similarity_ivfpq_recall`)."""
     x = prefix
     parts = [f""",
 {x}ts AS (
@@ -965,7 +977,7 @@ def _sql_pq_fit_ctes(m: int, k: int, iters: int, sd: int, prefix: str = "") -> s
 {x}a{n} AS (
   SELECT ts.vec_id, ts.j, ts.sv, c.cid,
          row_number() OVER (PARTITION BY ts.vec_id, ts.j
-             ORDER BY {_sql_d2_int('ts.sv', 'c.cv', sd)}, c.cid) AS rn
+             ORDER BY {sql_d2_int('ts.sv', 'c.cv', sd)}, c.cid) AS rn
   FROM {x}ts ts JOIN {x}c{p} c ON c.j = ts.j),
 {x}u{n} AS (
   SELECT j, cid, g.i, sv[g.i] AS x
@@ -989,8 +1001,8 @@ def _pq_oracle() -> str:
     codebook view is the same exact int→double conversion on both
     sides)."""
     m, k, iters = PQ_M, PQ_K, PQ_ITERS
-    sd, dim = _VEC_DIM // PQ_M, _VEC_DIM
-    parts = [_sql_km_setup(), _sql_pq_fit_ctes(m, k, iters, sd)]
+    sd, dim = VEC_DIM // PQ_M, VEC_DIM
+    parts = [sql_km_setup(), _sql_pq_fit_ctes(m, k, iters, sd)]
     cf = f"c{iters}"
     cvd = f"CAST(c.cv[i] AS DOUBLE)/{KM_SCALE}.0"
     parts.append(f""",
@@ -1002,7 +1014,7 @@ codes AS (
   SELECT vec_id, j, cid AS code FROM (
     SELECT cs.vec_id, cs.j, c.cid,
            row_number() OVER (PARTITION BY cs.vec_id, cs.j
-               ORDER BY {_sql_d2_int('cs.sv', 'c.cv', sd)}, c.cid) AS rn
+               ORDER BY {sql_d2_int('cs.sv', 'c.cv', sd)}, c.cid) AS rn
     FROM cs JOIN {cf} c ON c.j = cs.j) WHERE rn = 1),
 cl AS (SELECT vec_id, list(code ORDER BY j) AS codes FROM codes GROUP BY vec_id),
 nrm AS (
@@ -1103,7 +1115,7 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist = adc.withColumn("adc_rank", F.row_number().over(w)).filter(
         F.col("adc_rank") <= PQ_SHORTLIST
     )
-    sim = (_dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim")
+    sim = (dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim")
     w2 = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         shortlist.select("query_id", "neighbor_id", sim)
@@ -1190,7 +1202,7 @@ n AS (
   FROM q0),
 pairs AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         CAST(list_sum(list_transform(generate_series(1, {_VEC_DIM}),
+         CAST(list_sum(list_transform(generate_series(1, {VEC_DIM}),
                                       i -> q.qv[i] * c.qv[i])) AS DOUBLE)
            / (q.nrm * c.nrm) AS sim
   FROM n q JOIN n c ON c.vec_id <> q.vec_id
@@ -1230,7 +1242,7 @@ def similarity_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataF
     )
     q_rows = (
         emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", _qint("vec").alias("qv"))
+        .select("vec_id", qint("vec").alias("qv"))
         .orderBy("vec_id")
         .collect()  # bounded by N_QUERIES — model-parameter-sized
     )
@@ -1264,7 +1276,7 @@ def similarity_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataF
                 {"query_id": outq, "neighbor_id": outn, "sim": outs}
             )
 
-    cand = spread(emb.select("vec_id", _qint("vec").alias("qv")))
+    cand = spread(emb.select("vec_id", qint("vec").alias("qv")))
     local = cand.mapInPandas(score, "query_id long, neighbor_id long, sim double")
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
@@ -1363,7 +1375,7 @@ def similarity_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
             "true_label",
             "n_label",
             "neighbor_id",
-            (_dot("qvec", "svec") / (F.col("qnorm") * F.col("snorm"))).alias("sim"),
+            (dot("qvec", "svec") / (F.col("qnorm") * F.col("snorm"))).alias("sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
@@ -1393,7 +1405,7 @@ def similarity_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Track the single fixture-width constant (r7 advice): the oracle iterates
 # dims 1.._NC_DIM while the Spark side uses the actual array length, so a
 # divergent literal would silently desynchronize them.
-_NC_DIM = _VEC_DIM
+_NC_DIM = VEC_DIM
 
 _NC_ORACLE = f"""
 WITH v AS (
@@ -1592,7 +1604,7 @@ def similarity_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.col("vec_id").alias("cid"),
             "uvec",
-            _dot("quvec", "uvec").alias("rel"),
+            dot("quvec", "uvec").alias("rel"),
         )
     )
     wrel = Window.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("cid"))
@@ -1612,7 +1624,7 @@ def similarity_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Float parity with the oracle's unrolled CTEs is preserved because
     # `rel` and the unit vectors are computed BEFORE the collect (same JVM
     # folds as always), and the driver-side dot is the identical
-    # sequential IEEE fold (x*y accumulated left-to-right = `_dot` =
+    # sequential IEEE fold (x*y accumulated left-to-right = `dot` =
     # DuckDB list_sum); the score chain uses the same Python double
     # constants Spark's F.lit would embed.
     pool: dict[int, list] = {}
@@ -1754,7 +1766,7 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec").alias("qvec"),
         F.col("norm").alias("qnorm"),
     )
-    sim = _dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))
+    sim = dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))
     return (
         cand.crossJoin(F.broadcast(qry))
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1772,14 +1784,14 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cluster diagnostics over the shared IVF index
 # --------------------------------------------------------------------------
 def _cluster_stats_oracle() -> str:
-    k, iters, dim = IVF_CLUSTERS, IVF_ITERS, _VEC_DIM
+    k, iters, dim = IVF_CLUSTERS, IVF_ITERS, VEC_DIM
     cf = f"c{iters}"
-    return f"""{_sql_km_setup()}{_sql_ivf_fit_ctes(k, iters, dim)},
+    return f"""{sql_km_setup()}{sql_ivf_fit_ctes(k, iters, dim)},
 assignq AS (
   SELECT q0.vec_id, c.cid,
-         {_sql_d2_int('q0.qv', 'c.cv', dim)} AS d2,
+         {sql_d2_int('q0.qv', 'c.cv', dim)} AS d2,
          row_number() OVER (PARTITION BY q0.vec_id
-             ORDER BY {_sql_d2_int('q0.qv', 'c.cv', dim)}, c.cid) AS rn
+             ORDER BY {sql_d2_int('q0.qv', 'c.cv', dim)}, c.cid) AS rn
   FROM q0 CROSS JOIN {cf} c),
 a AS (SELECT vec_id, cid, d2 FROM assignq WHERE rn = 1),
 tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM a)
@@ -1814,7 +1826,7 @@ def similarity_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
     centroids = ivf_index(emb, cache_key=sf_dir)
-    best = F.array_min(_d2_structs_int(_qint("vec"), centroids))
+    best = F.array_min(d2_structs_int(qint("vec"), centroids))
     a = emb.select(
         best["cluster_id"].alias("cluster_id"), best["d2"].alias("d2")
     )
@@ -1843,14 +1855,14 @@ def similarity_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cluster separation (Dunn-flavor index over the IVF index)
 # --------------------------------------------------------------------------
 def _cluster_sep_oracle() -> str:
-    k, iters, dim = IVF_CLUSTERS, IVF_ITERS, _VEC_DIM
+    k, iters, dim = IVF_CLUSTERS, IVF_ITERS, VEC_DIM
     cf = f"c{iters}"
-    return f"""{_sql_km_setup()}{_sql_ivf_fit_ctes(k, iters, dim)},
+    return f"""{sql_km_setup()}{sql_ivf_fit_ctes(k, iters, dim)},
 assignq AS (
   SELECT q0.vec_id, c.cid,
-         {_sql_d2_int('q0.qv', 'c.cv', dim)} AS d2,
+         {sql_d2_int('q0.qv', 'c.cv', dim)} AS d2,
          row_number() OVER (PARTITION BY q0.vec_id
-             ORDER BY {_sql_d2_int('q0.qv', 'c.cv', dim)}, c.cid) AS rn
+             ORDER BY {sql_d2_int('q0.qv', 'c.cv', dim)}, c.cid) AS rn
   FROM q0 CROSS JOIN {cf} c),
 a AS (SELECT vec_id, cid, d2 FROM assignq WHERE rn = 1),
 intra AS (
@@ -1858,7 +1870,7 @@ intra AS (
          CAST(sum(d2) AS BIGINT) AS inertia
   FROM a GROUP BY cid),
 inter AS (
-  SELECT p.cid, CAST(min({_sql_d2_int('p.cv', 'q.cv', dim)}) AS BIGINT)
+  SELECT p.cid, CAST(min({sql_d2_int('p.cv', 'q.cv', dim)}) AS BIGINT)
            AS min_inter_centroid_d2
   FROM {cf} p JOIN {cf} q ON p.cid <> q.cid GROUP BY p.cid)
 SELECT i.cid AS cluster_id, i.n_vectors,
@@ -1899,7 +1911,7 @@ def similarity_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         for cid, vec in centroids
     }
-    best = F.array_min(_d2_structs_int(_qint("vec"), centroids))
+    best = F.array_min(d2_structs_int(qint("vec"), centroids))
     a = emb.select(
         best["cluster_id"].alias("cluster_id"), best["d2"].alias("d2")
     )
@@ -2019,7 +2031,7 @@ def similarity_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a_label").alias("label"),
             F.col("vec_id").alias("cand_id"),
             F.col("label").alias("cand_label"),
-            (_dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim"),
+            (dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim"),
         )
         .transform(persist_tracked)
     )
@@ -2144,7 +2156,6 @@ def similarity_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).cast("long").alias("n_a"),
         F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).cast("long").alias("n_b"),
     )
-    D38 = "decimal(38,0)"
     a = dims.filter(F.col("half") == 0).select(
         "label", "dim", F.col("s_micro").alias("sa")
     )
@@ -2169,4 +2180,2049 @@ def similarity_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.sqrt(F.col("na2").cast("double")) * F.sqrt(F.col("nb2").cast("double"))),
             6,
         ).alias("centroid_cosine"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Per-dimension embedding variance profile (feature-signal audit)
+# --------------------------------------------------------------------------
+def _dimvar_oracle() -> str:
+    # VEC_DIM interpolated from the similarity module (not hard-coded)
+    # so a vector-width change fails the oracle loudly instead of
+    # silently truncating the explode.
+
+    return f"""
+WITH q AS (
+  SELECT vec_id,
+         list_transform(CAST(embedding AS DOUBLE[]), x ->
+             CAST(CAST(x AS DECIMAL(12,6)) * 1000000 AS BIGINT)) AS qv
+  FROM embeddings),
+ex AS (
+  SELECT g.i - 1 AS dim, qv[g.i] AS x
+  FROM q, generate_series(1, {VEC_DIM}) g(i)),
+mom AS (
+  SELECT dim, CAST(count(*) AS BIGINT) AS n,
+         CAST(sum(x) AS BIGINT) AS s,
+         CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS ss
+  FROM ex GROUP BY dim)
+SELECT dim, n,
+       CAST(CASE WHEN s >= 0 THEN (2 * s + n) // (2 * n)
+                 ELSE -((-2 * s + n) // (2 * n)) END AS BIGINT) AS mean_e6,
+       round(CAST(n * ss - CAST(s AS HUGEINT) * s AS DOUBLE)
+             / CAST(CAST(n AS HUGEINT) * (n - 1) AS DOUBLE) / 1000000000000,
+             6) AS variance
+FROM mom
+"""
+
+
+@query("similarity_dim_variance_profile", oracle=_dimvar_oracle())
+def similarity_dim_variance_profile(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Per-dimension mean and sample variance of the embedding corpus —
+    the feature-signal audit run before any projection/quantization
+    decision (a near-zero-variance dimension is dead weight in every
+    distance computation; `similarity_random_projection` and
+    `similarity_quantize_int8` both silently assume dimensions carry
+    comparable signal — this measures it).
+
+    Exactness: coordinates are the repo's scale-6 integers (the shared
+    k-means quantization contract), so per-dimension moments are exact
+    integer sums with a 128-bit squared term; the mean is the integer
+    half-away-from-zero micro-unit mean (the `_SQL_MEAN` twin) and the
+    variance is one fixed-order double chain de-scaled by 1e12.
+
+    Scale: one posexplode pass (64 rows per vector) into a 64-key
+    aggregate — partial map-side combine makes the shuffle 64 rows per
+    task; nothing else moves."""
+    q = load_table(spark, sf_dir, "embeddings").select(
+        F.posexplode(
+            F.transform(
+                F.col("embedding").cast("array<double>"),
+                lambda x: (x.cast("decimal(12,6)") * 1000000).cast("long"),
+            )
+        ).alias("dim", "x")
+    )
+    x = F.col("x")
+    mom = q.groupBy("dim").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("x").cast("long").alias("s"),
+        F.sum(x.cast(D38) * x.cast(D38)).cast(D38).alias("ss"),
+    )
+    mean_e6 = F.expr(
+        "CAST(CASE WHEN s >= 0 THEN (2 * s + n) div (2 * n) "
+        "ELSE -((-2 * s + n) div (2 * n)) END AS BIGINT)"
+    )
+    num = (
+        F.col("n").cast(D38) * F.col("ss")
+        - F.col("s").cast(D38) * F.col("s").cast(D38)
+    ).cast("double")
+    den = (F.col("n").cast(D38) * (F.col("n") - 1).cast(D38)).cast("double")
+    return mom.select(
+        F.col("dim").cast("long").alias("dim"),
+        "n",
+        mean_e6.alias("mean_e6"),
+        F.round(num / den / 1000000000000, 6).alias("variance"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Embedding-space geometry audits over deterministic adjacent pairs
+# --------------------------------------------------------------------------
+#: Fixed-point scale for cosine quantization: floor(cos * 1e6) is taken on
+#: the SAME IEEE double on both engines (identical in-row fold order — the
+#: `similarity_quantize_int8` precedent), so the integer is engine-exact
+#: and all cross-row accumulation stays integer.
+_COS_E6 = 1_000_000
+
+
+_SQL_PAIR_COS = """
+WITH v AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+pr AS (
+  SELECT a.vec_id AS ida, b.vec_id AS idb, a.vec AS va, b.vec AS vb
+  FROM v a JOIN v b ON b.vec_id = a.vec_id + 1
+  WHERE a.vec_id % 2 = 0),
+cs AS (
+  SELECT ida, idb,
+         list_sum(list_transform(generate_series(1, len(va)),
+                                 i -> va[i] * vb[i]))
+         / (greatest(sqrt(list_sum(list_transform(va, x -> x * x))), 1e-12)
+            * greatest(sqrt(list_sum(list_transform(vb, x -> x * x))), 1e-12))
+           AS cos
+  FROM pr)
+"""
+
+
+def _pair_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(ida, idb, cos): cosine similarity of the deterministic adjacent
+    pairs (vec_id 2i, 2i+1) — a fixed, reproducible sample of the
+    embedding space's pair geometry that needs NO random projections and
+    no all-pairs join: one 1-1 key join, in-row double folds in the exact
+    order DuckDB's list_sum uses (bit-identical results — the
+    `similarity_quantize_int8` precedent)."""
+    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+    )
+    a = emb.filter(F.col("vec_id") % 2 == 0).select(
+        F.col("vec_id").alias("ida"), F.col("vec").alias("va")
+    )
+    b = emb.select(
+        (F.col("vec_id") - 1).alias("ida"),
+        F.col("vec_id").alias("idb"),
+        F.col("vec").alias("vb"),
+    )
+    pr = a.join(b, "ida")
+    dot = F.aggregate(
+        F.zip_with("va", "vb", lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    norm = lambda c: F.greatest(  # noqa: E731
+        F.sqrt(
+            F.aggregate(
+                F.transform(c, lambda x: x * x),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+        ),
+        F.lit(1e-12),
+    )
+    return pr.select(
+        "ida",
+        "idb",
+        (dot / (norm("va") * norm("vb"))).alias("cos"),
+    )
+
+
+_ISOTROPY_ORACLE = f"""{_SQL_PAIR_COS},
+q AS (
+  SELECT CAST(floor(cos * {_COS_E6}) AS BIGINT) AS ce6,
+         CAST(floor(abs(cos) * {_COS_E6}) AS BIGINT) AS ae6,
+         CASE WHEN cos < 0 THEN 1 ELSE 0 END AS neg
+  FROM cs)
+SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+       round(CAST(sum(ce6) AS DOUBLE) / count(*) / {_COS_E6}.0, 6)
+         AS mean_cos,
+       round(CAST(sum(ae6) AS DOUBLE) / count(*) / {_COS_E6}.0, 6)
+         AS mean_abs_cos,
+       round(CAST(sum(neg) AS DOUBLE) / count(*), 6) AS neg_share
+FROM q
+"""
+
+
+@query("similarity_isotropy_audit", oracle=_ISOTROPY_ORACLE)
+def similarity_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-space isotropy audit: mean (and mean absolute) cosine
+    over the deterministic adjacent-pair sample, plus the negative-pair
+    share.  Anisotropic embedding spaces (mean cosine ≫ 0 — the common
+    'narrow cone' pathology) break cosine-threshold dedup and ANN recall
+    assumptions; this is the one-row health check run before trusting
+    either.  Random pairs approximate the population pair geometry; the
+    FIXED pairing makes the audit reproducible and oracle-exact.
+
+    Scale: one 1-1 key join + in-row folds; per-pair cosines quantize to
+    integers INSIDE the identical IEEE chain (floor(cos·1e6)), so the
+    cross-row sums are exact — no float accumulation anywhere."""
+    cs = _pair_cos(spark, sf_dir)
+    q = cs.select(
+        F.floor(F.col("cos") * _COS_E6).cast("long").alias("ce6"),
+        F.floor(F.abs("cos") * _COS_E6).cast("long").alias("ae6"),
+        F.when(F.col("cos") < 0, 1).otherwise(0).alias("neg"),
+    )
+    return q.agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.round(
+            F.sum("ce6").cast("double") / F.count(F.lit(1)) / float(_COS_E6),
+            6,
+        ).alias("mean_cos"),
+        F.round(
+            F.sum("ae6").cast("double") / F.count(F.lit(1)) / float(_COS_E6),
+            6,
+        ).alias("mean_abs_cos"),
+        F.round(F.sum("neg").cast("double") / F.count(F.lit(1)), 6).alias(
+            "neg_share"
+        ),
+    )
+
+
+_COS_HIST_ORACLE = f"""{_SQL_PAIR_COS},
+b AS (
+  SELECT CAST(floor(cos * 10) AS INT) AS bucket FROM cs),
+tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM b)
+SELECT bucket, CAST(count(*) AS BIGINT) AS n_pairs,
+       round(CAST(count(*) AS DOUBLE) / any_value(n), 6) AS share
+FROM b CROSS JOIN tot
+GROUP BY bucket ORDER BY bucket
+"""
+
+
+@query("similarity_cos_pair_hist", oracle=_COS_HIST_ORACLE)
+def similarity_cos_pair_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cosine histogram over the deterministic pair sample (0.1-wide
+    buckets, floor(cos·10) ∈ [−10, 10]) — the distribution behind
+    `similarity_isotropy_audit`'s means: where the pair mass actually
+    sits decides usable near-dup thresholds (a threshold inside the bulk
+    of the distribution flags half the corpus).
+
+    Scale: same 1-1 join + in-row folds; the histogram folds onto the
+    fixed 21-value bucket domain (map-side combinable).  Bucketing
+    happens on the bit-identical double, so both engines bucket every
+    pair identically."""
+    cs = _pair_cos(spark, sf_dir)
+    b = cs.select(F.floor(F.col("cos") * 10).cast("int").alias("bucket"))
+    b = persist_tracked(b)
+    tot = b.agg(F.count(F.lit(1)).alias("n"))
+    return (
+        b.crossJoin(F.broadcast(tot))
+        .groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_pairs"),
+            F.round(F.count(F.lit(1)).cast("double") / F.max("n"), 6).alias(
+                "share"
+            ),
+        )
+        .orderBy("bucket")
+    )
+
+
+# --------------------------------------------------------------------------
+# Embedding norm profile per label (ANN health: norm outliers break cosine)
+# --------------------------------------------------------------------------
+_NORM_PROFILE_ORACLE = """
+WITH v AS (
+  SELECT label,
+         CAST(floor(sqrt(list_sum(list_transform(
+             CAST(embedding AS DOUBLE[]), x -> x * x))) * 1000000)
+           AS BIGINT) AS ne6
+  FROM embeddings)
+SELECT label, CAST(count(*) AS BIGINT) AS n_vectors,
+       round(CAST(sum(ne6) AS DOUBLE) / count(*) / 1000000.0, 6)
+         AS mean_norm,
+       CAST(min(ne6) AS BIGINT) AS min_norm_e6,
+       CAST(max(ne6) AS BIGINT) AS max_norm_e6
+FROM v GROUP BY label ORDER BY label
+"""
+
+
+@query("similarity_norm_profile", oracle=_NORM_PROFILE_ORACLE)
+def similarity_norm_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label embedding L2-norm profile: count, mean, min, max — the
+    pre-flight check for every cosine-based operator in the similarity
+    family (a label whose norms collapse toward 0 turns cosine into
+    noise; a wide min-max spread says dot-product and cosine rankings
+    will disagree).  Norms quantize to integers INSIDE the identical
+    IEEE chain (floor(‖x‖·1e6) — the isotropy-audit pattern), so all
+    cross-row accumulation is exact.
+
+    Scale: one narrow in-row fold + one label-keyed map-combinable
+    aggregate; zero joins, zero windows."""
+    v = spread(load_table(spark, sf_dir, "embeddings")).select(
+        "label",
+        F.floor(
+            F.sqrt(
+                F.aggregate(
+                    F.transform(
+                        F.col("embedding").cast("array<double>"),
+                        lambda x: x * x,
+                    ),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                )
+            )
+            * 1_000_000
+        )
+        .cast("long")
+        .alias("ne6"),
+    )
+    return (
+        v.groupBy("label")
+        .agg(
+            F.count(F.lit(1)).alias("n_vectors"),
+            F.round(
+                F.sum("ne6").cast("double")
+                / F.count(F.lit(1))
+                / 1_000_000.0,
+                6,
+            ).alias("mean_norm"),
+            F.min("ne6").alias("min_norm_e6"),
+            F.max("ne6").alias("max_norm_e6"),
+        )
+        .orderBy("label")
+    )
+
+
+# --------------------------------------------------------------------------
+# Label centroid cosine matrix (integer-quantized per-dimension sums)
+# --------------------------------------------------------------------------
+def _centroid_matrix_oracle() -> str:
+    sums = ", ".join(
+        f"CAST(sum(CAST(floor(CAST(embedding[{i + 1}] AS DOUBLE) * 1000000)"
+        f" AS BIGINT)) AS HUGEINT)"
+        for i in range(VEC_DIM)
+    )
+    return f"""
+WITH c AS (
+  SELECT label, [{sums}] AS cv
+  FROM embeddings GROUP BY label),
+p AS (
+  SELECT a.label AS label_a, b.label AS label_b,
+         list_sum(list_transform(generate_series(1, {VEC_DIM}),
+                                 i -> a.cv[i] * b.cv[i])) AS dot,
+         list_sum(list_transform(a.cv, x -> x * x)) AS na2,
+         list_sum(list_transform(b.cv, x -> x * x)) AS nb2
+  FROM c a JOIN c b ON a.label < b.label)
+SELECT label_a, label_b,
+       round(CAST(dot AS DOUBLE)
+             / (sqrt(CAST(na2 AS DOUBLE)) * sqrt(CAST(nb2 AS DOUBLE))),
+             6) AS centroid_cos
+FROM p ORDER BY label_a, label_b
+"""
+
+
+@query("similarity_label_centroid_matrix", oracle=_centroid_matrix_oracle())
+def similarity_label_centroid_matrix(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Pairwise cosine between LABEL CENTROIDS of the embedding space —
+    the class-geometry map (two labels whose centroids sit at cos > 0.9
+    will bleed into each other in any nearest-centroid or kNN labeler;
+    this matrix says which class pairs need margin).  Complements
+    `similarity_cluster_purity` (assignment-level) with the
+    direction-level view.
+
+    Exactness: per-vector coordinates quantize to floor(x·1e6) integers
+    (the identical-IEEE-chain rule), per-dimension sums are exact
+    integer aggregates (64 map-combinable sums, no explode), and the
+    unnormalized-centroid cosine — invariant to the 1/n mean scaling —
+    is DECIMAL(38,0)/HUGEINT cross-mults into one rounded double chain.
+    Scale: one label-keyed aggregate over a narrow scan; the pair grid
+    is the bounded label domain (10 rows self-joined)."""
+    d38 = "decimal(38,0)"
+    emb = spread(load_table(spark, sf_dir, "embeddings"))
+    sums = [
+        F.sum(
+            F.floor(
+                F.col("embedding")[i].cast("double") * 1_000_000
+            ).cast("long")
+        ).alias(f"s{i}")
+        for i in range(VEC_DIM)
+    ]
+    c = emb.groupBy("label").agg(*sums).select(
+        "label", F.array(*[f"s{i}" for i in range(VEC_DIM)]).alias("cv")
+    )
+    a = c.select(F.col("label").alias("label_a"), F.col("cv").alias("ca"))
+    b = c.select(F.col("label").alias("label_b"), F.col("cv").alias("cb"))
+    dec_dot = lambda x, y: F.aggregate(  # noqa: E731
+        F.zip_with(x, y, lambda u, v: u.cast(d38) * v),
+        F.lit(0).cast(d38),
+        lambda acc, v: acc + v,
+    )
+    p = a.join(b, F.col("label_a") < F.col("label_b")).select(
+        "label_a",
+        "label_b",
+        dec_dot("ca", "cb").alias("dot"),
+        dec_dot("ca", "ca").alias("na2"),
+        dec_dot("cb", "cb").alias("nb2"),
+    )
+    return p.select(
+        "label_a",
+        "label_b",
+        F.round(
+            F.col("dot").cast("double")
+            / (
+                F.sqrt(F.col("na2").cast("double"))
+                * F.sqrt(F.col("nb2").cast("double"))
+            ),
+            6,
+        ).alias("centroid_cos"),
+    ).orderBy("label_a", "label_b")
+
+
+# --------------------------------------------------------------------------
+# Cluster silhouette audit over the shared integer-exact k-means index
+# --------------------------------------------------------------------------
+def _silhouette_oracle() -> str:
+    k, iters, dim = IVF_CLUSTERS, IVF_ITERS, VEC_DIM
+    d2 = sql_d2_int("q0.qv", "c.cv", dim)
+    return f"""{sql_km_setup()}{sql_ivf_fit_ctes(k, iters, dim)},
+ranked AS (
+  SELECT q0.vec_id, c.cid, {d2} AS d2,
+         row_number() OVER (PARTITION BY q0.vec_id
+             ORDER BY {d2}, c.cid) AS rn
+  FROM q0 CROSS JOIN c{iters} c),
+ab AS (
+  SELECT vec_id, cid, rn, d2 AS a2,
+         lead(d2) OVER (PARTITION BY vec_id ORDER BY rn) AS b2
+  FROM ranked WHERE rn <= 2)
+SELECT cid AS cluster_id,
+       CAST(count(*) AS BIGINT) AS n_points,
+       CAST(sum(CASE WHEN b2 >= 4 * a2 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_tight,
+       round(sum(CASE WHEN b2 >= 4 * a2 THEN 1 ELSE 0 END) * 1.0 / count(*),
+             6) AS tight_ratio
+FROM ab WHERE rn = 1
+GROUP BY cid
+"""
+
+
+@query("similarity_silhouette_audit", oracle=_silhouette_oracle())
+def similarity_silhouette_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Squared-distance silhouette audit of the shared IVF k-means index:
+    per cluster, how many members sit at least TWICE as close to their
+    own centroid as to the nearest other centroid (b ≥ 2a, compared as
+    b² ≥ 4a² — no square roots) — the index-quality gate that tells you
+    whether `similarity_ivf_topk`'s nprobe=2 is safe (loose clusters ⇒
+    neighbors leak across list boundaries and recall drops;
+    `similarity_ann_recall_eval` measures that leak, this explains it).
+
+    Exactness: distances are scale-6 integer d² against the SAME
+    engine-exact centroids DuckDB refits from raw parquet (the
+    IVF/PQ oracle machinery); the tightness test is a pure integer
+    comparison.  Scale: one narrow pass — per-row argmin over k
+    broadcast centroid literals; the only shuffle is the k-row final
+    aggregate."""
+
+    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+    )
+    cents = ivf_index(emb, cache_key=sf_dir)
+    top2 = F.slice(F.array_sort(d2_structs_int(qint("vec"), cents)), 1, 2)
+    d = emb.select(
+        F.element_at(top2, 1)["cluster_id"].alias("cluster_id"),
+        F.element_at(top2, 1)["d2"].alias("a2"),
+        F.element_at(top2, 2)["d2"].alias("b2"),
+    )
+    tight = F.sum(F.when(F.col("b2") >= 4 * F.col("a2"), 1).otherwise(0))
+    return d.groupBy("cluster_id").agg(
+        F.count(F.lit(1)).alias("n_points"),
+        tight.alias("n_tight"),
+        F.round(tight * 1.0 / F.count(F.lit(1)), 6).alias("tight_ratio"),
+    )
+
+
+# --------------------------------------------------------------------------
+# LSH bucket-balance profile (the ANN skew audit)
+# --------------------------------------------------------------------------
+def _lsh_bucket_oracle() -> str:
+    return f"""
+WITH v AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+planes AS (SELECT * FROM (VALUES {_PLANE_ROWS}) t(tbl, p, w)),
+sig AS (
+  SELECT vec_id, tbl,
+         CAST(sum(CASE WHEN list_sum(list_transform(
+                            generate_series(1, {_LSH_DIM}),
+                            i -> vec[i] * w[i])) >= 0
+                       THEN (1 << p) ELSE 0 END) + tbl * 65536 AS BIGINT)
+           AS bucket
+  FROM v CROSS JOIN planes GROUP BY vec_id, tbl),
+bc AS (
+  SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM sig GROUP BY bucket)
+SELECT bucket // 65536 AS tbl,
+       CAST(count(*) AS BIGINT) AS n_buckets,
+       CAST(max(c) AS BIGINT) AS max_bucket,
+       CAST(sum(c) AS BIGINT) AS n_vectors,
+       round(CAST(sum(CAST(c AS HUGEINT) * (c - 1)) AS DOUBLE)
+             / (CAST(sum(c) AS DOUBLE) * (CAST(sum(c) AS DOUBLE) - 1.0)),
+             6) AS collision_rate
+FROM bc GROUP BY 1
+ORDER BY tbl
+"""
+
+
+@query("similarity_lsh_bucket_profile", oracle=_lsh_bucket_oracle())
+def similarity_lsh_bucket_profile(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Per-table LSH bucket-balance audit over the shared deterministic
+    hyperplane index (`similarity_ann_lsh`'s signatures): buckets used,
+    largest bucket, and the same-bucket collision rate Σc(c−1)/n(n−1) —
+    the number that IS the ANN cost model at 100 TB (candidate-join work
+    scales with Σc², so a hot bucket is the skew failure; this is the
+    audit you run before trusting the index at 1000x the vectors).
+
+    One explode to (vector × table) signatures, two map-combinable
+    aggregates (bucket counts, then the 16-row per-table rollup) —
+    no joins; integer cross-mults with one rounded division."""
+
+    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+    )
+    sig = emb.select(
+        F.explode(_bucket_array("vec", _LSH_DIM)).alias("bucket")
+    )
+    bc = sig.groupBy("bucket").agg(F.count(F.lit(1)).alias("c"))
+    return (
+        bc.groupBy(F.expr("bucket div 65536").alias("tbl"))
+        .agg(
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.max("c").alias("max_bucket"),
+            F.sum("c").alias("n_vectors"),
+            F.round(
+                F.sum(F.col("c").cast(D38) * (F.col("c") - 1)).cast("double")
+                / (
+                    F.sum("c").cast("double")
+                    * (F.sum("c").cast("double") - 1.0)
+                ),
+                6,
+            ).alias("collision_rate"),
+        )
+        .orderBy("tbl")
+    )
+
+
+# --------------------------------------------------------------------------
+# K-means cluster label purity (index quality vs ground-truth labels)
+# --------------------------------------------------------------------------
+def _purity_oracle() -> str:
+    k, iters, dim = IVF_CLUSTERS, IVF_ITERS, VEC_DIM
+    d2 = sql_d2_int("q0.qv", "c.cv", dim)
+    return f"""{sql_km_setup()}{sql_ivf_fit_ctes(k, iters, dim)},
+assign AS (
+  SELECT q0.vec_id, c.cid,
+         row_number() OVER (PARTITION BY q0.vec_id
+             ORDER BY {d2}, c.cid) AS rn
+  FROM q0 CROSS JOIN c{iters} c),
+lab AS (
+  SELECT a.cid AS cluster_id, CAST(e.label AS BIGINT) AS label
+  FROM assign a JOIN embeddings e ON a.vec_id = e.vec_id
+  WHERE a.rn = 1),
+cell AS (
+  SELECT cluster_id, label, CAST(count(*) AS BIGINT) AS c
+  FROM lab GROUP BY 1, 2)
+SELECT cluster_id,
+       CAST(sum(c) AS BIGINT) AS n_points,
+       CAST(count(*) AS BIGINT) AS n_labels,
+       min(CASE WHEN r = 1 THEN label END) AS majority_label,
+       CAST(max(c) AS BIGINT) AS majority_count,
+       round(CAST(max(c) AS DOUBLE) / CAST(sum(c) AS DOUBLE), 6) AS purity
+FROM (SELECT *, row_number() OVER (PARTITION BY cluster_id
+          ORDER BY c DESC, label) AS r FROM cell) t
+GROUP BY cluster_id
+"""
+
+
+@query("similarity_cluster_purity", oracle=_purity_oracle())
+def similarity_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Label purity of the shared IVF k-means index against the
+    embeddings table's ground-truth labels: per cluster, the majority
+    label and its share — the external index-quality check
+    (`similarity_silhouette_audit` is the geometric/internal one; purity
+    tells you whether the index's partitions MEAN anything).
+
+    Scale: assignment is the silhouette plan — a per-row argmin over k
+    broadcast centroid literals, joinless on the corpus side — followed
+    by a (k x labels)-bounded cell aggregate; the majority fold is an
+    in-group max over that bounded relation.  Ties break to the smallest
+    label on both engines."""
+
+    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("vec"),
+        F.col("label").cast("long").alias("label"),
+    )
+    cents = ivf_index(
+        emb.select("vec_id", "vec"), cache_key=sf_dir
+    )
+    nearest = F.element_at(
+        F.slice(F.array_sort(d2_structs_int(qint("vec"), cents)), 1, 1), 1
+    )
+    lab = emb.select(
+        nearest["cluster_id"].alias("cluster_id"), "label"
+    )
+    cell = lab.groupBy("cluster_id", "label").agg(
+        F.count(F.lit(1)).alias("c")
+    )
+    # majority via one in-group max over (count, -label): ties resolve to
+    # the smallest label, matching the oracle's (c DESC, label) rank.
+    best = F.max(F.struct(F.col("c").alias("c"), (-F.col("label")).alias("nl")))
+    return cell.groupBy("cluster_id").agg(
+        F.sum("c").alias("n_points"),
+        F.count(F.lit(1)).alias("n_labels"),
+        (-best["nl"]).alias("majority_label"),
+        F.max("c").alias("majority_count"),
+        F.round(F.max("c").cast("double") / F.sum("c").cast("double"), 6).alias(
+            "purity"
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
+# PQ reconstruction-distortion audit (per-subspace quantization error)
+# --------------------------------------------------------------------------
+def _pq_distortion_oracle() -> str:
+    m, k, iters = PQ_M, PQ_K, PQ_ITERS
+    sd = VEC_DIM // PQ_M
+    return f"""{sql_km_setup()}{_sql_pq_fit_ctes(m, k, iters, sd)},
+alls AS (
+  SELECT q0.vec_id, g.j,
+         list_transform(generate_series(1, {sd}), i -> q0.qv[g.j*{sd}+i]) AS sv
+  FROM q0, generate_series(0, {m - 1}) g(j)),
+md AS (
+  SELECT a.vec_id, a.j,
+         min({sql_d2_int('a.sv', 'c.cv', sd)}) AS d2
+  FROM alls a JOIN c{iters} c ON c.j = a.j
+  GROUP BY a.vec_id, a.j)
+SELECT j AS subspace,
+       CAST(count(*) AS BIGINT) AS n_vectors,
+       CAST((2 * CAST(sum(d2) AS HUGEINT) + count(*))
+            // (2 * count(*)) AS BIGINT) AS mean_d2_e12,
+       CAST(max(d2) AS BIGINT) AS max_d2_e12
+FROM md GROUP BY j
+"""
+
+
+@query("similarity_pq_distortion", oracle=_pq_distortion_oracle())
+def similarity_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-subspace PQ reconstruction distortion: the exact squared error
+    each 4-bit code introduces (min distance to the chosen codeword,
+    which IS the reconstruction error), aggregated per subspace — the
+    codebook-quality audit that explains `similarity_ann_recall_eval`'s
+    number (a subspace with outsized distortion is where ADC ranking
+    lies, and the first candidate for more codewords).
+
+    Exactness: distances are scale-12 integers against the SAME
+    engine-exact integer codebooks DuckDB refits from raw parquet
+    (the shared `_sql_pq_fit_ctes` chain); the mean is the half-up
+    integer micro² mean.  Scale: one joinless per-row fold over the
+    broadcast codebook literals (the `_pq_codes` evaluation contract),
+    then an m-key aggregate — the corpus never joins anything."""
+
+    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+    )
+    books = pq_index(emb, cache_key=sf_dir)
+    m, sub_dim = len(books), len(books[0][0])
+    cb = packed_model_col(books, "array<array<array<bigint>>>")
+    subs_of = lambda qv: F.transform(  # noqa: E731
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda j: F.slice(qv, j * sub_dim + 1, sub_dim),
+    )
+    d2s = _let(
+        _let(qint("vec"), subs_of),
+        lambda subs: F.transform(
+            cb,
+            lambda mcb, mi: F.array_min(
+                F.transform(
+                    mcb,
+                    lambda c: _sq_dist_int(F.element_at(subs, mi + 1), c),
+                )
+            ),
+        ),
+    )
+    per = emb.select(F.posexplode(d2s).alias("subspace", "d2"))
+    return (
+        per.groupBy(F.col("subspace").cast("long").alias("subspace"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("d2").cast(D38)).cast(D38).alias("s"),
+            F.max("d2").alias("max_d2_e12"),
+        )
+        .selectExpr(
+            "subspace",
+            "n AS n_vectors",
+            "CAST((2 * s + n) div (2 * n) AS BIGINT) AS mean_d2_e12",
+            "CAST(max_d2_e12 AS BIGINT) AS max_d2_e12",
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# K-means cluster-outlier audit (on the shared SemDeDup member relation)
+# --------------------------------------------------------------------------
+#: Cosine-to-centroid below which a member is flagged as an outlier.
+#: This testdata's ccos band runs ≈0.16–0.6 with p10 ≈ 0.22 (probed at
+#: sf0.001), so 0.22 flags a real ~10% tail in every cluster; production
+#: normalized-text embeddings sit much higher and run this at 0.6+.
+OUTLIER_TAU = 0.22
+
+
+def _outlier_oracle() -> str:
+    from iceberg_table_generator_spark.operators.wave11 import (
+        sql_semdedup_ctes,
+    )
+
+    return f"""{sql_semdedup_ctes()}
+SELECT cid,
+       CAST(count(*) AS BIGINT) AS n_members,
+       CAST(sum(CASE WHEN ccos < {OUTLIER_TAU} THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_outliers,
+       CAST((sum(CASE WHEN ccos < {OUTLIER_TAU} THEN 1 ELSE 0 END)
+             * 1000000) // count(*) AS BIGINT) AS outlier_ppm,
+       CAST(floor(min(ccos) * 1000000.0) AS BIGINT) AS min_ccos_micro,
+       (min(struct_pack(c := ccos, v := vec_id))).v AS farthest_vec_id
+FROM m GROUP BY cid
+"""
+
+
+@query("similarity_cluster_outlier_audit", oracle=_outlier_oracle())
+def similarity_cluster_outlier_audit(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Per-cluster embedding-outlier audit on the shared engine-exact
+    k-means index: members whose cosine-to-centroid falls below
+    τ = {OUTLIER_TAU} are mis-clustered / off-manifold candidates — the
+    vectors a curation pass reviews before trusting SemDeDup or IVF
+    routing decisions in that cluster.  Reports count, ppm share, the
+    worst cosine (micro-floored), and the farthest member's id
+    (deterministic (ccos, vec_id) struct-min).
+
+    Oracle-paired end-to-end: reuses `semdedup_relation`'s member
+    relation and its DuckDB CTE twin, so cluster assignment AND the ccos
+    chain are bit-identical on both engines.
+
+    Scale: one cid-keyed map-combinable aggregation over the member
+    relation (k = 16 groups); no windows, no joins beyond the broadcast
+    centroid attach already inside the shared relation."""
+    from iceberg_table_generator_spark.operators.wave11 import (
+        semdedup_relation,
+    )
+
+    m = semdedup_relation(spark, sf_dir)
+    return (
+        m.groupBy("cid")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_members"),
+            F.sum(
+                F.when(F.col("ccos") < OUTLIER_TAU, 1).otherwise(0)
+            ).cast("long").alias("n_outliers"),
+            F.floor(F.min("ccos") * 1000000.0).cast("long").alias(
+                "min_ccos_micro"
+            ),
+            F.min(F.struct(F.col("ccos"), F.col("vec_id"))).alias("far"),
+        )
+        .select(
+            "cid",
+            "n_members",
+            "n_outliers",
+            F.expr(
+                "CAST((n_outliers * 1000000) div n_members AS BIGINT)"
+            ).alias("outlier_ppm"),
+            "min_ccos_micro",
+            F.col("far.vec_id").alias("farthest_vec_id"),
+        )
+        .orderBy("cid")
+    )
+
+
+# --------------------------------------------------------------------------
+# IVF nprobe recall sweep: the ANN speed/recall tuning curve
+# --------------------------------------------------------------------------
+#: nprobe grid for the sweep (max = the production IVF_NPROBE setting).
+NPROBE_GRID = (1, 2, 4, 6)
+
+
+def _nprobe_sweep_oracle() -> str:
+    dim, cf = VEC_DIM, f"c{IVF_ITERS}"
+    dot = (
+        f"list_sum(list_transform(generate_series(1, {dim}), "
+        "i -> p.qvec[i]*cand.vec[i]))"
+    )
+    nps = ", ".join(f"({n})" for n in NPROBE_GRID)
+    ivfnp = f"""{sql_km_setup()}{sql_ivf_fit_ctes(IVF_CLUSTERS, IVF_ITERS, dim)},
+assignq AS (
+  SELECT q0.vec_id, q0.vec, q0.qv, c.cid,
+         row_number() OVER (PARTITION BY q0.vec_id
+             ORDER BY {sql_d2_int('q0.qv', 'c.cv', dim)}, c.cid) AS rn
+  FROM q0 CROSS JOIN {cf} c),
+lists AS (
+  SELECT vec_id, vec, qv, cid,
+         sqrt(list_sum(list_transform(generate_series(1, {dim}),
+                                      i -> vec[i]*vec[i]))) AS norm
+  FROM assignq WHERE rn = 1),
+proberanks AS (
+  SELECT q.vec_id AS query_id, q.vec AS qvec, q.norm AS qnorm, c.cid,
+         row_number() OVER (PARTITION BY q.vec_id
+             ORDER BY {sql_d2_int('q.qv', 'c.cv', dim)}, c.cid) AS rnk
+  FROM (SELECT * FROM lists WHERE vec_id < {N_QUERIES}) q
+  CROSS JOIN {cf} c),
+npg(np) AS (VALUES {nps}),
+pairs AS (
+  SELECT g.np, p.query_id, cand.vec_id AS neighbor_id,
+         {dot} / (p.qnorm * cand.norm) AS sim
+  FROM proberanks p JOIN npg g ON p.rnk <= g.np
+  JOIN lists cand ON cand.cid = p.cid AND cand.vec_id <> p.query_id),
+rankednp AS (
+  SELECT np, query_id, neighbor_id,
+         row_number() OVER (PARTITION BY np, query_id
+                            ORDER BY sim DESC, neighbor_id) AS rank
+  FROM pairs)
+SELECT np, query_id, neighbor_id FROM rankednp WHERE rank <= {TOP_K}"""
+    return f"""
+WITH exact AS ({_COSINE_ORACLE}),
+ivfnp AS ({ivfnp}),
+npg2(np) AS (VALUES {nps})
+SELECT n.np,
+       CAST(count(i.neighbor_id) AS BIGINT) AS hits,
+       CAST(count(*) AS BIGINT) AS n_truth,
+       CAST((count(i.neighbor_id) * {MICRO}) // count(*) AS BIGINT)
+         AS recall_micro
+FROM npg2 n CROSS JOIN exact e
+LEFT JOIN ivfnp i ON i.np = n.np AND i.query_id = e.query_id
+                 AND i.neighbor_id = e.neighbor_id
+GROUP BY n.np
+"""
+
+
+@query("similarity_ivf_nprobe_recall", oracle=_nprobe_sweep_oracle())
+def similarity_ivf_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF speed/recall tuning curve: recall@k of the IVF index against
+    exact cosine ground truth at every nprobe in {NPROBE_GRID} — THE
+    operating-point decision for an ANN index at 100 TB (each +1 nprobe
+    costs ~1/k more corpus scanned; this query shows what it buys).
+    Composition contract (`similarity_ann_recall_eval` precedent): the
+    exact side IS the registered `similarity_cosine_topk`, the IVF side
+    shares the fitted index and assignment shape of
+    `similarity_ivf_topk`, and the oracle composes the same texts, so
+    the sweep can never drift from the operators it evaluates.
+
+    Scale: one assignment pass (persisted — all nprobe points reuse it),
+    probe fan-out by IN-ROW explode over the sorted centroid structs
+    (grid × nprobe rows per query, no extra join), the candidate join
+    co-partitioned on cluster id with the bounded probe side broadcast,
+    and per-(np, query) rank windows over ≤ nprobe/k of the corpus."""
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+    )
+    centroids = ivf_index(emb, cache_key=sf_dir)
+    qemb = emb.withColumn("qv", qint("vec"))
+    best = F.array_min(d2_structs_int("qv", centroids))
+    lists = persist_tracked(
+        with_norm(
+            qemb.select(
+                "vec_id", "vec", "qv", best["cluster_id"].alias("cluster_id")
+            )
+        )
+    )
+    qry = lists.filter(F.col("vec_id") < N_QUERIES)
+    max_np = max(NPROBE_GRID)
+    probes = qry.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("vec").alias("qvec"),
+        F.col("norm").alias("qnorm"),
+        F.posexplode(
+            F.slice(F.array_sort(d2_structs_int("qv", centroids)), 1, max_np)
+        ).alias("pos0", "probe"),
+    ).select(
+        "query_id",
+        "qvec",
+        "qnorm",
+        (F.col("pos0") + 1).alias("rnk"),
+        F.col("probe.cluster_id").alias("cluster_id"),
+    )
+    np_arr = F.array(*[F.lit(n) for n in NPROBE_GRID])
+    pairs = (
+        lists.join(F.broadcast(probes), "cluster_id")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .withColumn("np", F.explode(np_arr))
+        .filter(F.col("rnk") <= F.col("np"))
+        .select(
+            "np",
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            (dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias(
+                "sim"
+            ),
+        )
+    )
+    w = Window.partitionBy("np", "query_id").orderBy(
+        F.desc("sim"), F.asc("neighbor_id")
+    )
+    ivf_np = (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .select("np", "query_id", F.col("neighbor_id").alias("ivf_id"))
+    )
+    exact = (
+        similarity_cosine_topk(spark, sf_dir)
+        .select("query_id", "neighbor_id")
+        .withColumn("np", F.explode(np_arr))
+    )
+    joined = exact.join(
+        ivf_np,
+        (exact.np == ivf_np.np)
+        & (exact.query_id == ivf_np.query_id)
+        & (exact.neighbor_id == ivf_np.ivf_id),
+        "left",
+    ).select(exact.np, "ivf_id")
+    return joined.groupBy("np").agg(
+        F.count("ivf_id").cast("long").alias("hits"),
+        F.count(F.lit(1)).cast("long").alias("n_truth"),
+        F.expr(f"(count(ivf_id) * {MICRO}) div count(1)")
+        .cast("long")
+        .alias("recall_micro"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Recall@k of an ANN arm against the exact cosine top-k
+# --------------------------------------------------------------------------
+def recall_at_k(
+    spark: SparkSession,
+    sf_dir: str,
+    approx: DataFrame,
+    grid: DataFrame | None = None,
+) -> DataFrame:
+    """Per-query recall@TOP_K of an ANN arm: `approx` is the arm's top-k
+    as (grid keys…, query_id, neighbor_id); every exact neighbor
+    (`similarity_cosine_topk`) is looked up in it with a LEFT join, so a
+    query the arm misses entirely still reports 0 hits.  Output: one row
+    per query, (query_id, k, n_hits, recall_ppm).
+
+    An arm that sweeps a parameter passes the swept values as `grid`
+    (one row per point, e.g. Matryoshka's truncation dims): the exact
+    set is crossed with it (a broadcast literal relation) and each
+    (grid keys…, query_id) row reports its keys in place of k.
+
+    Exact integers on both engines; :data:`RECALL_AT_K_SQL` is the twin."""
+    truth = similarity_cosine_topk(spark, sf_dir).select(
+        "query_id", "neighbor_id"
+    )
+    keys, k = ["query_id"], [F.lit(TOP_K).cast("int").alias("k")]
+    if grid is not None:
+        truth = truth.crossJoin(F.broadcast(grid))
+        keys, k = grid.columns + keys, []
+    match = [F.col(f"e.{c}") == F.col(f"a.{c}") for c in keys + ["neighbor_id"]]
+    hits = (
+        truth.alias("e")
+        .join(approx.alias("a"), reduce(and_, match), "left")
+        .groupBy(*[F.col(f"e.{c}").alias(c) for c in keys])
+        .agg(F.count(F.col("a.neighbor_id")).cast("long").alias("n_hits"))
+    )
+    return hits.select(
+        *keys,
+        *k,
+        "n_hits",
+        F.expr(f"CAST((n_hits * {MICRO}) div {TOP_K} AS BIGINT)").alias(
+            "recall_ppm"
+        ),
+    )
+
+
+#: DuckDB twin of :func:`recall_at_k` (no grid): the tail of a recall
+#: oracle's CTE chain.  It reads `ext` (query_id, neighbor_id, sim: the
+#: exact cosine of every candidate) and `apk` (query_id, neighbor_id: the
+#: arm's top-k), ranks `ext` into the exact top-k and scores the arm.
+RECALL_AT_K_SQL = f"""epk AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           row_number() OVER (PARTITION BY query_id
+                              ORDER BY sim DESC, neighbor_id) AS rn
+    FROM ext) WHERE rn <= {TOP_K}),
+hits AS (
+  SELECT e.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hits
+  FROM epk e LEFT JOIN apk a
+    ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
+  GROUP BY e.query_id)
+SELECT query_id, CAST({TOP_K} AS INT) AS k, n_hits,
+       CAST((n_hits * {MICRO}) // {TOP_K} AS BIGINT) AS recall_ppm
+FROM hits
+"""
+
+
+# --------------------------------------------------------------------------
+# SQ8 (int8 scalar quantization) ADC search + recall vs exact
+# --------------------------------------------------------------------------
+def _sq8_recall_oracle() -> str:
+    dim = VEC_DIM
+    dot = (
+        f"list_sum(list_transform(generate_series(1, {dim}), "
+        "i -> c.qv[i] * q.vec[i]))"
+    )
+    xdot = (
+        f"list_sum(list_transform(generate_series(1, {dim}), "
+        "i -> q.vec[i] * c.vec[i]))"
+    )
+    return f"""
+WITH v AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+n AS (
+  SELECT vec_id, vec,
+         sqrt(list_sum(list_transform(generate_series(1, {dim}),
+                                      i -> vec[i] * vec[i]))) AS norm
+  FROM v),
+c AS (
+  SELECT vec_id, vec, norm,
+         greatest(list_max(list_transform(vec, x -> abs(x))), 1e-12) / 127.0
+           AS scale
+  FROM n),
+cq AS (
+  SELECT vec_id, vec, norm, scale,
+         list_transform(vec, x -> round(x / scale)) AS qv
+  FROM c),
+apx AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         (c.scale * {dot}) / (q.norm * c.norm) AS sim
+  FROM n q JOIN cq c ON c.vec_id <> q.vec_id
+  WHERE q.vec_id < {N_QUERIES}),
+apk AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           row_number() OVER (PARTITION BY query_id
+                              ORDER BY sim DESC, neighbor_id) AS rn
+    FROM apx) WHERE rn <= {TOP_K}),
+ext AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         {xdot} / (q.norm * c.norm) AS sim
+  FROM n q JOIN n c ON c.vec_id <> q.vec_id
+  WHERE q.vec_id < {N_QUERIES}),
+{RECALL_AT_K_SQL}"""
+
+
+@query("similarity_sq8_recall", oracle=_sq8_recall_oracle())
+def similarity_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQ8 asymmetric-distance (ADC) search + recall@k vs exact: score
+    every query (raw doubles) against the int8-quantized corpus —
+    sim ≈ (scale·Σq̂ᵢxᵢ)/(‖x‖‖c‖) — and report per-query overlap with
+    the exact cosine top-k.  Completes the quantized-search family:
+    IVF (`similarity_ivf_topk` + nprobe recall) prunes CANDIDATES, PQ
+    (`similarity_pq_topk` + distortion) and SQ8 (this + the int8
+    distortion audit) compress the SCORING; SQ8 is the 4×-smaller
+    index tier every production ANN stack offers.
+
+    Engine determinism: the quantizer is `similarity_quantize_int8`'s
+    exact formula (round(x/scale), IEEE ops bit-identical on both
+    engines), the ADC fold is one shared in-row op tree, and ties break
+    on neighbor_id — so approx AND exact rankings are bit-reproducible,
+    making recall an exact integer.
+
+    Scale: the query set broadcasts (N_QUERIES rows); the candidate
+    stream quantizes in-row and never shuffles; both rank windows are
+    (n_queries × k)-bounded."""
+
+    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+    )
+    cand = with_norm(emb)
+    scale = (
+        F.greatest(
+            F.array_max(F.transform("vec", lambda x: F.abs(x))), F.lit(1e-12)
+        )
+        / 127.0
+    )
+    cq = cand.withColumn("scale", scale).withColumn(
+        "qv", F.transform("vec", lambda x: F.round(x / F.col("scale")))
+    )
+    qry = with_norm(emb.filter(F.col("vec_id") < N_QUERIES)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("vec").alias("qvec"),
+        F.col("norm").alias("qnorm"),
+    )
+    apx = (
+        cq.crossJoin(F.broadcast(qry))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            (
+                (F.col("scale") * dot("qv", "qvec"))
+                / (F.col("qnorm") * F.col("norm"))
+            ).alias("sim"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    apk = (
+        apx.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= TOP_K)
+        .select("query_id", "neighbor_id")
+    )
+    return recall_at_k(spark, sf_dir, apk)
+
+
+# --------------------------------------------------------------------------
+# Binary (1-bit) quantization ADC recall
+# --------------------------------------------------------------------------
+def _bq_recall_oracle() -> str:
+    dim = VEC_DIM
+    sgn_dot = (
+        f"list_sum(list_transform(generate_series(1, {dim}), "
+        "i -> (CASE WHEN c.vec[i] >= 0 THEN 1.0 ELSE -1.0 END) * q.vec[i]))"
+    )
+    xdot = (
+        f"list_sum(list_transform(generate_series(1, {dim}), "
+        "i -> q.vec[i] * c.vec[i]))"
+    )
+    return f"""
+WITH v AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+n AS (
+  SELECT vec_id, vec,
+         sqrt(list_sum(list_transform(generate_series(1, {dim}),
+                                      i -> vec[i] * vec[i]))) AS norm
+  FROM v),
+apx AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         {sgn_dot} / (q.norm * {float(dim) ** 0.5!r}) AS sim
+  FROM n q JOIN n c ON c.vec_id <> q.vec_id
+  WHERE q.vec_id < {N_QUERIES}),
+apk AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           row_number() OVER (PARTITION BY query_id
+                              ORDER BY sim DESC, neighbor_id) AS rn
+    FROM apx) WHERE rn <= {TOP_K}),
+ext AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         {xdot} / (q.norm * c.norm) AS sim
+  FROM n q JOIN n c ON c.vec_id <> q.vec_id
+  WHERE q.vec_id < {N_QUERIES}),
+{RECALL_AT_K_SQL}"""
+
+
+@query("similarity_bq_recall", oracle=_bq_recall_oracle())
+def similarity_bq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary-quantization (1-bit) ADC search + recall@k vs exact: each
+    corpus vector compresses to its SIGN pattern (64 dims → 8 bytes —
+    a 64× smaller index than raw doubles), queries score against the
+    ±1 pattern with raw-precision values (asymmetric distance), and the
+    per-query overlap with the exact cosine top-k is reported.  Completes
+    the quantized-search ladder — IVF prunes candidates; PQ (8×) / SQ8
+    (4×) / BQ (64×, this query) compress scoring — BQ being the modern
+    in-memory prefilter tier (RaBitQ, Milvus BQ, SimHash-style sketches)
+    that a rerank pass then corrects.
+
+    Engine determinism: the quantizer is a sign test (x ≥ 0 → +1 — no
+    rounding at all), the ADC fold is one shared in-row op tree divided
+    by the exact constant ‖q‖·√dim, ties break on neighbor_id; recall is
+    an exact integer.
+
+    Scale: identical posture to `similarity_sq8_recall` — queries
+    broadcast (N_QUERIES rows), candidates quantize in-row and never
+    shuffle, rank windows are (n_queries × k)-bounded."""
+
+    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+    )
+    cand = emb.select(
+        "vec_id",
+        F.transform(
+            "vec", lambda x: F.when(x >= 0, 1.0).otherwise(-1.0)
+        ).alias("sv"),
+    )
+    qry = with_norm(emb.filter(F.col("vec_id") < N_QUERIES)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("vec").alias("qvec"),
+        F.col("norm").alias("qnorm"),
+    )
+    apx = (
+        cand.crossJoin(F.broadcast(qry))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            (dot("sv", "qvec") / (F.col("qnorm") * float(VEC_DIM) ** 0.5)).alias(
+                "sim"
+            ),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("sim"), F.asc("neighbor_id")
+    )
+    apk = (
+        apx.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= TOP_K)
+        .select("query_id", "neighbor_id")
+    )
+    return recall_at_k(spark, sf_dir, apk)
+
+
+# --------------------------------------------------------------------------
+# BQ prefilter + exact rerank recall (the 1-bit tier's production shape)
+# --------------------------------------------------------------------------
+#: Shortlist depth for the exact rerank (matches the PQ pipeline's,
+#: so the two compressed prefilters are directly comparable).
+BQ_SHORTLIST = 50
+
+
+def _bq_rerank_oracle() -> str:
+    dim = VEC_DIM
+    sgn_dot = (
+        f"list_sum(list_transform(generate_series(1, {dim}), "
+        "i -> (CASE WHEN c.vec[i] >= 0 THEN 1.0 ELSE -1.0 END) * q.vec[i]))"
+    )
+    xdot = (
+        f"list_sum(list_transform(generate_series(1, {dim}), "
+        "i -> q.vec[i] * c.vec[i]))"
+    )
+    return f"""
+WITH v AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+n AS (
+  SELECT vec_id, vec,
+         sqrt(list_sum(list_transform(generate_series(1, {dim}),
+                                      i -> vec[i] * vec[i]))) AS norm
+  FROM v),
+apx AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         {sgn_dot} AS score
+  FROM n q JOIN n c ON c.vec_id <> q.vec_id
+  WHERE q.vec_id < {N_QUERIES}),
+short AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           row_number() OVER (PARTITION BY query_id
+                              ORDER BY score DESC, neighbor_id) AS rn
+    FROM apx) WHERE rn <= {BQ_SHORTLIST}),
+rer AS (
+  SELECT s.query_id, s.neighbor_id,
+         {xdot.replace('q.vec', 'qn.vec').replace('c.vec', 'cn.vec')}
+           / (qn.norm * cn.norm) AS sim
+  FROM short s
+  JOIN n qn ON qn.vec_id = s.query_id
+  JOIN n cn ON cn.vec_id = s.neighbor_id),
+apk AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           row_number() OVER (PARTITION BY query_id
+                              ORDER BY sim DESC, neighbor_id) AS rn
+    FROM rer) WHERE rn <= {TOP_K}),
+ext AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         {xdot} / (q.norm * c.norm) AS sim
+  FROM n q JOIN n c ON c.vec_id <> q.vec_id
+  WHERE q.vec_id < {N_QUERIES}),
+{RECALL_AT_K_SQL}"""
+
+
+@query("similarity_bq_rerank_recall", oracle=_bq_rerank_oracle())
+def similarity_bq_rerank_recall(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """BQ prefilter + exact rerank recall@k — the 1-bit tier's production
+    shape: the sign-pattern ADC ranks cheaply (8 bytes/vector scanned),
+    the top-{BQ_SHORTLIST} shortlist reranks with exact cosine, and
+    per-query recall vs exact is reported.  `similarity_bq_recall`
+    measures the raw ADC ranking (the floor); deployments always rerank
+    (RaBitQ's own protocol), and the DELTA between the two queries is
+    the rerank's value — the same two-stage story `similarity_pq_topk`
+    tells at 4 bits, at matched shortlist depth so the tiers compare
+    directly.
+
+    Exactness: sign test + integer-free shared double folds, ties on
+    neighbor_id; recall is an exact integer.  Scale: the ADC scan never
+    shuffles; the rerank fetches full vectors for shortlist rows only;
+    rank windows are (n_queries × shortlist)-bounded."""
+
+    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+    )
+    cand = with_norm(emb).withColumn(
+        "sv",
+        F.transform("vec", lambda x: F.when(x >= 0, 1.0).otherwise(-1.0)),
+    )
+    qry = with_norm(emb.filter(F.col("vec_id") < N_QUERIES)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("vec").alias("qvec"),
+        F.col("norm").alias("qnorm"),
+    )
+    apx = (
+        cand.crossJoin(F.broadcast(qry))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "qvec",
+            "qnorm",
+            F.col("vec_id").alias("neighbor_id"),
+            "vec",
+            "norm",
+            dot("sv", "qvec").alias("score"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), F.asc("neighbor_id")
+    )
+    shortlist = apx.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= BQ_SHORTLIST
+    )
+    sim = (dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim")
+    w2 = Window.partitionBy("query_id").orderBy(
+        F.desc("sim"), F.asc("neighbor_id")
+    )
+    apk = (
+        shortlist.select("query_id", "neighbor_id", sim)
+        .withColumn("rank", F.row_number().over(w2))
+        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "neighbor_id")
+    )
+    return recall_at_k(spark, sf_dir, apk)
+
+
+# --------------------------------------------------------------------------
+# IVF + PQ composed search (prune → ADC → rerank) + recall vs exact
+# --------------------------------------------------------------------------
+
+
+def _ivfpq_recall_oracle() -> str:
+    dim, m = VEC_DIM, PQ_M
+    sd = dim // m
+    cf, pcf = f"c{IVF_ITERS}", f"pc{PQ_ITERS}"
+    cvd = f"CAST(c.cv[i] AS DOUBLE)/{KM_SCALE}.0"
+    dot = (
+        f"list_sum(list_transform(generate_series(1, {dim}), "
+        "i -> q.vec[i]*c.vec[i]))"
+    )
+    return f"""{sql_km_setup()}{sql_ivf_fit_ctes(IVF_CLUSTERS, IVF_ITERS, dim)}{_sql_pq_fit_ctes(m, PQ_K, PQ_ITERS, sd, prefix="p")},
+nrm AS (
+  SELECT vec_id, vec,
+         sqrt(list_sum(list_transform(generate_series(1, {dim}),
+                                      i -> vec[i]*vec[i]))) AS norm
+  FROM v),
+asg AS (
+  SELECT vec_id, cid FROM (
+    SELECT q0.vec_id, c.cid,
+           row_number() OVER (PARTITION BY q0.vec_id
+               ORDER BY {sql_d2_int('q0.qv', 'c.cv', dim)}, c.cid) AS rn
+    FROM q0 CROSS JOIN {cf} c) WHERE rn = 1),
+cs AS (
+  SELECT q0.vec_id, g.j,
+         list_transform(generate_series(1, {sd}), i -> q0.qv[g.j*{sd}+i]) AS sv
+  FROM q0, generate_series(0, {m - 1}) g(j)),
+codes AS (
+  SELECT vec_id, j, cid AS code FROM (
+    SELECT cs.vec_id, cs.j, c.cid,
+           row_number() OVER (PARTITION BY cs.vec_id, cs.j
+               ORDER BY {sql_d2_int('cs.sv', 'c.cv', sd)}, c.cid) AS rn
+    FROM cs JOIN {pcf} c ON c.j = cs.j) WHERE rn = 1),
+cl AS (SELECT vec_id, list(code ORDER BY j) AS codes FROM codes GROUP BY vec_id),
+qn AS (SELECT n.*, q0.qv FROM nrm n JOIN q0 USING (vec_id)
+       WHERE n.vec_id < {N_QUERIES}),
+probes AS (
+  SELECT vec_id AS query_id, cid FROM (
+    SELECT q.vec_id, c.cid,
+           row_number() OVER (PARTITION BY q.vec_id
+               ORDER BY {sql_d2_int('q.qv', 'c.cv', dim)}, c.cid) AS rn
+    FROM qn q CROSS JOIN {cf} c) WHERE rn <= {IVF_NPROBE}),
+qtab AS (
+  SELECT q.vec_id AS query_id, c.j, c.cid,
+         list_sum(list_transform(generate_series(1, {sd}),
+           i -> (q.vec[c.j*{sd}+i] - {cvd})
+              * (q.vec[c.j*{sd}+i] - {cvd}))) AS d2
+  FROM qn q CROSS JOIN {pcf} c),
+qtl AS (SELECT query_id, j, list(d2 ORDER BY cid) AS tr
+        FROM qtab GROUP BY query_id, j),
+qt2 AS (SELECT query_id, list(tr ORDER BY j) AS tab FROM qtl GROUP BY query_id),
+adc AS (
+  SELECT p.query_id, a.vec_id AS neighbor_id,
+         list_sum(list_transform(generate_series(1, {m}),
+                  j -> t.tab[j][cl.codes[j] + 1])) AS adc_d2
+  FROM probes p
+  JOIN asg a ON a.cid = p.cid AND a.vec_id <> p.query_id
+  JOIN cl ON cl.vec_id = a.vec_id
+  JOIN qt2 t ON t.query_id = p.query_id),
+short AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           row_number() OVER (PARTITION BY query_id
+                              ORDER BY adc_d2, neighbor_id) AS rn
+    FROM adc) WHERE rn <= {PQ_SHORTLIST}),
+rer AS (
+  SELECT s.query_id, s.neighbor_id,
+         list_sum(list_transform(generate_series(1, {dim}),
+                  i -> q.vec[i]*c.vec[i])) / (q.norm * c.norm) AS sim
+  FROM short s
+  JOIN nrm q ON q.vec_id = s.query_id
+  JOIN nrm c ON c.vec_id = s.neighbor_id),
+apk AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           row_number() OVER (PARTITION BY query_id
+                              ORDER BY sim DESC, neighbor_id) AS rn
+    FROM rer) WHERE rn <= {TOP_K}),
+ext AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         {dot} / (q.norm * c.norm) AS sim
+  FROM nrm q JOIN nrm c ON c.vec_id <> q.vec_id
+  WHERE q.vec_id < {N_QUERIES}),
+{RECALL_AT_K_SQL}"""
+
+
+@query("similarity_ivfpq_recall", oracle=_ivfpq_recall_oracle())
+def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF+PQ composed search + recall@k vs exact — the production vector
+    index (FAISS `IndexIVFPQ`) assembled from the repo's registered
+    halves: the engine-exact IVF coarse quantizer prunes to nprobe lists,
+    PQ ADC scores only the pruned candidates from 4-bit codes, the
+    shortlist reranks exactly, and per-query recall against exact cosine
+    is reported.  `similarity_ivf_topk` and `similarity_pq_topk` each
+    measure one half; this measures the composition a deployment
+    actually runs (errors COMPOUND: list pruning can evict a vector that
+    PQ would have scored well, which no single-half recall shows).
+
+    Non-residual composition (IVFFlat+PQ): codes quantize raw vectors,
+    not per-list residuals — residual encoding changes constants, not
+    plan shape.  Oracle-paired end-to-end: both fit chains are the
+    engine-exact integer k-means (the PQ chain prefixed `p…` so the two
+    coexist in one CTE tree), assignment/encoding are integer argmins,
+    ADC folds are shared double op trees.
+
+    Scale: candidates scored = nprobe/k of the corpus at 4 bits/dim·m;
+    the probe/candidate join co-partitions on cid; rerank touches
+    shortlist rows only; rank windows are (n_queries × k)-bounded."""
+
+    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+    )
+    cents = ivf_index(emb, cache_key=sf_dir)
+    books = pq_index(emb, cache_key=sf_dir)
+    qemb = with_norm(emb).withColumn("qv", qint("vec"))
+    best = F.array_min(d2_structs_int("qv", cents))
+    cand = qemb.select(
+        "vec_id",
+        "vec",
+        "norm",
+        best["cluster_id"].alias("cid"),
+        _pq_codes("vec", books).alias("codes"),
+    ).transform(persist_tracked)
+    qry = (
+        cand.filter(F.col("vec_id") < N_QUERIES)
+        .withColumn("qv", qint("vec"))
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.col("vec").alias("qvec"),
+            F.col("norm").alias("qnorm"),
+            _pq_query_table("vec", codebooks_to_float(books)).alias("qtab"),
+            F.explode(
+                F.slice(
+                    F.array_sort(d2_structs_int("qv", cents)), 1, IVF_NPROBE
+                )
+            ).alias("probe"),
+        )
+        .select(
+            "query_id", "qvec", "qnorm", "qtab",
+            F.col("probe")["cluster_id"].alias("cid"),
+        )
+    )
+    adc = (
+        cand.join(F.broadcast(qry), "cid")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "qvec",
+            "qnorm",
+            F.col("vec_id").alias("neighbor_id"),
+            "vec",
+            "norm",
+            F.aggregate(
+                F.zip_with(
+                    "codes", "qtab", lambda code, row: F.element_at(row, code + 1)
+                ),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            ).alias("adc_d2"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.asc("adc_d2"), F.asc("neighbor_id")
+    )
+    shortlist = adc.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= PQ_SHORTLIST
+    )
+    sim = (dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim")
+    w2 = Window.partitionBy("query_id").orderBy(
+        F.desc("sim"), F.asc("neighbor_id")
+    )
+    apk = (
+        shortlist.select("query_id", "neighbor_id", sim)
+        .withColumn("rank", F.row_number().over(w2))
+        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "neighbor_id")
+    )
+    return recall_at_k(spark, sf_dir, apk)
+
+
+# --------------------------------------------------------------------------
+# Matryoshka truncated-dimension recall
+# --------------------------------------------------------------------------
+#: Truncation points evaluated against the full-dimension exact ranking.
+MRL_DIMS = (8, 16, 32)
+
+
+def _mrl_recall_oracle() -> str:
+    full = VEC_DIM
+    parts = []
+    for d in MRL_DIMS:
+        tdot = (
+            f"list_sum(list_transform(generate_series(1, {d}), "
+            "i -> q.vec[i] * c.vec[i]))"
+        )
+        tnrm_q = (
+            f"sqrt(list_sum(list_transform(generate_series(1, {d}), "
+            "i -> q.vec[i] * q.vec[i])))"
+        )
+        tnrm_c = (
+            f"sqrt(list_sum(list_transform(generate_series(1, {d}), "
+            "i -> c.vec[i] * c.vec[i])))"
+        )
+        parts.append(
+            f"""
+  SELECT {d} AS dim, q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         {tdot} / ({tnrm_q} * {tnrm_c}) AS sim
+  FROM v q JOIN v c ON c.vec_id <> q.vec_id
+  WHERE q.vec_id < {N_QUERIES}"""
+        )
+    apx = "\n  UNION ALL".join(parts)
+    xdot = (
+        f"list_sum(list_transform(generate_series(1, {full}), "
+        "i -> q.vec[i] * c.vec[i]))"
+    )
+    xn = (
+        f"sqrt(list_sum(list_transform(generate_series(1, {full}), "
+        "i -> {v}.vec[i] * {v}.vec[i])))"
+    )
+    return f"""
+WITH v AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+apx AS ({apx}),
+apk AS (
+  SELECT dim, query_id, neighbor_id FROM (
+    SELECT dim, query_id, neighbor_id,
+           row_number() OVER (PARTITION BY dim, query_id
+                              ORDER BY sim DESC, neighbor_id) AS rn
+    FROM apx) WHERE rn <= {TOP_K}),
+ext AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         {xdot} / ({xn.format(v='q')} * {xn.format(v='c')}) AS sim
+  FROM v q JOIN v c ON c.vec_id <> q.vec_id
+  WHERE q.vec_id < {N_QUERIES}),
+epk AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           row_number() OVER (PARTITION BY query_id
+                              ORDER BY sim DESC, neighbor_id) AS rn
+    FROM ext) WHERE rn <= {TOP_K}),
+grid AS (SELECT DISTINCT a.dim, e.query_id, e.neighbor_id
+         FROM epk e CROSS JOIN (SELECT DISTINCT dim FROM apk) a),
+hits AS (
+  SELECT g.dim, g.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hits
+  FROM grid g LEFT JOIN apk a
+    ON a.dim = g.dim AND a.query_id = g.query_id
+   AND a.neighbor_id = g.neighbor_id
+  GROUP BY g.dim, g.query_id)
+SELECT CAST(dim AS INT) AS dim, query_id, n_hits,
+       CAST((n_hits * {MICRO}) // {TOP_K} AS BIGINT) AS recall_ppm
+FROM hits
+"""
+
+
+@query("similarity_matryoshka_recall", oracle=_mrl_recall_oracle())
+def similarity_matryoshka_recall(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Matryoshka (truncated-dimension) recall: score every query on only
+    the FIRST d′ ∈ {MRL_DIMS} of the 64 embedding dimensions and report
+    per-(d′, query) overlap with the full-dimension exact top-k — the
+    evaluation behind MRL-style "shorten the embedding, shrink the index
+    d/d′ ×" deployments (Kusupati et al. 2022; OpenAI/Nomic ship exactly
+    this knob).  Complements the quantization ladder: BQ/SQ8/PQ compress
+    PRECISION, truncation compresses DIMENSION; real stacks stack both.
+
+    Engine determinism: prefix slices, one shared dot/norm op tree per
+    d′, neighbor_id tiebreaks — recall is an exact integer on both
+    engines.  Scale: queries broadcast; candidates never shuffle; the
+    per-d′ rank windows are (dims × n_queries × k)-bounded."""
+
+    # NO spread() here (r14 mover-table adjudication): this query re-reads
+    # the embeddings relation once per d′ arm with LIGHT per-row work
+    # (prefix dots), so the round-robin repartition × arms costs more than
+    # the parallelism buys — alternating same-window A/B measured spread
+    # +22% for this query (1.99 vs 1.63 median) while the heavy-fold
+    # family keeps it (§1e).  The composed full-dim gold keeps its own
+    # spread inside similarity_cosine_topk.
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+    )
+    per_dim = []
+    for d in MRL_DIMS:
+        sl = F.slice("vec", 1, d)
+        nrm = F.sqrt(
+            F.aggregate(
+                F.transform(sl, lambda x: x * x),
+                F.lit(0.0),
+                lambda a, x: a + x,
+            )
+        )
+        per_dim.append(
+            emb.select(
+                F.lit(d).cast("int").alias("dim"),
+                "vec_id",
+                sl.alias("tv"),
+                nrm.alias("tn"),
+            )
+        )
+    cand = per_dim[0]
+    for p in per_dim[1:]:
+        cand = cand.unionByName(p)
+    qry = cand.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("dim").alias("qdim"),
+        F.col("vec_id").alias("query_id"),
+        F.col("tv").alias("qv"),
+        F.col("tn").alias("qn"),
+    )
+    apx = (
+        cand.join(
+            F.broadcast(qry),
+            (F.col("dim") == F.col("qdim"))
+            & (F.col("vec_id") != F.col("query_id")),
+        )
+        .select(
+            "dim",
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            (dot("qv", "tv") / (F.col("qn") * F.col("tn"))).alias("sim"),
+        )
+    )
+    w = Window.partitionBy("dim", "query_id").orderBy(
+        F.desc("sim"), F.asc("neighbor_id")
+    )
+    apk = (
+        apx.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= TOP_K)
+        .select("dim", "query_id", "neighbor_id")
+    )
+    dims = spark.createDataFrame([(d,) for d in MRL_DIMS], "dim int")
+    return recall_at_k(spark, sf_dir, apk, grid=dims)
+
+
+# --------------------------------------------------------------------------
+# nDCG@k / MRR: ANN families vs the exact cosine ranking
+# --------------------------------------------------------------------------
+# Ranking quality as first-class queries, extending the recall@k pattern
+# (`similarity_ann_recall_eval`): recall says WHETHER the true neighbors
+# were found, nDCG/MRR say whether they were found IN THE RIGHT ORDER —
+# the number a retrieval cascade is actually tuned on.  Ground truth and
+# evaluated rankings are the registered queries themselves (exact cosine
+# vs LSH/IVF; the BM25 cascade's twin, `text_bm25_ndcg_eval`, is in
+# `operators/text.py`), and the oracles compose the registered ORACLE
+# TEXTS as CTEs, so the eval can never drift from what it evaluates.
+#
+# Position discount 1/log2(rank+1), graded gain (k − exact_rank + 1):
+# the standard nDCG instantiation for ANN eval (the exact top-k IS the
+# graded relevance — rank 1 is worth k, rank k is worth 1, absent = 0).
+#
+# Exactness: the only non-integer op in the DCG chain is the discount;
+# each per-position discounted gain is rounded to a MICRO integer before
+# accumulation.  All (gain ≤ 10, rank ≤ 10) term values sit ≥ 3.1e-3 from
+# the nearest rounding boundary (pinned by
+# tests/test_wave13.py::test_dcg_term_rounding_margin) — ~10 orders above
+# the engines' ln() last-ulp disagreement — so the rounded terms are
+# bit-identical and sums/divisions are exact integer arithmetic.
+
+
+def _dcg_term(gain_col, rank_col):
+    """round(gain·MICRO / log2(rank+1)) as BIGINT — the per-position
+    discounted gain, micro-rounded BEFORE accumulation (margin pinned by
+    test_dcg_term_rounding_margin)."""
+    return (
+        F.round(
+            gain_col.cast("double")
+            * float(MICRO)
+            / (F.log(rank_col.cast("double") + 1.0) / F.log(F.lit(2.0))),
+            0,
+        )
+        .cast("long")
+    )
+
+
+_SQL_DCG_TERM = (
+    "CAST(round(CAST({g} AS DOUBLE) * 1000000.0"
+    " / (ln(CAST({r} AS DOUBLE) + 1.0) / ln(2.0)), 0) AS BIGINT)"
+)
+
+
+def ranking_quality(
+    ann: DataFrame, exact: DataFrame, k: int, keys: list[str]
+) -> DataFrame:
+    """Shared nDCG@k / MRR evaluator: `ann` carries (keys…, query_id,
+    item, s) — the evaluated ranking; `exact` carries (query_id, item,
+    r) — the gold ranking.  Output: one row per (keys…, query_id) with
+    dcg_micro, ndcg_micro, first_hit_rank, rr_micro."""
+    gold = exact.select(
+        "query_id", "item", (F.lit(k) - F.col("r") + 1).alias("gain")
+    )
+    j = ann.join(gold, ["query_id", "item"], "left").select(
+        *keys,
+        "query_id",
+        "s",
+        F.coalesce("gain", F.lit(0)).alias("gain"),
+    )
+    dcg = j.groupBy(*keys, "query_id").agg(
+        F.sum(_dcg_term(F.col("gain"), F.col("s"))).cast("long").alias("dcg_micro"),
+        F.min(F.when(F.col("gain") > 0, F.col("s"))).alias("fh"),
+    )
+    idcg = exact.groupBy("query_id").agg(
+        F.sum(_dcg_term(F.lit(k) - F.col("r") + 1, F.col("r")))
+        .cast("long")
+        .alias("idcg_micro")
+    )
+    return dcg.join(idcg, "query_id").select(
+        *keys,
+        "query_id",
+        "dcg_micro",
+        F.expr(f"(dcg_micro * {MICRO}) div idcg_micro")
+        .cast("long")
+        .alias("ndcg_micro"),
+        F.coalesce("fh", F.lit(0)).cast("int").alias("first_hit_rank"),
+        F.coalesce(
+            F.expr(f"{MICRO} div fh"), F.lit(0)
+        )
+        .cast("long")
+        .alias("rr_micro"),
+    )
+
+
+SQL_RANKING_QUALITY = f"""
+j AS (
+  SELECT a.method, a.query_id, a.s,
+         coalesce({{k}} - g.r + 1, 0) AS gain
+  FROM ann a LEFT JOIN gold g
+    ON g.query_id = a.query_id AND g.item = a.item),
+dcg AS (
+  SELECT method, query_id,
+         CAST(sum({_SQL_DCG_TERM.format(g="gain", r="s")}) AS BIGINT)
+           AS dcg_micro,
+         min(CASE WHEN gain > 0 THEN s END) AS fh
+  FROM j GROUP BY method, query_id),
+idcg AS (
+  SELECT query_id,
+         CAST(sum({_SQL_DCG_TERM.format(g="{k} - r + 1", r="r")}) AS BIGINT)
+           AS idcg_micro
+  FROM gold GROUP BY query_id)
+SELECT d.method, d.query_id, d.dcg_micro,
+       CAST((d.dcg_micro * {MICRO}) // i.idcg_micro AS BIGINT) AS ndcg_micro,
+       CAST(coalesce(d.fh, 0) AS INT) AS first_hit_rank,
+       CAST(CASE WHEN d.fh IS NULL THEN 0 ELSE {MICRO} // d.fh END AS BIGINT)
+         AS rr_micro
+FROM dcg d JOIN idcg i USING (query_id)
+"""
+
+
+def _ann_ndcg_oracle() -> str:
+    return f"""
+WITH exact_q AS ({_COSINE_ORACLE}),
+lsh_q AS ({_ANN_LSH_ORACLE}),
+ivf_q AS ({_ivf_oracle()}),
+gold AS (SELECT query_id, neighbor_id AS item, rank AS r FROM exact_q),
+ann AS (
+  SELECT 'lsh' AS method, query_id, neighbor_id AS item, rank AS s FROM lsh_q
+  UNION ALL
+  SELECT 'ivf' AS method, query_id, neighbor_id AS item, rank AS s FROM ivf_q),
+{SQL_RANKING_QUALITY.format(k=TOP_K)}
+"""
+
+
+@query("similarity_ann_ndcg_eval", oracle=_ann_ndcg_oracle())
+def similarity_ann_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ranking quality of BOTH ANN families (hyperplane-LSH and IVF)
+    against the exact cosine top-k: per (method, query) nDCG@k — graded
+    gain k−exact_rank+1, 1/log2(rank+1) discount — plus MRR's reciprocal
+    first-hit rank.  Extends `similarity_ann_recall_eval` (set overlap)
+    to ORDER quality: an index can score recall 1.0 yet invert every
+    rank, and a retrieval cascade is tuned on nDCG, not recall.
+
+    Eval-by-composition (the recall-eval pattern): the three registered
+    queries run unchanged and meet on (query, item) — query-set × k
+    sized relations, one tiny join each; the oracle composes the same
+    three registered ORACLE TEXTS as CTEs, so the eval cannot drift from
+    the operators it evaluates.  Integer-exact: see the section comment
+    (micro-rounded per-position terms, integer nDCG/RR divisions)."""
+
+    # Pinned accessor: ranking_quality reads the gold in TWO branches
+    # (gain join + iDCG denominator) — see cosine_topk_gold_pinned.
+    exact = cosine_topk_gold_pinned(spark, sf_dir).select(
+        "query_id", F.col("neighbor_id").alias("item"), F.col("rank").alias("r")
+    )
+    lsh = similarity_ann_lsh(spark, sf_dir).select(
+        F.lit("lsh").alias("method"),
+        "query_id",
+        F.col("neighbor_id").alias("item"),
+        F.col("rank").alias("s"),
+    )
+    ivf = similarity_ivf_topk(spark, sf_dir).select(
+        F.lit("ivf").alias("method"),
+        "query_id",
+        F.col("neighbor_id").alias("item"),
+        F.col("rank").alias("s"),
+    )
+    return ranking_quality(
+        lsh.unionByName(ivf), exact, TOP_K, keys=["method"]
+    )
+
+
+# --------------------------------------------------------------------------
+# Reciprocal-rank fusion of the two ANN families, quality-evaluated
+# --------------------------------------------------------------------------
+#: The canonical RRF damping constant (Cormack et al. 2009).
+RRF_K = 60
+
+
+def _rrf_fusion_oracle() -> str:
+    return f"""
+WITH exact_q AS ({_COSINE_ORACLE}),
+lsh_q AS ({_ANN_LSH_ORACLE}),
+ivf_q AS ({_ivf_oracle()}),
+gold AS (SELECT query_id, neighbor_id AS item, rank AS r FROM exact_q),
+pool AS (
+  SELECT query_id, neighbor_id AS item, rank AS s FROM lsh_q
+  UNION ALL
+  SELECT query_id, neighbor_id AS item, rank AS s FROM ivf_q),
+rrf AS (
+  SELECT query_id, item,
+         CAST(sum({MICRO} // ({RRF_K} + s)) AS BIGINT) AS rrf_micro
+  FROM pool GROUP BY query_id, item),
+fused AS (
+  SELECT 'rrf' AS method, query_id, item,
+         CAST(row_number() OVER (PARTITION BY query_id
+                                 ORDER BY rrf_micro DESC, item) AS INT) AS s
+  FROM rrf),
+ann AS (SELECT * FROM fused WHERE s <= {TOP_K}),
+{SQL_RANKING_QUALITY.format(k=TOP_K)}
+"""
+
+
+@query("similarity_rrf_fusion_eval", oracle=_rrf_fusion_oracle())
+def similarity_rrf_fusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reciprocal-rank fusion of the LSH and IVF rankings, evaluated:
+    fuse by Σ 1/({RRF_K}+rank) over both registered ANN queries, re-rank,
+    and score the fused top-k against exact cosine with nDCG@k/MRR — the
+    hybrid-retrieval question ("is the fusion better than either index
+    alone?") answered next to `similarity_ann_ndcg_eval`'s per-family
+    rows, by the SAME evaluator, so the comparison is apples-to-apples.
+
+    RRF is rank-only (score-scale-free — why production stacks fuse
+    lexical+dense with it); contributions are exact integer reciprocals
+    1e6 // (K+rank), so fusion scores are integer sums, ties break on
+    item id, and both engines agree bit-for-bit.
+
+    Scale: inputs are the two registered queries' (n_queries × k)
+    outputs; fusion is a tiny groupBy + bounded window.  Eval-by-
+    composition: the oracle composes the registered oracle texts and the
+    shared ranking-quality SQL, so the eval cannot drift."""
+
+    # Pinned accessor: ranking_quality fans the gold into two branches.
+    exact = cosine_topk_gold_pinned(spark, sf_dir).select(
+        "query_id", F.col("neighbor_id").alias("item"), F.col("rank").alias("r")
+    )
+    pool = (
+        similarity_ann_lsh(spark, sf_dir)
+        .select("query_id", F.col("neighbor_id").alias("item"), F.col("rank").alias("s"))
+        .unionByName(
+            similarity_ivf_topk(spark, sf_dir).select(
+                "query_id",
+                F.col("neighbor_id").alias("item"),
+                F.col("rank").alias("s"),
+            )
+        )
+    )
+    rrf = pool.groupBy("query_id", "item").agg(
+        F.sum(F.expr(f"{MICRO} div ({RRF_K} + s)")).cast("long").alias("rrf_micro")
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("rrf_micro"), F.asc("item")
+    )
+    fused = (
+        rrf.withColumn("s", F.row_number().over(w))
+        .filter(F.col("s") <= TOP_K)
+        .select(F.lit("rrf").alias("method"), "query_id", "item", "s")
+    )
+    return ranking_quality(fused, exact, TOP_K, keys=["method"])
+
+
+# --------------------------------------------------------------------------
+# Compression frontier (method × compression × mean recall)
+# --------------------------------------------------------------------------
+#: Bytes per vector at raw float64 (the exact-scan baseline all
+#: compression factors divide): VEC_DIM dims × 8 B.
+_RAW_BYTES = VEC_DIM * 8
+
+
+#: method → bytes per stored vector.  LSH/IVF store full vectors (their
+#: saving is CANDIDATE pruning, not storage); PQ = 8 × 4-bit codes;
+#: SQ8 = 64 × int8; BQ = 64 sign bits; MRL-d′ = d′ float64 dims.
+_METHOD_BYTES = {
+    "lsh": 512,
+    "ivf": 512,
+    "pq": 4,
+    "ivfpq": 4,
+    "sq8": 64,
+    "bq": 8,
+    "mrl8": 64,
+    "mrl16": 128,
+    "mrl32": 256,
+}
+
+
+def _frontier_oracle() -> str:
+    nq, k = N_QUERIES, TOP_K
+    denom = nq * k
+    bytes_vals = ", ".join(
+        f"('{m}', {b})" for m, b in sorted(_METHOD_BYTES.items())
+    )
+    return f"""
+WITH exact_q AS ({_COSINE_ORACLE}),
+lsh_q AS ({_ANN_LSH_ORACLE}),
+ivf_q AS ({_ivf_oracle()}),
+pq_q AS ({_pq_oracle()}),
+sq8_r AS ({_sq8_recall_oracle()}),
+bq_r AS ({_bq_recall_oracle()}),
+mrl_r AS ({_mrl_recall_oracle()}),
+ivfpq_r AS ({_ivfpq_recall_oracle()}),
+gold AS (SELECT query_id, neighbor_id FROM exact_q),
+topk_hits AS (
+  SELECT 'lsh' AS method, CAST(count(*) AS BIGINT) AS hits
+  FROM lsh_q a JOIN gold g
+    ON g.query_id = a.query_id AND g.neighbor_id = a.neighbor_id
+  UNION ALL
+  SELECT 'ivf', CAST(count(*) AS BIGINT)
+  FROM ivf_q a JOIN gold g
+    ON g.query_id = a.query_id AND g.neighbor_id = a.neighbor_id
+  UNION ALL
+  SELECT 'pq', CAST(count(*) AS BIGINT)
+  FROM pq_q a JOIN gold g
+    ON g.query_id = a.query_id AND g.neighbor_id = a.neighbor_id),
+recall_hits AS (
+  SELECT 'sq8' AS method, CAST(sum(n_hits) AS BIGINT) AS hits FROM sq8_r
+  UNION ALL
+  SELECT 'bq', CAST(sum(n_hits) AS BIGINT) FROM bq_r
+  UNION ALL
+  SELECT 'ivfpq', CAST(sum(n_hits) AS BIGINT) FROM ivfpq_r
+  UNION ALL
+  SELECT 'mrl' || CAST(dim AS VARCHAR), CAST(sum(n_hits) AS BIGINT)
+  FROM mrl_r GROUP BY dim),
+allm AS (SELECT * FROM topk_hits UNION ALL SELECT * FROM recall_hits),
+bv(method, bytes_per_vec) AS (VALUES {bytes_vals})
+SELECT a.method,
+       CAST(b.bytes_per_vec AS BIGINT) AS bytes_per_vec,
+       CAST(({_RAW_BYTES} * {MICRO}) // b.bytes_per_vec AS BIGINT)
+         AS compression_micro,
+       a.hits AS total_hits,
+       CAST((a.hits * {MICRO}) // {denom} AS BIGINT) AS mean_recall_ppm
+FROM allm a JOIN bv b USING (method)
+"""
+
+
+@query("similarity_compression_frontier", oracle=_frontier_oracle())
+def similarity_compression_frontier(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The index-selection frontier: one row per compressed/approximate
+    search method — hyperplane LSH, IVF, PQ, IVF+PQ, SQ8, BQ, and the
+    Matryoshka truncations — with its bytes-per-vector, its compression
+    factor over raw float64, and its MEAN recall@k against the shared
+    exact-cosine ground truth.  This is the table a deployment reads to
+    pick an index for a memory budget ("64× smaller costs how much
+    recall?"), and the regression guard that keeps the whole ladder's
+    quality visible in ONE bench-tracked relation.
+
+    Pure composition: every ranking is the registered query run
+    unchanged; compression factors are configuration literals (the
+    methods' code sizes); recall is exact integer arithmetic.  The
+    oracle composes the registered oracle texts, so the frontier can
+    never drift from the operators it summarizes.
+
+    Scale: the inputs are (n_queries × k)-bounded outputs of their
+    queries; the frontier itself adds tiny joins and a 9-row output —
+    its cost is the sum of its parts, each individually plan-audited."""
+
+    gold = similarity_cosine_topk(spark, sf_dir).select(
+        "query_id", "neighbor_id"
+    )
+
+    def topk_hits(method: str, df: DataFrame) -> DataFrame:
+        return (
+            df.select("query_id", "neighbor_id")
+            .join(gold, ["query_id", "neighbor_id"])
+            .agg(F.count(F.lit(1)).cast("long").alias("hits"))
+            .select(F.lit(method).alias("method"), "hits")
+        )
+
+    def recall_hits(method: str, df: DataFrame) -> DataFrame:
+        return df.agg(F.sum("n_hits").cast("long").alias("hits")).select(
+            F.lit(method).alias("method"), "hits"
+        )
+
+    mrl = similarity_matryoshka_recall(spark, sf_dir)
+    parts = [
+        topk_hits("lsh", similarity_ann_lsh(spark, sf_dir)),
+        topk_hits("ivf", similarity_ivf_topk(spark, sf_dir)),
+        topk_hits("pq", similarity_pq_topk(spark, sf_dir)),
+        recall_hits("sq8", similarity_sq8_recall(spark, sf_dir)),
+        recall_hits("bq", similarity_bq_recall(spark, sf_dir)),
+        recall_hits("ivfpq", similarity_ivfpq_recall(spark, sf_dir)),
+        mrl.groupBy("dim")
+        .agg(F.sum("n_hits").cast("long").alias("hits"))
+        .select(
+            F.concat(F.lit("mrl"), F.col("dim").cast("string")).alias(
+                "method"
+            ),
+            "hits",
+        ),
+    ]
+    # Arm-overlap note (r13 verdict #4, investigated r14 and REJECTED):
+    # materializing the seven arms from a driver thread pool (persist
+    # each part, concurrent count() jobs, union the cached rows) measured
+    # 5.67 → 6.99 s median-of-5 same-host at sf0.1 — a regression, not a
+    # win.  The single union plan below already overlaps the arms: the
+    # DAG scheduler submits every READY stage of one job concurrently,
+    # and the arms' stages are independent until the final union, so the
+    # thread pool only added per-arm persist writes and per-job scheduling
+    # overhead on top of parallelism Spark was already providing.
+    allm = parts[0]
+    for p in parts[1:]:
+        allm = allm.unionByName(p)
+    bv = spark.createDataFrame(
+        sorted(_METHOD_BYTES.items()), "method string, bytes_per_vec long"
+    )
+    denom = N_QUERIES * TOP_K
+    return allm.join(F.broadcast(bv), "method").select(
+        "method",
+        "bytes_per_vec",
+        F.expr(f"({_RAW_BYTES} * {MICRO}) div bytes_per_vec")
+        .cast("long")
+        .alias("compression_micro"),
+        F.col("hits").alias("total_hits"),
+        F.expr(f"(hits * {MICRO}) div {denom}")
+        .cast("long")
+        .alias("mean_recall_ppm"),
     )

@@ -25,17 +25,15 @@ from iceberg_table_generator_spark.functions import collect
 from iceberg_table_generator_spark.functions.cache import persist_tracked
 from iceberg_table_generator_spark.functions.order import with_global_order
 from iceberg_table_generator_spark.functions.text import shingles, tokens, tokens_sql
-from iceberg_table_generator_spark.operators.relational import sql_dsum
-from iceberg_table_generator_spark.operators.wave9 import D38
-from iceberg_table_generator_spark.operators.wave10 import ROI_HEAD_K
-from iceberg_table_generator_spark.operators.wave13 import (
+from iceberg_table_generator_spark.operators.relational import D38, MICRO, sql_dsum
+from iceberg_table_generator_spark.operators.similarity import (
     SQL_RANKING_QUALITY,
     ranking_quality,
 )
+from iceberg_table_generator_spark.operators.wave10 import ROI_HEAD_K
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table, spread
 
-_MICRO = 1_000_000
 
 # Tiny per-language marker lexicons (public stopword lists, abridged).
 LANG_MARKERS = {
@@ -2654,7 +2652,7 @@ contrib AS (
   FROM g WHERE L >= {MATTR_W}),
 per_doc AS (
   SELECT doc_id, source,
-         CAST((sum(c) * {_MICRO}) // ((max(L) - {MATTR_W} + 1) * {MATTR_W})
+         CAST((sum(c) * {MICRO}) // ((max(L) - {MATTR_W} + 1) * {MATTR_W})
               AS BIGINT) AS mattr_micro
   FROM contrib GROUP BY doc_id, source)
 SELECT source,
@@ -2720,7 +2718,7 @@ def text_mattr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_doc = contrib.groupBy("doc_id", "source").agg(
         F.expr(
-            f"CAST((sum(c) * {_MICRO}) div "
+            f"CAST((sum(c) * {MICRO}) div "
             f"((max(L) - {MATTR_W} + 1) * {MATTR_W}) AS BIGINT)"
         ).alias("mattr_micro")
     )
@@ -2789,13 +2787,13 @@ SELECT s.lang,
        CAST(sum(s.toks) AS BIGINT) AS n_tokens,
        CAST(sum(s.oov) AS BIGINT) AS n_oov_words,
        CAST(sum(s.bytes) AS BIGINT) AS n_bytes,
-       CAST((sum(s.toks) * {_MICRO}) // count(*) AS BIGINT)
+       CAST((sum(s.toks) * {MICRO}) // count(*) AS BIGINT)
          AS fertility_micro,
-       CAST((sum(s.bytes) * {_MICRO}) // sum(s.toks) AS BIGINT)
+       CAST((sum(s.bytes) * {MICRO}) // sum(s.toks) AS BIGINT)
          AS bytes_per_token_micro,
-       CAST((sum(s.chars) * {_MICRO}) // sum(s.toks) AS BIGINT)
+       CAST((sum(s.chars) * {MICRO}) // sum(s.toks) AS BIGINT)
          AS chars_per_token_micro,
-       CAST((sum(s.oov) * {_MICRO}) // count(*) AS BIGINT) AS oov_ppm
+       CAST((sum(s.oov) * {MICRO}) // count(*) AS BIGINT) AS oov_ppm
 FROM scored s JOIN nd ON nd.lang = s.lang
 GROUP BY s.lang, nd.n_docs
 """
@@ -2892,16 +2890,16 @@ def text_subword_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
             "n_oov_words",
             "n_bytes",
-            F.expr(f"(n_tokens * {_MICRO}) div n_words")
+            F.expr(f"(n_tokens * {MICRO}) div n_words")
             .cast("long")
             .alias("fertility_micro"),
-            F.expr(f"(n_bytes * {_MICRO}) div n_tokens")
+            F.expr(f"(n_bytes * {MICRO}) div n_tokens")
             .cast("long")
             .alias("bytes_per_token_micro"),
-            F.expr(f"(_chars * {_MICRO}) div n_tokens")
+            F.expr(f"(_chars * {MICRO}) div n_tokens")
             .cast("long")
             .alias("chars_per_token_micro"),
-            F.expr(f"(n_oov_words * {_MICRO}) div n_words")
+            F.expr(f"(n_oov_words * {MICRO}) div n_words")
             .cast("long")
             .alias("oov_ppm"),
         )
@@ -2926,11 +2924,11 @@ scored AS (
 SELECT vocab_size, lang,
        CAST(count(*) AS BIGINT) AS n_words,
        CAST(sum(toks) AS BIGINT) AS n_tokens,
-       CAST((sum(toks) * {_MICRO}) // count(*) AS BIGINT)
+       CAST((sum(toks) * {MICRO}) // count(*) AS BIGINT)
          AS fertility_micro,
-       CAST((sum(bytes) * {_MICRO}) // sum(toks) AS BIGINT)
+       CAST((sum(bytes) * {MICRO}) // sum(toks) AS BIGINT)
          AS bytes_per_token_micro,
-       CAST((sum(oov) * {_MICRO}) // count(*) AS BIGINT) AS oov_ppm
+       CAST((sum(oov) * {MICRO}) // count(*) AS BIGINT) AS oov_ppm
 FROM scored GROUP BY vocab_size, lang
 """
 
@@ -2984,13 +2982,13 @@ def text_tokenizer_vocab_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.groupBy("vocab_size", "lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_words"),
         F.sum("toks").cast("long").alias("n_tokens"),
-        F.expr(f"(sum(toks) * {_MICRO}) div count(*)")
+        F.expr(f"(sum(toks) * {MICRO}) div count(*)")
         .cast("long")
         .alias("fertility_micro"),
-        F.expr(f"(sum(bytes) * {_MICRO}) div sum(toks)")
+        F.expr(f"(sum(bytes) * {MICRO}) div sum(toks)")
         .cast("long")
         .alias("bytes_per_token_micro"),
-        F.expr(f"(sum(oov) * {_MICRO}) div count(*)")
+        F.expr(f"(sum(oov) * {MICRO}) div count(*)")
         .cast("long")
         .alias("oov_ppm"),
     )
@@ -3173,9 +3171,9 @@ scored AS (
 SELECT fit_lang, eval_lang,
        CAST(count(*) AS BIGINT) AS n_words,
        CAST(sum(toks) AS BIGINT) AS n_tokens,
-       CAST((sum(toks) * {_MICRO}) // count(*) AS BIGINT)
+       CAST((sum(toks) * {MICRO}) // count(*) AS BIGINT)
          AS fertility_micro,
-       CAST((sum(oov) * {_MICRO}) // count(*) AS BIGINT) AS oov_ppm
+       CAST((sum(oov) * {MICRO}) // count(*) AS BIGINT) AS oov_ppm
 FROM scored GROUP BY fit_lang, eval_lang
 """
 
@@ -3241,10 +3239,10 @@ def text_crosslingual_vocab_transfer(
     return scored.groupBy("fit_lang", "eval_lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_words"),
         F.sum("toks").cast("long").alias("n_tokens"),
-        F.expr(f"(sum(toks) * {_MICRO}) div count(*)")
+        F.expr(f"(sum(toks) * {MICRO}) div count(*)")
         .cast("long")
         .alias("fertility_micro"),
-        F.expr(f"(sum(oov) * {_MICRO}) div count(*)")
+        F.expr(f"(sum(oov) * {MICRO}) div count(*)")
         .cast("long")
         .alias("oov_ppm"),
     )
@@ -3487,13 +3485,13 @@ SELECT lang,
        CAST(sum(chars) AS BIGINT) AS char_tokens,
        CAST(sum(proxy_toks) AS BIGINT) AS proxy_tokens,
        CAST((sum((length(seg) - length(replace(seg, {_SQL_SEP}, ''))) // 2)
-             * {_MICRO}) // count(*) AS BIGINT) AS bpe_fertility_micro,
-       CAST((sum(proxy_toks) * {_MICRO}) // count(*) AS BIGINT)
+             * {MICRO}) // count(*) AS BIGINT) AS bpe_fertility_micro,
+       CAST((sum(proxy_toks) * {MICRO}) // count(*) AS BIGINT)
          AS proxy_fertility_micro,
        CAST((sum((length(seg) - length(replace(seg, {_SQL_SEP}, ''))) // 2)
-             * {_MICRO}) // sum(chars) AS BIGINT) AS bpe_vs_char_ppm,
+             * {MICRO}) // sum(chars) AS BIGINT) AS bpe_vs_char_ppm,
        CAST((sum((length(seg) - length(replace(seg, {_SQL_SEP}, ''))) // 2)
-             * {_MICRO}) // sum(proxy_toks) AS BIGINT) AS bpe_vs_proxy_ppm
+             * {MICRO}) // sum(proxy_toks) AS BIGINT) AS bpe_vs_proxy_ppm
 FROM sc{BPE_MERGES}
 GROUP BY lang
 """
@@ -3541,16 +3539,16 @@ def text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("bpe_toks").cast("long").alias("bpe_tokens"),
         F.sum("chars").cast("long").alias("char_tokens"),
         F.sum("proxy_toks").cast("long").alias("proxy_tokens"),
-        F.expr(f"(sum(bpe_toks) * {_MICRO}) div count(1)")
+        F.expr(f"(sum(bpe_toks) * {MICRO}) div count(1)")
         .cast("long")
         .alias("bpe_fertility_micro"),
-        F.expr(f"(sum(proxy_toks) * {_MICRO}) div count(1)")
+        F.expr(f"(sum(proxy_toks) * {MICRO}) div count(1)")
         .cast("long")
         .alias("proxy_fertility_micro"),
-        F.expr(f"(sum(bpe_toks) * {_MICRO}) div sum(chars)")
+        F.expr(f"(sum(bpe_toks) * {MICRO}) div sum(chars)")
         .cast("long")
         .alias("bpe_vs_char_ppm"),
-        F.expr(f"(sum(bpe_toks) * {_MICRO}) div sum(proxy_toks)")
+        F.expr(f"(sum(bpe_toks) * {MICRO}) div sum(proxy_toks)")
         .cast("long")
         .alias("bpe_vs_proxy_ppm"),
     )
@@ -3589,7 +3587,7 @@ tot AS (
 arms AS ({arms})
 SELECT CAST(a.merge_rank AS INT) AS merge_rank, a.merged, a.n_uses,
        t.total_syms,
-       CAST((a.n_uses * {_MICRO}) // t.total_syms AS BIGINT) AS use_share_ppm
+       CAST((a.n_uses * {MICRO}) // t.total_syms AS BIGINT) AS use_share_ppm
 FROM arms a CROSS JOIN tot t
 """
 
@@ -3649,7 +3647,7 @@ def text_bpe_merge_utilization(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("m.merged").alias("merged"),
         F.col("m.n_uses").alias("n_uses"),
         "total_syms",
-        F.expr(f"(m.n_uses * {_MICRO}) div total_syms")
+        F.expr(f"(m.n_uses * {MICRO}) div total_syms")
         .cast("long")
         .alias("use_share_ppm"),
     )

@@ -816,165 +816,6 @@ def pipeline_quality_dedup_matrix(
 
 
 # --------------------------------------------------------------------------
-# Embedding-space geometry audits over deterministic adjacent pairs
-# --------------------------------------------------------------------------
-#: Fixed-point scale for cosine quantization: floor(cos * 1e6) is taken on
-#: the SAME IEEE double on both engines (identical in-row fold order — the
-#: `similarity_quantize_int8` precedent), so the integer is engine-exact
-#: and all cross-row accumulation stays integer.
-_COS_E6 = 1_000_000
-
-_SQL_PAIR_COS = """
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-pr AS (
-  SELECT a.vec_id AS ida, b.vec_id AS idb, a.vec AS va, b.vec AS vb
-  FROM v a JOIN v b ON b.vec_id = a.vec_id + 1
-  WHERE a.vec_id % 2 = 0),
-cs AS (
-  SELECT ida, idb,
-         list_sum(list_transform(generate_series(1, len(va)),
-                                 i -> va[i] * vb[i]))
-         / (greatest(sqrt(list_sum(list_transform(va, x -> x * x))), 1e-12)
-            * greatest(sqrt(list_sum(list_transform(vb, x -> x * x))), 1e-12))
-           AS cos
-  FROM pr)
-"""
-
-
-def _pair_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(ida, idb, cos): cosine similarity of the deterministic adjacent
-    pairs (vec_id 2i, 2i+1) — a fixed, reproducible sample of the
-    embedding space's pair geometry that needs NO random projections and
-    no all-pairs join: one 1-1 key join, in-row double folds in the exact
-    order DuckDB's list_sum uses (bit-identical results — the
-    `similarity_quantize_int8` precedent)."""
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    )
-    a = emb.filter(F.col("vec_id") % 2 == 0).select(
-        F.col("vec_id").alias("ida"), F.col("vec").alias("va")
-    )
-    b = emb.select(
-        (F.col("vec_id") - 1).alias("ida"),
-        F.col("vec_id").alias("idb"),
-        F.col("vec").alias("vb"),
-    )
-    pr = a.join(b, "ida")
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.greatest(  # noqa: E731
-        F.sqrt(
-            F.aggregate(
-                F.transform(c, lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-        F.lit(1e-12),
-    )
-    return pr.select(
-        "ida",
-        "idb",
-        (dot / (norm("va") * norm("vb"))).alias("cos"),
-    )
-
-
-_ISOTROPY_ORACLE = f"""{_SQL_PAIR_COS},
-q AS (
-  SELECT CAST(floor(cos * {_COS_E6}) AS BIGINT) AS ce6,
-         CAST(floor(abs(cos) * {_COS_E6}) AS BIGINT) AS ae6,
-         CASE WHEN cos < 0 THEN 1 ELSE 0 END AS neg
-  FROM cs)
-SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-       round(CAST(sum(ce6) AS DOUBLE) / count(*) / {_COS_E6}.0, 6)
-         AS mean_cos,
-       round(CAST(sum(ae6) AS DOUBLE) / count(*) / {_COS_E6}.0, 6)
-         AS mean_abs_cos,
-       round(CAST(sum(neg) AS DOUBLE) / count(*), 6) AS neg_share
-FROM q
-"""
-
-
-@query("similarity_isotropy_audit", oracle=_ISOTROPY_ORACLE)
-def similarity_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space isotropy audit: mean (and mean absolute) cosine
-    over the deterministic adjacent-pair sample, plus the negative-pair
-    share.  Anisotropic embedding spaces (mean cosine ≫ 0 — the common
-    'narrow cone' pathology) break cosine-threshold dedup and ANN recall
-    assumptions; this is the one-row health check run before trusting
-    either.  Random pairs approximate the population pair geometry; the
-    FIXED pairing makes the audit reproducible and oracle-exact.
-
-    Scale: one 1-1 key join + in-row folds; per-pair cosines quantize to
-    integers INSIDE the identical IEEE chain (floor(cos·1e6)), so the
-    cross-row sums are exact — no float accumulation anywhere."""
-    cs = _pair_cos(spark, sf_dir)
-    q = cs.select(
-        F.floor(F.col("cos") * _COS_E6).cast("long").alias("ce6"),
-        F.floor(F.abs("cos") * _COS_E6).cast("long").alias("ae6"),
-        F.when(F.col("cos") < 0, 1).otherwise(0).alias("neg"),
-    )
-    return q.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.round(
-            F.sum("ce6").cast("double") / F.count(F.lit(1)) / float(_COS_E6),
-            6,
-        ).alias("mean_cos"),
-        F.round(
-            F.sum("ae6").cast("double") / F.count(F.lit(1)) / float(_COS_E6),
-            6,
-        ).alias("mean_abs_cos"),
-        F.round(F.sum("neg").cast("double") / F.count(F.lit(1)), 6).alias(
-            "neg_share"
-        ),
-    )
-
-
-_COS_HIST_ORACLE = f"""{_SQL_PAIR_COS},
-b AS (
-  SELECT CAST(floor(cos * 10) AS INT) AS bucket FROM cs),
-tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM b)
-SELECT bucket, CAST(count(*) AS BIGINT) AS n_pairs,
-       round(CAST(count(*) AS DOUBLE) / any_value(n), 6) AS share
-FROM b CROSS JOIN tot
-GROUP BY bucket ORDER BY bucket
-"""
-
-
-@query("similarity_cos_pair_hist", oracle=_COS_HIST_ORACLE)
-def similarity_cos_pair_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cosine histogram over the deterministic pair sample (0.1-wide
-    buckets, floor(cos·10) ∈ [−10, 10]) — the distribution behind
-    `similarity_isotropy_audit`'s means: where the pair mass actually
-    sits decides usable near-dup thresholds (a threshold inside the bulk
-    of the distribution flags half the corpus).
-
-    Scale: same 1-1 join + in-row folds; the histogram folds onto the
-    fixed 21-value bucket domain (map-side combinable).  Bucketing
-    happens on the bit-identical double, so both engines bucket every
-    pair identically."""
-    cs = _pair_cos(spark, sf_dir)
-    b = cs.select(F.floor(F.col("cos") * 10).cast("int").alias("bucket"))
-    b = persist_tracked(b)
-    tot = b.agg(F.count(F.lit(1)).alias("n"))
-    return (
-        b.crossJoin(F.broadcast(tot))
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.round(F.count(F.lit(1)).cast("double") / F.max("n"), 6).alias(
-                "share"
-            ),
-        )
-        .orderBy("bucket")
-    )
-
-
-# --------------------------------------------------------------------------
 # Page's trend test (ordered alternative to Friedman, same rank machinery)
 # --------------------------------------------------------------------------
 PAGE_K = 5  # order priorities, hypothesized order = priority name order
@@ -1590,72 +1431,6 @@ def orders_priority_mix_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Embedding norm profile per label (ANN health: norm outliers break cosine)
-# --------------------------------------------------------------------------
-_NORM_PROFILE_ORACLE = """
-WITH v AS (
-  SELECT label,
-         CAST(floor(sqrt(list_sum(list_transform(
-             CAST(embedding AS DOUBLE[]), x -> x * x))) * 1000000)
-           AS BIGINT) AS ne6
-  FROM embeddings)
-SELECT label, CAST(count(*) AS BIGINT) AS n_vectors,
-       round(CAST(sum(ne6) AS DOUBLE) / count(*) / 1000000.0, 6)
-         AS mean_norm,
-       CAST(min(ne6) AS BIGINT) AS min_norm_e6,
-       CAST(max(ne6) AS BIGINT) AS max_norm_e6
-FROM v GROUP BY label ORDER BY label
-"""
-
-
-@query("similarity_norm_profile", oracle=_NORM_PROFILE_ORACLE)
-def similarity_norm_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label embedding L2-norm profile: count, mean, min, max — the
-    pre-flight check for every cosine-based operator in the similarity
-    family (a label whose norms collapse toward 0 turns cosine into
-    noise; a wide min-max spread says dot-product and cosine rankings
-    will disagree).  Norms quantize to integers INSIDE the identical
-    IEEE chain (floor(‖x‖·1e6) — the isotropy-audit pattern), so all
-    cross-row accumulation is exact.
-
-    Scale: one narrow in-row fold + one label-keyed map-combinable
-    aggregate; zero joins, zero windows."""
-    v = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "label",
-        F.floor(
-            F.sqrt(
-                F.aggregate(
-                    F.transform(
-                        F.col("embedding").cast("array<double>"),
-                        lambda x: x * x,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
-            * 1_000_000
-        )
-        .cast("long")
-        .alias("ne6"),
-    )
-    return (
-        v.groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n_vectors"),
-            F.round(
-                F.sum("ne6").cast("double")
-                / F.count(F.lit(1))
-                / 1_000_000.0,
-                6,
-            ).alias("mean_norm"),
-            F.min("ne6").alias("min_norm_e6"),
-            F.max("ne6").alias("max_norm_e6"),
-        )
-        .orderBy("label")
-    )
-
-
-# --------------------------------------------------------------------------
 # Per-source document-length quantiles (grouped crossing rule)
 # --------------------------------------------------------------------------
 _SOURCE_LEN_Q_ORACLE = """
@@ -1798,96 +1573,6 @@ def lineitem_ship_delay_by_priority(
         )
         .orderBy("pri")
     )
-
-
-# --------------------------------------------------------------------------
-# Label centroid cosine matrix (integer-quantized per-dimension sums)
-# --------------------------------------------------------------------------
-_CENTROID_DIM = 64  # embeddings vector width (TESTDATA.md)
-
-
-def _centroid_matrix_oracle() -> str:
-    sums = ", ".join(
-        f"CAST(sum(CAST(floor(CAST(embedding[{i + 1}] AS DOUBLE) * 1000000)"
-        f" AS BIGINT)) AS HUGEINT)"
-        for i in range(_CENTROID_DIM)
-    )
-    return f"""
-WITH c AS (
-  SELECT label, [{sums}] AS cv
-  FROM embeddings GROUP BY label),
-p AS (
-  SELECT a.label AS label_a, b.label AS label_b,
-         list_sum(list_transform(generate_series(1, {_CENTROID_DIM}),
-                                 i -> a.cv[i] * b.cv[i])) AS dot,
-         list_sum(list_transform(a.cv, x -> x * x)) AS na2,
-         list_sum(list_transform(b.cv, x -> x * x)) AS nb2
-  FROM c a JOIN c b ON a.label < b.label)
-SELECT label_a, label_b,
-       round(CAST(dot AS DOUBLE)
-             / (sqrt(CAST(na2 AS DOUBLE)) * sqrt(CAST(nb2 AS DOUBLE))),
-             6) AS centroid_cos
-FROM p ORDER BY label_a, label_b
-"""
-
-
-@query("similarity_label_centroid_matrix", oracle=_centroid_matrix_oracle())
-def similarity_label_centroid_matrix(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Pairwise cosine between LABEL CENTROIDS of the embedding space —
-    the class-geometry map (two labels whose centroids sit at cos > 0.9
-    will bleed into each other in any nearest-centroid or kNN labeler;
-    this matrix says which class pairs need margin).  Complements
-    `similarity_cluster_purity` (assignment-level) with the
-    direction-level view.
-
-    Exactness: per-vector coordinates quantize to floor(x·1e6) integers
-    (the identical-IEEE-chain rule), per-dimension sums are exact
-    integer aggregates (64 map-combinable sums, no explode), and the
-    unnormalized-centroid cosine — invariant to the 1/n mean scaling —
-    is DECIMAL(38,0)/HUGEINT cross-mults into one rounded double chain.
-    Scale: one label-keyed aggregate over a narrow scan; the pair grid
-    is the bounded label domain (10 rows self-joined)."""
-    d38 = "decimal(38,0)"
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sums = [
-        F.sum(
-            F.floor(
-                F.col("embedding")[i].cast("double") * 1_000_000
-            ).cast("long")
-        ).alias(f"s{i}")
-        for i in range(_CENTROID_DIM)
-    ]
-    c = emb.groupBy("label").agg(*sums).select(
-        "label", F.array(*[f"s{i}" for i in range(_CENTROID_DIM)]).alias("cv")
-    )
-    a = c.select(F.col("label").alias("label_a"), F.col("cv").alias("ca"))
-    b = c.select(F.col("label").alias("label_b"), F.col("cv").alias("cb"))
-    dec_dot = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda u, v: u.cast(d38) * v),
-        F.lit(0).cast(d38),
-        lambda acc, v: acc + v,
-    )
-    p = a.join(b, F.col("label_a") < F.col("label_b")).select(
-        "label_a",
-        "label_b",
-        dec_dot("ca", "cb").alias("dot"),
-        dec_dot("ca", "ca").alias("na2"),
-        dec_dot("cb", "cb").alias("nb2"),
-    )
-    return p.select(
-        "label_a",
-        "label_b",
-        F.round(
-            F.col("dot").cast("double")
-            / (
-                F.sqrt(F.col("na2").cast("double"))
-                * F.sqrt(F.col("nb2").cast("double"))
-            ),
-            6,
-        ).alias("centroid_cos"),
-    ).orderBy("label_a", "label_b")
 
 
 # --------------------------------------------------------------------------

@@ -34,6 +34,7 @@ from iceberg_table_generator_spark.operators.wave10 import (
     merge_position_islands,
     with_interval_coverage,
 )
+from iceberg_table_generator_spark.operators.relational import MICRO
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table, spread
 
@@ -47,9 +48,6 @@ from iceberg_table_generator_spark.sources.tables import load_table, spread
 #: run this at 0.95+.
 SEMDEDUP_TAU = 0.35
 
-#: Scaled-integer micro-fraction denominator (repo convention).
-_MICRO = 1_000_000
-
 
 def semdedup_members(emb: DataFrame, cents) -> DataFrame:
     """Assign (vec_id, vec) rows to the given engine-exact k-means
@@ -59,9 +57,9 @@ def semdedup_members(emb: DataFrame, cents) -> DataFrame:
     Assignment is one narrow pass; the centroid attach is a k-row
     literal broadcast."""
     from iceberg_table_generator_spark.operators.similarity import (
-        _d2_structs_int,
-        _dot,
-        _qint,
+        d2_structs_int,
+        dot,
+        qint,
         centroids_to_float,
         with_norm,
     )
@@ -71,7 +69,7 @@ def semdedup_members(emb: DataFrame, cents) -> DataFrame:
         [(cid, v) for cid, v in centroids_to_float(cents)],
         schema="cid INT, cent ARRAY<DOUBLE>",
     )
-    best = F.array_min(_d2_structs_int(_qint("vec"), cents))
+    best = F.array_min(d2_structs_int(qint("vec"), cents))
     assigned = with_norm(emb).select(
         "vec_id",
         "vec",
@@ -86,13 +84,13 @@ def semdedup_members(emb: DataFrame, cents) -> DataFrame:
         "vec",
         "nrm",
         (
-            _dot("vec", "cent")
-            / (F.col("nrm") * F.sqrt(_dot("cent", "cent")))
+            dot("vec", "cent")
+            / (F.col("nrm") * F.sqrt(dot("cent", "cent")))
         ).alias("ccos"),
     )
 
 
-def _semdedup_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
+def semdedup_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cid, vec_id, vec, nrm, ccos): every vector with its k-means
     cluster, norm, and cosine-to-centroid — the shared pre-pair relation
     of the SemDeDup family, persisted because the pair join reads it
@@ -167,7 +165,7 @@ def semdedup_batch_verdict(
     Lives here with the rest of the SemDeDup relational algebra (the
     streaming sink in streaming/semdedup.py is just the store plumbing
     around it), mirroring dedup.near_dedup_batch_verdict."""
-    from iceberg_table_generator_spark.operators.similarity import _dot
+    from iceberg_table_generator_spark.operators.similarity import dot
 
     dropped = _semdedup_dropped(batch_m).select("vec_id")
     if seen is not None:
@@ -179,7 +177,7 @@ def semdedup_batch_verdict(
         hist = (
             u.join(batch_m, "cid")
             .filter(
-                _dot("u_vec", "vec") / (F.col("u_nrm") * F.col("nrm"))
+                dot("u_vec", "vec") / (F.col("u_nrm") * F.col("nrm"))
                 >= SEMDEDUP_TAU
             )
             .select("vec_id")
@@ -190,28 +188,28 @@ def semdedup_batch_verdict(
     ).select("cid", "vec_id", F.col("_drop").isNull().alias("keep"))
 
 
-def _sql_semdedup_ctes() -> str:
+def sql_semdedup_ctes() -> str:
     """DuckDB twin CTE chain ending at `m` (member relation) and
-    `dropped`: replays the integer k-means fit (`_sql_ivf_fit_ctes`),
+    `dropped`: replays the integer k-means fit (`sql_ivf_fit_ctes`),
     full-corpus assignment, the ccos chain with the IDENTICAL operation
     tree, and the prefix-dominance pair rule."""
     from iceberg_table_generator_spark.operators.similarity import (
         IVF_CLUSTERS,
         IVF_ITERS,
-        _sql_d2_int,
-        _sql_ivf_fit_ctes,
-        _sql_km_setup,
-        _VEC_DIM,
+        sql_d2_int,
+        sql_ivf_fit_ctes,
+        sql_km_setup,
+        VEC_DIM,
     )
 
-    dim, cf = _VEC_DIM, f"c{IVF_ITERS}"
+    dim, cf = VEC_DIM, f"c{IVF_ITERS}"
     cvd = "CAST(c.cv[i] AS DOUBLE)/1000000.0"
-    return f"""{_sql_km_setup()}{_sql_ivf_fit_ctes(IVF_CLUSTERS, IVF_ITERS, dim)},
+    return f"""{sql_km_setup()}{sql_ivf_fit_ctes(IVF_CLUSTERS, IVF_ITERS, dim)},
 asg AS (
   SELECT vec_id, vec, cid FROM (
     SELECT q0.vec_id, q0.vec, c.cid,
            row_number() OVER (PARTITION BY q0.vec_id
-               ORDER BY {_sql_d2_int('q0.qv', 'c.cv', dim)}, c.cid) AS rn
+               ORDER BY {sql_d2_int('q0.qv', 'c.cv', dim)}, c.cid) AS rn
     FROM q0 CROSS JOIN {cf} c) WHERE rn = 1),
 m0 AS (
   SELECT a.vec_id, a.vec, a.cid,
@@ -233,7 +231,7 @@ dropped AS (
 
 
 def _semdedup_clusters_oracle() -> str:
-    return f"""{_sql_semdedup_ctes()},
+    return f"""{sql_semdedup_ctes()},
 mem AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_members FROM m GROUP BY cid),
 dr AS (
   SELECT cid, CAST(count(*) AS BIGINT) AS n_dropped,
@@ -242,7 +240,7 @@ dr AS (
 SELECT mem.cid, mem.n_members,
        CAST(coalesce(dr.n_dropped, 0) AS BIGINT) AS n_dropped,
        CAST(mem.n_members - coalesce(dr.n_dropped, 0) AS BIGINT) AS n_kept,
-       CAST((coalesce(dr.n_dropped, 0) * {_MICRO}) // mem.n_members
+       CAST((coalesce(dr.n_dropped, 0) * {MICRO}) // mem.n_members
             AS BIGINT) AS drop_micro,
        CAST(coalesce(dr.dropped_id_sum, 0) AS BIGINT) AS dropped_id_sum
 FROM mem LEFT JOIN dr USING (cid)
@@ -269,7 +267,7 @@ def dedup_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     join cid-co-partitioned with no broadcast of corpus data; output is
     ≤ k rows.  Σ c_i² pair work is SemDeDup's defining cost — k scales
     with the corpus (50k clusters in the paper) to bound cluster size."""
-    m = _semdedup_relation(spark, sf_dir)
+    m = semdedup_relation(spark, sf_dir)
     dropped = _semdedup_dropped(m)
     mem = m.groupBy("cid").agg(F.count(F.lit(1)).alias("n_members"))
     dr = dropped.groupBy("cid").agg(
@@ -282,14 +280,14 @@ def dedup_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_members",
         nd.alias("n_dropped"),
         (F.col("n_members") - nd).cast("long").alias("n_kept"),
-        F.expr(f"(coalesce(_nd, 0) * {_MICRO}) div n_members")
+        F.expr(f"(coalesce(_nd, 0) * {MICRO}) div n_members")
         .cast("long")
         .alias("drop_micro"),
         F.coalesce(F.col("_ds"), F.lit(0)).cast("long").alias("dropped_id_sum"),
     )
 
 
-_SEMDEDUP_VERDICT_ORACLE = f"""{_sql_semdedup_ctes()}
+_SEMDEDUP_VERDICT_ORACLE = f"""{sql_semdedup_ctes()}
 SELECT m.vec_id, m.cid, d.vec_id IS NULL AS keep,
        round(m.ccos, 6) AS centroid_sim
 FROM m LEFT JOIN (SELECT DISTINCT vec_id FROM dropped) d USING (vec_id)
@@ -306,7 +304,7 @@ def dedup_semdedup_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same plan as `dedup_semdedup_clusters` up to the verdict join;
     output is corpus-cardinality by design (it IS the dedup result — at
     100 TB this is a write, not a collect)."""
-    m = _semdedup_relation(spark, sf_dir)
+    m = semdedup_relation(spark, sf_dir)
     dropped = _semdedup_dropped(m).select("vec_id").distinct()
     return m.join(
         dropped.withColumn("_d", F.lit(1)), "vec_id", "left"
@@ -329,7 +327,7 @@ def _semdedup_prior_pairs(m: DataFrame) -> DataFrame:
     with their cosine — the τ-free core of `_semdedup_dropped`, shared
     by the sweep and the shadow map.  Column layout: (cid, u_id, u_ccos,
     v_id, sim)."""
-    from iceberg_table_generator_spark.operators.similarity import _dot
+    from iceberg_table_generator_spark.operators.similarity import dot
 
     u = m.select(
         "cid",
@@ -360,7 +358,7 @@ def _semdedup_prior_pairs(m: DataFrame) -> DataFrame:
             "u_ccos",
             "v_id",
             (
-                _dot("u_vec", "v_vec") / (F.col("u_nrm") * F.col("v_nrm"))
+                dot("u_vec", "v_vec") / (F.col("u_nrm") * F.col("v_nrm"))
             ).alias("sim"),
         )
     )
@@ -370,12 +368,12 @@ _TAU_VALUES_SQL = ", ".join(f"({t})" for t in SEMDEDUP_TAU_GRID)
 
 
 def _semdedup_sweep_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import _VEC_DIM
+    from iceberg_table_generator_spark.operators.similarity import VEC_DIM
 
-    return f"""{_sql_semdedup_ctes()},
+    return f"""{sql_semdedup_ctes()},
 vmax AS (
   SELECT v.vec_id,
-         max(list_sum(list_transform(generate_series(1, {_VEC_DIM}),
+         max(list_sum(list_transform(generate_series(1, {VEC_DIM}),
                                      i -> u.vec[i] * v.vec[i]))
              / (u.nrm * v.nrm)) AS mx
   FROM m u JOIN m v ON u.cid = v.cid
@@ -389,7 +387,7 @@ SELECT t.tau_micro,
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
        CAST(any_value(nv.n) AS BIGINT) AS n_vectors,
        CAST((sum(CASE WHEN x.mx >= t.tau_micro / 1000000.0
-                      THEN 1 ELSE 0 END) * {_MICRO})
+                      THEN 1 ELSE 0 END) * {MICRO})
             // any_value(nv.n) AS BIGINT) AS drop_ppm
 FROM taus t CROSS JOIN vs x CROSS JOIN nv
 GROUP BY t.tau_micro
@@ -415,7 +413,7 @@ def dedup_semdedup_tau_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     must not broadcast); a sentinel row below every τ keeps the group-by
     total (all |grid| rows survive even with zero qualifying pairs).
     Output = |grid| rows."""
-    m = _semdedup_relation(spark, sf_dir)
+    m = semdedup_relation(spark, sf_dir)
     vmax = _semdedup_prior_pairs(m).groupBy("v_id").agg(
         F.max("sim").alias("mx")
     )
@@ -445,7 +443,7 @@ def dedup_semdedup_tau_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tau_micro",
             "n_dropped",
             "n_vectors",
-            F.expr(f"(n_dropped * {_MICRO}) div n_vectors")
+            F.expr(f"(n_dropped * {MICRO}) div n_vectors")
             .cast("long")
             .alias("drop_ppm"),
         )
@@ -453,17 +451,17 @@ def dedup_semdedup_tau_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semdedup_shadow_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import _VEC_DIM
+    from iceberg_table_generator_spark.operators.similarity import VEC_DIM
 
-    return f"""{_sql_semdedup_ctes()},
+    return f"""{sql_semdedup_ctes()},
 hits AS (
   SELECT v.cid, v.vec_id, u.vec_id AS shadow_id, u.ccos AS u_ccos,
-         list_sum(list_transform(generate_series(1, {_VEC_DIM}),
+         list_sum(list_transform(generate_series(1, {VEC_DIM}),
                                  i -> u.vec[i] * v.vec[i]))
            / (u.nrm * v.nrm) AS sim
   FROM m u JOIN m v ON u.cid = v.cid
    AND (u.ccos < v.ccos OR (u.ccos = v.ccos AND u.vec_id < v.vec_id))
-  WHERE list_sum(list_transform(generate_series(1, {_VEC_DIM}),
+  WHERE list_sum(list_transform(generate_series(1, {VEC_DIM}),
                                 i -> u.vec[i] * v.vec[i]))
         / (u.nrm * v.nrm) >= {SEMDEDUP_TAU}),
 ranked AS (
@@ -487,7 +485,7 @@ def dedup_semdedup_shadow_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the pair join shape of the family, then one rank window
     PARTITIONED BY victim (each partition ≤ cluster size); output is one
     row per dropped vector."""
-    m = _semdedup_relation(spark, sf_dir)
+    m = semdedup_relation(spark, sf_dir)
     hits = _semdedup_prior_pairs(m).filter(F.col("sim") >= SEMDEDUP_TAU)
     w = Window.partitionBy("v_id").orderBy(F.asc("u_ccos"), F.asc("u_id"))
     return (
@@ -499,178 +497,6 @@ def dedup_semdedup_shadow_map(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("u_id").alias("shadow_id"),
             F.round("sim", 6).alias("sim"),
         )
-    )
-
-
-# --------------------------------------------------------------------------
-# IVF nprobe recall sweep: the ANN speed/recall tuning curve
-# --------------------------------------------------------------------------
-#: nprobe grid for the sweep (max = the production IVF_NPROBE setting).
-NPROBE_GRID = (1, 2, 4, 6)
-
-
-def _nprobe_sweep_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import (
-        _COSINE_ORACLE,
-        IVF_CLUSTERS,
-        IVF_ITERS,
-        N_QUERIES,
-        TOP_K,
-        _sql_d2_int,
-        _sql_ivf_fit_ctes,
-        _sql_km_setup,
-        _VEC_DIM,
-    )
-
-    dim, cf = _VEC_DIM, f"c{IVF_ITERS}"
-    dot = (
-        f"list_sum(list_transform(generate_series(1, {dim}), "
-        "i -> p.qvec[i]*cand.vec[i]))"
-    )
-    nps = ", ".join(f"({n})" for n in NPROBE_GRID)
-    ivfnp = f"""{_sql_km_setup()}{_sql_ivf_fit_ctes(IVF_CLUSTERS, IVF_ITERS, dim)},
-assignq AS (
-  SELECT q0.vec_id, q0.vec, q0.qv, c.cid,
-         row_number() OVER (PARTITION BY q0.vec_id
-             ORDER BY {_sql_d2_int('q0.qv', 'c.cv', dim)}, c.cid) AS rn
-  FROM q0 CROSS JOIN {cf} c),
-lists AS (
-  SELECT vec_id, vec, qv, cid,
-         sqrt(list_sum(list_transform(generate_series(1, {dim}),
-                                      i -> vec[i]*vec[i]))) AS norm
-  FROM assignq WHERE rn = 1),
-proberanks AS (
-  SELECT q.vec_id AS query_id, q.vec AS qvec, q.norm AS qnorm, c.cid,
-         row_number() OVER (PARTITION BY q.vec_id
-             ORDER BY {_sql_d2_int('q.qv', 'c.cv', dim)}, c.cid) AS rnk
-  FROM (SELECT * FROM lists WHERE vec_id < {N_QUERIES}) q
-  CROSS JOIN {cf} c),
-npg(np) AS (VALUES {nps}),
-pairs AS (
-  SELECT g.np, p.query_id, cand.vec_id AS neighbor_id,
-         {dot} / (p.qnorm * cand.norm) AS sim
-  FROM proberanks p JOIN npg g ON p.rnk <= g.np
-  JOIN lists cand ON cand.cid = p.cid AND cand.vec_id <> p.query_id),
-rankednp AS (
-  SELECT np, query_id, neighbor_id,
-         row_number() OVER (PARTITION BY np, query_id
-                            ORDER BY sim DESC, neighbor_id) AS rank
-  FROM pairs)
-SELECT np, query_id, neighbor_id FROM rankednp WHERE rank <= {TOP_K}"""
-    return f"""
-WITH exact AS ({_COSINE_ORACLE}),
-ivfnp AS ({ivfnp}),
-npg2(np) AS (VALUES {nps})
-SELECT n.np,
-       CAST(count(i.neighbor_id) AS BIGINT) AS hits,
-       CAST(count(*) AS BIGINT) AS n_truth,
-       CAST((count(i.neighbor_id) * {_MICRO}) // count(*) AS BIGINT)
-         AS recall_micro
-FROM npg2 n CROSS JOIN exact e
-LEFT JOIN ivfnp i ON i.np = n.np AND i.query_id = e.query_id
-                 AND i.neighbor_id = e.neighbor_id
-GROUP BY n.np
-"""
-
-
-@query("similarity_ivf_nprobe_recall", oracle=_nprobe_sweep_oracle())
-def similarity_ivf_nprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF speed/recall tuning curve: recall@k of the IVF index against
-    exact cosine ground truth at every nprobe in {NPROBE_GRID} — THE
-    operating-point decision for an ANN index at 100 TB (each +1 nprobe
-    costs ~1/k more corpus scanned; this query shows what it buys).
-    Composition contract (`similarity_ann_recall_eval` precedent): the
-    exact side IS the registered `similarity_cosine_topk`, the IVF side
-    shares the fitted index and assignment shape of
-    `similarity_ivf_topk`, and the oracle composes the same texts, so
-    the sweep can never drift from the operators it evaluates.
-
-    Scale: one assignment pass (persisted — all nprobe points reuse it),
-    probe fan-out by IN-ROW explode over the sorted centroid structs
-    (grid × nprobe rows per query, no extra join), the candidate join
-    co-partitioned on cluster id with the bounded probe side broadcast,
-    and per-(np, query) rank windows over ≤ nprobe/k of the corpus."""
-    from iceberg_table_generator_spark.operators.similarity import (
-        N_QUERIES,
-        TOP_K,
-        _d2_structs_int,
-        _dot,
-        _qint,
-        ivf_index,
-        similarity_cosine_topk,
-        with_norm,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    )
-    centroids = ivf_index(emb, cache_key=sf_dir)
-    qemb = emb.withColumn("qv", _qint("vec"))
-    best = F.array_min(_d2_structs_int("qv", centroids))
-    lists = persist_tracked(
-        with_norm(
-            qemb.select(
-                "vec_id", "vec", "qv", best["cluster_id"].alias("cluster_id")
-            )
-        )
-    )
-    qry = lists.filter(F.col("vec_id") < N_QUERIES)
-    max_np = max(NPROBE_GRID)
-    probes = qry.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("norm").alias("qnorm"),
-        F.posexplode(
-            F.slice(F.array_sort(_d2_structs_int("qv", centroids)), 1, max_np)
-        ).alias("pos0", "probe"),
-    ).select(
-        "query_id",
-        "qvec",
-        "qnorm",
-        (F.col("pos0") + 1).alias("rnk"),
-        F.col("probe.cluster_id").alias("cluster_id"),
-    )
-    np_arr = F.array(*[F.lit(n) for n in NPROBE_GRID])
-    pairs = (
-        lists.join(F.broadcast(probes), "cluster_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("np", F.explode(np_arr))
-        .filter(F.col("rnk") <= F.col("np"))
-        .select(
-            "np",
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (_dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias(
-                "sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("np", "query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    ivf_np = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("np", "query_id", F.col("neighbor_id").alias("ivf_id"))
-    )
-    exact = (
-        similarity_cosine_topk(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("np", F.explode(np_arr))
-    )
-    joined = exact.join(
-        ivf_np,
-        (exact.np == ivf_np.np)
-        & (exact.query_id == ivf_np.query_id)
-        & (exact.neighbor_id == ivf_np.ivf_id),
-        "left",
-    ).select(exact.np, "ivf_id")
-    return joined.groupBy("np").agg(
-        F.count("ivf_id").cast("long").alias("hits"),
-        F.count(F.lit(1)).cast("long").alias("n_truth"),
-        F.expr(f"(count(ivf_id) * {_MICRO}) div count(1)")
-        .cast("long")
-        .alias("recall_micro"),
     )
 
 
@@ -690,8 +516,8 @@ tot AS (
   SELECT CAST(sum(tokens) AS BIGINT) AS tt, CAST(sum(w2) AS BIGINT) AS tw
   FROM w)
 SELECT source, n_docs, tokens,
-       CAST((tokens * {_MICRO}) // tt AS BIGINT) AS natural_ppm,
-       CAST((w2 * {_MICRO}) // tw AS BIGINT) AS t2_ppm
+       CAST((tokens * {MICRO}) // tt AS BIGINT) AS natural_ppm,
+       CAST((w2 * {MICRO}) // tw AS BIGINT) AS t2_ppm
 FROM w CROSS JOIN tot
 """
 
@@ -733,8 +559,8 @@ def pipeline_source_mixing_weights(
         "source",
         "n_docs",
         "tokens",
-        F.expr(f"(tokens * {_MICRO}) div tt").cast("long").alias("natural_ppm"),
-        F.expr(f"(w2 * {_MICRO}) div tw").cast("long").alias("t2_ppm"),
+        F.expr(f"(tokens * {MICRO}) div tt").cast("long").alias("natural_ppm"),
+        F.expr(f"(w2 * {MICRO}) div tw").cast("long").alias("t2_ppm"),
     )
 
 
@@ -805,7 +631,7 @@ SELECT c.doc_id, l.n_tokens,
        CAST(max(c.token_end - c.token_start + 1) AS BIGINT)
          AS longest_island_tokens,
        CAST(sum(c.covered) AS BIGINT) AS contaminated_tokens,
-       CAST((sum(c.covered) * {_MICRO}) // l.n_tokens AS BIGINT)
+       CAST((sum(c.covered) * {MICRO}) // l.n_tokens AS BIGINT)
          AS contamination_micro
 FROM cov c JOIN lens l USING (doc_id)
 GROUP BY c.doc_id, l.n_tokens
@@ -845,7 +671,7 @@ def pipeline_span_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
         "n_islands",
         "longest_island_tokens",
         "contaminated_tokens",
-        F.expr(f"(contaminated_tokens * {_MICRO}) div n_tokens")
+        F.expr(f"(contaminated_tokens * {MICRO}) div n_tokens")
         .cast("long")
         .alias("contamination_micro"),
     )
@@ -863,7 +689,7 @@ SELECT c.n_corpus_docs,
        CAST(count(p.doc_id) AS BIGINT) AS n_contaminated_docs,
        c.corpus_tokens,
        CAST(coalesce(sum(p.ct), 0) AS BIGINT) AS contaminated_tokens,
-       CAST((coalesce(sum(p.ct), 0) * {_MICRO}) // c.corpus_tokens AS BIGINT)
+       CAST((coalesce(sum(p.ct), 0) * {MICRO}) // c.corpus_tokens AS BIGINT)
          AS contamination_ppm
 FROM corpus c LEFT JOIN per_doc p ON true
 GROUP BY c.n_corpus_docs, c.corpus_tokens
@@ -883,7 +709,7 @@ SELECT s.source,
        CAST(sum(s.n_tokens) AS BIGINT) AS source_tokens,
        CAST(count(p.ct) AS BIGINT) AS n_contaminated_docs,
        CAST(coalesce(sum(p.ct), 0) AS BIGINT) AS contaminated_tokens,
-       CAST((coalesce(sum(p.ct), 0) * {_MICRO}) // sum(s.n_tokens)
+       CAST((coalesce(sum(p.ct), 0) * {MICRO}) // sum(s.n_tokens)
             AS BIGINT) AS contamination_ppm
 FROM docsrc s LEFT JOIN per_doc p ON s.doc_id = p.doc_id
 GROUP BY s.source
@@ -935,7 +761,7 @@ def pipeline_decontamination_by_source(
             "source_tokens",
             "n_contaminated_docs",
             "contaminated_tokens",
-            F.expr(f"(contaminated_tokens * {_MICRO}) div source_tokens")
+            F.expr(f"(contaminated_tokens * {MICRO}) div source_tokens")
             .cast("long")
             .alias("contamination_ppm"),
         )
@@ -977,7 +803,7 @@ def pipeline_decontamination_stats(spark: SparkSession, sf_dir: str) -> DataFram
         "n_contaminated_docs",
         "corpus_tokens",
         "contaminated_tokens",
-        F.expr(f"(contaminated_tokens * {_MICRO}) div corpus_tokens")
+        F.expr(f"(contaminated_tokens * {MICRO}) div corpus_tokens")
         .cast("long")
         .alias("contamination_ppm"),
     )

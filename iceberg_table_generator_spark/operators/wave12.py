@@ -4,9 +4,8 @@ et al. 2023, "Data Selection for Language Models via Importance
 Resampling": hashed n-gram bucket log-likelihood ratios against a target
 domain), the context-window
 truncation-loss curve (how many training tokens each packing length
-throws away), graph eccentricity/diameter/radius (completing the
-all-pairs-BFS family next to harmonic centrality), and a k-means
-cluster-outlier audit on the shared SemDeDup member relation.
+throws away), and graph eccentricity/diameter/radius (completing the
+all-pairs-BFS family next to harmonic centrality).
 
 The reference is a table generator with no analytics surface
 (`IcebergTableGenerator.java` writes rows; it never reads them back) —
@@ -33,7 +32,7 @@ from iceberg_table_generator_spark.functions.text import (
     tokens_sql,
 )
 from iceberg_table_generator_spark.registry import query
-from iceberg_table_generator_spark.sources.tables import load_table, spread
+from iceberg_table_generator_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
 # DSIR importance weights (hashed-unigram LLR vs a target domain)
@@ -339,84 +338,6 @@ def events_graph_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# K-means cluster-outlier audit (on the shared SemDeDup member relation)
-# --------------------------------------------------------------------------
-#: Cosine-to-centroid below which a member is flagged as an outlier.
-#: This testdata's ccos band runs ≈0.16–0.6 with p10 ≈ 0.22 (probed at
-#: sf0.001), so 0.22 flags a real ~10% tail in every cluster; production
-#: normalized-text embeddings sit much higher and run this at 0.6+.
-OUTLIER_TAU = 0.22
-
-
-def _outlier_oracle() -> str:
-    from iceberg_table_generator_spark.operators.wave11 import (
-        _sql_semdedup_ctes,
-    )
-
-    return f"""{_sql_semdedup_ctes()}
-SELECT cid,
-       CAST(count(*) AS BIGINT) AS n_members,
-       CAST(sum(CASE WHEN ccos < {OUTLIER_TAU} THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_outliers,
-       CAST((sum(CASE WHEN ccos < {OUTLIER_TAU} THEN 1 ELSE 0 END)
-             * 1000000) // count(*) AS BIGINT) AS outlier_ppm,
-       CAST(floor(min(ccos) * 1000000.0) AS BIGINT) AS min_ccos_micro,
-       (min(struct_pack(c := ccos, v := vec_id))).v AS farthest_vec_id
-FROM m GROUP BY cid
-"""
-
-
-@query("similarity_cluster_outlier_audit", oracle=_outlier_oracle())
-def similarity_cluster_outlier_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-cluster embedding-outlier audit on the shared engine-exact
-    k-means index: members whose cosine-to-centroid falls below
-    τ = {OUTLIER_TAU} are mis-clustered / off-manifold candidates — the
-    vectors a curation pass reviews before trusting SemDeDup or IVF
-    routing decisions in that cluster.  Reports count, ppm share, the
-    worst cosine (micro-floored), and the farthest member's id
-    (deterministic (ccos, vec_id) struct-min).
-
-    Oracle-paired end-to-end: reuses `_semdedup_relation`'s member
-    relation and its DuckDB CTE twin, so cluster assignment AND the ccos
-    chain are bit-identical on both engines.
-
-    Scale: one cid-keyed map-combinable aggregation over the member
-    relation (k = 16 groups); no windows, no joins beyond the broadcast
-    centroid attach already inside the shared relation."""
-    from iceberg_table_generator_spark.operators.wave11 import (
-        _semdedup_relation,
-    )
-
-    m = _semdedup_relation(spark, sf_dir)
-    return (
-        m.groupBy("cid")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_members"),
-            F.sum(
-                F.when(F.col("ccos") < OUTLIER_TAU, 1).otherwise(0)
-            ).cast("long").alias("n_outliers"),
-            F.floor(F.min("ccos") * 1000000.0).cast("long").alias(
-                "min_ccos_micro"
-            ),
-            F.min(F.struct(F.col("ccos"), F.col("vec_id"))).alias("far"),
-        )
-        .select(
-            "cid",
-            "n_members",
-            "n_outliers",
-            F.expr(
-                "CAST((n_outliers * 1000000) div n_members AS BIGINT)"
-            ).alias("outlier_ppm"),
-            "min_ccos_micro",
-            F.col("far.vec_id").alias("farthest_vec_id"),
-        )
-        .orderBy("cid")
-    )
-
-
-# --------------------------------------------------------------------------
 # PII incidence matrix (per source x PII type)
 # --------------------------------------------------------------------------
 def _pii_incidence_oracle() -> str:
@@ -642,178 +563,21 @@ def orders_revenue_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# SQ8 (int8 scalar quantization) ADC search + recall vs exact
-# --------------------------------------------------------------------------
-def _sq8_recall_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import (
-        N_QUERIES,
-        TOP_K,
-        _VEC_DIM,
-    )
-
-    dim = _VEC_DIM
-    dot = (
-        f"list_sum(list_transform(generate_series(1, {dim}), "
-        "i -> c.qv[i] * q.vec[i]))"
-    )
-    xdot = (
-        f"list_sum(list_transform(generate_series(1, {dim}), "
-        "i -> q.vec[i] * c.vec[i]))"
-    )
-    return f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-n AS (
-  SELECT vec_id, vec,
-         sqrt(list_sum(list_transform(generate_series(1, {dim}),
-                                      i -> vec[i] * vec[i]))) AS norm
-  FROM v),
-c AS (
-  SELECT vec_id, vec, norm,
-         greatest(list_max(list_transform(vec, x -> abs(x))), 1e-12) / 127.0
-           AS scale
-  FROM n),
-cq AS (
-  SELECT vec_id, vec, norm, scale,
-         list_transform(vec, x -> round(x / scale)) AS qv
-  FROM c),
-apx AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         (c.scale * {dot}) / (q.norm * c.norm) AS sim
-  FROM n q JOIN cq c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {N_QUERIES}),
-apk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY sim DESC, neighbor_id) AS rn
-    FROM apx) WHERE rn <= {TOP_K}),
-ext AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {xdot} / (q.norm * c.norm) AS sim
-  FROM n q JOIN n c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {N_QUERIES}),
-epk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY sim DESC, neighbor_id) AS rn
-    FROM ext) WHERE rn <= {TOP_K}),
-hits AS (
-  SELECT e.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hits
-  FROM epk e LEFT JOIN apk a
-    ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-  GROUP BY e.query_id)
-SELECT query_id, CAST({TOP_K} AS INT) AS k, n_hits,
-       CAST((n_hits * 1000000) // {TOP_K} AS BIGINT) AS recall_ppm
-FROM hits
-"""
-
-
-@query("similarity_sq8_recall", oracle=_sq8_recall_oracle())
-def similarity_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQ8 asymmetric-distance (ADC) search + recall@k vs exact: score
-    every query (raw doubles) against the int8-quantized corpus —
-    sim ≈ (scale·Σq̂ᵢxᵢ)/(‖x‖‖c‖) — and report per-query overlap with
-    the exact cosine top-k.  Completes the quantized-search family:
-    IVF (`similarity_ivf_topk` + nprobe recall) prunes CANDIDATES, PQ
-    (`similarity_pq_topk` + distortion) and SQ8 (this + the int8
-    distortion audit) compress the SCORING; SQ8 is the 4×-smaller
-    index tier every production ANN stack offers.
-
-    Engine determinism: the quantizer is `similarity_quantize_int8`'s
-    exact formula (round(x/scale), IEEE ops bit-identical on both
-    engines), the ADC fold is one shared in-row op tree, and ties break
-    on neighbor_id — so approx AND exact rankings are bit-reproducible,
-    making recall an exact integer.
-
-    Scale: the query set broadcasts (N_QUERIES rows); the candidate
-    stream quantizes in-row and never shuffles; both rank windows are
-    (n_queries × k)-bounded."""
-    from iceberg_table_generator_spark.operators.similarity import (
-        N_QUERIES,
-        TOP_K,
-        _dot,
-        similarity_cosine_topk,
-        with_norm,
-    )
-
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    )
-    cand = with_norm(emb)
-    scale = (
-        F.greatest(
-            F.array_max(F.transform("vec", lambda x: F.abs(x))), F.lit(1e-12)
-        )
-        / 127.0
-    )
-    cq = cand.withColumn("scale", scale).withColumn(
-        "qv", F.transform("vec", lambda x: F.round(x / F.col("scale")))
-    )
-    qry = with_norm(emb.filter(F.col("vec_id") < N_QUERIES)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("norm").alias("qnorm"),
-    )
-    apx = (
-        cq.crossJoin(F.broadcast(qry))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                (F.col("scale") * _dot("qv", "qvec"))
-                / (F.col("qnorm") * F.col("norm"))
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    apk = (
-        apx.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    epk = similarity_cosine_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    hits = (
-        epk.alias("e")
-        .join(
-            apk.alias("a"),
-            (F.col("e.query_id") == F.col("a.query_id"))
-            & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-            "left",
-        )
-        .groupBy(F.col("e.query_id").alias("query_id"))
-        .agg(F.count(F.col("a.neighbor_id")).cast("long").alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        F.lit(TOP_K).cast("int").alias("k"),
-        "n_hits",
-        F.expr(f"CAST((n_hits * 1000000) div {TOP_K} AS BIGINT)").alias(
-            "recall_ppm"
-        ),
-    )
-
-
-# --------------------------------------------------------------------------
 # Incremental SemDeDup (new batch vs stored exemplars)
 # --------------------------------------------------------------------------
 def _semdedup_incremental_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import _VEC_DIM
+    from iceberg_table_generator_spark.operators.similarity import VEC_DIM
     from iceberg_table_generator_spark.operators.wave11 import (
         SEMDEDUP_TAU,
-        _sql_semdedup_ctes,
+        sql_semdedup_ctes,
     )
 
-    dim = _VEC_DIM
+    dim = VEC_DIM
     duv = (
         f"list_sum(list_transform(generate_series(1, {dim}), "
         "i -> u.vec[i] * v.vec[i]))"
     )
-    return f"""{_sql_semdedup_ctes()},
+    return f"""{sql_semdedup_ctes()},
 old AS (SELECT * FROM m WHERE vec_id % 10 <> 0),
 dold AS (
   SELECT DISTINCT v.cid, v.vec_id
@@ -860,14 +624,14 @@ def dedup_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus data), the new batch is a small fraction of the corpus, and
     the stored side is the POST-dedup exemplar set — the cheapest
     relation the pipeline owns."""
-    from iceberg_table_generator_spark.operators.similarity import _dot
+    from iceberg_table_generator_spark.operators.similarity import dot
     from iceberg_table_generator_spark.operators.wave11 import (
         SEMDEDUP_TAU,
         _semdedup_dropped,
-        _semdedup_relation,
+        semdedup_relation,
     )
 
-    m = _semdedup_relation(spark, sf_dir)
+    m = semdedup_relation(spark, sf_dir)
     old = m.filter(F.col("vec_id") % 10 != 0)
     new = m.filter(F.col("vec_id") % 10 == 0)
     dropped_old = _semdedup_dropped(old)
@@ -882,7 +646,7 @@ def dedup_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = (
         u.join(v, "cid")
         .filter(
-            _dot("u_vec", "vec") / (F.col("u_nrm") * F.col("nrm"))
+            dot("u_vec", "vec") / (F.col("u_nrm") * F.col("nrm"))
             >= SEMDEDUP_TAU
         )
         .groupBy("vec_id")

@@ -1,38 +1,17 @@
-"""Round-12 wave: per-language semantic-dedup attribution and
-ranking-quality evaluation (r11 verdict #4 and #5).
+"""Round-12 wave: per-language semantic-dedup attribution (r11 verdict
+#4).
 
-Two families:
-
-* **Cross-lingual SemDeDup** — the curation question LAION/CCNet-class
-  pipelines actually ask of a semantic dedup pass: which languages
-  duplicate, into which clusters, and who shadows whom across language
-  boundaries (translated boilerplate is exactly the duplicate class only
-  the embedding tier can see).  All three queries COMPOSE the registered
-  SemDeDup relations (`_semdedup_relation`, `_semdedup_dropped`, the
-  shadow map) with the documents table's `lang` column — no second
-  clustering, no second pair join; the synthetic corpus aligns `vec_id`
-  with `doc_id` (each embeddings row is the encoder output of the
-  same-id document — a production pipeline carries the document id
-  through the encoder the same way).
-
-* **Ranking-quality eval** — nDCG@k and MRR as first-class queries,
-  extending the recall@k pattern (`similarity_ann_recall_eval`): recall
-  says WHETHER the true neighbors were found, nDCG/MRR say whether they
-  were found IN THE RIGHT ORDER — the number a retrieval cascade is
-  actually tuned on.  Ground truth and evaluated rankings are the
-  registered queries themselves (exact cosine vs LSH/IVF; the BM25
-  cascade's twin, `text_bm25_ndcg_eval`, is in `operators/text.py`), and the
-  oracles compose the registered ORACLE TEXTS as CTEs, so the eval can
-  never drift from the operators it evaluates.
-
-Exactness policy (repo convention): the only non-integer op in the DCG
-chain is the position discount 1/log2(rank+1); each per-position
-discounted gain is rounded to a MICRO integer before accumulation (the
-wave12 ln-device).  All (gain ≤ 10, rank ≤ 10) term values sit ≥ 3.1e-3
-from the nearest rounding boundary (pinned by
-tests/test_wave13.py::test_dcg_term_rounding_margin) — ~10 orders above
-the engines' ln() last-ulp disagreement — so the rounded terms are
-bit-identical and sums/divisions are exact integer arithmetic.
+**Cross-lingual SemDeDup** — the curation question LAION/CCNet-class
+pipelines actually ask of a semantic dedup pass: which languages
+duplicate, into which clusters, and who shadows whom across language
+boundaries (translated boilerplate is exactly the duplicate class only
+the embedding tier can see).  All three queries COMPOSE the registered
+SemDeDup relations (`semdedup_relation`, `_semdedup_dropped`, the
+shadow map) with the documents table's `lang` column — no second
+clustering, no second pair join; the synthetic corpus aligns `vec_id`
+with `doc_id` (each embeddings row is the encoder output of the
+same-id document — a production pipeline carries the document id
+through the encoder the same way).
 
 Reference parity note: the reference repo is a table generator with no
 retrieval or dedup surface (`IcebergTableGenerator.java` writes rows,
@@ -45,10 +24,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from iceberg_table_generator_spark.operators.relational import MICRO
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table
 
-_MICRO = 1_000_000
 
 # --------------------------------------------------------------------------
 # SemDeDup k-scaling probe (shared by the property test and SCALING.md)
@@ -124,10 +103,10 @@ def _lang_of_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _semdedup_by_lang_oracle() -> str:
     from iceberg_table_generator_spark.operators.wave11 import (
-        _sql_semdedup_ctes,
+        sql_semdedup_ctes,
     )
 
-    return f"""{_sql_semdedup_ctes()},
+    return f"""{sql_semdedup_ctes()},
 lm AS (
   SELECT m.vec_id, d.lang,
          CASE WHEN dr.vec_id IS NULL THEN 0 ELSE 1 END AS is_drop
@@ -138,7 +117,7 @@ SELECT lang,
        CAST(count(*) AS BIGINT) AS n_members,
        CAST(sum(is_drop) AS BIGINT) AS n_dropped,
        CAST(count(*) - sum(is_drop) AS BIGINT) AS n_kept,
-       CAST((sum(is_drop) * {_MICRO}) // count(*) AS BIGINT) AS drop_micro
+       CAST((sum(is_drop) * {MICRO}) // count(*) AS BIGINT) AS drop_micro
 FROM lm GROUP BY lang
 """
 
@@ -159,10 +138,10 @@ def dedup_semdedup_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     a languages-bounded aggregate.  Output: one row per language."""
     from iceberg_table_generator_spark.operators.wave11 import (
         _semdedup_dropped,
-        _semdedup_relation,
+        semdedup_relation,
     )
 
-    m = _semdedup_relation(spark, sf_dir)
+    m = semdedup_relation(spark, sf_dir)
     dropped = _semdedup_dropped(m).select(
         "vec_id", F.lit(1).alias("is_drop")
     )
@@ -176,7 +155,7 @@ def dedup_semdedup_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_members"),
         F.sum("is_drop").cast("long").alias("n_dropped"),
         (F.count(F.lit(1)) - F.sum("is_drop")).cast("long").alias("n_kept"),
-        F.expr(f"(sum(is_drop) * {_MICRO}) div count(*)")
+        F.expr(f"(sum(is_drop) * {MICRO}) div count(*)")
         .cast("long")
         .alias("drop_micro"),
     )
@@ -189,10 +168,10 @@ def dedup_semdedup_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _semdedup_lang_cluster_oracle() -> str:
     from iceberg_table_generator_spark.operators.wave11 import (
-        _sql_semdedup_ctes,
+        sql_semdedup_ctes,
     )
 
-    return f"""{_sql_semdedup_ctes()},
+    return f"""{sql_semdedup_ctes()},
 lm AS (
   SELECT m.cid, m.vec_id, d.lang,
          CASE WHEN dr.vec_id IS NULL THEN 0 ELSE 1 END AS is_drop
@@ -203,7 +182,7 @@ cs AS (SELECT cid, CAST(count(*) AS BIGINT) AS cluster_n FROM lm GROUP BY cid)
 SELECT lm.lang, lm.cid,
        CAST(count(*) AS BIGINT) AS n_members,
        CAST(sum(lm.is_drop) AS BIGINT) AS n_dropped,
-       CAST((count(*) * {_MICRO}) // max(cs.cluster_n) AS BIGINT)
+       CAST((count(*) * {MICRO}) // max(cs.cluster_n) AS BIGINT)
          AS cluster_share_micro
 FROM lm JOIN cs USING (cid)
 GROUP BY lm.lang, lm.cid
@@ -229,10 +208,10 @@ def dedup_semdedup_lang_cluster_matrix(
     output and every post-join aggregate are trivially small."""
     from iceberg_table_generator_spark.operators.wave11 import (
         _semdedup_dropped,
-        _semdedup_relation,
+        semdedup_relation,
     )
 
-    m = _semdedup_relation(spark, sf_dir)
+    m = semdedup_relation(spark, sf_dir)
     dropped = _semdedup_dropped(m).select(
         "vec_id", F.lit(1).alias("is_drop")
     )
@@ -257,7 +236,7 @@ def dedup_semdedup_lang_cluster_matrix(
             "cid",
             "n_members",
             "n_dropped",
-            F.expr(f"(n_members * {_MICRO}) div cluster_n")
+            F.expr(f"(n_members * {MICRO}) div cluster_n")
             .cast("long")
             .alias("cluster_share_micro"),
         )
@@ -335,165 +314,4 @@ def dedup_semdedup_cross_lang_shadow(
     return att.groupBy("shadow_lang", "dropped_lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.sum("sim_micro").cast("long").alias("sim_micro_sum"),
-    )
-
-
-# --------------------------------------------------------------------------
-# nDCG@k / MRR: ANN families vs the exact cosine ranking
-# --------------------------------------------------------------------------
-# Position discount 1/log2(rank+1), graded gain (k − exact_rank + 1):
-# the standard nDCG instantiation for ANN eval (the exact top-k IS the
-# graded relevance — rank 1 is worth k, rank k is worth 1, absent = 0).
-
-
-def _dcg_term(gain_col, rank_col):
-    """round(gain·MICRO / log2(rank+1)) as BIGINT — the per-position
-    discounted gain, micro-rounded BEFORE accumulation (margin pinned by
-    test_dcg_term_rounding_margin)."""
-    return (
-        F.round(
-            gain_col.cast("double")
-            * float(_MICRO)
-            / (F.log(rank_col.cast("double") + 1.0) / F.log(F.lit(2.0))),
-            0,
-        )
-        .cast("long")
-    )
-
-
-_SQL_DCG_TERM = (
-    "CAST(round(CAST({g} AS DOUBLE) * 1000000.0"
-    " / (ln(CAST({r} AS DOUBLE) + 1.0) / ln(2.0)), 0) AS BIGINT)"
-)
-
-
-def ranking_quality(
-    ann: DataFrame, exact: DataFrame, k: int, keys: list[str]
-) -> DataFrame:
-    """Shared nDCG@k / MRR evaluator: `ann` carries (keys…, query_id,
-    item, s) — the evaluated ranking; `exact` carries (query_id, item,
-    r) — the gold ranking.  Output: one row per (keys…, query_id) with
-    dcg_micro, ndcg_micro, first_hit_rank, rr_micro."""
-    gold = exact.select(
-        "query_id", "item", (F.lit(k) - F.col("r") + 1).alias("gain")
-    )
-    j = ann.join(gold, ["query_id", "item"], "left").select(
-        *keys,
-        "query_id",
-        "s",
-        F.coalesce("gain", F.lit(0)).alias("gain"),
-    )
-    dcg = j.groupBy(*keys, "query_id").agg(
-        F.sum(_dcg_term(F.col("gain"), F.col("s"))).cast("long").alias("dcg_micro"),
-        F.min(F.when(F.col("gain") > 0, F.col("s"))).alias("fh"),
-    )
-    idcg = exact.groupBy("query_id").agg(
-        F.sum(_dcg_term(F.lit(k) - F.col("r") + 1, F.col("r")))
-        .cast("long")
-        .alias("idcg_micro")
-    )
-    return dcg.join(idcg, "query_id").select(
-        *keys,
-        "query_id",
-        "dcg_micro",
-        F.expr(f"(dcg_micro * {_MICRO}) div idcg_micro")
-        .cast("long")
-        .alias("ndcg_micro"),
-        F.coalesce("fh", F.lit(0)).cast("int").alias("first_hit_rank"),
-        F.coalesce(
-            F.expr(f"{_MICRO} div fh"), F.lit(0)
-        )
-        .cast("long")
-        .alias("rr_micro"),
-    )
-
-
-SQL_RANKING_QUALITY = f"""
-j AS (
-  SELECT a.method, a.query_id, a.s,
-         coalesce({{k}} - g.r + 1, 0) AS gain
-  FROM ann a LEFT JOIN gold g
-    ON g.query_id = a.query_id AND g.item = a.item),
-dcg AS (
-  SELECT method, query_id,
-         CAST(sum({_SQL_DCG_TERM.format(g="gain", r="s")}) AS BIGINT)
-           AS dcg_micro,
-         min(CASE WHEN gain > 0 THEN s END) AS fh
-  FROM j GROUP BY method, query_id),
-idcg AS (
-  SELECT query_id,
-         CAST(sum({_SQL_DCG_TERM.format(g="{k} - r + 1", r="r")}) AS BIGINT)
-           AS idcg_micro
-  FROM gold GROUP BY query_id)
-SELECT d.method, d.query_id, d.dcg_micro,
-       CAST((d.dcg_micro * {_MICRO}) // i.idcg_micro AS BIGINT) AS ndcg_micro,
-       CAST(coalesce(d.fh, 0) AS INT) AS first_hit_rank,
-       CAST(CASE WHEN d.fh IS NULL THEN 0 ELSE {_MICRO} // d.fh END AS BIGINT)
-         AS rr_micro
-FROM dcg d JOIN idcg i USING (query_id)
-"""
-
-
-def _ann_ndcg_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import (
-        _ANN_LSH_ORACLE,
-        _COSINE_ORACLE,
-        _ivf_oracle,
-        TOP_K,
-    )
-
-    return f"""
-WITH exact_q AS ({_COSINE_ORACLE}),
-lsh_q AS ({_ANN_LSH_ORACLE}),
-ivf_q AS ({_ivf_oracle()}),
-gold AS (SELECT query_id, neighbor_id AS item, rank AS r FROM exact_q),
-ann AS (
-  SELECT 'lsh' AS method, query_id, neighbor_id AS item, rank AS s FROM lsh_q
-  UNION ALL
-  SELECT 'ivf' AS method, query_id, neighbor_id AS item, rank AS s FROM ivf_q),
-{SQL_RANKING_QUALITY.format(k=TOP_K)}
-"""
-
-
-@query("similarity_ann_ndcg_eval", oracle=_ann_ndcg_oracle())
-def similarity_ann_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking quality of BOTH ANN families (hyperplane-LSH and IVF)
-    against the exact cosine top-k: per (method, query) nDCG@k — graded
-    gain k−exact_rank+1, 1/log2(rank+1) discount — plus MRR's reciprocal
-    first-hit rank.  Extends `similarity_ann_recall_eval` (set overlap)
-    to ORDER quality: an index can score recall 1.0 yet invert every
-    rank, and a retrieval cascade is tuned on nDCG, not recall.
-
-    Eval-by-composition (the recall-eval pattern): the three registered
-    queries run unchanged and meet on (query, item) — query-set × k
-    sized relations, one tiny join each; the oracle composes the same
-    three registered ORACLE TEXTS as CTEs, so the eval cannot drift from
-    the operators it evaluates.  Integer-exact: see module docstring
-    (micro-rounded per-position terms, integer nDCG/RR divisions)."""
-    from iceberg_table_generator_spark.operators.similarity import (
-        TOP_K,
-        cosine_topk_gold_pinned,
-        similarity_ann_lsh,
-        similarity_ivf_topk,
-    )
-
-    # Pinned accessor: ranking_quality reads the gold in TWO branches
-    # (gain join + iDCG denominator) — see cosine_topk_gold_pinned.
-    exact = cosine_topk_gold_pinned(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id").alias("item"), F.col("rank").alias("r")
-    )
-    lsh = similarity_ann_lsh(spark, sf_dir).select(
-        F.lit("lsh").alias("method"),
-        "query_id",
-        F.col("neighbor_id").alias("item"),
-        F.col("rank").alias("s"),
-    )
-    ivf = similarity_ivf_topk(spark, sf_dir).select(
-        F.lit("ivf").alias("method"),
-        "query_id",
-        F.col("neighbor_id").alias("item"),
-        F.col("rank").alias("s"),
-    )
-    return ranking_quality(
-        lsh.unionByName(ivf), exact, TOP_K, keys=["method"]
     )

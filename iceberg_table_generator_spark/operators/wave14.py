@@ -10,14 +10,6 @@ LLM-data playbooks that the surface still lacked.
   Multilingual Pretraining") — epoch-capped water-filling over language
   token counts; the principled successor to temperature sampling
   (`pipeline_source_mixing_weights` is the temperature tier).
-* **Binary (1-bit) quantization recall** — completes the quantized
-  search family (IVF prunes candidates; PQ/SQ8/BQ compress scoring at
-  8×/4×/64× — BQ is the modern in-memory prefilter tier, cf. RaBitQ /
-  Milvus BQ).
-* **Matryoshka truncated-dimension recall** (Kusupati et al. 2022,
-  "Matryoshka Representation Learning") — how much top-k agreement
-  survives scoring on the first d′ of d dimensions; the eval behind
-  every "shorten the embedding to cut the index 8×" decision.
 * **MinHash LSH band-configuration sweep** — candidate volume,
   precision, and recall of 8×8 / 16×4 / 32×2 band plans side by side;
   the planning query a 100 TB dedup run executes on a sample BEFORE
@@ -38,7 +30,7 @@ this module extends SURVEY.md §2.8's LLM-pipeline mandate.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_table_generator_spark.functions import collect
 from iceberg_table_generator_spark.functions.cache import persist_tracked
@@ -50,10 +42,10 @@ from iceberg_table_generator_spark.functions.text import (
     tokens,
     tokens_sql,
 )
+from iceberg_table_generator_spark.operators.relational import MICRO
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table, spread
 
-_MICRO = 1_000_000
 
 # --------------------------------------------------------------------------
 # Gopher quality rules (per-source pass-rate matrix)
@@ -146,7 +138,7 @@ SELECT source,
        CAST(sum(stop_ok) AS BIGINT) AS n_stopword_ok,
        CAST(sum(rep_ok) AS BIGINT) AS n_repetition_ok,
        CAST(sum(wc_ok * mwl_ok * stop_ok * rep_ok) AS BIGINT) AS n_all_pass,
-       CAST((sum(wc_ok * mwl_ok * stop_ok * rep_ok) * {_MICRO}) // count(*)
+       CAST((sum(wc_ok * mwl_ok * stop_ok * rep_ok) * {MICRO}) // count(*)
             AS BIGINT) AS all_pass_ppm
 FROM r GROUP BY source
 """
@@ -185,7 +177,7 @@ def pipeline_gopher_quality_rules(
             F.sum("stop_ok").cast("long").alias("n_stopword_ok"),
             F.sum("rep_ok").cast("long").alias("n_repetition_ok"),
             F.sum("all_ok").cast("long").alias("n_all_pass"),
-            F.expr(f"(sum(all_ok) * {_MICRO}) div count(*)")
+            F.expr(f"(sum(all_ok) * {MICRO}) div count(*)")
             .cast("long")
             .alias("all_pass_ppm"),
         )
@@ -225,7 +217,7 @@ alloc AS (
          al.rem - least({UNIMAX_EPOCH_CAP} * b.c, al.rem // (b.n - al.i))
   FROM base b JOIN alloc al ON b.i = al.i + 1)
 SELECT lang, c AS lang_tokens, CAST(a AS BIGINT) AS alloc_tokens,
-       CAST((a * {_MICRO}) // c AS BIGINT) AS epochs_micro,
+       CAST((a * {MICRO}) // c AS BIGINT) AS epochs_micro,
        CAST(CASE WHEN a = {UNIMAX_EPOCH_CAP} * c THEN 1 ELSE 0 END AS INT)
          AS capped
 FROM alloc
@@ -270,7 +262,7 @@ def pipeline_unimax_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lang,
                 c,
                 a,
-                (a * _MICRO) // c,
+                (a * MICRO) // c,
                 1 if a == UNIMAX_EPOCH_CAP * c else 0,
             )
         )
@@ -278,342 +270,6 @@ def pipeline_unimax_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         "lang string, lang_tokens long, alloc_tokens long, "
         "epochs_micro long, capped int",
-    )
-
-
-# --------------------------------------------------------------------------
-# Binary (1-bit) quantization ADC recall
-# --------------------------------------------------------------------------
-def _bq_recall_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import (
-        _VEC_DIM,
-        N_QUERIES,
-        TOP_K,
-    )
-
-    dim = _VEC_DIM
-    sgn_dot = (
-        f"list_sum(list_transform(generate_series(1, {dim}), "
-        "i -> (CASE WHEN c.vec[i] >= 0 THEN 1.0 ELSE -1.0 END) * q.vec[i]))"
-    )
-    xdot = (
-        f"list_sum(list_transform(generate_series(1, {dim}), "
-        "i -> q.vec[i] * c.vec[i]))"
-    )
-    return f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-n AS (
-  SELECT vec_id, vec,
-         sqrt(list_sum(list_transform(generate_series(1, {dim}),
-                                      i -> vec[i] * vec[i]))) AS norm
-  FROM v),
-apx AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {sgn_dot} / (q.norm * {float(dim) ** 0.5!r}) AS sim
-  FROM n q JOIN n c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {N_QUERIES}),
-apk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY sim DESC, neighbor_id) AS rn
-    FROM apx) WHERE rn <= {TOP_K}),
-ext AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {xdot} / (q.norm * c.norm) AS sim
-  FROM n q JOIN n c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {N_QUERIES}),
-epk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY sim DESC, neighbor_id) AS rn
-    FROM ext) WHERE rn <= {TOP_K}),
-hits AS (
-  SELECT e.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hits
-  FROM epk e LEFT JOIN apk a
-    ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-  GROUP BY e.query_id)
-SELECT query_id, CAST({TOP_K} AS INT) AS k, n_hits,
-       CAST((n_hits * {_MICRO}) // {TOP_K} AS BIGINT) AS recall_ppm
-FROM hits
-"""
-
-
-@query("similarity_bq_recall", oracle=_bq_recall_oracle())
-def similarity_bq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-quantization (1-bit) ADC search + recall@k vs exact: each
-    corpus vector compresses to its SIGN pattern (64 dims → 8 bytes —
-    a 64× smaller index than raw doubles), queries score against the
-    ±1 pattern with raw-precision values (asymmetric distance), and the
-    per-query overlap with the exact cosine top-k is reported.  Completes
-    the quantized-search ladder — IVF prunes candidates; PQ (8×) / SQ8
-    (4×) / BQ (64×, this query) compress scoring — BQ being the modern
-    in-memory prefilter tier (RaBitQ, Milvus BQ, SimHash-style sketches)
-    that a rerank pass then corrects.
-
-    Engine determinism: the quantizer is a sign test (x ≥ 0 → +1 — no
-    rounding at all), the ADC fold is one shared in-row op tree divided
-    by the exact constant ‖q‖·√dim, ties break on neighbor_id; recall is
-    an exact integer.
-
-    Scale: identical posture to `similarity_sq8_recall` — queries
-    broadcast (N_QUERIES rows), candidates quantize in-row and never
-    shuffle, rank windows are (n_queries × k)-bounded."""
-    from iceberg_table_generator_spark.operators.similarity import (
-        _VEC_DIM,
-        N_QUERIES,
-        TOP_K,
-        _dot,
-        similarity_cosine_topk,
-        with_norm,
-    )
-
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    )
-    cand = emb.select(
-        "vec_id",
-        F.transform(
-            "vec", lambda x: F.when(x >= 0, 1.0).otherwise(-1.0)
-        ).alias("sv"),
-    )
-    qry = with_norm(emb.filter(F.col("vec_id") < N_QUERIES)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("norm").alias("qnorm"),
-    )
-    apx = (
-        cand.crossJoin(F.broadcast(qry))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (_dot("sv", "qvec") / (F.col("qnorm") * float(_VEC_DIM) ** 0.5)).alias(
-                "sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    apk = (
-        apx.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    epk = similarity_cosine_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    hits = (
-        epk.alias("e")
-        .join(
-            apk.alias("a"),
-            (F.col("e.query_id") == F.col("a.query_id"))
-            & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-            "left",
-        )
-        .groupBy(F.col("e.query_id").alias("query_id"))
-        .agg(F.count(F.col("a.neighbor_id")).cast("long").alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        F.lit(TOP_K).cast("int").alias("k"),
-        "n_hits",
-        F.expr(f"CAST((n_hits * {_MICRO}) div {TOP_K} AS BIGINT)").alias(
-            "recall_ppm"
-        ),
-    )
-
-
-# --------------------------------------------------------------------------
-# Matryoshka truncated-dimension recall
-# --------------------------------------------------------------------------
-#: Truncation points evaluated against the full-dimension exact ranking.
-MRL_DIMS = (8, 16, 32)
-
-
-def _mrl_recall_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import (
-        _VEC_DIM,
-        N_QUERIES,
-        TOP_K,
-    )
-
-    full = _VEC_DIM
-    parts = []
-    for d in MRL_DIMS:
-        tdot = (
-            f"list_sum(list_transform(generate_series(1, {d}), "
-            "i -> q.vec[i] * c.vec[i]))"
-        )
-        tnrm_q = (
-            f"sqrt(list_sum(list_transform(generate_series(1, {d}), "
-            "i -> q.vec[i] * q.vec[i])))"
-        )
-        tnrm_c = (
-            f"sqrt(list_sum(list_transform(generate_series(1, {d}), "
-            "i -> c.vec[i] * c.vec[i])))"
-        )
-        parts.append(
-            f"""
-  SELECT {d} AS dim, q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {tdot} / ({tnrm_q} * {tnrm_c}) AS sim
-  FROM v q JOIN v c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {N_QUERIES}"""
-        )
-    apx = "\n  UNION ALL".join(parts)
-    xdot = (
-        f"list_sum(list_transform(generate_series(1, {full}), "
-        "i -> q.vec[i] * c.vec[i]))"
-    )
-    xn = (
-        f"sqrt(list_sum(list_transform(generate_series(1, {full}), "
-        "i -> {v}.vec[i] * {v}.vec[i])))"
-    )
-    return f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-apx AS ({apx}),
-apk AS (
-  SELECT dim, query_id, neighbor_id FROM (
-    SELECT dim, query_id, neighbor_id,
-           row_number() OVER (PARTITION BY dim, query_id
-                              ORDER BY sim DESC, neighbor_id) AS rn
-    FROM apx) WHERE rn <= {TOP_K}),
-ext AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {xdot} / ({xn.format(v='q')} * {xn.format(v='c')}) AS sim
-  FROM v q JOIN v c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {N_QUERIES}),
-epk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY sim DESC, neighbor_id) AS rn
-    FROM ext) WHERE rn <= {TOP_K}),
-grid AS (SELECT DISTINCT a.dim, e.query_id, e.neighbor_id
-         FROM epk e CROSS JOIN (SELECT DISTINCT dim FROM apk) a),
-hits AS (
-  SELECT g.dim, g.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hits
-  FROM grid g LEFT JOIN apk a
-    ON a.dim = g.dim AND a.query_id = g.query_id
-   AND a.neighbor_id = g.neighbor_id
-  GROUP BY g.dim, g.query_id)
-SELECT CAST(dim AS INT) AS dim, query_id, n_hits,
-       CAST((n_hits * {_MICRO}) // {TOP_K} AS BIGINT) AS recall_ppm
-FROM hits
-"""
-
-
-@query("similarity_matryoshka_recall", oracle=_mrl_recall_oracle())
-def similarity_matryoshka_recall(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Matryoshka (truncated-dimension) recall: score every query on only
-    the FIRST d′ ∈ {MRL_DIMS} of the 64 embedding dimensions and report
-    per-(d′, query) overlap with the full-dimension exact top-k — the
-    evaluation behind MRL-style "shorten the embedding, shrink the index
-    d/d′ ×" deployments (Kusupati et al. 2022; OpenAI/Nomic ship exactly
-    this knob).  Complements the quantization ladder: BQ/SQ8/PQ compress
-    PRECISION, truncation compresses DIMENSION; real stacks stack both.
-
-    Engine determinism: prefix slices, one shared dot/norm op tree per
-    d′, neighbor_id tiebreaks — recall is an exact integer on both
-    engines.  Scale: queries broadcast; candidates never shuffle; the
-    per-d′ rank windows are (dims × n_queries × k)-bounded."""
-    from iceberg_table_generator_spark.operators.similarity import (
-        N_QUERIES,
-        TOP_K,
-        _dot,
-        similarity_cosine_topk,
-    )
-
-    # NO spread() here (r14 mover-table adjudication): this query re-reads
-    # the embeddings relation once per d′ arm with LIGHT per-row work
-    # (prefix dots), so the round-robin repartition × arms costs more than
-    # the parallelism buys — alternating same-window A/B measured spread
-    # +22% for this query (1.99 vs 1.63 median) while the heavy-fold
-    # family keeps it (§1e).  The composed full-dim gold keeps its own
-    # spread inside similarity_cosine_topk.
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    )
-    per_dim = []
-    for d in MRL_DIMS:
-        sl = F.slice("vec", 1, d)
-        nrm = F.sqrt(
-            F.aggregate(
-                F.transform(sl, lambda x: x * x),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-        )
-        per_dim.append(
-            emb.select(
-                F.lit(d).cast("int").alias("dim"),
-                "vec_id",
-                sl.alias("tv"),
-                nrm.alias("tn"),
-            )
-        )
-    cand = per_dim[0]
-    for p in per_dim[1:]:
-        cand = cand.unionByName(p)
-    qry = cand.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("dim").alias("qdim"),
-        F.col("vec_id").alias("query_id"),
-        F.col("tv").alias("qv"),
-        F.col("tn").alias("qn"),
-    )
-    apx = (
-        cand.join(
-            F.broadcast(qry),
-            (F.col("dim") == F.col("qdim"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "dim",
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (_dot("qv", "tv") / (F.col("qn") * F.col("tn"))).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("dim", "query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    apk = (
-        apx.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("dim", "query_id", "neighbor_id")
-    )
-    epk = similarity_cosine_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    dims = spark.createDataFrame([(d,) for d in MRL_DIMS], "dim int")
-    grid = epk.crossJoin(F.broadcast(dims))
-    hits = (
-        grid.alias("g")
-        .join(
-            apk.alias("a"),
-            (F.col("g.dim") == F.col("a.dim"))
-            & (F.col("g.query_id") == F.col("a.query_id"))
-            & (F.col("g.neighbor_id") == F.col("a.neighbor_id")),
-            "left",
-        )
-        .groupBy(
-            F.col("g.dim").alias("dim"), F.col("g.query_id").alias("query_id")
-        )
-        .agg(F.count(F.col("a.neighbor_id")).cast("long").alias("n_hits"))
-    )
-    return hits.select(
-        "dim",
-        "query_id",
-        "n_hits",
-        F.expr(f"CAST((n_hits * {_MICRO}) div {TOP_K} AS BIGINT)").alias(
-            "recall_ppm"
-        ),
     )
 
 
@@ -629,7 +285,7 @@ SWEEP_JACCARD_NUM, SWEEP_JACCARD_DEN = 1, 2
 #: ONCE in Python and injected as literals into BOTH engines (pow is not
 #: correctly rounded, so neither engine computes it).
 _SWEEP_THRESH_MICRO = {
-    (b, r): round((1.0 / b) ** (1.0 / r) * _MICRO) for b, r in BAND_SWEEP
+    (b, r): round((1.0 / b) ** (1.0 / r) * MICRO) for b, r in BAND_SWEEP
 }
 
 
@@ -706,10 +362,10 @@ SELECT p.n_bands, p.rows_per_band,
        CAST(th.thresh_micro AS BIGINT) AS thresh_micro,
        p.n_candidates, p.n_true_found,
        CAST(tt.n_truth AS BIGINT) AS n_truth,
-       CAST((p.n_true_found * {_MICRO}) // p.n_candidates AS BIGINT)
+       CAST((p.n_true_found * {MICRO}) // p.n_candidates AS BIGINT)
          AS precision_ppm,
-       CAST(CASE WHEN tt.n_truth = 0 THEN {_MICRO}
-                 ELSE (p.n_true_found * {_MICRO}) // tt.n_truth END AS BIGINT)
+       CAST(CASE WHEN tt.n_truth = 0 THEN {MICRO}
+                 ELSE (p.n_true_found * {MICRO}) // tt.n_truth END AS BIGINT)
          AS recall_ppm
 FROM per p
 JOIN th ON th.n_bands = p.n_bands AND th.rows_per_band = p.rows_per_band
@@ -865,12 +521,12 @@ def dedup_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_candidates",
             "n_true_found",
             "n_truth",
-            F.expr(f"(n_true_found * {_MICRO}) div n_candidates")
+            F.expr(f"(n_true_found * {MICRO}) div n_candidates")
             .cast("long")
             .alias("precision_ppm"),
             F.expr(
-                f"CASE WHEN n_truth = 0 THEN {_MICRO} "
-                f"ELSE (n_true_found * {_MICRO}) div n_truth END"
+                f"CASE WHEN n_truth = 0 THEN {MICRO} "
+                f"ELSE (n_true_found * {MICRO}) div n_truth END"
             )
             .cast("long")
             .alias("recall_ppm"),

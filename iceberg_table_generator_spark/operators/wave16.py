@@ -1,12 +1,6 @@
-"""Round-12 fourth wave: the composed production-ANN shape, the dedup
-tier-overlap audit, and the multimodal alignment filter.
+"""Round-12 fourth wave: the dedup tier-overlap audit and the multimodal
+alignment filter.
 
-* **IVF+PQ recall** — FAISS's `IndexIVFPQ` composed from this repo's two
-  registered halves: IVF lists prune WHICH vectors are scored, PQ ADC
-  compresses HOW each is scored, an exact rerank corrects the shortlist.
-  (Non-residual variant: codes are fit on raw vectors, not per-list
-  residuals — the `IVFFlat`+`PQ` composition; residual encoding changes
-  accuracy, not the plan shape.)
 * **Dedup tier-overlap matrix** — the Venn a curation run reads across
   its dedup ladder: which duplicate pairs the exact tier (identical
   text), the lexical tier (MinHash-LSH, Jaccard ≥ τ), and the semantic
@@ -26,270 +20,17 @@ tier-overlap audit, and the multimodal alignment filter.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
-from iceberg_table_generator_spark.functions.cache import persist_tracked
 from iceberg_table_generator_spark.functions.text import (
     md5_60,
     md5_60_sql,
     tokens,
     tokens_sql,
 )
+from iceberg_table_generator_spark.operators.relational import MICRO
 from iceberg_table_generator_spark.registry import query
-from iceberg_table_generator_spark.sources.tables import load_table, spread
-
-_MICRO = 1_000_000
-
-# --------------------------------------------------------------------------
-# IVF + PQ composed search (prune → ADC → rerank) + recall vs exact
-# --------------------------------------------------------------------------
-
-
-def _ivfpq_recall_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import (
-        _sql_d2_int,
-        _sql_ivf_fit_ctes,
-        _sql_km_setup,
-        _sql_pq_fit_ctes,
-        _VEC_DIM,
-        IVF_CLUSTERS,
-        IVF_ITERS,
-        IVF_NPROBE,
-        KM_SCALE,
-        N_QUERIES,
-        PQ_ITERS,
-        PQ_K,
-        PQ_M,
-        PQ_SHORTLIST,
-        TOP_K,
-    )
-
-    dim, m = _VEC_DIM, PQ_M
-    sd = dim // m
-    cf, pcf = f"c{IVF_ITERS}", f"pc{PQ_ITERS}"
-    cvd = f"CAST(c.cv[i] AS DOUBLE)/{KM_SCALE}.0"
-    dot = (
-        f"list_sum(list_transform(generate_series(1, {dim}), "
-        "i -> q.vec[i]*c.vec[i]))"
-    )
-    return f"""{_sql_km_setup()}{_sql_ivf_fit_ctes(IVF_CLUSTERS, IVF_ITERS, dim)}{_sql_pq_fit_ctes(m, PQ_K, PQ_ITERS, sd, prefix="p")},
-nrm AS (
-  SELECT vec_id, vec,
-         sqrt(list_sum(list_transform(generate_series(1, {dim}),
-                                      i -> vec[i]*vec[i]))) AS norm
-  FROM v),
-asg AS (
-  SELECT vec_id, cid FROM (
-    SELECT q0.vec_id, c.cid,
-           row_number() OVER (PARTITION BY q0.vec_id
-               ORDER BY {_sql_d2_int('q0.qv', 'c.cv', dim)}, c.cid) AS rn
-    FROM q0 CROSS JOIN {cf} c) WHERE rn = 1),
-cs AS (
-  SELECT q0.vec_id, g.j,
-         list_transform(generate_series(1, {sd}), i -> q0.qv[g.j*{sd}+i]) AS sv
-  FROM q0, generate_series(0, {m - 1}) g(j)),
-codes AS (
-  SELECT vec_id, j, cid AS code FROM (
-    SELECT cs.vec_id, cs.j, c.cid,
-           row_number() OVER (PARTITION BY cs.vec_id, cs.j
-               ORDER BY {_sql_d2_int('cs.sv', 'c.cv', sd)}, c.cid) AS rn
-    FROM cs JOIN {pcf} c ON c.j = cs.j) WHERE rn = 1),
-cl AS (SELECT vec_id, list(code ORDER BY j) AS codes FROM codes GROUP BY vec_id),
-qn AS (SELECT n.*, q0.qv FROM nrm n JOIN q0 USING (vec_id)
-       WHERE n.vec_id < {N_QUERIES}),
-probes AS (
-  SELECT vec_id AS query_id, cid FROM (
-    SELECT q.vec_id, c.cid,
-           row_number() OVER (PARTITION BY q.vec_id
-               ORDER BY {_sql_d2_int('q.qv', 'c.cv', dim)}, c.cid) AS rn
-    FROM qn q CROSS JOIN {cf} c) WHERE rn <= {IVF_NPROBE}),
-qtab AS (
-  SELECT q.vec_id AS query_id, c.j, c.cid,
-         list_sum(list_transform(generate_series(1, {sd}),
-           i -> (q.vec[c.j*{sd}+i] - {cvd})
-              * (q.vec[c.j*{sd}+i] - {cvd}))) AS d2
-  FROM qn q CROSS JOIN {pcf} c),
-qtl AS (SELECT query_id, j, list(d2 ORDER BY cid) AS tr
-        FROM qtab GROUP BY query_id, j),
-qt2 AS (SELECT query_id, list(tr ORDER BY j) AS tab FROM qtl GROUP BY query_id),
-adc AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         list_sum(list_transform(generate_series(1, {m}),
-                  j -> t.tab[j][cl.codes[j] + 1])) AS adc_d2
-  FROM probes p
-  JOIN asg a ON a.cid = p.cid AND a.vec_id <> p.query_id
-  JOIN cl ON cl.vec_id = a.vec_id
-  JOIN qt2 t ON t.query_id = p.query_id),
-short AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY adc_d2, neighbor_id) AS rn
-    FROM adc) WHERE rn <= {PQ_SHORTLIST}),
-rer AS (
-  SELECT s.query_id, s.neighbor_id,
-         list_sum(list_transform(generate_series(1, {dim}),
-                  i -> q.vec[i]*c.vec[i])) / (q.norm * c.norm) AS sim
-  FROM short s
-  JOIN nrm q ON q.vec_id = s.query_id
-  JOIN nrm c ON c.vec_id = s.neighbor_id),
-apk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY sim DESC, neighbor_id) AS rn
-    FROM rer) WHERE rn <= {TOP_K}),
-ext AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {dot} / (q.norm * c.norm) AS sim
-  FROM nrm q JOIN nrm c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {N_QUERIES}),
-epk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY sim DESC, neighbor_id) AS rn
-    FROM ext) WHERE rn <= {TOP_K}),
-hits AS (
-  SELECT e.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hits
-  FROM epk e LEFT JOIN apk a
-    ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-  GROUP BY e.query_id)
-SELECT query_id, CAST({TOP_K} AS INT) AS k, n_hits,
-       CAST((n_hits * {_MICRO}) // {TOP_K} AS BIGINT) AS recall_ppm
-FROM hits
-"""
-
-
-@query("similarity_ivfpq_recall", oracle=_ivfpq_recall_oracle())
-def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF+PQ composed search + recall@k vs exact — the production vector
-    index (FAISS `IndexIVFPQ`) assembled from the repo's registered
-    halves: the engine-exact IVF coarse quantizer prunes to nprobe lists,
-    PQ ADC scores only the pruned candidates from 4-bit codes, the
-    shortlist reranks exactly, and per-query recall against exact cosine
-    is reported.  `similarity_ivf_topk` and `similarity_pq_topk` each
-    measure one half; this measures the composition a deployment
-    actually runs (errors COMPOUND: list pruning can evict a vector that
-    PQ would have scored well, which no single-half recall shows).
-
-    Non-residual composition (IVFFlat+PQ): codes quantize raw vectors,
-    not per-list residuals — residual encoding changes constants, not
-    plan shape.  Oracle-paired end-to-end: both fit chains are the
-    engine-exact integer k-means (the PQ chain prefixed `p…` so the two
-    coexist in one CTE tree), assignment/encoding are integer argmins,
-    ADC folds are shared double op trees.
-
-    Scale: candidates scored = nprobe/k of the corpus at 4 bits/dim·m;
-    the probe/candidate join co-partitions on cid; rerank touches
-    shortlist rows only; rank windows are (n_queries × k)-bounded."""
-    from iceberg_table_generator_spark.operators.similarity import (
-        _d2_structs_int,
-        _dot,
-        _pq_codes,
-        _pq_query_table,
-        _qint,
-        codebooks_to_float,
-        IVF_NPROBE,
-        ivf_index,
-        N_QUERIES,
-        PQ_SHORTLIST,
-        pq_index,
-        similarity_cosine_topk,
-        TOP_K,
-        with_norm,
-    )
-
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    )
-    cents = ivf_index(emb, cache_key=sf_dir)
-    books = pq_index(emb, cache_key=sf_dir)
-    qemb = with_norm(emb).withColumn("qv", _qint("vec"))
-    best = F.array_min(_d2_structs_int("qv", cents))
-    cand = qemb.select(
-        "vec_id",
-        "vec",
-        "norm",
-        best["cluster_id"].alias("cid"),
-        _pq_codes("vec", books).alias("codes"),
-    ).transform(persist_tracked)
-    qry = (
-        cand.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("qv", _qint("vec"))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("vec").alias("qvec"),
-            F.col("norm").alias("qnorm"),
-            _pq_query_table("vec", codebooks_to_float(books)).alias("qtab"),
-            F.explode(
-                F.slice(
-                    F.array_sort(_d2_structs_int("qv", cents)), 1, IVF_NPROBE
-                )
-            ).alias("probe"),
-        )
-        .select(
-            "query_id", "qvec", "qnorm", "qtab",
-            F.col("probe")["cluster_id"].alias("cid"),
-        )
-    )
-    adc = (
-        cand.join(F.broadcast(qry), "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "qvec",
-            "qnorm",
-            F.col("vec_id").alias("neighbor_id"),
-            "vec",
-            "norm",
-            F.aggregate(
-                F.zip_with(
-                    "codes", "qtab", lambda code, row: F.element_at(row, code + 1)
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("adc_d2"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_d2"), F.asc("neighbor_id")
-    )
-    shortlist = adc.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= PQ_SHORTLIST
-    )
-    sim = (_dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim")
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    apk = (
-        shortlist.select("query_id", "neighbor_id", sim)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    epk = similarity_cosine_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    hits = (
-        epk.alias("e")
-        .join(
-            apk.alias("a"),
-            (F.col("e.query_id") == F.col("a.query_id"))
-            & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-            "left",
-        )
-        .groupBy(F.col("e.query_id").alias("query_id"))
-        .agg(F.count(F.col("a.neighbor_id")).cast("long").alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        F.lit(TOP_K).cast("int").alias("k"),
-        "n_hits",
-        F.expr(f"CAST((n_hits * {_MICRO}) div {TOP_K} AS BIGINT)").alias(
-            "recall_ppm"
-        ),
-    )
+from iceberg_table_generator_spark.sources.tables import load_table
 
 
 # --------------------------------------------------------------------------
@@ -302,18 +43,18 @@ def _tier_overlap_oracle() -> str:
         _MINHASH_ORACLE,
     )
     from iceberg_table_generator_spark.operators.wave11 import (
-        _sql_semdedup_ctes,
+        sql_semdedup_ctes,
         SEMDEDUP_TAU,
     )
-    from iceberg_table_generator_spark.operators.similarity import _VEC_DIM
+    from iceberg_table_generator_spark.operators.similarity import VEC_DIM
 
     return f"""
 WITH lex_q AS ({_MINHASH_ORACLE}),
-sem_base AS ({_sql_semdedup_ctes()}
+sem_base AS ({sql_semdedup_ctes()}
   SELECT least(u.vec_id, v.vec_id) AS a, greatest(u.vec_id, v.vec_id) AS b
   FROM m u JOIN m v ON u.cid = v.cid
    AND (u.ccos < v.ccos OR (u.ccos = v.ccos AND u.vec_id < v.vec_id))
-  WHERE list_sum(list_transform(generate_series(1, {_VEC_DIM}),
+  WHERE list_sum(list_transform(generate_series(1, {VEC_DIM}),
                                 i -> u.vec[i] * v.vec[i]))
         / (u.nrm * v.nrm) >= {SEMDEDUP_TAU}),
 exact_p AS (
@@ -365,10 +106,9 @@ def dedup_tier_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iceberg_table_generator_spark.operators.dedup import (
         dedup_minhash_lsh,
     )
-    from iceberg_table_generator_spark.operators.similarity import _dot
     from iceberg_table_generator_spark.operators.wave11 import (
         _semdedup_prior_pairs,
-        _semdedup_relation,
+        semdedup_relation,
         SEMDEDUP_TAU,
     )
 
@@ -385,7 +125,7 @@ def dedup_tier_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .distinct()
     )
-    m = _semdedup_relation(spark, sf_dir)
+    m = semdedup_relation(spark, sf_dir)
     sem_p = (
         _semdedup_prior_pairs(m)
         .filter(F.col("sim") >= SEMDEDUP_TAU)
@@ -438,9 +178,9 @@ ALIGN_KEEP_T = 0.0
 
 
 def _alignment_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import _VEC_DIM
+    from iceberg_table_generator_spark.operators.similarity import VEC_DIM
 
-    dim = _VEC_DIM
+    dim = VEC_DIM
     return f"""
 WITH tok AS (
   SELECT doc_id, source, unnest({tokens_sql()}) AS w
@@ -473,16 +213,16 @@ al AS (
 sc AS (
   SELECT doc_id, source,
          CASE WHEN tn = 0 THEN CAST(0 AS BIGINT)
-              ELSE CAST(round(dp / (tn * en) * {_MICRO}, 0) AS BIGINT) END
+              ELSE CAST(round(dp / (tn * en) * {MICRO}, 0) AS BIGINT) END
            AS align_micro
   FROM al)
 SELECT source,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(align_micro) AS BIGINT) AS align_micro_sum,
-       CAST(sum(CASE WHEN align_micro > {int(ALIGN_KEEP_T * _MICRO)}
+       CAST(sum(CASE WHEN align_micro > {int(ALIGN_KEEP_T * MICRO)}
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       CAST((sum(CASE WHEN align_micro > {int(ALIGN_KEEP_T * _MICRO)}
-                      THEN 1 ELSE 0 END) * {_MICRO}) // count(*) AS BIGINT)
+       CAST((sum(CASE WHEN align_micro > {int(ALIGN_KEEP_T * MICRO)}
+                      THEN 1 ELSE 0 END) * {MICRO}) // count(*) AS BIGINT)
          AS keep_ppm
 FROM sc GROUP BY source
 """
@@ -510,9 +250,9 @@ def multimodal_text_embedding_alignment(
     Scale: one token pass → (doc, dim)-keyed integer aggregate (≤ dim
     rows per doc), one id-co-partitioned join against the embeddings
     scan, sources-bounded output."""
-    from iceberg_table_generator_spark.operators.similarity import _VEC_DIM
+    from iceberg_table_generator_spark.operators.similarity import VEC_DIM
 
-    dim = _VEC_DIM
+    dim = VEC_DIM
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", "source", F.explode(tokens()).alias("w")
@@ -568,13 +308,13 @@ def multimodal_text_embedding_alignment(
         "source",
         F.when(F.col("tn") == 0, F.lit(0).cast("long"))
         .otherwise(
-            F.round(F.col("dp") / (F.col("tn") * F.col("en")) * _MICRO, 0).cast(
+            F.round(F.col("dp") / (F.col("tn") * F.col("en")) * MICRO, 0).cast(
                 "long"
             )
         )
         .alias("align_micro"),
     )
-    cut = int(ALIGN_KEEP_T * _MICRO)
+    cut = int(ALIGN_KEEP_T * MICRO)
     kept = F.when(F.col("align_micro") > cut, 1).otherwise(0)
     return (
         sc.withColumn("k", kept)
@@ -583,7 +323,7 @@ def multimodal_text_embedding_alignment(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("align_micro").cast("long").alias("align_micro_sum"),
             F.sum("k").cast("long").alias("n_kept"),
-            F.expr(f"(sum(k) * {_MICRO}) div count(*)")
+            F.expr(f"(sum(k) * {MICRO}) div count(*)")
             .cast("long")
             .alias("keep_ppm"),
         )

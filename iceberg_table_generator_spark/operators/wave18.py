@@ -12,24 +12,18 @@ operators — the knobs a steward turns before committing a policy.
   drop rate per (language, τ) cell, the multilingual tuning surface
   that shows WHICH language a tighter τ starts over-pruning first
   (the LAION/CCNet per-language calibration question).
-* **BQ + exact rerank recall** — the production shape of the 1-bit
-  tier: `similarity_bq_recall` measures the raw sign-ADC ranking
-  (cheap, recall-poor); real deployments use BQ as a PREFILTER and
-  rerank a shortlist exactly (RaBitQ's own evaluation protocol).  This
-  measures that two-stage recall, completing the tier the way PQ
-  already has ADC+rerank.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_table_generator_spark.functions.text import tokens
+from iceberg_table_generator_spark.operators.relational import MICRO
 from iceberg_table_generator_spark.registry import query
-from iceberg_table_generator_spark.sources.tables import load_table, spread
+from iceberg_table_generator_spark.sources.tables import load_table
 
-_MICRO = 1_000_000
 
 # --------------------------------------------------------------------------
 # Gopher-rule ablation curve (retention at min-rules r = 0..4)
@@ -56,9 +50,9 @@ SELECT CAST(g.min_rules AS INT) AS min_rules,
        CAST(sum(CASE WHEN sc.n_pass >= g.min_rules THEN sc.wc ELSE 0 END)
             AS BIGINT) AS tokens_kept,
        CAST((sum(CASE WHEN sc.n_pass >= g.min_rules THEN 1 ELSE 0 END)
-             * {_MICRO}) // any_value(tot.n_docs) AS BIGINT) AS doc_keep_ppm,
+             * {MICRO}) // any_value(tot.n_docs) AS BIGINT) AS doc_keep_ppm,
        CAST((sum(CASE WHEN sc.n_pass >= g.min_rules THEN sc.wc ELSE 0 END)
-             * {_MICRO}) // any_value(tot.n_tokens) AS BIGINT)
+             * {MICRO}) // any_value(tot.n_tokens) AS BIGINT)
          AS token_keep_ppm
 FROM grid g CROSS JOIN sc CROSS JOIN tot
 GROUP BY g.min_rules
@@ -118,10 +112,10 @@ def pipeline_quality_ablation_curve(
             "min_rules",
             "docs_kept",
             "tokens_kept",
-            F.expr(f"(docs_kept * {_MICRO}) div n_docs")
+            F.expr(f"(docs_kept * {MICRO}) div n_docs")
             .cast("long")
             .alias("doc_keep_ppm"),
-            F.expr(f"(tokens_kept * {_MICRO}) div n_tokens")
+            F.expr(f"(tokens_kept * {MICRO}) div n_tokens")
             .cast("long")
             .alias("token_keep_ppm"),
         )
@@ -134,16 +128,16 @@ def pipeline_quality_ablation_curve(
 
 
 def _lang_tau_sweep_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import _VEC_DIM
+    from iceberg_table_generator_spark.operators.similarity import VEC_DIM
     from iceberg_table_generator_spark.operators.wave11 import (
-        _sql_semdedup_ctes,
+        sql_semdedup_ctes,
         _TAU_VALUES_SQL,
     )
 
-    return f"""{_sql_semdedup_ctes()},
+    return f"""{sql_semdedup_ctes()},
 vmax AS (
   SELECT v.vec_id,
-         max(list_sum(list_transform(generate_series(1, {_VEC_DIM}),
+         max(list_sum(list_transform(generate_series(1, {VEC_DIM}),
                                      i -> u.vec[i] * v.vec[i]))
              / (u.nrm * v.nrm)) AS mx
   FROM m u JOIN m v ON u.cid = v.cid
@@ -163,7 +157,7 @@ drops AS (
 SELECT l.lang, CAST(t.tau_micro AS BIGINT) AS tau_micro,
        CAST(coalesce(d.n_dropped, 0) AS BIGINT) AS n_dropped,
        l.n AS n_members,
-       CAST((coalesce(d.n_dropped, 0) * {_MICRO}) // l.n AS BIGINT)
+       CAST((coalesce(d.n_dropped, 0) * {MICRO}) // l.n AS BIGINT)
          AS drop_ppm
 FROM lc l
 CROSS JOIN taus t
@@ -193,12 +187,12 @@ def dedup_semdedup_lang_tau_sweep(
     output."""
     from iceberg_table_generator_spark.operators.wave11 import (
         _semdedup_prior_pairs,
-        _semdedup_relation,
+        semdedup_relation,
         SEMDEDUP_TAU_GRID,
     )
     from iceberg_table_generator_spark.operators.wave13 import _lang_of_vec
 
-    m = _semdedup_relation(spark, sf_dir)
+    m = semdedup_relation(spark, sf_dir)
     vmax = (
         _semdedup_prior_pairs(m)
         .groupBy(F.col("v_id").alias("vec_id"))
@@ -225,177 +219,8 @@ def dedup_semdedup_lang_tau_sweep(
             "tau_micro",
             F.coalesce("n_dropped", F.lit(0)).cast("long").alias("n_dropped"),
             F.col("n").alias("n_members"),
-            F.expr(f"(coalesce(n_dropped, 0) * {_MICRO}) div n")
+            F.expr(f"(coalesce(n_dropped, 0) * {MICRO}) div n")
             .cast("long")
             .alias("drop_ppm"),
         )
-    )
-
-
-# --------------------------------------------------------------------------
-# BQ prefilter + exact rerank recall (the 1-bit tier's production shape)
-# --------------------------------------------------------------------------
-#: Shortlist depth for the exact rerank (matches the PQ pipeline's,
-#: so the two compressed prefilters are directly comparable).
-BQ_SHORTLIST = 50
-
-
-def _bq_rerank_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import (
-        _VEC_DIM,
-        N_QUERIES,
-        TOP_K,
-    )
-
-    dim = _VEC_DIM
-    sgn_dot = (
-        f"list_sum(list_transform(generate_series(1, {dim}), "
-        "i -> (CASE WHEN c.vec[i] >= 0 THEN 1.0 ELSE -1.0 END) * q.vec[i]))"
-    )
-    xdot = (
-        f"list_sum(list_transform(generate_series(1, {dim}), "
-        "i -> q.vec[i] * c.vec[i]))"
-    )
-    return f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-n AS (
-  SELECT vec_id, vec,
-         sqrt(list_sum(list_transform(generate_series(1, {dim}),
-                                      i -> vec[i] * vec[i]))) AS norm
-  FROM v),
-apx AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {sgn_dot} AS score
-  FROM n q JOIN n c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {N_QUERIES}),
-short AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY score DESC, neighbor_id) AS rn
-    FROM apx) WHERE rn <= {BQ_SHORTLIST}),
-rer AS (
-  SELECT s.query_id, s.neighbor_id,
-         {xdot.replace('q.vec', 'qn.vec').replace('c.vec', 'cn.vec')}
-           / (qn.norm * cn.norm) AS sim
-  FROM short s
-  JOIN n qn ON qn.vec_id = s.query_id
-  JOIN n cn ON cn.vec_id = s.neighbor_id),
-apk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY sim DESC, neighbor_id) AS rn
-    FROM rer) WHERE rn <= {TOP_K}),
-ext AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {xdot} / (q.norm * c.norm) AS sim
-  FROM n q JOIN n c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < {N_QUERIES}),
-epk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY sim DESC, neighbor_id) AS rn
-    FROM ext) WHERE rn <= {TOP_K}),
-hits AS (
-  SELECT e.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hits
-  FROM epk e LEFT JOIN apk a
-    ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-  GROUP BY e.query_id)
-SELECT query_id, CAST({TOP_K} AS INT) AS k, n_hits,
-       CAST((n_hits * {_MICRO}) // {TOP_K} AS BIGINT) AS recall_ppm
-FROM hits
-"""
-
-
-@query("similarity_bq_rerank_recall", oracle=_bq_rerank_oracle())
-def similarity_bq_rerank_recall(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """BQ prefilter + exact rerank recall@k — the 1-bit tier's production
-    shape: the sign-pattern ADC ranks cheaply (8 bytes/vector scanned),
-    the top-{BQ_SHORTLIST} shortlist reranks with exact cosine, and
-    per-query recall vs exact is reported.  `similarity_bq_recall`
-    measures the raw ADC ranking (the floor); deployments always rerank
-    (RaBitQ's own protocol), and the DELTA between the two queries is
-    the rerank's value — the same two-stage story `similarity_pq_topk`
-    tells at 4 bits, at matched shortlist depth so the tiers compare
-    directly.
-
-    Exactness: sign test + integer-free shared double folds, ties on
-    neighbor_id; recall is an exact integer.  Scale: the ADC scan never
-    shuffles; the rerank fetches full vectors for shortlist rows only;
-    rank windows are (n_queries × shortlist)-bounded."""
-    from iceberg_table_generator_spark.operators.similarity import (
-        _dot,
-        N_QUERIES,
-        similarity_cosine_topk,
-        TOP_K,
-        with_norm,
-    )
-
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    )
-    cand = with_norm(emb).withColumn(
-        "sv",
-        F.transform("vec", lambda x: F.when(x >= 0, 1.0).otherwise(-1.0)),
-    )
-    qry = with_norm(emb.filter(F.col("vec_id") < N_QUERIES)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("norm").alias("qnorm"),
-    )
-    apx = (
-        cand.crossJoin(F.broadcast(qry))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "qvec",
-            "qnorm",
-            F.col("vec_id").alias("neighbor_id"),
-            "vec",
-            "norm",
-            _dot("sv", "qvec").alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    shortlist = apx.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= BQ_SHORTLIST
-    )
-    sim = (_dot("qvec", "vec") / (F.col("qnorm") * F.col("norm"))).alias("sim")
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    apk = (
-        shortlist.select("query_id", "neighbor_id", sim)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    epk = similarity_cosine_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    hits = (
-        epk.alias("e")
-        .join(
-            apk.alias("a"),
-            (F.col("e.query_id") == F.col("a.query_id"))
-            & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-            "left",
-        )
-        .groupBy(F.col("e.query_id").alias("query_id"))
-        .agg(F.count(F.col("a.neighbor_id")).cast("long").alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        F.lit(TOP_K).cast("int").alias("k"),
-        "n_hits",
-        F.expr(f"CAST((n_hits * {_MICRO}) div {TOP_K} AS BIGINT)").alias(
-            "recall_ppm"
-        ),
     )

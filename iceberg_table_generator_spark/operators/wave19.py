@@ -12,10 +12,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_table_generator_spark.operators.text import ccnet_doc_buckets, ccnet_doc_ctes
+from iceberg_table_generator_spark.operators.relational import MICRO
 from iceberg_table_generator_spark.registry import query
 from iceberg_table_generator_spark.sources.tables import load_table
-
-_MICRO = 1_000_000
 
 
 # --------------------------------------------------------------------------
@@ -98,7 +97,7 @@ WITH lex AS ({_MINHASH_ORACLE}),
 p AS (
   SELECT least(da.source, db.source) AS source_a,
          greatest(da.source, db.source) AS source_b,
-         CAST(round(l.jaccard * {_MICRO}, 0) AS BIGINT) AS j_micro
+         CAST(round(l.jaccard * {MICRO}, 0) AS BIGINT) AS j_micro
   FROM lex l
   JOIN documents da ON da.doc_id = l.doc_a
   JOIN documents db ON db.doc_id = l.doc_b)
@@ -145,7 +144,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.least("sa", "sb").alias("source_a"),
             F.greatest("sa", "sb").alias("source_b"),
-            F.round(F.col("jaccard") * _MICRO, 0).cast("long").alias("j_micro"),
+            F.round(F.col("jaccard") * MICRO, 0).cast("long").alias("j_micro"),
         )
     )
     return p.groupBy("source_a", "source_b").agg(

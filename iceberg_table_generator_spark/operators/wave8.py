@@ -24,10 +24,10 @@ from pyspark.sql.window import Window
 
 from iceberg_table_generator_spark.functions.json import props_k
 from iceberg_table_generator_spark.functions.text import md5_60, md5_60_sql
+from iceberg_table_generator_spark.operators.relational import D38
 from iceberg_table_generator_spark.registry import query
-from iceberg_table_generator_spark.sources.tables import load_table, spread
+from iceberg_table_generator_spark.sources.tables import load_table
 
-D38 = "decimal(38,0)"
 
 # --------------------------------------------------------------------------
 # OLS trend per order priority: monthly revenue regressed on month index
@@ -578,82 +578,6 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Cluster silhouette audit over the shared integer-exact k-means index
-# --------------------------------------------------------------------------
-def _silhouette_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import (
-        IVF_CLUSTERS,
-        IVF_ITERS,
-        _VEC_DIM,
-        _sql_d2_int,
-        _sql_ivf_fit_ctes,
-        _sql_km_setup,
-    )
-
-    k, iters, dim = IVF_CLUSTERS, IVF_ITERS, _VEC_DIM
-    d2 = _sql_d2_int("q0.qv", "c.cv", dim)
-    return f"""{_sql_km_setup()}{_sql_ivf_fit_ctes(k, iters, dim)},
-ranked AS (
-  SELECT q0.vec_id, c.cid, {d2} AS d2,
-         row_number() OVER (PARTITION BY q0.vec_id
-             ORDER BY {d2}, c.cid) AS rn
-  FROM q0 CROSS JOIN c{iters} c),
-ab AS (
-  SELECT vec_id, cid, rn, d2 AS a2,
-         lead(d2) OVER (PARTITION BY vec_id ORDER BY rn) AS b2
-  FROM ranked WHERE rn <= 2)
-SELECT cid AS cluster_id,
-       CAST(count(*) AS BIGINT) AS n_points,
-       CAST(sum(CASE WHEN b2 >= 4 * a2 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_tight,
-       round(sum(CASE WHEN b2 >= 4 * a2 THEN 1 ELSE 0 END) * 1.0 / count(*),
-             6) AS tight_ratio
-FROM ab WHERE rn = 1
-GROUP BY cid
-"""
-
-
-@query("similarity_silhouette_audit", oracle=_silhouette_oracle())
-def similarity_silhouette_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Squared-distance silhouette audit of the shared IVF k-means index:
-    per cluster, how many members sit at least TWICE as close to their
-    own centroid as to the nearest other centroid (b ≥ 2a, compared as
-    b² ≥ 4a² — no square roots) — the index-quality gate that tells you
-    whether `similarity_ivf_topk`'s nprobe=2 is safe (loose clusters ⇒
-    neighbors leak across list boundaries and recall drops;
-    `similarity_ann_recall_eval` measures that leak, this explains it).
-
-    Exactness: distances are scale-6 integer d² against the SAME
-    engine-exact centroids DuckDB refits from raw parquet (the
-    IVF/PQ oracle machinery); the tightness test is a pure integer
-    comparison.  Scale: one narrow pass — per-row argmin over k
-    broadcast centroid literals; the only shuffle is the k-row final
-    aggregate."""
-    from iceberg_table_generator_spark.operators.similarity import (
-        _d2_structs_int,
-        _qint,
-        ivf_index,
-    )
-
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    )
-    cents = ivf_index(emb, cache_key=sf_dir)
-    top2 = F.slice(F.array_sort(_d2_structs_int(_qint("vec"), cents)), 1, 2)
-    d = emb.select(
-        F.element_at(top2, 1)["cluster_id"].alias("cluster_id"),
-        F.element_at(top2, 1)["d2"].alias("a2"),
-        F.element_at(top2, 2)["d2"].alias("b2"),
-    )
-    tight = F.sum(F.when(F.col("b2") >= 4 * F.col("a2"), 1).otherwise(0))
-    return d.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n_points"),
-        tight.alias("n_tight"),
-        F.round(tight * 1.0 / F.count(F.lit(1)), 6).alias("tight_ratio"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Brown-Forsythe (median-based Levene) equality-of-variance test
 # --------------------------------------------------------------------------
 _BF_FINAL = (
@@ -1195,90 +1119,6 @@ def lineitem_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.sum("rev0").cast("long"),
             6,
         ).alias("laspeyres_e0"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Per-dimension embedding variance profile (feature-signal audit)
-# --------------------------------------------------------------------------
-def _dimvar_oracle() -> str:
-    # _VEC_DIM interpolated from the similarity module (not hard-coded)
-    # so a vector-width change fails the oracle loudly instead of
-    # silently truncating the explode.
-    from iceberg_table_generator_spark.operators.similarity import _VEC_DIM
-
-    return f"""
-WITH q AS (
-  SELECT vec_id,
-         list_transform(CAST(embedding AS DOUBLE[]), x ->
-             CAST(CAST(x AS DECIMAL(12,6)) * 1000000 AS BIGINT)) AS qv
-  FROM embeddings),
-ex AS (
-  SELECT g.i - 1 AS dim, qv[g.i] AS x
-  FROM q, generate_series(1, {_VEC_DIM}) g(i)),
-mom AS (
-  SELECT dim, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS s,
-         CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS ss
-  FROM ex GROUP BY dim)
-SELECT dim, n,
-       CAST(CASE WHEN s >= 0 THEN (2 * s + n) // (2 * n)
-                 ELSE -((-2 * s + n) // (2 * n)) END AS BIGINT) AS mean_e6,
-       round(CAST(n * ss - CAST(s AS HUGEINT) * s AS DOUBLE)
-             / CAST(CAST(n AS HUGEINT) * (n - 1) AS DOUBLE) / 1000000000000,
-             6) AS variance
-FROM mom
-"""
-
-
-@query("similarity_dim_variance_profile", oracle=_dimvar_oracle())
-def similarity_dim_variance_profile(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-dimension mean and sample variance of the embedding corpus —
-    the feature-signal audit run before any projection/quantization
-    decision (a near-zero-variance dimension is dead weight in every
-    distance computation; `similarity_random_projection` and
-    `similarity_quantize_int8` both silently assume dimensions carry
-    comparable signal — this measures it).
-
-    Exactness: coordinates are the repo's scale-6 integers (the shared
-    k-means quantization contract), so per-dimension moments are exact
-    integer sums with a 128-bit squared term; the mean is the integer
-    half-away-from-zero micro-unit mean (the `_SQL_MEAN` twin) and the
-    variance is one fixed-order double chain de-scaled by 1e12.
-
-    Scale: one posexplode pass (64 rows per vector) into a 64-key
-    aggregate — partial map-side combine makes the shuffle 64 rows per
-    task; nothing else moves."""
-    q = load_table(spark, sf_dir, "embeddings").select(
-        F.posexplode(
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda x: (x.cast("decimal(12,6)") * 1000000).cast("long"),
-            )
-        ).alias("dim", "x")
-    )
-    x = F.col("x")
-    mom = q.groupBy("dim").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast("long").alias("s"),
-        F.sum(x.cast(D38) * x.cast(D38)).cast(D38).alias("ss"),
-    )
-    mean_e6 = F.expr(
-        "CAST(CASE WHEN s >= 0 THEN (2 * s + n) div (2 * n) "
-        "ELSE -((-2 * s + n) div (2 * n)) END AS BIGINT)"
-    )
-    num = (
-        F.col("n").cast(D38) * F.col("ss")
-        - F.col("s").cast(D38) * F.col("s").cast(D38)
-    ).cast("double")
-    den = (F.col("n").cast(D38) * (F.col("n") - 1).cast(D38)).cast("double")
-    return mom.select(
-        F.col("dim").cast("long").alias("dim"),
-        "n",
-        mean_e6.alias("mean_e6"),
-        F.round(num / den / 1000000000000, 6).alias("variance"),
     )
 
 

@@ -29,11 +29,11 @@ from iceberg_table_generator_spark.functions.order import (
     with_global_order,
 )
 from iceberg_table_generator_spark.functions.text import md5_60, md5_60_sql
+from iceberg_table_generator_spark.operators.relational import D38
 from iceberg_table_generator_spark.operators.tpch_ext import SQL_REV_DEC, rev_dec
 from iceberg_table_generator_spark.registry import query
-from iceberg_table_generator_spark.sources.tables import load_table, spread
+from iceberg_table_generator_spark.sources.tables import load_table
 
-D38 = "decimal(38,0)"
 
 # --------------------------------------------------------------------------
 # Span-level exact substring dedup (Lee et al., "Deduplicating Training
@@ -791,86 +791,6 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# LSH bucket-balance profile (the ANN skew audit)
-# --------------------------------------------------------------------------
-def _lsh_bucket_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import (
-        _LSH_DIM,
-        _PLANE_ROWS,
-    )
-
-    return f"""
-WITH v AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-planes AS (SELECT * FROM (VALUES {_PLANE_ROWS}) t(tbl, p, w)),
-sig AS (
-  SELECT vec_id, tbl,
-         CAST(sum(CASE WHEN list_sum(list_transform(
-                            generate_series(1, {_LSH_DIM}),
-                            i -> vec[i] * w[i])) >= 0
-                       THEN (1 << p) ELSE 0 END) + tbl * 65536 AS BIGINT)
-           AS bucket
-  FROM v CROSS JOIN planes GROUP BY vec_id, tbl),
-bc AS (
-  SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM sig GROUP BY bucket)
-SELECT bucket // 65536 AS tbl,
-       CAST(count(*) AS BIGINT) AS n_buckets,
-       CAST(max(c) AS BIGINT) AS max_bucket,
-       CAST(sum(c) AS BIGINT) AS n_vectors,
-       round(CAST(sum(CAST(c AS HUGEINT) * (c - 1)) AS DOUBLE)
-             / (CAST(sum(c) AS DOUBLE) * (CAST(sum(c) AS DOUBLE) - 1.0)),
-             6) AS collision_rate
-FROM bc GROUP BY 1
-ORDER BY tbl
-"""
-
-
-@query("similarity_lsh_bucket_profile", oracle=_lsh_bucket_oracle())
-def similarity_lsh_bucket_profile(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-table LSH bucket-balance audit over the shared deterministic
-    hyperplane index (`similarity_ann_lsh`'s signatures): buckets used,
-    largest bucket, and the same-bucket collision rate Σc(c−1)/n(n−1) —
-    the number that IS the ANN cost model at 100 TB (candidate-join work
-    scales with Σc², so a hot bucket is the skew failure; this is the
-    audit you run before trusting the index at 1000x the vectors).
-
-    One explode to (vector × table) signatures, two map-combinable
-    aggregates (bucket counts, then the 16-row per-table rollup) —
-    no joins; integer cross-mults with one rounded division."""
-    from iceberg_table_generator_spark.operators.similarity import (
-        _bucket_array,
-        _LSH_DIM,
-    )
-
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    )
-    sig = emb.select(
-        F.explode(_bucket_array("vec", _LSH_DIM)).alias("bucket")
-    )
-    bc = sig.groupBy("bucket").agg(F.count(F.lit(1)).alias("c"))
-    return (
-        bc.groupBy(F.expr("bucket div 65536").alias("tbl"))
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.max("c").alias("max_bucket"),
-            F.sum("c").alias("n_vectors"),
-            F.round(
-                F.sum(F.col("c").cast(D38) * (F.col("c") - 1)).cast("double")
-                / (
-                    F.sum("c").cast("double")
-                    * (F.sum("c").cast("double") - 1.0)
-                ),
-                6,
-            ).alias("collision_rate"),
-        )
-        .orderBy("tbl")
-    )
-
-
-# --------------------------------------------------------------------------
 # Time-to-first-purchase distribution (conversion latency)
 # --------------------------------------------------------------------------
 _TTFP_ORACLE = """
@@ -933,96 +853,6 @@ def events_time_to_first_purchase(
             ),
         )
         .orderBy("gap_days")
-    )
-
-
-# --------------------------------------------------------------------------
-# K-means cluster label purity (index quality vs ground-truth labels)
-# --------------------------------------------------------------------------
-def _purity_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import (
-        IVF_CLUSTERS,
-        IVF_ITERS,
-        _VEC_DIM,
-        _sql_d2_int,
-        _sql_ivf_fit_ctes,
-        _sql_km_setup,
-    )
-
-    k, iters, dim = IVF_CLUSTERS, IVF_ITERS, _VEC_DIM
-    d2 = _sql_d2_int("q0.qv", "c.cv", dim)
-    return f"""{_sql_km_setup()}{_sql_ivf_fit_ctes(k, iters, dim)},
-assign AS (
-  SELECT q0.vec_id, c.cid,
-         row_number() OVER (PARTITION BY q0.vec_id
-             ORDER BY {d2}, c.cid) AS rn
-  FROM q0 CROSS JOIN c{iters} c),
-lab AS (
-  SELECT a.cid AS cluster_id, CAST(e.label AS BIGINT) AS label
-  FROM assign a JOIN embeddings e ON a.vec_id = e.vec_id
-  WHERE a.rn = 1),
-cell AS (
-  SELECT cluster_id, label, CAST(count(*) AS BIGINT) AS c
-  FROM lab GROUP BY 1, 2)
-SELECT cluster_id,
-       CAST(sum(c) AS BIGINT) AS n_points,
-       CAST(count(*) AS BIGINT) AS n_labels,
-       min(CASE WHEN r = 1 THEN label END) AS majority_label,
-       CAST(max(c) AS BIGINT) AS majority_count,
-       round(CAST(max(c) AS DOUBLE) / CAST(sum(c) AS DOUBLE), 6) AS purity
-FROM (SELECT *, row_number() OVER (PARTITION BY cluster_id
-          ORDER BY c DESC, label) AS r FROM cell) t
-GROUP BY cluster_id
-"""
-
-
-@query("similarity_cluster_purity", oracle=_purity_oracle())
-def similarity_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Label purity of the shared IVF k-means index against the
-    embeddings table's ground-truth labels: per cluster, the majority
-    label and its share — the external index-quality check
-    (`similarity_silhouette_audit` is the geometric/internal one; purity
-    tells you whether the index's partitions MEAN anything).
-
-    Scale: assignment is the silhouette plan — a per-row argmin over k
-    broadcast centroid literals, joinless on the corpus side — followed
-    by a (k x labels)-bounded cell aggregate; the majority fold is an
-    in-group max over that bounded relation.  Ties break to the smallest
-    label on both engines."""
-    from iceberg_table_generator_spark.operators.similarity import (
-        _d2_structs_int,
-        _qint,
-        ivf_index,
-    )
-
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("vec"),
-        F.col("label").cast("long").alias("label"),
-    )
-    cents = ivf_index(
-        emb.select("vec_id", "vec"), cache_key=sf_dir
-    )
-    nearest = F.element_at(
-        F.slice(F.array_sort(_d2_structs_int(_qint("vec"), cents)), 1, 1), 1
-    )
-    lab = emb.select(
-        nearest["cluster_id"].alias("cluster_id"), "label"
-    )
-    cell = lab.groupBy("cluster_id", "label").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    # majority via one in-group max over (count, -label): ties resolve to
-    # the smallest label, matching the oracle's (c DESC, label) rank.
-    best = F.max(F.struct(F.col("c").alias("c"), (-F.col("label")).alias("nl")))
-    return cell.groupBy("cluster_id").agg(
-        F.sum("c").alias("n_points"),
-        F.count(F.lit(1)).alias("n_labels"),
-        (-best["nl"]).alias("majority_label"),
-        F.max("c").alias("majority_count"),
-        F.round(F.max("c").cast("double") / F.sum("c").cast("double"), 6).alias(
-            "purity"
-        ),
     )
 
 
@@ -1697,103 +1527,6 @@ def stats_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CAST({FRIEDMAN_K - 1} AS BIGINT) AS df",
         f"{_FRIEDMAN_CHI2} AS chi2",
         f"{_FRIEDMAN_W} AS kendall_w",
-    )
-
-
-# --------------------------------------------------------------------------
-# PQ reconstruction-distortion audit (per-subspace quantization error)
-# --------------------------------------------------------------------------
-def _pq_distortion_oracle() -> str:
-    from iceberg_table_generator_spark.operators.similarity import (
-        PQ_ITERS,
-        PQ_K,
-        PQ_M,
-        _VEC_DIM,
-        _sql_d2_int,
-        _sql_km_setup,
-        _sql_pq_fit_ctes,
-    )
-
-    m, k, iters = PQ_M, PQ_K, PQ_ITERS
-    sd = _VEC_DIM // PQ_M
-    return f"""{_sql_km_setup()}{_sql_pq_fit_ctes(m, k, iters, sd)},
-alls AS (
-  SELECT q0.vec_id, g.j,
-         list_transform(generate_series(1, {sd}), i -> q0.qv[g.j*{sd}+i]) AS sv
-  FROM q0, generate_series(0, {m - 1}) g(j)),
-md AS (
-  SELECT a.vec_id, a.j,
-         min({_sql_d2_int('a.sv', 'c.cv', sd)}) AS d2
-  FROM alls a JOIN c{iters} c ON c.j = a.j
-  GROUP BY a.vec_id, a.j)
-SELECT j AS subspace,
-       CAST(count(*) AS BIGINT) AS n_vectors,
-       CAST((2 * CAST(sum(d2) AS HUGEINT) + count(*))
-            // (2 * count(*)) AS BIGINT) AS mean_d2_e12,
-       CAST(max(d2) AS BIGINT) AS max_d2_e12
-FROM md GROUP BY j
-"""
-
-
-@query("similarity_pq_distortion", oracle=_pq_distortion_oracle())
-def similarity_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-subspace PQ reconstruction distortion: the exact squared error
-    each 4-bit code introduces (min distance to the chosen codeword,
-    which IS the reconstruction error), aggregated per subspace — the
-    codebook-quality audit that explains `similarity_ann_recall_eval`'s
-    number (a subspace with outsized distortion is where ADC ranking
-    lies, and the first candidate for more codewords).
-
-    Exactness: distances are scale-12 integers against the SAME
-    engine-exact integer codebooks DuckDB refits from raw parquet
-    (the shared `_sql_pq_fit_ctes` chain); the mean is the half-up
-    integer micro² mean.  Scale: one joinless per-row fold over the
-    broadcast codebook literals (the `_pq_codes` evaluation contract),
-    then an m-key aggregate — the corpus never joins anything."""
-    from iceberg_table_generator_spark.operators.similarity import (
-        _let,
-        _qint,
-        _sq_dist_int,
-        packed_model_col,
-        pq_index,
-    )
-
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    )
-    books = pq_index(emb, cache_key=sf_dir)
-    m, sub_dim = len(books), len(books[0][0])
-    cb = packed_model_col(books, "array<array<array<bigint>>>")
-    subs_of = lambda qv: F.transform(  # noqa: E731
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda j: F.slice(qv, j * sub_dim + 1, sub_dim),
-    )
-    d2s = _let(
-        _let(_qint("vec"), subs_of),
-        lambda subs: F.transform(
-            cb,
-            lambda mcb, mi: F.array_min(
-                F.transform(
-                    mcb,
-                    lambda c: _sq_dist_int(F.element_at(subs, mi + 1), c),
-                )
-            ),
-        ),
-    )
-    per = emb.select(F.posexplode(d2s).alias("subspace", "d2"))
-    return (
-        per.groupBy(F.col("subspace").cast("long").alias("subspace"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("d2").cast(D38)).cast(D38).alias("s"),
-            F.max("d2").alias("max_d2_e12"),
-        )
-        .selectExpr(
-            "subspace",
-            "n AS n_vectors",
-            "CAST((2 * s + n) div (2 * n) AS BIGINT) AS mean_d2_e12",
-            "CAST(max_d2_e12 AS BIGINT) AS max_d2_e12",
-        )
     )
 
 

@@ -109,7 +109,7 @@ ACKNOWLEDGED = [
      "cluster-pair admissibility: ≤ k² rows for k k-means clusters"),
     (re.compile(r"Scan ExistingRDD\[cid#\d+, ?cent#\d+\]").search,
      "k-means centroid attach: exactly k rows of model state "
-     "(the SemDeDup ccos join, wave11._semdedup_relation)"),
+     "(the SemDeDup ccos join, wave11.semdedup_relation)"),
     (re.compile(r"Scan ExistingRDD\[tau_micro#\d+L?\]").search,
      "threshold grid: |SEMDEDUP_TAU_GRID| driver-literal rows "
      "(wave11.dedup_semdedup_tau_sweep, wave18 per-language sweep)"),
@@ -118,13 +118,13 @@ ACKNOWLEDGED = [
      "(wave12.pipeline_truncation_loss)"),
     (re.compile(r"Scan ExistingRDD\[dim#\d+\]").search,
      "truncation-dimension grid: |MRL_DIMS| driver-literal rows "
-     "(wave14.similarity_matryoshka_recall)"),
+     "(similarity.similarity_matryoshka_recall)"),
     (re.compile(r"Scan ExistingRDD\[n_bands#\d+, ?rows_per_band#\d+, ?thresh_micro#\d+").search,
      "banding-plan grid: |BAND_SWEEP| driver-literal rows "
      "(wave14.dedup_minhash_band_sweep)"),
     (re.compile(r"Scan ExistingRDD\[method#\d+, ?bytes_per_vec#\d+").search,
      "method-bytes grid: |_METHOD_BYTES| driver-literal rows "
-     "(wave17.similarity_compression_frontier)"),
+     "(similarity.similarity_compression_frontier)"),
     (re.compile(r"Scan ExistingRDD\[min_rules#\d+\]").search,
      "strictness grid: 5 driver-literal rows "
      "(wave18.pipeline_quality_ablation_curve)"),

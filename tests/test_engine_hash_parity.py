@@ -145,7 +145,7 @@ def test_integer_mean_formula_matches_oracle_sql():
 @pytest.mark.parametrize("sf_fixture", ["sf_small", "sf_medium"])
 def test_lsh_sign_margin_above_reorder_noise(spark, sf_fixture, request):
     """The ANN-LSH oracle pairing rests on DuckDB's `list_sum` folding the
-    hyperplane dot products in `_dot`'s sequential order; unlike the
+    hyperplane dot products in `dot`'s sequential order; unlike the
     cosine outputs (rounded to 6 decimals), the `>= 0` sign test has no
     rounding mask, so a future DuckDB switching to pairwise/reordered
     summation could in principle flip a NEAR-ZERO dot's bucket bit.
@@ -158,7 +158,7 @@ def test_lsh_sign_margin_above_reorder_noise(spark, sf_fixture, request):
     are ≥ 1.8e-6 at every SF (≥ 10^7× margin); assert > 1e-9 so a silent
     data or plane-scheme change that narrows the margin fails loudly."""
     from iceberg_table_generator_spark.operators.similarity import (
-        _LSH_DIM, _dot, _plane_matrix,
+        _LSH_DIM, dot, _plane_matrix,
     )
     from iceberg_table_generator_spark.sources.tables import load_table
 
@@ -173,7 +173,7 @@ def test_lsh_sign_margin_above_reorder_noise(spark, sf_fixture, request):
                     F.transform(
                         _plane_matrix(_LSH_DIM),
                         lambda tw: F.transform(
-                            tw, lambda p: F.abs(_dot("vec", p))
+                            tw, lambda p: F.abs(dot("vec", p))
                         ),
                     )
                 )

@@ -4,7 +4,7 @@ oracle gate; these pin the SCALE properties)."""
 
 from __future__ import annotations
 
-from iceberg_table_generator_spark.operators import wave8
+from iceberg_table_generator_spark.operators import similarity, wave8
 from iceberg_table_generator_spark.plans import explain
 
 
@@ -41,7 +41,7 @@ def test_silhouette_assignment_is_joinless(spark, sf_small):
     """Nearest/second-nearest centroid comes from an in-row fold over
     broadcast centroid literals — the corpus is never joined or
     crossJoined against the centroid relation."""
-    df = wave8.similarity_silhouette_audit(spark, sf_small)
+    df = similarity.similarity_silhouette_audit(spark, sf_small)
     kinds = explain.join_kinds(df)
     assert sum(kinds.values()) == 0, kinds
 

@@ -4,7 +4,7 @@ properties the docstrings claim)."""
 
 from __future__ import annotations
 
-from iceberg_table_generator_spark.operators import text, wave9
+from iceberg_table_generator_spark.operators import similarity, text, wave9
 from iceberg_table_generator_spark.plans import explain
 
 
@@ -80,7 +80,7 @@ def test_cluster_purity_assignment_is_joinless(spark, sf_small):
     """Label purity assigns clusters via the in-row argmin over broadcast
     centroid literals (the silhouette plan) — the corpus is never joined
     against the centroid relation."""
-    df = wave9.similarity_cluster_purity(spark, sf_small)
+    df = similarity.similarity_cluster_purity(spark, sf_small)
     kinds = explain.join_kinds(df)
     assert sum(kinds.values()) == 0, kinds
 

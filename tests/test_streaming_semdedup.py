@@ -14,7 +14,7 @@ from iceberg_table_generator_spark.operators.similarity import ivf_index
 from iceberg_table_generator_spark.operators.wave11 import (
     SEMDEDUP_TAU,
     _semdedup_dropped,
-    _semdedup_relation,
+    semdedup_relation,
 )
 from iceberg_table_generator_spark.operators.wave12 import (
     dedup_semdedup_incremental,
@@ -71,7 +71,7 @@ def test_streaming_semdedup_matches_batch_rules(spark, sf_small, tmp_path):
     }
 
     # --- Arrival 1: the store's old rows = batch kept-old set exactly.
-    m = _semdedup_relation(spark, sf_small)
+    m = semdedup_relation(spark, sf_small)
     old_m = m.filter(F.col("vec_id") % 10 != 0)
     dropped_old = {r.vec_id for r in _semdedup_dropped(old_m).collect()}
     expect_old_kept = {

@@ -14,7 +14,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from iceberg_table_generator_spark.functions.cache import release_tracked
-from iceberg_table_generator_spark.operators import text, wave12
+from iceberg_table_generator_spark.operators import similarity, text, wave12
 
 
 @pytest.fixture(autouse=True)
@@ -166,16 +166,16 @@ def test_eccentricity_isolated_node(spark):
 # --------------------------------------------------------------------------
 def test_outlier_audit_consistent_with_members(spark, sf_small):
     from iceberg_table_generator_spark.operators.wave11 import (
-        _semdedup_relation,
+        semdedup_relation,
     )
 
     audit = {
         r.cid: r
-        for r in wave12.similarity_cluster_outlier_audit(
+        for r in similarity.similarity_cluster_outlier_audit(
             spark, sf_small
         ).collect()
     }
-    m = _semdedup_relation(spark, sf_small).collect()
+    m = semdedup_relation(spark, sf_small).collect()
     by_cid: dict[int, list] = {}
     for r in m:
         by_cid.setdefault(r.cid, []).append(r)
@@ -184,7 +184,7 @@ def test_outlier_audit_consistent_with_members(spark, sf_small):
     for cid, members in by_cid.items():
         a = audit[cid]
         assert a.n_members == len(members)
-        expect_out = sum(1 for r in members if r.ccos < wave12.OUTLIER_TAU)
+        expect_out = sum(1 for r in members if r.ccos < similarity.OUTLIER_TAU)
         assert a.n_outliers == expect_out
         total_outliers += expect_out
         far = min(members, key=lambda r: (r.ccos, r.vec_id))
@@ -341,7 +341,7 @@ def test_sq8_recall_bounds_and_quality(spark, sf_small):
         TOP_K,
     )
 
-    rows = wave12.similarity_sq8_recall(spark, sf_small).collect()
+    rows = similarity.similarity_sq8_recall(spark, sf_small).collect()
     assert len(rows) == N_QUERIES
     for r in rows:
         assert r.k == TOP_K
@@ -359,14 +359,14 @@ def test_semdedup_incremental_consistency(spark, sf_small):
     from iceberg_table_generator_spark.operators.wave11 import (
         SEMDEDUP_TAU,
         _semdedup_dropped,
-        _semdedup_relation,
+        semdedup_relation,
     )
 
     got = {
         r.vec_id: r
         for r in wave12.dedup_semdedup_incremental(spark, sf_small).collect()
     }
-    m = _semdedup_relation(spark, sf_small)
+    m = semdedup_relation(spark, sf_small)
     old = m.filter(F.col("vec_id") % 10 != 0)
     dropped_old = {
         (r.cid, r.vec_id) for r in _semdedup_dropped(old).collect()

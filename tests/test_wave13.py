@@ -8,11 +8,11 @@ import math
 import pyspark.sql.functions as F
 
 from iceberg_table_generator_spark.functions.cache import release_tracked
-from iceberg_table_generator_spark.operators import text, wave13
+from iceberg_table_generator_spark.operators import similarity, text, wave13
 from iceberg_table_generator_spark.operators.wave11 import (
     _semdedup_dropped,
-    _semdedup_relation,
     dedup_semdedup_shadow_map,
+    semdedup_relation,
 )
 
 
@@ -55,7 +55,7 @@ def test_ranking_quality_of_exact_vs_itself_is_perfect(spark, sf_small):
         "item",
         F.col("r").alias("s"),
     )
-    rows = wave13.ranking_quality(
+    rows = similarity.ranking_quality(
         self_ann, exact, TOP_K, keys=["method"]
     ).collect()
     assert rows
@@ -67,7 +67,7 @@ def test_ranking_quality_of_exact_vs_itself_is_perfect(spark, sf_small):
 
 
 def test_ann_ndcg_eval_bounds_and_methods(spark, sf_small):
-    rows = wave13.similarity_ann_ndcg_eval(spark, sf_small).collect()
+    rows = similarity.similarity_ann_ndcg_eval(spark, sf_small).collect()
     methods = {r.method for r in rows}
     assert methods <= {"lsh", "ivf"} and "ivf" in methods
     for r in rows:
@@ -95,7 +95,7 @@ def test_bm25_ndcg_eval_bounds(spark, sf_small):
 # Per-language SemDeDup attribution: marginal consistency
 # --------------------------------------------------------------------------
 def test_semdedup_lang_marginals(spark, sf_small):
-    m = _semdedup_relation(spark, sf_small)
+    m = semdedup_relation(spark, sf_small)
     total_members = m.count()
     total_dropped = _semdedup_dropped(m).count()
 

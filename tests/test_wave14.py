@@ -6,7 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from iceberg_table_generator_spark.functions.cache import release_tracked
-from iceberg_table_generator_spark.operators import text, wave14
+from iceberg_table_generator_spark.operators import similarity, text, wave14
 from iceberg_table_generator_spark.sources.tables import load_table
 
 
@@ -60,7 +60,7 @@ def test_unimax_allocation_invariants(spark, sf_small):
 
 
 def test_bq_recall_bounds_and_signal(spark, sf_small):
-    rows = wave14.similarity_bq_recall(spark, sf_small).collect()
+    rows = similarity.similarity_bq_recall(spark, sf_small).collect()
     from iceberg_table_generator_spark.operators.similarity import (
         N_QUERIES,
         TOP_K,
@@ -78,7 +78,7 @@ def test_bq_recall_bounds_and_signal(spark, sf_small):
 
 
 def test_matryoshka_recall_monotone_in_dim(spark, sf_small):
-    rows = wave14.similarity_matryoshka_recall(spark, sf_small).collect()
+    rows = similarity.similarity_matryoshka_recall(spark, sf_small).collect()
     from iceberg_table_generator_spark.operators.similarity import (
         N_QUERIES,
         TOP_K,
@@ -88,7 +88,7 @@ def test_matryoshka_recall_monotone_in_dim(spark, sf_small):
     for r in rows:
         assert 0 <= r.n_hits <= TOP_K
         by_dim[r.dim] = by_dim.get(r.dim, 0) + r.n_hits
-    assert set(by_dim) == set(wave14.MRL_DIMS)
+    assert set(by_dim) == set(similarity.MRL_DIMS)
     assert all(
         sum(1 for r in rows if r.dim == d) == N_QUERIES for d in by_dim
     )

@@ -3,13 +3,13 @@
 from __future__ import annotations
 
 from iceberg_table_generator_spark.functions.cache import release_tracked
-from iceberg_table_generator_spark.operators import wave15
+from iceberg_table_generator_spark.operators import metadata_tables, similarity
 
 
 def test_rrf_fusion_eval_bounds(spark, sf_small):
     from iceberg_table_generator_spark.operators.similarity import N_QUERIES
 
-    rows = wave15.similarity_rrf_fusion_eval(spark, sf_small).collect()
+    rows = similarity.similarity_rrf_fusion_eval(spark, sf_small).collect()
     assert 0 < len(rows) <= N_QUERIES
     for r in rows:
         assert r.method == "rrf"
@@ -22,7 +22,7 @@ def test_rrf_fusion_never_worse_than_worst_family(spark, sf_small):
     """Fusion's aggregate nDCG must at least match the WEAKER of the two
     fused families (RRF can trail the better one, but a fusion below both
     inputs would mean the combiner itself is broken)."""
-    from iceberg_table_generator_spark.operators.wave13 import (
+    from iceberg_table_generator_spark.operators.similarity import (
         similarity_ann_ndcg_eval,
     )
 
@@ -32,7 +32,7 @@ def test_rrf_fusion_never_worse_than_worst_family(spark, sf_small):
         totals[r.method] = totals.get(r.method, 0) + r.ndcg_micro
     fused = sum(
         r.ndcg_micro
-        for r in wave15.similarity_rrf_fusion_eval(spark, sf_small).collect()
+        for r in similarity.similarity_rrf_fusion_eval(spark, sf_small).collect()
     )
     assert fused >= min(totals.values()), (fused, totals)
     release_tracked()
@@ -43,7 +43,7 @@ def test_expire_plan_safety_invariants(spark, sf_small):
         _fixture_table,
     )
 
-    rows = wave15.meta_expire_snapshots_plan(spark, sf_small).collect()
+    rows = metadata_tables.meta_expire_snapshots_plan(spark, sf_small).collect()
     assert rows
     for r in rows:
         assert r.n_expired_refs + r.n_retained_refs >= 1
@@ -54,7 +54,7 @@ def test_expire_plan_safety_invariants(spark, sf_small):
     snaps = sorted(
         r.snapshot_id for r in files.select("snapshot_id").distinct().collect()
     )
-    retained = set(snaps[-wave15.EXPIRE_RETAIN_LAST :])
+    retained = set(snaps[-metadata_tables.EXPIRE_RETAIN_LAST :])
     live_retained = {
         (r.file_path, r.content)
         for r in files.collect()
@@ -82,9 +82,9 @@ def test_expire_retention_sweep_monotone(spark, sf_small):
     removable count."""
     rows = {
         r.retain_last: r
-        for r in wave15.meta_expire_retention_sweep(spark, sf_small).collect()
+        for r in metadata_tables.meta_expire_retention_sweep(spark, sf_small).collect()
     }
-    assert set(rows) == set(wave15.EXPIRE_SWEEP)
+    assert set(rows) == set(metadata_tables.EXPIRE_SWEEP)
     n_files = {r.n_files for r in rows.values()}
     assert len(n_files) == 1  # the file universe is policy-independent
     for r in rows.values():
@@ -93,9 +93,9 @@ def test_expire_retention_sweep_monotone(spark, sf_small):
     swept = sorted(rows)
     for a, b in zip(swept, swept[1:]):
         assert rows[b].n_removable <= rows[a].n_removable, (a, b, rows)
-    if wave15.EXPIRE_RETAIN_LAST in rows:
+    if metadata_tables.EXPIRE_RETAIN_LAST in rows:
         plan_removable = sum(
             r.removable
-            for r in wave15.meta_expire_snapshots_plan(spark, sf_small).collect()
+            for r in metadata_tables.meta_expire_snapshots_plan(spark, sf_small).collect()
         )
-        assert rows[wave15.EXPIRE_RETAIN_LAST].n_removable == plan_removable
+        assert rows[metadata_tables.EXPIRE_RETAIN_LAST].n_removable == plan_removable

@@ -4,7 +4,7 @@ text↔embedding alignment."""
 from __future__ import annotations
 
 from iceberg_table_generator_spark.functions.cache import release_tracked
-from iceberg_table_generator_spark.operators import wave16
+from iceberg_table_generator_spark.operators import similarity, wave16
 
 
 def test_ivfpq_recall_bounds_and_compounding(spark, sf_small):
@@ -22,7 +22,7 @@ def test_ivfpq_recall_bounds_and_compounding(spark, sf_small):
         similarity_cosine_topk,
     )
 
-    rows = wave16.similarity_ivfpq_recall(spark, sf_small).collect()
+    rows = similarity.similarity_ivfpq_recall(spark, sf_small).collect()
     assert len(rows) == N_QUERIES
     total = 0
     for r in rows:

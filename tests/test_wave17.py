@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 from iceberg_table_generator_spark.functions.cache import release_tracked
-from iceberg_table_generator_spark.operators import wave17
+from iceberg_table_generator_spark.operators import similarity, wave17
 from iceberg_table_generator_spark.sources.tables import load_table
 
 
@@ -15,14 +15,14 @@ def test_frontier_covers_ladder_and_is_consistent(spark, sf_small):
 
     rows = {
         r.method: r
-        for r in wave17.similarity_compression_frontier(
+        for r in similarity.similarity_compression_frontier(
             spark, sf_small
         ).collect()
     }
-    assert set(rows) == set(wave17._METHOD_BYTES)
+    assert set(rows) == set(similarity._METHOD_BYTES)
     denom = N_QUERIES * TOP_K
     for m, r in rows.items():
-        assert r.bytes_per_vec == wave17._METHOD_BYTES[m]
+        assert r.bytes_per_vec == similarity._METHOD_BYTES[m]
         assert r.compression_micro == (512 * 1_000_000) // r.bytes_per_vec
         assert 0 <= r.total_hits <= denom
         assert r.mean_recall_ppm == (r.total_hits * 1_000_000) // denom

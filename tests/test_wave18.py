@@ -4,7 +4,7 @@ BQ+rerank recall."""
 from __future__ import annotations
 
 from iceberg_table_generator_spark.functions.cache import release_tracked
-from iceberg_table_generator_spark.operators import wave18
+from iceberg_table_generator_spark.operators import similarity, wave18
 
 
 def test_quality_curve_monotone_and_anchored(spark, sf_small):
@@ -67,14 +67,14 @@ def test_bq_rerank_dominates_raw_bq(spark, sf_small):
     """The exact rerank can only help: at matched shortlist semantics,
     two-stage recall ≥ raw sign-ADC recall per the aggregate (the delta
     IS the rerank's value)."""
-    from iceberg_table_generator_spark.operators.wave14 import (
+    from iceberg_table_generator_spark.operators.similarity import (
         similarity_bq_recall,
     )
 
     raw = sum(
         r.n_hits for r in similarity_bq_recall(spark, sf_small).collect()
     )
-    rr = wave18.similarity_bq_rerank_recall(spark, sf_small).collect()
+    rr = similarity.similarity_bq_rerank_recall(spark, sf_small).collect()
     rer = sum(r.n_hits for r in rr)
     assert rer >= raw, (rer, raw)
     for r in rr:
