@@ -32,8 +32,6 @@ extends SURVEY.md §2.8's bounded-state mandate to batch parity.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession

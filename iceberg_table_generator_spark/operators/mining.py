@@ -28,7 +28,6 @@ from iceberg_table_generator_spark.functions.order import (
 from iceberg_table_generator_spark.functions.cache import persist_tracked
 from iceberg_table_generator_spark.operators.relational import D38, davg, sql_davg
 from iceberg_table_generator_spark.operators.tpch_ext import (
-    DEC18,
     rev_dec,
     SQL_REV_DEC,
 )

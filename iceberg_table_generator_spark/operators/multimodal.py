@@ -543,17 +543,19 @@ def multimodal_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stand-in for a
     true perceptual hash: with media libs a pHash/chromaprint would
     replace the chunk digests, and EVERYTHING downstream — the banding,
-    the bucket join, the Hamming verify, the 8-bytes-per-item shuffle —
+    the band buckets, the Hamming verify, the 8-bytes-per-item shuffle —
     is exactly this plan.  Complements `multimodal_chunk_dedup`
     (containment on shared chunks) with a CONSTANT-SIZE sketch: the
     fingerprint survives where a chunk posting list is too big to index.
 
     Scale: fingerprints are 8 bytes/payload; candidates are bounded by
-    band-bucket sizes (pigeonhole guarantees recall at Hamming ≤ 3);
-    payload bytes never leave the scan stage.  Oracle exactness: chunk
-    digests are the engine-independent md5-prefix 60-bit hash over
-    byte-identical chunks (ASCII corpus — see `multimodal_chunk_dedup`'s
-    oracle note), so fingerprints match bit for bit."""
+    band-bucket sizes (pigeonhole guarantees recall at Hamming ≤ 3); a
+    bucket's members are one row, so a hot bucket is one task with the
+    quadratic pair count a bucket self-join's hot key would have; payload
+    bytes never leave the scan stage.  Oracle exactness: chunk digests
+    are the engine-independent md5-prefix 60-bit hash over byte-identical
+    chunks (ASCII corpus — see `multimodal_chunk_dedup`'s oracle note),
+    so fingerprints match bit for bit."""
     from iceberg_table_generator_spark.operators.dedup import (
         SIMHASH_BITS,
         SIMHASH_CHUNK_BITS,
@@ -634,10 +636,13 @@ def multimodal_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 names=["doc_id", "fp"],
             )
 
-    # persist(DISK_ONLY): both band-join sides read the fingerprint relation
-    # under differing aliases (ReuseExchange defeat — the dedup_simhash
-    # rationale verbatim).
-    fp = persist_tracked(d.mapInArrow(run, schema="doc_id long, fp long"))
+    # One reader of the fingerprint, so mapInArrow runs once: each
+    # (chunk_id, chunk_val) band bucket gathers its (doc_id, fp) structs
+    # sorted by doc_id, and the candidate pairs explode in-row from that
+    # list — the band self-join's pairs, without a second read of the
+    # Python node.  A pair sharing several bands is kept in the first of
+    # them only (doc_id is a key), which leaves no duplicate to remove.
+    fp = d.mapInArrow(run, schema="doc_id long, fp long")
     chunks = fp.select(
         "doc_id",
         "fp",
@@ -649,27 +654,25 @@ def multimodal_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     stacked = chunks.selectExpr(
-        "doc_id",
-        "fp",
+        "struct(doc_id, fp) AS item",
         "stack({}, {}) AS (chunk_id, chunk_val)".format(
             SIMHASH_CHUNKS, ", ".join(f"{c}, c_{c}" for c in range(SIMHASH_CHUNKS))
         ),
     )
-    a, b = stacked.alias("a"), stacked.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.fp").alias("fp_b"),
-        )
-        .distinct()
+    buckets = stacked.groupBy("chunk_id", "chunk_val").agg(
+        F.sort_array(F.collect_list("item")).alias("items")
+    )
+    first_band = " AND ".join(
+        f"(chunk_id <= {c} OR (shiftrightunsigned(x.fp ^ y.fp, {SIMHASH_CHUNK_BITS * c})"
+        f" & {SIMHASH_CHUNK_MASK}) != 0)"
+        for c in range(SIMHASH_CHUNKS)
+    )
+    cand = buckets.selectExpr(
+        f"""inline(flatten(transform(items, (x, i) ->
+             transform(filter(slice(items, i + 2, size(items)),
+                              y -> x.doc_id < y.doc_id AND {first_band}),
+                       y -> struct(x.doc_id AS doc_a, y.doc_id AS doc_b,
+                                   x.fp AS fp_a, y.fp AS fp_b)))))"""
     )
     return (
         cand.withColumn(

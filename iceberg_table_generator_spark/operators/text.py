@@ -452,43 +452,85 @@ FROM ranked WHERE rank <= {BM25_TOP_K}
 """
 
 
-def _bm25_term_score_raw(tf, df, dl, n_docs, avgdl):
-    """The UNROUNDED per-term BM25 score — shared by the query (which
-    rounds it) and the boundary-margin guard test (which measures it)."""
-    idf = F.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-    return idf * (tf * (BM25_K1 + 1)) / (
-        tf + BM25_K1 * ((1 - BM25_B) + BM25_B * dl / avgdl)
-    )
-
-
-def bm25_scored_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, w, raw term score, rounded DECIMAL term score) for every
-    (query-term, matching doc) — the scoring core of `text_bm25_topk`."""
-    d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens()).alias("w"))
-    dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    stats = dl.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-    )
-    tf = (
-        tok.filter(F.col("w").isin(_BM25_TERMS))
-        .groupBy("doc_id", "w")
-        .agg(F.count("*").alias("tf"))
-    )
-    dfreq = tf.groupBy("w").agg(F.count("*").alias("df"))
-    raw = _bm25_term_score_raw(
-        F.col("tf"), F.col("df"), F.col("dl"), F.col("n_docs"), F.col("avgdl")
-    )
+def _bm25_term_score_raw(tf: str, df: str, dl: str, n_docs: str, avgdl: str) -> str:
+    """The UNROUNDED per-term BM25 score as Spark SQL text, in the
+    oracle's operator order with DOUBLE literals — the query rounds it,
+    the boundary-margin guard test measures it (`raw_score`)."""
     return (
-        tf.join(dfreq, "w")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))  # 1-row scalar aggregate
-        .select(
+        f"ln(1.0D + ({n_docs} - {df} + 0.5D) / ({df} + 0.5D))"
+        f" * ({tf} * {BM25_K1 + 1}D)"
+        f" / ({tf} + {BM25_K1}D * ({1 - BM25_B}D + {BM25_B}D * {dl} / {avgdl}))"
+    )
+
+
+def _bm25_query_totals(terms: str, value: str, dtype: str) -> str:
+    """SQL text: the (query_id, total) structs of the BM25 queries that
+    share a term with the `terms` structs of one document, each the
+    `dtype` sum of their `value` field over the query's terms.  A
+    document row holds all its terms, so this is the (query, doc) sum
+    in-row, without a shuffle."""
+    totals = []
+    for qid, ws in BM25_QUERIES:
+        in_query = ", ".join(f"'{w}'" for w in ws)
+        hits = f"filter({terms}, t -> t.w IN ({in_query}))"
+        total = (
+            f"aggregate({hits}, CAST(0 AS {dtype}),"
+            f" (acc, t) -> CAST(acc + t.{value} AS {dtype}))"
+        )
+        totals.append(
+            f"IF(size({hits}) > 0, named_struct('query_id', {qid}, 'total', {total}), NULL)"
+        )
+    return f"filter(array({', '.join(totals)}), q -> q IS NOT NULL)"
+
+
+def bm25_doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, dl, tfs) per document: its token count and the (w, tf)
+    structs of the query terms it holds, sorted by term.  Every BM25
+    statistic comes from this one tokenization.  NULL text is dropped
+    first, as the oracle's unnest drops it (Spark's size(NULL) is -1);
+    doc_id is unique in `documents`, so a row is a whole document."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select("doc_id", tokens().alias("ws"))
+        .selectExpr(
             "doc_id",
-            "w",
-            raw.alias("raw_score"),
-            F.round(raw, 6).cast("decimal(25,6)").alias("term_score"),
+            "CAST(size(ws) AS BIGINT) AS dl",
+            f"filter(ws, x -> x IN ({_BM25_TERM_LIST})) AS m",
+        )
+        .selectExpr(
+            "doc_id",
+            "dl",
+            """transform(array_sort(array_distinct(m)), w ->
+                 named_struct('w', w, 'tf', CAST(size(filter(m, x -> x = w)) AS BIGINT)))
+               AS tfs""",
+        )
+    )
+
+
+def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, terms) per document that holds a query term: the (w, tf,
+    raw_score, term_score) struct of each such term, with its raw and
+    rounded DECIMAL BM25 score — the scoring core of `text_bm25_topk`."""
+    docs = bm25_doc_terms(spark, sf_dir)
+    dfs = ", ".join(f"'{w}', count_if(exists(tfs, t -> t.w = '{w}'))" for w in _BM25_TERMS)
+    # One scalar row: n_docs, avgdl and every query term's df.
+    stats = docs.selectExpr(
+        "CAST(count(1) AS BIGINT) AS n_docs",
+        "CAST(sum(dl) AS DOUBLE) / count(1) AS avgdl",
+        f"map({dfs}) AS dfs",
+    )
+    raw = _bm25_term_score_raw("t.tf", "element_at(dfs, t.w)", "dl", "n_docs", "avgdl")
+    return (
+        docs.filter(F.size("tfs") > 0)
+        .crossJoin(F.broadcast(stats))  # 1-row scalar aggregate
+        .selectExpr(
+            "doc_id",
+            f"""transform(
+                  transform(tfs, t -> named_struct('w', t.w, 'tf', t.tf, 'raw_score', {raw})),
+                  t -> named_struct('w', t.w, 'tf', t.tf, 'raw_score', t.raw_score,
+                                    'term_score', CAST(round(t.raw_score, 6) AS DECIMAL(25,6))))
+                AS terms""",
         )
     )
 
@@ -499,34 +541,29 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query (OR semantics over the query's terms), the relevance scorer
     behind every lexical search / retrieval-augmented pipeline.
 
-    Plan: document length and the (n_docs, avgdl) scalar come from one
-    doc_id-keyed aggregation; term frequencies only ever exist for the
-    query vocabulary (the filter precedes the groupBy, so the term
-    shuffle carries matched rows, not the corpus vocabulary); per-term
-    scores attach df via a tiny join and the corpus-wide dl relation via
-    a doc_id equi-join; the final rank is the (n_queries × matched docs)
-    window.  At 100 TB: two narrow corpus passes (dl, filtered tf) and
-    every downstream relation is query-vocabulary-bounded.
+    Plan: a document row keeps, in-row, its length and the term
+    frequencies of the query vocabulary, from one tokenization
+    (`bm25_doc_terms`).  Two narrow passes read that relation: a scalar
+    aggregate (n_docs, avgdl and every term's df in one row, broadcast)
+    and the document rows it scores.  A document row holds all its
+    terms, so each query's score sums in-row over the query's terms
+    (`_bm25_query_totals`): no doc_id join and no (query, doc) shuffle
+    is left, and the one keyed shuffle is the rank window's, whose
+    partial top-k runs before it.
 
     Engine determinism: see the block comment above `_BM25_ORACLE` —
     per-term rounding to 6 decimals absorbs ln()'s last-ulp engine
     disagreement (margin pinned by test_bm25_rounding_margin), and the
     per-document sum is exact DECIMAL accumulation, so ranking ties and
     hash checks are identical on both engines."""
-    scored = bm25_scored_terms(spark, sf_dir).drop("raw_score")
-    qdf = spark.createDataFrame(
-        [(qid, w) for qid, ws in BM25_QUERIES for w in ws], "query_id int, w string"
+    scores = bm25_doc_scores(spark, sf_dir).selectExpr(
+        "doc_id", f"inline({_bm25_query_totals('terms', 'term_score', 'DECIMAL(25,6)')})"
     )
-    agg = (
-        qdf.join(scored, "w")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("term_score").cast("decimal(25,6)").alias("score"))
-    )
-    win = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    win = Window.partitionBy("query_id").orderBy(F.desc("total"), F.asc("doc_id"))
     return (
-        agg.withColumn("rank", F.row_number().over(win))
+        scores.withColumn("rank", F.row_number().over(win))
         .filter(F.col("rank") <= BM25_TOP_K)
-        .select("query_id", "doc_id", "score", "rank")
+        .select("query_id", "doc_id", F.col("total").alias("score"), "rank")
     )
 
 
@@ -1440,79 +1477,58 @@ def text_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     group's state is <= |sources|), pairs explode from each set in-row
     (<= C(20,2) per shingle), and intersections aggregate onto the
     190-row pair grid.  Unions come from per-source totals via
-    |A|+|B|-|A∩B| — no second pass.  The pair grid itself is built from
-    the 20-row per-source relation (AQE broadcasts it)."""
+    |A|+|B|-|A∩B| — no second pass.
 
-    # spread() (r14 §2.2 device, no-op once the scan has ≥ parallelism
-    # splits): the sf0.1 documents scan is ONE split, so without it the
-    # whole tokenize→shingle→explode pipeline — the dominant cost, ~3.5 s
-    # of the 5.5 s pin — runs on one core.
+    One plan, no persist: the pair aggregate also holds the DIAGONAL
+    cells (x, x), and a shingle holds source x once, so count(x, x) is
+    x's distinct-shingle total.  The aggregate has at most |sources|²
+    cells, so it folds into one row, and the pair grid, with both
+    totals and the intersection of each pair, explodes from that row.
+    The aggregate has one reader and no join follows it, so the
+    corpus-wide collect_set runs once."""
+
+    # spread(): the sf0.1 documents scan is ONE split, so without it the
+    # whole tokenize→shingle→explode pipeline runs on one core (no-op
+    # once the scan has ≥ parallelism splits).
     d = spread(load_table(spark, sf_dir, "documents")).withColumn("tokens", tokens())
     d = d.withColumn("shingles", shingles("tokens", 3))
-    # r14: the r13 shape pre-distinct'd the exploded (source, shingle)
-    # stream (one corpus-wide shuffle), persisted it, then shuffled it
-    # AGAIN for the per-shingle groupBy — two shingle-keyed exchanges of
-    # the same corpus-sized relation.  collect_set is itself set-valued
-    # and partially aggregates map-side with ≤|sources| state per group,
-    # so the distinct pass bought nothing: one groupBy straight off the
-    # explode computes the identical source sets with ONE exchange, and
-    # the per-source distinct-shingle totals fall out of the persisted
-    # sets relation (explode + count ≡ the old distinct row count).
-    # r15 (§2.4, §5): the r14 shape persisted the corpus-sized per-shingle
-    # source-set relation and read it TWICE (once exploded per-source for
-    # the totals, once pair-exploded for the intersections).  Emitting the
-    # DIAGONAL struct (x, x) alongside the strict pairs folds both reads
-    # into ONE consumer: per-source totals are exactly the diagonal cells
-    # of the same ≤|sources|²-row aggregate (a shingle contains source x
-    # once, so count(x, x) ≡ the distinct-shingle total).  The corpus-sized
-    # persist disappears; only the tiny pair aggregate is persisted (read
-    # by the grid twice and the intersection attach once).
     sets = (
         d.select("source", F.explode("shingles").alias("sh"))
         .groupBy("sh")
         .agg(F.sort_array(F.collect_set("source")).alias("arr"))
     )
-    pairs = sets.select(
-        F.explode(
-            F.expr(
-                """flatten(transform(arr, (x, i) ->
-                     transform(slice(arr, i + 1, size(arr)),
-                               y -> struct(x AS src_a, y AS src_b))))"""
-            )
-        ).alias("p")
-    ).select("p.src_a", "p.src_b")
-    agg = persist_tracked(
-        pairs.groupBy("src_a", "src_b").agg(
-            F.count(F.lit(1)).alias("n_common")
+    pairs = sets.selectExpr(
+        """inline(flatten(transform(arr, (x, i) ->
+             transform(slice(arr, i + 1, size(arr)),
+                       y -> struct(x AS src_a, y AS src_b)))))"""
+    )
+    cells = pairs.groupBy("src_a", "src_b").agg(F.count(F.lit(1)).alias("n_common"))
+    # The <= |sources|² cells in one row; the grid explodes in-row from
+    # the diagonal sorted by source, each pair's n_common summed from its
+    # cell (0 when the pair shares no shingle).
+    grid = (
+        cells.selectExpr("collect_list(struct(src_a, src_b, n_common)) AS cells")
+        .selectExpr("cells", "array_sort(filter(cells, c -> c.src_a = c.src_b)) AS diag")
+        .selectExpr(
+            """inline(flatten(transform(diag, (x, i) ->
+                 transform(slice(diag, i + 2, size(diag)), y ->
+                   struct(x.src_a AS src_a, y.src_a AS src_b,
+                          x.n_common AS n_a, y.n_common AS n_b,
+                          aggregate(filter(cells, c -> c.src_a = x.src_a
+                                                   AND c.src_b = y.src_a),
+                                    0L, (acc, c) -> acc + c.n_common)
+                            AS n_common)))))"""
         )
     )
-    agg.count()  # eager-pin: read 3× (grid twice, intersections once)
-    per = agg.filter(F.col("src_a") == F.col("src_b")).select(
-        F.col("src_a").alias("source"), F.col("n_common").alias("n")
-    )
-    inter = agg.filter(F.col("src_a") < F.col("src_b"))
-    pa = per.select(F.col("source").alias("src_a"), F.col("n").alias("n_a"))
-    pb = per.select(F.col("source").alias("src_b"), F.col("n").alias("n_b"))
-    grid = pa.join(pb, pa.src_a < pb.src_b)
-    return (
-        grid.join(inter, ["src_a", "src_b"], "left")
-        .select(
-            "src_a",
-            "src_b",
-            "n_a",
-            "n_b",
-            F.coalesce("n_common", F.lit(0)).alias("n_common"),
-            F.round(
-                F.coalesce("n_common", F.lit(0))
-                * 1.0
-                / (
-                    F.col("n_a")
-                    + F.col("n_b")
-                    - F.coalesce("n_common", F.lit(0))
-                ),
-                6,
-            ).alias("jaccard"),
-        )
+    return grid.select(
+        "src_a",
+        "src_b",
+        "n_a",
+        "n_b",
+        "n_common",
+        F.round(
+            F.col("n_common") * 1.0 / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
+        ).alias("jaccard"),
     )
 
 
@@ -2582,38 +2598,20 @@ def text_bm25_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The gold side is the registered `text_bm25_topk` run unchanged (and
     its oracle text composed verbatim); the candidate side is the tf
-    ranking over the SAME query terms — one token pass with the filter
-    BEFORE the groupBy (the BM25 plan's own tf stage shape: the term
-    shuffle carries matched rows, not the corpus vocabulary), then a
-    (queries × matched docs)-bounded window.  Integer-exact end-to-end:
-    the tf ranking is pure integer ordering, and the DCG chain is the
-    module's micro-rounded device."""
+    ranking over the SAME query terms — the term frequencies of
+    `bm25_doc_terms` summed per query in-row (`_bm25_query_totals`, no
+    shuffle), then a (queries × matched docs)-bounded window.
+    Integer-exact end-to-end: the tf ranking is pure integer ordering,
+    and the DCG chain is the module's micro-rounded device."""
     gold = text_bm25_topk(spark, sf_dir).select(
         "query_id", F.col("doc_id").alias("item"), F.col("rank").alias("r")
     )
-    d = load_table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(tokens()).alias("w")
+    tfsums = bm25_doc_terms(spark, sf_dir).selectExpr(
+        "doc_id", f"inline({_bm25_query_totals('tfs', 'tf', 'BIGINT')})"
     )
-    tf = (
-        tok.filter(F.col("w").isin(_BM25_TERMS))
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    qdf = spark.createDataFrame(
-        [(qid, w) for qid, ws in BM25_QUERIES for w in ws],
-        "query_id int, w string",
-    )
-    cagg = (
-        qdf.join(tf, "w")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("tf").cast("long").alias("tfsum"))
-    )
-    win = Window.partitionBy("query_id").orderBy(
-        F.desc("tfsum"), F.asc("doc_id")
-    )
+    win = Window.partitionBy("query_id").orderBy(F.desc("total"), F.asc("doc_id"))
     cand = (
-        cagg.withColumn("s", F.row_number().over(win))
+        tfsums.withColumn("s", F.row_number().over(win))
         .filter(F.col("s") <= BM25_TOP_K)
         .select(
             F.lit("tf").alias("method"),

@@ -7,8 +7,9 @@ Spark runtime jar is importable (SURVEY.md §7 risk note) — everything else in
 the engine runs on plain Parquet and does not require it.
 
 Scale posture: AQE on (runtime re-plan, skew-join splitting, partition
-coalescing), shuffle partitions sized to the local core count for tests —
-on a real cluster this is overridden to O(cores × 2–4) or left to AQE's
+coalescing), shuffle partitions sized to the master's core count unless
+`get_spark(shuffle_partitions=…)` says otherwise — on a real cluster this
+is overridden to O(cores × 2–4) or left to AQE's
 `spark.sql.adaptive.coalescePartitions.initialPartitionNum`.
 """
 
@@ -17,8 +18,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def iceberg_runtime_available() -> bool:
@@ -73,6 +72,7 @@ RUNTIME_SQL_CONFS: dict[str, str] = {
 }
 
 
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 WINDOW_EXEC_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
 
 
@@ -120,16 +120,14 @@ def get_spark(
     """Build (or fetch) the configured SparkSession.
 
     local[N] for tests; on a cluster, `master` comes from spark-submit and
-    this factory only contributes SQL-level tuning.
+    this factory only contributes SQL-level tuning.  Without
+    `shuffle_partitions`, shuffles get one partition per core of the
+    master (the context's default parallelism).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
         .config(map=RUNTIME_SQL_CONFS)
         # Arrow for every pandas_udf / mapInPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -147,9 +145,13 @@ def get_spark(
             .config("spark.sql.catalog.itg.type", "hadoop")
             .config("spark.sql.catalog.itg.warehouse", wh)
         )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
+    conf = dict(extra_conf or {})
+    if shuffle_partitions:
+        conf.setdefault(SHUFFLE_PARTITIONS, str(shuffle_partitions))
+    builder = builder.config(map=conf)
     spark = builder.getOrCreate()
+    if SHUFFLE_PARTITIONS not in conf:
+        spark.conf.set(SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
     spark.sparkContext.setLogLevel("WARN")
     # Every global window (no PARTITION BY) logs "No Partition Defined for
     # Window operation!" when planned, which floods the log tail.  Their

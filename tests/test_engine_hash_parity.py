@@ -196,12 +196,13 @@ def test_bm25_rounding_margin(spark, sf_fixture, request):
     half-integer at > 1e-7 — observed ≥ 3.4e-6 at every SF, ~1000× the
     ulp shift — and a data change that erodes the margin fails loudly
     instead of as a driver hash-mismatch."""
-    from iceberg_table_generator_spark.operators.text import bm25_scored_terms
+    from iceberg_table_generator_spark.operators.text import bm25_doc_scores
 
     sf_dir = request.getfixturevalue(sf_fixture)
     scaled = F.col("raw_score") * 1e6
     min_dist = (
-        bm25_scored_terms(spark, sf_dir)
+        bm25_doc_scores(spark, sf_dir)
+        .selectExpr("inline(terms)")
         .select(F.abs(scaled - F.floor(scaled) - 0.5).alias("d"))
         .agg(F.min("d"))
         .first()[0]

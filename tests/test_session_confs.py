@@ -11,7 +11,11 @@ absence of the inferred filter under a shingle explode.
 
 from __future__ import annotations
 
+import os
 import re
+import subprocess
+import sys
+from pathlib import Path
 
 import pyspark.sql.functions as F
 
@@ -75,3 +79,32 @@ def test_get_spark_quiets_only_the_window_exec_logger(spark):
     # a per-logger level: its siblings still follow the root logger
     sibling = log_manager.getLogger("org.apache.spark.sql.execution.window.WindowEvaluatorFactory")
     assert str(sibling.getLevel()) == str(log_manager.getRootLogger().getLevel())
+
+
+_SHUFFLE_CHILD = """
+from iceberg_table_generator_spark.session import get_spark
+
+key = "spark.sql.shuffle.partitions"
+for kw in [{}, {"shuffle_partitions": 5}, {"extra_conf": {key: "7"}}]:
+    s = get_spark("shuffle-partitions", master="local[2]", **kw)
+    print(s.conf.get(key))
+    s.stop()
+"""
+
+
+def test_get_spark_sizes_shuffle_partitions_from_the_master():
+    # The default shows only in a session of its own, and the suite shares
+    # one, so get_spark runs in a child interpreter.  Without
+    # SPARK_GRAFT_CPUS, local[2] once planned 32 shuffle partitions.
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", _SHUFFLE_CHILD],
+        cwd=Path(__file__).resolve().parent.parent,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    ).stdout.split()
+    assert out == ["2", "5", "7"]
